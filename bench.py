@@ -179,7 +179,7 @@ HEADLINE = [
     "multimodal_decode_qoi_pixels",
     "tokenizer_unigram_encode",
     "text_perplexity_filter",
-    # round-12 additions: from-spec DEFLATE decode, WordPiece tokenizer,
+    # round-12 additions: zlib/DEFLATE decode, WordPiece tokenizer,
     # zero-shuffle phrase search, hourly linear resample
     "multimodal_decode_deflate",
     "tokenizer_wordpiece_encode",

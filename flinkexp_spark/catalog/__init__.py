@@ -750,9 +750,8 @@ def _r11_window() -> tuple[str, ...]:
 # NEW QUERIES added this round must be appended to _R12_NEW.
 # --------------------------------------------------------------------------
 _R12_NEW: tuple[str, ...] = (
-    # from-spec DEFLATE inflate (X6): RFC 1951 fixed+dynamic Huffman +
-    # RFC 1950 zlib container, closing the PNG/APNG loop the way QOI/FLAC
-    # did (functions/inflate.py)
+    # zlib/DEFLATE decode (X6): stored, fixed and dynamic Huffman blocks
+    # through the strict stdlib wrapper (functions/inflate.py)
     "multimodal_decode_deflate",
     # WordPiece tokenizer: greedy longest-match-first subword encode, the
     # third tokenizer family (BPE merge-replay, unigram Viterbi, now
@@ -765,8 +764,8 @@ _R12_NEW: tuple[str, ...] = (
     "search_phrase_match",
     # time-series resample to a fixed grid with linear interpolation
     "timeseries_resample_linear",
-    # gzip container (RFC 1952) over the from-spec inflate, with CRC-32
-    # derived from the RFC's reference construction — the DEFLATE trio
+    # gzip container (RFC 1952): FNAME and multi-member layouts through
+    # the strict stdlib wrapper (functions/inflate.py)
     "multimodal_decode_gzip",
 )
 
@@ -860,8 +859,8 @@ def _r12_window() -> tuple[str, ...]:
 # NEW QUERIES added this round must be appended to _R13_NEW.
 # --------------------------------------------------------------------------
 _R13_NEW: tuple[str, ...] = (
-    # from-spec bzip2 (X6): the second general-purpose compression family
-    # — BWT + MTF + RLE + Huffman with both CRC-32 layers (functions/bzip2.py)
+    # bzip2 (X6): the second general-purpose compression family — BWT +
+    # MTF + RLE + Huffman, decoded by the stdlib wrapper (functions/bzip2.py)
     "multimodal_decode_bzip2",
     # from-spec TIFF 6.0 + MSB-first EARLY-CHANGE LZW + Predictor 2, the
     # counterpart of GIF's LSB-first late-change variant (functions/tiff.py)
@@ -958,18 +957,16 @@ def _r13_window() -> tuple[str, ...]:
 # until the two lists agree).
 # --------------------------------------------------------------------------
 _R14_NEW: tuple[str, ...] = (
-    # from-spec .xz container walker (X5): stream/block/index CRC layers,
-    # LZMA2 uncompressed-chunk walk, CRC-64/ECMA-182 — pinned BOTH
-    # directions against the real `xz` binary and stdlib lzma
-    # (functions/xz.py, tests/test_xz.py)
+    # .xz (X5): CRC-32/CRC-64/SHA-256/no checks and multi-stream Stream
+    # Padding through the strict stdlib wrapper (functions/xz.py)
     "multimodal_decode_xz_frames",
     # compact dual-chain twin of geo_neighbor_pairs_salted (r13 verdict
     # #3): per-cell pair count + exact multiplicative-mix fold — the sf1
     # sweep's stand-in for the 317M-row materialization (catalog/geo.py)
     "geo_neighbor_pairs_fold",
-    # from-spec LZMA/LZMA2 range decoder (functions/lzma2.py) behind the
-    # .xz container walk — real liblzma-compressed payloads, arithmetic
-    # oracle (catalog/llm_multimodal.py)
+    # LZMA2 encoder presets and filter chains inside .xz, decoded by the
+    # stdlib wrapper (functions/xz.py) — arithmetic oracle
+    # (catalog/llm_multimodal.py)
     "multimodal_decode_lzma2",
 )
 

@@ -1151,10 +1151,9 @@ def q_multimodal_decode_qoi_pixels(spark: SparkSession, sf_dir: str) -> DataFram
     "multimodal_decode_deflate",
     # Oracle recomputes the synthesized PLAINTEXT arithmetically: byte i
     # is (s + 3*(i % 64)) % 256 over n = len*7 + doc_id mod 3000 + 2000
-    # bytes — so after the REAL from-spec decode (RFC 1950 container +
-    # Adler-32 verify, RFC 1951 canonical Huffman, stored/fixed/dynamic
-    # blocks, overlapping LZ77 copies) the stats must land exactly:
-    # DEFLATE is lossless, no epsilon anywhere.  pos_checksum is weighted
+    # bytes — so after the zlib decode (Adler-32 verified, stored/fixed/
+    # dynamic blocks, overlapping LZ77 copies) the stats must land
+    # exactly: DEFLATE is lossless, no epsilon anywhere.  pos_checksum is weighted
     # by the 1-based byte offset, pinning emit order across block
     # boundaries and copy resolution direction.
     oracle=f"""
@@ -1184,18 +1183,12 @@ def q_multimodal_decode_qoi_pixels(spark: SparkSession, sf_dir: str) -> DataFram
     tags=("X5", "U2"),
 )
 def q_multimodal_decode_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X5: from-spec DEFLATE/zlib decode (functions/inflate.py — RFC
-    1951 inflate with canonical Huffman construction, all three block
-    types, overlapping LZ77 copies; RFC 1950 container with FCHECK and
-    Adler-32 verification; zero ``import zlib`` on the decode path).
-    This closes the compression loop the way QOI and FLAC closed image
-    and audio: the byte-level entropy-coding layer under PNG/APNG is now
-    derived from the public spec, and tests/test_inflate.py pins the
-    from-spec decoder byte-identical to zlib across every block type —
-    including the PNG fixture's own IDAT streams.  ``doc_id % 3`` cycles
-    stored / dynamic / fixed blocks (the fixed variant from the repo's
-    own fixed-Huffman literal encoder, since zlib never emits BTYPE=1).
-    Per-row independent work: no shuffle, linear in the corpus."""
+    """X5: zlib/DEFLATE decode through the strict stdlib wrapper
+    (functions/inflate.py: one RFC 1950 stream, Adler-32 verified,
+    nothing may follow it).  ``doc_id % 3`` cycles stored / dynamic /
+    fixed-Huffman blocks (the fixed variant from zlib's ``Z_FIXED``
+    strategy).  Per-row independent work: no shuffle, linear in the
+    corpus."""
     docs = datasets.load(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return M.deflate_stats(M.with_deflate_payload(docs))
 
@@ -1204,9 +1197,9 @@ def q_multimodal_decode_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "multimodal_decode_gzip",
     # Oracle recomputes the synthesized plaintext arithmetically (byte i =
     # (s*5 + 11*(i % 48)) % 256 over n = len*3 + doc_id mod 2000 + 1500
-    # bytes); the engine's from-spec RFC 1952 walk (header flags incl.
-    # FNAME, raw inflate, table-driven CRC-32, ISIZE, multi-member
-    # concatenation) must land the stats exactly.  The multi-member
+    # bytes); the engine's gzip decode (header flags incl. FNAME, CRC-32
+    # and ISIZE verified, multi-member concatenation) must land the stats
+    # exactly.  The multi-member
     # variant (doc_id % 3 == 2) splits the SAME plaintext across two
     # members, so one closed form covers all three container layouts.
     oracle=f"""
@@ -1236,15 +1229,12 @@ def q_multimodal_decode_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("X5", "U2"),
 )
 def q_multimodal_decode_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X5: from-spec gzip decode (RFC 1952 container over the RFC 1951
-    inflate of functions/inflate.py) — completing the DEFLATE trio:
-    raw deflate, zlib (Adler-32), gzip (table-driven CRC-32 from the
-    RFC's own reference construction, FNAME/FEXTRA/FCOMMENT/FHCRC flag
-    walk, ISIZE check, multi-member concatenation per §2.2).  CRC-32
-    itself is derived from spec — no zlib/binascii import anywhere on
-    the decode path; tests/test_inflate.py pins it against zlib.crc32
-    and the decoder against stdlib gzip across layouts.  Per-row
-    independent work: no shuffle, linear in the corpus."""
+    """X5: gzip decode through the strict stdlib wrapper
+    (functions/inflate.py over functions/drain.py: every member must end,
+    CRC-32 and ISIZE are verified, only zero padding may follow the last
+    member).  ``doc_id % 3`` cycles bare / FNAME-header / multi-member
+    layouts.  Per-row independent work: no shuffle, linear in the
+    corpus."""
     docs = datasets.load(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return M.gzip_stats(M.with_gzip_payload(docs))
 
@@ -1253,10 +1243,9 @@ def q_multimodal_decode_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "multimodal_decode_bzip2",
     # Oracle recomputes the synthesized plaintext arithmetically (byte i =
     # (s*3 + 13*((i // 9) % 37)) % 256 over n = len*5 + doc_id mod 2500 +
-    # 1800 bytes); the engine's from-spec bzip2 decode (Huffman group
-    # selectors, RLE2 + inverse MTF, inverse BWT, RLE1 undo, block and
-    # combined CRC-32) must land the stats exactly — bzip2 is lossless,
-    # no epsilon anywhere.  The 9-byte value runs force the RLE1 stage on
+    # 1800 bytes); the engine's bzip2 decode (block and combined CRC-32
+    # verified) must land the stats exactly — bzip2 is lossless, no
+    # epsilon anywhere.  The 9-byte value runs force the RLE1 stage on
     # every row; doc_id % 3 == 2 splits the SAME plaintext across two
     # byte-aligned concatenated streams, so one closed form covers all
     # three container layouts.
@@ -1288,18 +1277,11 @@ def q_multimodal_decode_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("X5", "U2"),
 )
 def q_multimodal_decode_bzip2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X5: from-spec bzip2 decode (functions/bzip2.py) — the SECOND
-    general-purpose compression family derived from its public format
-    description, built on BWT + MTF + RLE + Huffman where the DEFLATE
-    trio is LZ77 + Huffman.  Every stage is from-spec: the two-level
-    symbol map, unary MTF-coded tree selectors, delta-coded code
-    lengths, 50-symbol Huffman groups, bijective-base-2 RUNA/RUNB zero
-    runs, inverse Burrows-Wheeler transform from the origin pointer,
-    RLE1 undo, and both CRC-32 layers (poly 0x04C11DB7, MSB-first —
-    the non-reflected variant, unlike gzip's).  ``import bz2`` appears
-    ONLY in fixture synthesis and the parity tests
-    (tests/test_bzip2.py), never on the decode path.  doc_id % 3 cycles
-    level-9 / level-1 / multi-stream container layouts.  Per-row
+    """X5: bzip2 decode through the strict stdlib wrapper
+    (functions/bzip2.py over functions/drain.py: every stream must end,
+    only zero padding may follow the last one).  bzip2 is the BWT + MTF
+    + RLE + Huffman family next to DEFLATE's LZ77 + Huffman.  doc_id % 3
+    cycles level-9 / level-1 / multi-stream container layouts.  Per-row
     independent work: no shuffle, linear in the corpus."""
     docs = datasets.load(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return M.bzip2_stats(M.with_bzip2_payload(docs))
@@ -1410,10 +1392,10 @@ def q_multimodal_decode_zstd_frames(spark: SparkSession, sf_dir: str) -> DataFra
     the 3-byte little-endian block loop over Raw and RLE blocks, and
     xxHash64 content checksums implemented from the published algorithm.
     Compressed_Block entropy sections (FSE/Huffman) are explicitly out
-    of scope and rejected with a clear error — the from-spec entropy
-    lanes are DEFLATE (functions/inflate.py) and bzip2
-    (functions/bzip2.py).  Unlike those two, a REAL reference binary
-    exists in this environment: tests/test_zstd.py round-trips our
+    of scope and rejected with a clear error.  zstd has no stdlib module
+    (unlike DEFLATE, bzip2 and xz, which decode through stdlib ``zlib``,
+    ``bz2`` and ``lzma``), so this walker is from-spec; a REAL reference
+    binary exists in this environment: tests/test_zstd.py round-trips our
     frames through the system ``zstd`` executable in BOTH directions
     (it verifies our checksums; our walker decodes its raw-block output
     for incompressible data), pinning container and hash to the
@@ -1428,10 +1410,9 @@ def q_multimodal_decode_zstd_frames(spark: SparkSession, sf_dir: str) -> DataFra
     "multimodal_decode_xz_frames",
     # Oracle recomputes the synthesized plaintext arithmetically (byte i =
     # (s*11 + 23*((i // 170) % 47)) % 256 over n = len*4 + doc_id mod 2400
-    # + 1500 bytes); the engine's from-spec .xz container walk (stream
-    # header/footer CRC-32s, block headers, the LZMA2 uncompressed-chunk
-    # loop, CRC-32/CRC-64/SHA-256 block checks, Index verification,
-    # multi-stream Stream Padding) must land the stats exactly.
+    # + 1500 bytes); the engine's .xz decode (CRC-32/CRC-64/SHA-256/no
+    # block checks, multi-stream with zero Stream Padding) must land the
+    # stats exactly.
     oracle=f"""
         WITH m AS (
             SELECT doc_id,
@@ -1460,28 +1441,15 @@ def q_multimodal_decode_zstd_frames(spark: SparkSession, sf_dir: str) -> DataFra
     tags=("X5", "U2"),
 )
 def q_multimodal_decode_xz_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X5: from-spec .xz CONTAINER WALKER (Tukaani xz-file-format spec,
-    functions/xz.py) — the fourth compression-container family: stream
-    header magic + flags with reserved-bit enforcement and CRC-32, block
-    headers (encoded size, filter flags, the optional Compressed/
-    Uncompressed Size VLIs the multithreaded real tool writes, header
-    padding, CRC-32), the LZMA2 chunk walk over uncompressed chunks with
-    the dictionary-reset rule, block padding, integrity checks in all
-    four spec types (None / CRC-32 / CRC-64(ECMA-182, implemented from
-    the polynomial) / SHA-256), Index record-by-record verification
-    against the walked blocks, Backward Size, and multi-stream
-    concatenation with zero Stream Padding.  LZMA2 COMPRESSED chunks
-    (the range-coded payload) are explicitly out of scope and rejected
-    with a clear error — the exact analog of functions/zstd.py's
-    Compressed_Block boundary.  TWO reference implementations exist in
-    this environment: tests/test_xz.py round-trips our frames through
-    the system ``xz`` binary AND stdlib ``lzma`` in both directions
-    (they verify our checks; our walker decodes their uncompressed-chunk
-    output for incompressible data), pinning the container to the
-    reference tools, not just the spec text.  doc_id % 4 cycles
-    single-block-crc64 / multi-block-with-sizes-crc32 /
-    two-streams-padded-sha256 / multi-block-no-check layouts.  Per-row
-    independent work: no shuffle, linear in the corpus."""
+    """X5: .xz decode through the strict stdlib wrapper (functions/xz.py
+    over functions/drain.py): concatenated streams, zero Stream Padding
+    between or after them in 4-byte units, integrity checks of all four
+    types.  ``lzma.decompress`` alone stops at the first padding and
+    returns half of a padded two-stream row; the wrapper decodes every
+    stream and rejects truncation, misaligned padding and trailing
+    garbage.  doc_id % 4 cycles crc64 / crc32 / two-streams-padded-sha256
+    / no-check layouts.  Per-row independent work: no shuffle, linear in
+    the corpus."""
     docs = datasets.load(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return M.xz_stats(M.with_xz_payload(docs))
 
@@ -1489,12 +1457,9 @@ def q_multimodal_decode_xz_frames(spark: SparkSession, sf_dir: str) -> DataFrame
 @register(
     "multimodal_decode_lzma2",
     # Same arithmetic-oracle construction as multimodal_decode_xz_frames,
-    # but the payloads are REAL liblzma-compressed .xz (range-coded LZMA2
-    # chunks): the engine's from-spec LZMA range decoder
-    # (functions/lzma2.py — adaptive bit probabilities, pos-slot/align
-    # trees, the 12-state machine with rep distances, matched literals,
-    # LZMA2 chunk resets) must reproduce the plaintext byte-exactly for
-    # the stats to land.
+    # but the payloads cycle LZMA2 encoder presets and a custom filter
+    # chain: the decode must reproduce the plaintext byte-exactly for the
+    # stats to land.
     oracle=f"""
         WITH m AS (
             SELECT doc_id,
@@ -1523,24 +1488,12 @@ def q_multimodal_decode_xz_frames(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("X5", "U2"),
 )
 def q_multimodal_decode_lzma2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X5 (r14): from-spec LZMA / LZMA2 RANGE DECODER (Igor Pavlov's
-    public lzma-specification + xz file-format §5.3.1;
-    functions/lzma2.py) — the fifth entropy lane after DEFLATE, bzip2,
-    GIF/TIFF-LZW and the FLAC rice codes: 11-bit adaptive bit
-    probabilities with shift-5 updates, 6-bit pos-slot trees + reverse
-    SpecPos/align trees, choice-split length coders (2..273), the
-    0x300-entry literal tables keyed by lc/lp with the matched-literal
-    path, the 12-state literal/match/rep machine with rep0..rep3 recent
-    distances and short-rep, and LZMA2's chunk control layer (state /
-    props / dictionary resets; dictionary-relative positions; matches
-    reaching across chunk boundaries).  Payloads are compressed by
-    stdlib liblzma — a conformant REFERENCE ENCODER pinning the decoder,
-    the executor-side analog of tests/test_lzma2.py's preset sweep and
-    tests/test_xz.py's real-binary round-trips — cycling presets
+    """X5: compressed .xz payloads (range-coded LZMA2 chunks) decoded
+    through the strict stdlib wrapper (functions/xz.py), cycling presets
     0/6/9e + a custom lc=0,lp=2,pb=1 filter chain and all four container
     check types via ``doc_id % 4``.  The DuckDB oracle recomputes the
     plaintext arithmetically, so the green hash certifies byte-exact
-    decompression end-to-end through the .xz container walk.  Per-row
-    independent Arrow mapInPandas: no shuffle, linear in the corpus."""
+    decompression end-to-end.  Per-row independent Arrow mapInPandas: no
+    shuffle, linear in the corpus."""
     docs = datasets.load(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return M.xz_stats(M.with_lzma2_payload(docs))

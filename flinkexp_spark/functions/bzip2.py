@@ -1,367 +1,17 @@
-"""From-spec bzip2 decoder — no ``import bz2`` anywhere on the decode path.
+"""bzip2 decode over stdlib ``bz2``, strict about what follows a stream.
 
-Derived entirely from the PUBLIC bzip2 file-format description (the format
-has no RFC; the de-facto spec is the published "BZIP2: Format Specification"
-write-up of the reference implementation's container):
-
-* stream header ``BZh<level>``, level '1'-'9' = 100k-900k block size
-* per block: 48-bit magic 0x314159265359, 32-bit block CRC, 1 deprecated
-  "randomized" bit, 24-bit BWT origin pointer
-* symbol map: 16-bit range bitmap + one 16-bit bitmap per used range
-* 2-6 Huffman trees, group selectors (unary, MTF-coded over tree ids),
-  per-tree delta-coded code lengths (5-bit start, {1,+1}/{1,-1} walk)
-* symbol stream in 50-symbol groups: RUNA/RUNB bijective-base-2 zero runs
-  + MTF indices + EOB, giving the move-to-front decode of the BWT string
-* inverse Burrows-Wheeler transform from the origin pointer
-* RLE1 undo (4 equal bytes + count byte)
-* per-block CRC-32 (poly 0x04C11DB7, MSB-first, init/final 0xFFFFFFFF) and
-  the stream-combined CRC in the 48-bit 0x177245385090 footer
-* byte-aligned stream concatenation (multi-stream files)
-
-Counterpart of functions/inflate.py (the DEFLATE trio): the second fully
-from-spec general-purpose compression family, this one built on
-BWT + MTF + RLE + Huffman instead of LZ77 + Huffman.  The deprecated
-``randomized`` blocks are rejected explicitly: their derandomization table
-exists only inside the reference implementation's source (not derivable
-from the format description), and no compressor has emitted them since
-bzip2 0.9.5.
-
-Reference for parity in tests ONLY: stdlib ``bz2`` (tests/test_bzip2.py).
+``bz2.decompress`` drops trailing garbage silently; this wrapper raises
+:class:`~flinkexp_spark.functions.drain.CodecError` for it, for a
+truncated stream and for a bad block or stream CRC.
 """
 
 from __future__ import annotations
 
-_BLOCK_MAGIC = 0x314159265359
-_FOOTER_MAGIC = 0x177245385090
-_GROUP_SIZE = 50
-_RUNA, _RUNB = 0, 1
-_MAX_CODE_LEN = 23  # spec ceiling for Huffman code lengths
+import bz2
 
-
-class Bzip2Error(ValueError):
-    """Malformed or unsupported bzip2 stream."""
-
-
-def _crc_table() -> list[int]:
-    """MSB-first CRC-32 table for poly 0x04C11DB7 (the bzip2 variant —
-    NOT the reflected 0xEDB88320 table gzip uses)."""
-    table = []
-    for byte in range(256):
-        reg = byte << 24
-        for _ in range(8):
-            if reg & 0x80000000:
-                reg = ((reg << 1) ^ 0x04C11DB7) & 0xFFFFFFFF
-            else:
-                reg = (reg << 1) & 0xFFFFFFFF
-        table.append(reg)
-    return table
-
-
-_CRC_TABLE = _crc_table()
-
-
-def bz2_crc32(data: bytes, value: int = 0) -> int:
-    """bzip2's block CRC: init 0xFFFFFFFF, MSB-first feed, final complement."""
-    reg = (value ^ 0xFFFFFFFF) & 0xFFFFFFFF
-    for b in data:
-        reg = ((reg << 8) & 0xFFFFFFFF) ^ _CRC_TABLE[((reg >> 24) ^ b) & 0xFF]
-    return reg ^ 0xFFFFFFFF
-
-
-class _BitReader:
-    """MSB-first bit reader (bzip2 packs bits big-endian, unlike DEFLATE)."""
-
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data = data
-        self.pos = pos  # byte cursor
-        self.bitbuf = 0
-        self.bitcnt = 0
-
-    def bits(self, n: int) -> int:
-        while self.bitcnt < n:
-            if self.pos >= len(self.data):
-                raise Bzip2Error(f"truncated stream at byte {self.pos}")
-            self.bitbuf = (self.bitbuf << 8) | self.data[self.pos]
-            self.pos += 1
-            self.bitcnt += 8
-        self.bitcnt -= n
-        v = (self.bitbuf >> self.bitcnt) & ((1 << n) - 1)
-        self.bitbuf &= (1 << self.bitcnt) - 1
-        return v
-
-    def align_byte_pos(self) -> int:
-        """Byte position of the next unread byte after dropping the
-        partial-bit remainder (stream concatenation is byte-aligned)."""
-        self.bitbuf = 0
-        self.bitcnt = 0
-        return self.pos
-
-
-class _Huffman:
-    """Canonical Huffman decoder from code lengths, MSB-first codes
-    assigned by (length, symbol) order — the same canonical scheme as
-    RFC 1951's, read against bzip2's big-endian bit stream."""
-
-    def __init__(self, lengths: list[int]) -> None:
-        maxlen = max(lengths)
-        if maxlen == 0 or maxlen > _MAX_CODE_LEN:
-            raise Bzip2Error(f"bad Huffman code lengths (max {maxlen})")
-        # limit[l] = largest code value of length l; base/perm give the
-        # symbol for (length, code) in canonical order
-        self.maxlen = maxlen
-        table: dict[tuple[int, int], int] = {}
-        code = 0
-        for ln in range(1, maxlen + 1):
-            for sym, l in enumerate(lengths):
-                if l == ln:
-                    table[(ln, code)] = sym
-                    code += 1
-            code <<= 1
-        self.table = table
-
-    def decode(self, br: _BitReader) -> int:
-        code = 0
-        for ln in range(1, self.maxlen + 1):
-            code = (code << 1) | br.bits(1)
-            sym = self.table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise Bzip2Error("invalid Huffman code in stream")
-
-
-def _read_symbol_map(br: _BitReader) -> list[int]:
-    """The two-level used-byte bitmap: 16 range bits, then 16 bits per
-    used range.  Returns the sorted list of used byte values."""
-    used16 = br.bits(16)
-    used: list[int] = []
-    for i in range(16):
-        if used16 & (0x8000 >> i):
-            block = br.bits(16)
-            for j in range(16):
-                if block & (0x8000 >> j):
-                    used.append(16 * i + j)
-    if not used:
-        raise Bzip2Error("empty symbol map")
-    return used
-
-
-def _read_selectors(br: _BitReader, n_groups: int) -> list[int]:
-    n_selectors = br.bits(15)
-    if n_selectors == 0:
-        raise Bzip2Error("zero selectors")
-    mtf = list(range(n_groups))
-    out = []
-    for _ in range(n_selectors):
-        j = 0
-        while br.bits(1):
-            j += 1
-            if j >= n_groups:
-                raise Bzip2Error("selector out of range")
-        sel = mtf.pop(j)
-        mtf.insert(0, sel)
-        out.append(sel)
-    return out
-
-
-def _read_tree_lengths(br: _BitReader, alpha_size: int) -> list[int]:
-    """Per-symbol code lengths, delta-coded: 5-bit start, then for each
-    symbol a walk of {1,delta-bit} pairs until a 0 bit."""
-    length = br.bits(5)
-    out = []
-    for _ in range(alpha_size):
-        while br.bits(1):
-            if br.bits(1):
-                length -= 1
-            else:
-                length += 1
-            if not 1 <= length <= _MAX_CODE_LEN:
-                raise Bzip2Error(f"code length {length} out of range")
-        if not 1 <= length <= _MAX_CODE_LEN:
-            raise Bzip2Error(f"code length {length} out of range")
-        out.append(length)
-    return out
-
-
-def _decode_mtf_rle2(
-    br: _BitReader,
-    used: list[int],
-    trees: list[_Huffman],
-    selectors: list[int],
-    max_block: int,
-) -> bytearray:
-    """Huffman symbols -> RLE2 zero runs + inverse MTF -> the BWT string."""
-    alpha_size = len(used) + 2
-    eob = alpha_size - 1
-    mtf = list(used)
-    bwt = bytearray()
-    group, group_left = -1, 0
-    run, run_shift = 0, 0
-    huff: _Huffman | None = None
-    while True:
-        if group_left == 0:
-            group += 1
-            if group >= len(selectors):
-                raise Bzip2Error("symbol stream exceeds selector count")
-            huff = trees[selectors[group]]
-            group_left = _GROUP_SIZE
-        group_left -= 1
-        sym = huff.decode(br)
-        if sym <= _RUNB:  # bijective base-2 run of the MTF front byte
-            run += (sym + 1) << run_shift
-            run_shift += 1
-            if run > max_block:  # crafted RUNA/RUNB chains grow the run
-                raise Bzip2Error("block exceeds its declared size")
-            continue
-        if run:
-            if len(bwt) + run > max_block:  # guard BEFORE the allocation
-                raise Bzip2Error("block exceeds its declared size")
-            bwt.extend(mtf[:1] * run)
-            run, run_shift = 0, 0
-        if sym == eob:
-            break
-        # sym in [2, eob): MTF index sym-1 moves to front
-        b = mtf.pop(sym - 1)
-        mtf.insert(0, b)
-        bwt.append(b)
-        if len(bwt) > max_block:
-            raise Bzip2Error("block exceeds its declared size")
-    if len(bwt) > max_block:
-        raise Bzip2Error("block exceeds its declared size")
-    return bwt
-
-
-def _inverse_bwt(bwt: bytes, orig_ptr: int) -> bytes:
-    """Invert the Burrows-Wheeler transform.
-
-    The j-th occurrence (stable) of the k-th smallest byte in the last
-    column is the same row as the j-th row starting with that byte in the
-    sorted first column — a stable counting argsort of the BWT string IS
-    the row-successor permutation; walk it n times from the origin row.
-    """
-    n = len(bwt)
-    if not 0 <= orig_ptr < n:
-        raise Bzip2Error(f"origin pointer {orig_ptr} outside block of {n}")
-    try:
-        import numpy as np
-
-        arr = np.frombuffer(bytes(bwt), dtype=np.uint8)
-        nxt = np.argsort(arr, kind="stable").astype(np.int64)
-        out = bytearray(n)
-        p = int(nxt[orig_ptr])
-        for i in range(n):
-            out[i] = arr[p]
-            p = int(nxt[p])
-        return bytes(out)
-    except ImportError:  # pragma: no cover — numpy is baked into the env
-        counts = [0] * 256
-        for b in bwt:
-            counts[b] += 1
-        cftab = [0] * 256
-        acc = 0
-        for c in range(256):
-            cftab[c] = acc
-            acc += counts[c]
-        nxt = [0] * n
-        for i, b in enumerate(bwt):
-            nxt[cftab[b]] = i
-            cftab[b] += 1
-        out = bytearray(n)
-        p = nxt[orig_ptr]
-        for i in range(n):
-            out[i] = bwt[p]
-            p = nxt[p]
-        return bytes(out)
-
-
-def _rle1_decode(data: bytes) -> bytes:
-    """Undo the encoder's first-stage RLE: every run of 4 equal bytes is
-    followed by a count byte adding 0-251 more copies."""
-    out = bytearray()
-    i, n = 0, len(data)
-    while i < n:
-        b = data[i]
-        run = 1
-        while run < 4 and i + run < n and data[i + run] == b:
-            run += 1
-        if run == 4:
-            if i + 4 >= n:
-                raise Bzip2Error("RLE1 run truncated before its count byte")
-            extra = data[i + 4]
-            out.extend(bytes([b]) * (4 + extra))
-            i += 5
-        else:
-            out.extend(bytes([b]) * run)
-            i += run
-    return bytes(out)
-
-
-def _decode_block(br: _BitReader, max_block: int) -> tuple[bytes, int]:
-    """One block, magic already consumed: returns (plaintext, block CRC)."""
-    want_crc = br.bits(32)
-    if br.bits(1):
-        raise Bzip2Error(
-            "deprecated 'randomized' block (unsupported: its table is not "
-            "part of the format specification; no encoder emits it)"
-        )
-    orig_ptr = br.bits(24)
-    used = _read_symbol_map(br)
-    alpha_size = len(used) + 2
-    n_groups = br.bits(3)
-    if not 2 <= n_groups <= 6:
-        raise Bzip2Error(f"tree count {n_groups} outside 2..6")
-    selectors = _read_selectors(br, n_groups)
-    trees = [
-        _Huffman(_read_tree_lengths(br, alpha_size)) for _ in range(n_groups)
-    ]
-    bwt = _decode_mtf_rle2(br, used, trees, selectors, max_block)
-    plain = _rle1_decode(_inverse_bwt(bytes(bwt), orig_ptr))
-    got_crc = bz2_crc32(plain)
-    if got_crc != want_crc:
-        raise Bzip2Error(
-            f"block CRC mismatch: {got_crc:#010x} != {want_crc:#010x}"
-        )
-    return plain, want_crc
-
-
-def _decompress_stream(data: bytes, pos: int) -> tuple[bytes, int]:
-    """One ``BZh`` stream starting at byte ``pos``: returns (plaintext,
-    position of the first byte after the stream)."""
-    if data[pos : pos + 3] != b"BZh":
-        raise Bzip2Error(f"bad stream magic at byte {pos}")
-    level = data[pos + 3] - 0x30
-    if not 1 <= level <= 9:
-        raise Bzip2Error(f"bad block-size level {level!r}")
-    max_block = level * 100_000
-    br = _BitReader(data, pos + 4)
-    out = bytearray()
-    stream_crc = 0
-    while True:
-        magic = br.bits(48)
-        if magic == _BLOCK_MAGIC:
-            plain, block_crc = _decode_block(br, max_block)
-            out += plain
-            stream_crc = (
-                ((stream_crc << 1) | (stream_crc >> 31)) & 0xFFFFFFFF
-            ) ^ block_crc
-        elif magic == _FOOTER_MAGIC:
-            want = br.bits(32)
-            if want != stream_crc:
-                raise Bzip2Error(
-                    f"stream CRC mismatch: {stream_crc:#010x} != {want:#010x}"
-                )
-            return bytes(out), br.align_byte_pos()
-        else:
-            raise Bzip2Error(f"bad block magic {magic:#014x}")
+from flinkexp_spark.functions.drain import drain
 
 
 def bz2_decompress(data: bytes) -> bytes:
-    """Decode a .bz2 payload, including byte-aligned concatenated streams
-    (the same contract as stdlib ``bz2.decompress``)."""
-    if len(data) < 10:
-        raise Bzip2Error(f"bzip2 stream too short: {len(data)} bytes")
-    out = bytearray()
-    pos = 0
-    while pos < len(data):
-        plain, pos = _decompress_stream(data, pos)
-        out += plain
-    return bytes(out)
+    """Decode one or more concatenated bzip2 streams."""
+    return drain(bz2.BZ2Decompressor, data, "bzip2")

@@ -1,449 +1,27 @@
-"""From-spec DEFLATE (RFC 1951) inflate and zlib (RFC 1950) container —
-no ``import zlib`` anywhere in this module.
+"""zlib (RFC 1950) and gzip (RFC 1952) decode over stdlib ``zlib``.
 
-Derived entirely from the two public RFCs, the same pure-derivation lane
-as functions/qoi.py (QOI spec) and functions/flac.py (FLAC spec):
-
-* RFC 1951 §3.2.2 — canonical Huffman code construction from code
-  lengths (``bl_count``/``next_code``), used for the fixed tables, the
-  code-length code, and the dynamic literal/distance tables alike.
-* RFC 1951 §3.2.3–3.2.7 — the block framing (BFINAL/BTYPE), stored
-  blocks with LEN/NLEN one's-complement check, the fixed code lengths,
-  and the dynamic-header code-length alphabet (symbols 16/17/18 with
-  their repeat semantics, lengths permuted through the specified order).
-* RFC 1951 §3.2.5 — the length (257–285) and distance (0–29) extra-bit
-  tables; overlapping LZ77 copies resolved byte-by-byte, which is what
-  makes ``dist < len`` runs self-extending.
-* RFC 1950 §2.2 — CMF/FLG header (CM=8, FCHECK making the 16-bit word
-  divisible by 31, FDICT rejected) and the big-endian Adler-32 trailer
-  (§8 reference algorithm, mod 65521).
-
-Bit order per RFC 1951 §3.1.1: the byte stream is consumed LSB-first,
-EXCEPT Huffman codes, which are packed most-significant-code-bit first.
-
-``deflate_fixed_literals`` is the tiny encoder counterpart: a single
-BTYPE=1 block of pure literals (no matches).  zlib's own compressor
-essentially never emits fixed-Huffman blocks, so the fixture generator
-uses this to force the decoder's fixed-table path into coverage.
-
-All errors raise :class:`InflateError` — truncation, bad BTYPE, LEN/NLEN
-mismatch, over-subscribed or incomplete dynamic code lengths, distances
-reaching before the output start, and container-level header/checksum
-failures.
+Strict where ``zlib.decompress`` and ``gzip.decompress`` are lenient
+(see functions/drain.py): a truncated stream, a bad Adler-32/CRC-32 or
+ISIZE, and any non-zero byte after the last member raise
+:class:`~flinkexp_spark.functions.drain.CodecError`.
 """
 
 from __future__ import annotations
 
-ADLER_MOD = 65521
+import functools
+import zlib
 
-# RFC 1951 §3.2.5: length codes 257..285 -> (extra bits, base length)
-_LEN_EXTRA = (
-    (0, 3), (0, 4), (0, 5), (0, 6), (0, 7), (0, 8), (0, 9), (0, 10),
-    (1, 11), (1, 13), (1, 15), (1, 17), (2, 19), (2, 23), (2, 27),
-    (2, 31), (3, 35), (3, 43), (3, 51), (3, 59), (4, 67), (4, 83),
-    (4, 99), (4, 115), (5, 131), (5, 163), (5, 195), (5, 227), (0, 258),
-)
-# distance codes 0..29 -> (extra bits, base distance)
-_DIST_EXTRA = (
-    (0, 1), (0, 2), (0, 3), (0, 4), (1, 5), (1, 7), (2, 9), (2, 13),
-    (3, 17), (3, 25), (4, 33), (4, 49), (5, 65), (5, 97), (6, 129),
-    (6, 193), (7, 257), (7, 385), (8, 513), (8, 769), (9, 1025),
-    (9, 1537), (10, 2049), (10, 3073), (11, 4097), (11, 6145),
-    (12, 8193), (12, 12289), (13, 16385), (13, 24577),
-)
-# §3.2.7: the order in which code-length-code lengths are transmitted
-_CLC_ORDER = (16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15)
-
-
-class InflateError(Exception):
-    """Malformed DEFLATE/zlib stream."""
-
-
-class _BitReader:
-    """LSB-first bit reader (RFC 1951 §3.1.1)."""
-
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data = data
-        self.pos = pos  # byte cursor
-        self.bitbuf = 0
-        self.bitcnt = 0
-
-    def bits(self, n: int) -> int:
-        while self.bitcnt < n:
-            if self.pos >= len(self.data):
-                raise InflateError(f"truncated stream at byte {self.pos}")
-            self.bitbuf |= self.data[self.pos] << self.bitcnt
-            self.pos += 1
-            self.bitcnt += 8
-        v = self.bitbuf & ((1 << n) - 1)
-        self.bitbuf >>= n
-        self.bitcnt -= n
-        return v
-
-    def align(self) -> None:
-        self.bitbuf = 0
-        self.bitcnt = 0
-
-
-class _Huffman:
-    """Canonical Huffman decoder built from code lengths (§3.2.2)."""
-
-    def __init__(self, lengths) -> None:
-        maxlen = max(lengths) if lengths else 0
-        if maxlen == 0:
-            raise InflateError("empty Huffman code")
-        bl_count = [0] * (maxlen + 1)
-        for ln in lengths:
-            if ln:
-                bl_count[ln] += 1
-        # Kraft check: over-subscribed codes are corrupt; incomplete codes
-        # are legal only for the degenerate one-code distance case, which
-        # the spec permits — enforce over-subscription strictly.
-        code = 0
-        next_code = [0] * (maxlen + 1)
-        for b in range(1, maxlen + 1):
-            code = (code + bl_count[b - 1]) << 1
-            next_code[b] = code
-            if next_code[b] + bl_count[b] > (1 << b):
-                raise InflateError("over-subscribed Huffman code")
-        table: dict[tuple[int, int], int] = {}
-        for sym, ln in enumerate(lengths):
-            if ln:
-                table[(ln, next_code[ln])] = sym
-                next_code[ln] += 1
-        self.table = table
-        self.maxlen = maxlen
-
-    def decode(self, br: _BitReader) -> int:
-        # Huffman codes pack MSB-first into the LSB-first stream: grow the
-        # code one bit at a time.
-        code = 0
-        for ln in range(1, self.maxlen + 1):
-            code = (code << 1) | br.bits(1)
-            sym = self.table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise InflateError("invalid Huffman code in stream")
-
-
-def _fixed_literal_lengths() -> list[int]:
-    # §3.2.6
-    return [8] * 144 + [9] * 112 + [7] * 24 + [8] * 8
-
-
-_FIXED_LIT = None
-_FIXED_DIST = None
-
-
-def _fixed_tables() -> tuple[_Huffman, _Huffman]:
-    global _FIXED_LIT, _FIXED_DIST
-    if _FIXED_LIT is None:
-        _FIXED_LIT = _Huffman(_fixed_literal_lengths())
-        _FIXED_DIST = _Huffman([5] * 30)
-    return _FIXED_LIT, _FIXED_DIST
-
-
-def _dynamic_tables(br: _BitReader) -> tuple[_Huffman, _Huffman]:
-    """§3.2.7: decode the dynamic-block header into the two tables."""
-    hlit = br.bits(5) + 257
-    hdist = br.bits(5) + 1
-    hclen = br.bits(4) + 4
-    if hlit > 286 or hdist > 30:
-        raise InflateError(f"dynamic header out of range: {hlit}/{hdist}")
-    clc_len = [0] * 19
-    for i in range(hclen):
-        clc_len[_CLC_ORDER[i]] = br.bits(3)
-    clc = _Huffman(clc_len)
-    lengths: list[int] = []
-    while len(lengths) < hlit + hdist:
-        sym = clc.decode(br)
-        if sym < 16:
-            lengths.append(sym)
-        elif sym == 16:
-            if not lengths:
-                raise InflateError("repeat with no previous length")
-            lengths.extend([lengths[-1]] * (3 + br.bits(2)))
-        elif sym == 17:
-            lengths.extend([0] * (3 + br.bits(3)))
-        else:  # 18
-            lengths.extend([0] * (11 + br.bits(7)))
-    if len(lengths) != hlit + hdist:
-        raise InflateError("code-length run overflows the header counts")
-    lit = _Huffman(lengths[:hlit])
-    dist_lengths = lengths[hlit:]
-    if any(dist_lengths):
-        dist = _Huffman(dist_lengths)
-    else:
-        # ADVICE r12: RFC 1951 permits a block that uses no distance codes
-        # to send a single zero-length distance code (zlib's inflate
-        # accepts this).  Build a sentinel that errors only if a distance
-        # symbol is actually requested.
-        dist = _NoDistanceCodes()
-    return lit, dist
-
-
-class _NoDistanceCodes:
-    """Sentinel decoder for an all-zero distance-length table (§3.2.7)."""
-
-    def decode(self, br: _BitReader) -> int:
-        raise InflateError(
-            "distance symbol requested but the block declared no distance "
-            "codes"
-        )
-
-
-def inflate(data: bytes, pos: int = 0) -> bytes:
-    """Raw DEFLATE decode of ``data[pos:]`` (RFC 1951)."""
-    return _inflate_raw(data, pos)[0]
-
-
-def _inflate_raw(data: bytes, pos: int = 0) -> tuple[bytes, int]:
-    """Raw DEFLATE decode returning (output, end byte position) — the
-    container walkers (zlib trailer, gzip member loop) need the cursor."""
-    br = _BitReader(data, pos)
-    out = bytearray()
-    while True:
-        bfinal = br.bits(1)
-        btype = br.bits(2)
-        if btype == 3:
-            raise InflateError("reserved BTYPE=3")
-        if btype == 0:  # stored
-            br.align()
-            if br.pos + 4 > len(data):
-                raise InflateError("truncated stored-block header")
-            ln = data[br.pos] | (data[br.pos + 1] << 8)
-            nlen = data[br.pos + 2] | (data[br.pos + 3] << 8)
-            if ln != (~nlen & 0xFFFF):
-                raise InflateError(f"LEN/NLEN mismatch: {ln:#x}/{nlen:#x}")
-            br.pos += 4
-            if br.pos + ln > len(data):
-                raise InflateError("truncated stored block")
-            out += data[br.pos : br.pos + ln]
-            br.pos += ln
-        else:
-            lit, dst = _fixed_tables() if btype == 1 else _dynamic_tables(br)
-            while True:
-                sym = lit.decode(br)
-                if sym < 256:
-                    out.append(sym)
-                elif sym == 256:
-                    break
-                else:
-                    if sym > 285:
-                        raise InflateError(f"bad length symbol {sym}")
-                    ebits, base = _LEN_EXTRA[sym - 257]
-                    length = base + (br.bits(ebits) if ebits else 0)
-                    dsym = dst.decode(br)
-                    if dsym > 29:
-                        raise InflateError(f"bad distance symbol {dsym}")
-                    ebits, base = _DIST_EXTRA[dsym]
-                    distance = base + (br.bits(ebits) if ebits else 0)
-                    if distance > len(out):
-                        raise InflateError(
-                            f"distance {distance} before output start"
-                        )
-                    # overlapping copies extend themselves byte-by-byte
-                    start = len(out) - distance
-                    for i in range(length):
-                        out.append(out[start + i])
-        if bfinal:
-            return bytes(out), br.pos
-
-
-def adler32(data: bytes, value: int = 1) -> int:
-    """RFC 1950 §8 reference checksum (mod 65521), no zlib import."""
-    a = value & 0xFFFF
-    b = (value >> 16) & 0xFFFF
-    # 5552 is the largest n with 255n(n+1)/2 + (n+1)(65520) < 2^32 — the
-    # standard deferral window that keeps the mod out of the inner loop.
-    for i in range(0, len(data), 5552):
-        chunk = data[i : i + 5552]
-        for byte in chunk:
-            a += byte
-            b += a
-        a %= ADLER_MOD
-        b %= ADLER_MOD
-    return (b << 16) | a
+from flinkexp_spark.functions.drain import CodecError, drain, drain_one
 
 
 def zlib_decompress(data: bytes) -> bytes:
-    """RFC 1950 container: header checks, raw inflate, Adler-32 verify."""
-    if len(data) < 6:
-        raise InflateError(f"zlib stream too short: {len(data)} bytes")
-    cmf, flg = data[0], data[1]
-    if (cmf * 256 + flg) % 31 != 0:
-        raise InflateError(f"bad FCHECK: {cmf:#04x}{flg:02x}")
-    if cmf & 0x0F != 8:
-        raise InflateError(f"unsupported CM={cmf & 0x0F} (deflate only)")
-    if flg & 0x20:
-        raise InflateError("FDICT preset dictionaries not supported")
-    # ADVICE r12: read the trailer at the deflate stream's END CURSOR, not
-    # the final 4 bytes of the input — a valid stream followed by trailing
-    # bytes is a distinct, explicit diagnosis, not an Adler mismatch.
-    out, end = _inflate_raw(data, 2)
-    if end + 4 > len(data):
-        raise InflateError("truncated Adler-32 trailer")
-    expect = int.from_bytes(data[end : end + 4], "big")
-    got = adler32(out)
-    if got != expect:
-        raise InflateError(f"Adler-32 mismatch: {got:#010x} != {expect:#010x}")
-    if end + 4 != len(data):
-        raise InflateError(
-            f"{len(data) - end - 4} trailing bytes after the zlib stream"
-        )
-    return out
-
-
-# ---------------------------------------------------------------------------
-# Fixed-Huffman literal-only ENCODER (fixture support: zlib never emits
-# BTYPE=1 in practice, so parity fixtures build their own).
-# ---------------------------------------------------------------------------
-
-def _fixed_code(sym: int) -> tuple[int, int]:
-    """(code, nbits) of ``sym`` in the fixed literal/length table."""
-    if sym <= 143:
-        return 0b00110000 + sym, 8
-    if sym <= 255:
-        return 0b110010000 + sym - 144, 9
-    if sym <= 279:
-        return sym - 256, 7
-    return 0b11000000 + sym - 280, 8
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.bitbuf = 0
-        self.bitcnt = 0
-
-    def bits_lsb(self, value: int, n: int) -> None:
-        self.bitbuf |= value << self.bitcnt
-        self.bitcnt += n
-        while self.bitcnt >= 8:
-            self.out.append(self.bitbuf & 0xFF)
-            self.bitbuf >>= 8
-            self.bitcnt -= 8
-
-    def code_msb(self, code: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self.bits_lsb((code >> i) & 1, 1)
-
-    def finish(self) -> bytes:
-        if self.bitcnt:
-            self.out.append(self.bitbuf & 0xFF)
-        return bytes(self.out)
-
-
-def deflate_fixed_literals(data: bytes) -> bytes:
-    """One BFINAL fixed-Huffman block encoding every byte as a literal."""
-    bw = _BitWriter()
-    bw.bits_lsb(1, 1)  # BFINAL
-    bw.bits_lsb(1, 2)  # BTYPE=1 fixed
-    for byte in data:
-        code, n = _fixed_code(byte)
-        bw.code_msb(code, n)
-    code, n = _fixed_code(256)  # end of block
-    bw.code_msb(code, n)
-    return bw.finish()
-
-
-def zlib_wrap_fixed(data: bytes) -> bytes:
-    """RFC 1950 container around :func:`deflate_fixed_literals`."""
-    # CMF 0x78 (CM=8, CINFO=7), FLG=0x01 -> 0x7801 divisible by 31
-    return (
-        b"\x78\x01"
-        + deflate_fixed_literals(data)
-        + adler32(data).to_bytes(4, "big")
-    )
-
-
-# ---------------------------------------------------------------------------
-# gzip container (RFC 1952) + CRC-32 (ISO 3309 / RFC 1952 §8, from spec)
-# ---------------------------------------------------------------------------
-
-def _crc_table() -> list[int]:
-    # RFC 1952 §8.1.1.6.2 reference table construction: reflected
-    # polynomial 0xEDB88320.
-    table = []
-    for n in range(256):
-        c = n
-        for _ in range(8):
-            c = (0xEDB88320 ^ (c >> 1)) if c & 1 else c >> 1
-        table.append(c)
-    return table
-
-
-_CRC_TABLE = _crc_table()
-
-
-def crc32(data: bytes, value: int = 0) -> int:
-    """RFC 1952 reference CRC-32 (table-driven), no zlib import."""
-    c = value ^ 0xFFFFFFFF
-    for byte in data:
-        c = _CRC_TABLE[(c ^ byte) & 0xFF] ^ (c >> 8)
-    return c ^ 0xFFFFFFFF
-
-
-_FTEXT, _FHCRC, _FEXTRA, _FNAME, _FCOMMENT = 1, 2, 4, 8, 16
+    """Decode one zlib stream; nothing may follow it."""
+    plain, rest = drain_one(zlib.decompressobj(), data, "zlib")
+    if rest:
+        raise CodecError(f"zlib: {len(rest)} trailing bytes")
+    return plain
 
 
 def gzip_decompress(data: bytes) -> bytes:
-    """RFC 1952 member walk: magic, CM, flag-driven optional fields
-    (FEXTRA/FNAME/FCOMMENT/FHCRC), raw inflate, CRC-32 + ISIZE verify.
-    Multi-member streams concatenate, per §2.2."""
-    out = bytearray()
-    pos = 0
-    if not data:
-        raise InflateError("empty gzip stream")
-    while pos < len(data):
-        if pos + 10 > len(data):
-            raise InflateError(f"truncated gzip header at byte {pos}")
-        if data[pos : pos + 2] != b"\x1f\x8b":
-            raise InflateError(
-                f"bad gzip magic {data[pos:pos + 2]!r} at byte {pos}"
-            )
-        if data[pos + 2] != 8:
-            raise InflateError(f"unsupported CM={data[pos + 2]} (deflate only)")
-        flg = data[pos + 3]
-        if flg & 0xE0:
-            raise InflateError(f"reserved FLG bits set: {flg:#04x}")
-        hdr_start = pos
-        pos += 10  # MTIME(4) XFL OS skipped — not semantic
-        if flg & _FEXTRA:
-            if pos + 2 > len(data):
-                raise InflateError("truncated FEXTRA length")
-            xlen = data[pos] | (data[pos + 1] << 8)
-            pos += 2 + xlen
-        for bit in (_FNAME, _FCOMMENT):
-            if flg & bit:
-                end = data.find(b"\x00", pos)
-                if end < 0:
-                    raise InflateError("unterminated FNAME/FCOMMENT")
-                pos = end + 1
-        if flg & _FHCRC:
-            if pos + 2 > len(data):
-                raise InflateError("truncated FHCRC")
-            want = data[pos] | (data[pos + 1] << 8)
-            got = crc32(data[hdr_start:pos]) & 0xFFFF
-            if want != got:
-                raise InflateError(f"header CRC16 mismatch: {got:#06x}")
-            pos += 2
-        if pos > len(data):
-            raise InflateError("truncated gzip header fields")
-        member, pos = _inflate_raw(data, pos)
-        if pos + 8 > len(data):
-            raise InflateError("truncated gzip trailer")
-        want_crc = int.from_bytes(data[pos : pos + 4], "little")
-        want_isize = int.from_bytes(data[pos + 4 : pos + 8], "little")
-        pos += 8
-        got_crc = crc32(member)
-        if got_crc != want_crc:
-            raise InflateError(
-                f"CRC-32 mismatch: {got_crc:#010x} != {want_crc:#010x}"
-            )
-        if want_isize != len(member) % (1 << 32):
-            raise InflateError(
-                f"ISIZE mismatch: {len(member)} != {want_isize}"
-            )
-        out += member
-    return bytes(out)
+    """Decode a gzip file: one or more concatenated members."""
+    return drain(functools.partial(zlib.decompressobj, wbits=31), data, "gzip")

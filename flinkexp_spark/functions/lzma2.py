@@ -1,401 +1,26 @@
-"""From-spec LZMA / LZMA2 compressed-chunk decoder.
-
-Implements the LZMA range decoder and match-length/distance model from
-the public LZMA specification (Igor Pavlov's ``lzma-specification.txt``,
-public domain, shipped with the LZMA SDK; the same model is restated in
-the Tukaani ``xz-file-format.txt`` ecosystem docs), and the LZMA2 chunk
-control layer from the xz file-format specification §5.3.1:
-
-* range decoder: 5-byte init (first byte MUST be 0, then 4 big-endian
-  code bytes), 32-bit range starting at 0xFFFFFFFF, top-byte shift-in
-  normalization whenever range < 2^24, 11-bit adaptive bit probabilities
-  (init 1024 = 2048/2, adaptation shift 5),
-* bit trees: 6-bit pos-slot trees (4 length classes), reverse bit trees
-  for the low distance bits and the 4-bit align field,
-* length coders: choice/choice2 + 3-bit low/mid trees per pos-state +
-  8-bit high tree, giving lengths 2..273,
-* literal coder: 0x300-probability tables selected by ``lc`` high bits
-  of the previous byte and ``lp`` low bits of the output position, with
-  the matched-literal path after matches,
-* the 12-state literal/match/rep state machine with rep0..rep3 recent
-  distances, including the short-rep (1-byte rep0) path,
-* LZMA2 control layer: bits 5-6 of the control byte select the reset
-  (0 none, 1 state, 2 state+new props, 3 state+new props+dict); unpacked
-  size = (ctrl & 0x1F) << 16 | 2 bytes, +1; compressed size = 2 bytes,
-  +1; props byte = (pb*5 + lp)*9 + lc with lc+lp <= 4 enforced (the
-  LZMA2 constraint that keeps literal tables bounded).
-
-The dictionary is the block's whole decoded output: match distances
-legally reach back across chunk boundaries unless the chunk reset the
-dictionary, which is why :func:`lzma2_decode_chunks` owns the output
-buffer and per-chunk decoders share it.
-
-Decode-only by design: the companion stored-chunk ENCODER lives in
-functions/xz.py (a from-spec LZMA *encoder* is an optimization search,
-not a format requirement — any conformant stream must decode, and
-tests/test_xz.py pins this decoder byte-exact against streams produced
-by the REAL ``xz`` binary and stdlib ``lzma`` across presets and
-multi-chunk payloads).  ``import lzma`` lives ONLY in tests.
-"""
+"""Raw LZMA2 chunk decode (xz file-format §5.3.1) over stdlib ``lzma``."""
 
 from __future__ import annotations
 
+import lzma
 
-class Lzma2Error(ValueError):
-    """Malformed or out-of-spec LZMA / LZMA2 payload."""
+from flinkexp_spark.functions.drain import drain_one
 
-
-_PROB_INIT = 1024  # kBitModelTotal (2048) / 2
-_TOP = 1 << 24
-
-# state-machine transition tables (spec: UpdateState_* functions)
-_STATE_AFTER_LIT = (0, 0, 0, 0, 1, 2, 3, 4, 5, 6, 4, 5)
-_STATE_AFTER_MATCH = (7, 7, 7, 7, 7, 7, 7, 10, 10, 10, 10, 10)
-_STATE_AFTER_REP = (8, 8, 8, 8, 8, 8, 8, 11, 11, 11, 11, 11)
-_STATE_AFTER_SHORTREP = (9, 9, 9, 9, 9, 9, 9, 11, 11, 11, 11, 11)
+# Raw LZMA2 carries no dictionary size.  A decoder dictionary at least as
+# large as the encoder's decodes every stream; 64 MiB is what preset 9
+# (the largest preset) writes.
+_DICT_SIZE = 1 << 26
 
 
-class _RangeDecoder:
-    """The 32-bit LZMA range decoder over one chunk's compressed bytes."""
-
-    def __init__(self, data: bytes, pos: int, end: int):
-        if pos + 5 > end:
-            raise Lzma2Error("LZMA chunk too short for range-coder init")
-        if data[pos] != 0:
-            raise Lzma2Error("first byte of LZMA range-coded data must be 0")
-        self.code = int.from_bytes(data[pos + 1 : pos + 5], "big")
-        self.range = 0xFFFFFFFF
-        self.data = data
-        self.pos = pos + 5
-        self.end = end
-
-    def _normalize(self) -> None:
-        # spec order: Normalize() runs AFTER each decode step — the
-        # trailing shift-in byte it consumes is part of the chunk's
-        # declared compressed size, so pre-op normalization would leave
-        # rc.pos short of comp_end on valid streams.
-        if self.range < _TOP:
-            if self.pos >= self.end:
-                raise Lzma2Error("LZMA range decoder ran past the chunk")
-            self.range = (self.range << 8) & 0xFFFFFFFF
-            self.code = ((self.code << 8) | self.data[self.pos]) & 0xFFFFFFFF
-            self.pos += 1
-
-    def bit(self, probs: list[int], i: int) -> int:
-        """Decode one bit against adaptive probability ``probs[i]``."""
-        p = probs[i]
-        bound = (self.range >> 11) * p
-        if self.code < bound:
-            self.range = bound
-            probs[i] = p + ((2048 - p) >> 5)
-            sym = 0
-        else:
-            self.range -= bound
-            self.code -= bound
-            probs[i] = p - (p >> 5)
-            sym = 1
-        self._normalize()
-        return sym
-
-    def direct_bits(self, n: int) -> int:
-        """Decode ``n`` fixed-probability (1/2) bits."""
-        res = 0
-        for _ in range(n):
-            self.range >>= 1
-            self.code = (self.code - self.range) & 0xFFFFFFFF
-            if self.code >> 31:  # underflowed: decoded bit is 0
-                self.code = (self.code + self.range) & 0xFFFFFFFF
-                bit = 0
-            else:
-                bit = 1
-            if self.code == self.range:
-                raise Lzma2Error("LZMA range decoder corruption (direct bits)")
-            self._normalize()
-            res = (res << 1) | bit
-        return res
-
-    def bit_tree(self, probs: list[int], nbits: int) -> int:
-        m = 1
-        for _ in range(nbits):
-            m = (m << 1) + self.bit(probs, m)
-        return m - (1 << nbits)
-
-    def bit_tree_reverse(self, probs: list[int], nbits: int) -> int:
-        m = 1
-        sym = 0
-        for i in range(nbits):
-            b = self.bit(probs, m)
-            m = (m << 1) + b
-            sym |= b << i
-        return sym
-
-
-class _LenDecoder:
-    """Length coder: 2..9 / 10..17 / 18..273 via choice bits + trees."""
-
-    def __init__(self) -> None:
-        self.choice = [_PROB_INIT, _PROB_INIT]
-        self.low = [[_PROB_INIT] * 8 for _ in range(16)]
-        self.mid = [[_PROB_INIT] * 8 for _ in range(16)]
-        self.high = [_PROB_INIT] * 256
-
-    def decode(self, rc: _RangeDecoder, pos_state: int) -> int:
-        if not rc.bit(self.choice, 0):
-            return rc.bit_tree(self.low[pos_state], 3)
-        if not rc.bit(self.choice, 1):
-            return 8 + rc.bit_tree(self.mid[pos_state], 3)
-        return 16 + rc.bit_tree(self.high, 8)
-
-
-class _LzmaState:
-    """Probability models + state machine, persistent across LZMA2 chunks
-    that do not reset it."""
-
-    def __init__(self, lc: int, lp: int, pb: int):
-        self.lc, self.lp, self.pb = lc, lp, pb
-        self.state = 0
-        self.rep0 = self.rep1 = self.rep2 = self.rep3 = 0
-        n_lit = 0x300 << (lc + lp)
-        self.lit = [_PROB_INIT] * n_lit
-        self.is_match = [[_PROB_INIT] * 16 for _ in range(12)]
-        self.is_rep = [_PROB_INIT] * 12
-        self.is_rep_g0 = [_PROB_INIT] * 12
-        self.is_rep_g1 = [_PROB_INIT] * 12
-        self.is_rep_g2 = [_PROB_INIT] * 12
-        self.is_rep0_long = [[_PROB_INIT] * 16 for _ in range(12)]
-        self.pos_slot = [[_PROB_INIT] * 64 for _ in range(4)]
-        self.spec_pos = [_PROB_INIT] * 115
-        self.align = [_PROB_INIT] * 16
-        self.len_dec = _LenDecoder()
-        self.rep_len_dec = _LenDecoder()
-
-
-def _decode_literal(
-    rc: _RangeDecoder, st: _LzmaState, out: bytearray, dict_start: int
-) -> None:
-    pos = len(out)
-    # positions feeding litState/posState are DICTIONARY-relative: a
-    # dict reset (LZMA2 control bits) restarts them at 0 even though the
-    # block's output buffer keeps growing
-    rel = pos - dict_start
-    prev = out[pos - 1] if rel > 0 else 0
-    lit_state = (
-        ((rel & ((1 << st.lp) - 1)) << st.lc) | (prev >> (8 - st.lc))
+def lzma2_decode_chunks(
+    data: bytes, pos: int, end: int | None
+) -> tuple[bytes, int]:
+    """Decode the LZMA2 chunk sequence in ``data[pos:end]`` through its
+    0x00 end marker -> (plaintext, offset just past the end marker)."""
+    end = len(data) if end is None else end
+    decoder = lzma.LZMADecompressor(
+        lzma.FORMAT_RAW,
+        filters=[{"id": lzma.FILTER_LZMA2, "dict_size": _DICT_SIZE}],
     )
-    probs = st.lit
-    base = 0x300 * lit_state
-    if st.state >= 7:
-        # matched literal: steer by the byte at rep0+1 back
-        if pos - st.rep0 - 1 < dict_start:
-            raise Lzma2Error("matched-literal distance reaches before dict")
-        match_byte = out[pos - st.rep0 - 1]
-        sym = 1
-        while sym < 0x100:
-            match_bit = (match_byte >> 7) & 1
-            match_byte = (match_byte << 1) & 0xFF
-            b = rc.bit(probs, base + ((1 + match_bit) << 8) + sym)
-            sym = (sym << 1) | b
-            if match_bit != b:
-                break
-        while sym < 0x100:
-            sym = (sym << 1) | rc.bit(probs, base + sym)
-    else:
-        sym = 1
-        while sym < 0x100:
-            sym = (sym << 1) | rc.bit(probs, base + sym)
-    out.append(sym & 0xFF)
-    st.state = _STATE_AFTER_LIT[st.state]
-
-
-def _decode_distance(rc: _RangeDecoder, st: _LzmaState, length: int) -> int:
-    len_state = min(length, 3)
-    slot = rc.bit_tree(st.pos_slot[len_state], 6)
-    if slot < 4:
-        return slot
-    n_direct = (slot >> 1) - 1
-    dist = (2 | (slot & 1)) << n_direct
-    if slot < 14:  # kEndPosModelIndex
-        dist += rc.bit_tree_reverse(
-            # SpecPos sub-tree starting at dist - slot (spec layout)
-            _SubProbs(st.spec_pos, dist - slot),
-            n_direct,
-        )
-    else:
-        dist += rc.direct_bits(n_direct - 4) << 4
-        dist += rc.bit_tree_reverse(st.align, 4)
-    return dist
-
-
-class _SubProbs:
-    """List view offsetting into a shared probability array (the SpecPos
-    table is indexed relative to ``dist - slot`` in the spec)."""
-
-    __slots__ = ("base", "off")
-
-    def __init__(self, base: list[int], off: int):
-        self.base = base
-        self.off = off
-
-    def __getitem__(self, i: int) -> int:
-        return self.base[self.off + i]
-
-    def __setitem__(self, i: int, v: int) -> None:
-        self.base[self.off + i] = v
-
-
-def lzma_decode_into(
-    out: bytearray,
-    dict_start: int,
-    st: _LzmaState,
-    data: bytes,
-    pos: int,
-    comp_end: int,
-    unpacked: int,
-) -> None:
-    """Decode exactly ``unpacked`` bytes of one LZMA2 compressed chunk
-    into ``out`` (which already holds the live dictionary from previous
-    chunks; ``dict_start`` is the index where the current dictionary
-    began — matches may not reach before it)."""
-    rc = _RangeDecoder(data, pos, comp_end)
-    limit = len(out) + unpacked
-    pb_mask = (1 << st.pb) - 1
-    while len(out) < limit:
-        pos_state = (len(out) - dict_start) & pb_mask
-        if not rc.bit(st.is_match[st.state], pos_state):
-            _decode_literal(rc, st, out, dict_start)
-            continue
-        if rc.bit(st.is_rep, st.state):
-            # rep match
-            if rc.bit(st.is_rep_g0, st.state):
-                if rc.bit(st.is_rep_g1, st.state):
-                    if rc.bit(st.is_rep_g2, st.state):
-                        dist = st.rep3
-                        st.rep3 = st.rep2
-                    else:
-                        dist = st.rep2
-                    st.rep2 = st.rep1
-                else:
-                    dist = st.rep1
-                st.rep1 = st.rep0
-                st.rep0 = dist
-            else:
-                if not rc.bit(st.is_rep0_long[st.state], pos_state):
-                    # short rep: single byte at rep0
-                    if len(out) - st.rep0 - 1 < dict_start:
-                        raise Lzma2Error("short-rep reaches before dict")
-                    out.append(out[len(out) - st.rep0 - 1])
-                    st.state = _STATE_AFTER_SHORTREP[st.state]
-                    continue
-            length = st.rep_len_dec.decode(rc, pos_state) + 2
-            st.state = _STATE_AFTER_REP[st.state]
-        else:
-            # new match
-            st.rep3, st.rep2, st.rep1 = st.rep2, st.rep1, st.rep0
-            length = st.len_dec.decode(rc, pos_state) + 2
-            st.state = _STATE_AFTER_MATCH[st.state]
-            dist = _decode_distance(rc, st, length - 2)
-            if dist == 0xFFFFFFFF:
-                raise Lzma2Error(
-                    "LZMA end marker inside a size-bounded LZMA2 chunk"
-                )
-            st.rep0 = dist
-        src = len(out) - st.rep0 - 1
-        if src < dict_start:
-            raise Lzma2Error("match distance reaches before the dictionary")
-        if len(out) + length > limit:
-            raise Lzma2Error("match overruns the chunk's unpacked size")
-        for _ in range(length):  # overlapping copies must go byte-wise
-            out.append(out[src])
-            src += 1
-    if rc.pos != comp_end:
-        # size-bounded LZMA2 chunks end by output count, not end marker:
-        # a conformant encoder's declared compressed size is exactly the
-        # bytes the decoder consumes (spec-style post-op normalization
-        # included), so any slack is corruption
-        raise Lzma2Error(
-            f"LZMA chunk left {comp_end - rc.pos} undecoded bytes"
-        )
-
-
-def parse_props(byte: int) -> tuple[int, int, int]:
-    """props = (pb*5 + lp)*9 + lc, with the LZMA2 lc+lp <= 4 constraint."""
-    if byte >= 225:
-        raise Lzma2Error(f"invalid LZMA props byte {byte}")
-    lc = byte % 9
-    lp = (byte // 9) % 5
-    pb = byte // 45
-    if lc + lp > 4:
-        raise Lzma2Error(f"LZMA2 forbids lc+lp > 4 (lc={lc}, lp={lp})")
-    return lc, lp, pb
-
-
-def lzma2_decode_chunks(data: bytes, pos: int, end: int | None) -> tuple[bytes, int]:
-    """Walk an LZMA2 chunk sequence (stored AND compressed chunks) from
-    ``pos`` until the 0x00 end marker; return (plain, position after the
-    marker).  Mirrors xz.py's stored-only walker with the compressed
-    lane enabled."""
-    out = bytearray()
-    hard_end = len(data) if end is None else min(end, len(data))
-    dict_start = 0
-    st: _LzmaState | None = None
-    need_dict_reset = True
-    while True:
-        if pos >= hard_end:
-            raise Lzma2Error("LZMA2 stream missing its end marker")
-        ctrl = data[pos]
-        pos += 1
-        if ctrl == 0x00:
-            return bytes(out), pos
-        if ctrl in (0x01, 0x02):
-            if need_dict_reset and ctrl != 0x01:
-                raise Lzma2Error(
-                    "first LZMA2 chunk of a block must reset the dictionary"
-                )
-            if pos + 2 > hard_end:
-                raise Lzma2Error("truncated LZMA2 chunk size")
-            size = int.from_bytes(data[pos : pos + 2], "big") + 1
-            pos += 2
-            if pos + size > hard_end:
-                raise Lzma2Error("LZMA2 uncompressed chunk overruns the block")
-            if ctrl == 0x01:
-                dict_start = len(out)
-            out += data[pos : pos + size]
-            pos += size
-            need_dict_reset = False
-            # spec: an uncompressed chunk invalidates the probability
-            # state — the next compressed chunk must reset state
-            st = None
-            continue
-        if ctrl < 0x80:
-            raise Lzma2Error(f"invalid LZMA2 control byte {ctrl:#04x}")
-        if pos + 4 > hard_end:
-            raise Lzma2Error("truncated LZMA2 compressed-chunk header")
-        unpacked = ((ctrl & 0x1F) << 16 | int.from_bytes(data[pos : pos + 2], "big")) + 1
-        comp = int.from_bytes(data[pos + 2 : pos + 4], "big") + 1
-        pos += 4
-        reset = (ctrl >> 5) & 0x3
-        if need_dict_reset and reset != 3:
-            raise Lzma2Error(
-                "first LZMA2 chunk of a block must reset the dictionary"
-            )
-        if reset >= 2:
-            if pos >= hard_end:
-                raise Lzma2Error("truncated LZMA2 props byte")
-            lc, lp, pb = parse_props(data[pos])
-            pos += 1
-            st = _LzmaState(lc, lp, pb)
-        elif reset == 1:
-            if st is None:
-                raise Lzma2Error("LZMA2 state reset without prior props")
-            st = _LzmaState(st.lc, st.lp, st.pb)
-        elif st is None:
-            raise Lzma2Error(
-                "LZMA2 compressed chunk continues state that was never set"
-            )
-        if reset == 3:
-            dict_start = len(out)
-        if pos + comp > hard_end:
-            raise Lzma2Error("LZMA2 compressed chunk overruns the block")
-        lzma_decode_into(out, dict_start, st, data, pos, pos + comp, unpacked)
-        pos += comp
-        need_dict_reset = False
+    plain, rest = drain_one(decoder, data[pos:end], "lzma2")
+    return plain, end - len(rest)

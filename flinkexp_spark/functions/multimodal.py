@@ -18,8 +18,12 @@ size.  Feature extraction is embarrassingly parallel — no shuffle.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from flinkexp_spark.functions import ship_by_value
 
 FAKE_FEATURE_DIM = 4
 
@@ -434,24 +438,6 @@ JPEG_PX_BLOCK_STEP = 17  # block b is constant (s + 17*b) % 160 + 48
 JPEG_PX_DC_QUANT = 8   # DC quant 8 => dequant*IDCT lands on exact integers
 
 
-def _ship_jpeg_by_value() -> None:
-    """Register functions/jpeg.py for BY-VALUE pickling.
-
-    Executors launched by a driver running outside the repo cannot import
-    ``flinkexp_spark`` (the repo's standing closure rule); the codec is too
-    large to inline per-closure, so cloudpickle ships the whole module
-    inside the task pickle instead."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from flinkexp_spark.functions import jpeg  # noqa: F401 — force import
-
-    cloudpickle.register_pickle_by_value(
-        sys.modules["flinkexp_spark.functions.jpeg"]
-    )
-
-
 def with_jpeg_pixel_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -470,7 +456,7 @@ def with_jpeg_pixel_payload(
     reordering of the same coefficients, so the decoded planes are EXACT
     integers in every mode and the oracle recomputes every pixel
     arithmetically (R = round-half-even(y + 1.402*(cr-128)))."""
-    _ship_jpeg_by_value()
+    ship_by_value("jpeg")
     from flinkexp_spark.functions.jpeg import (
         encode_baseline_jpeg,
         encode_progressive_jpeg,
@@ -537,7 +523,7 @@ def jpeg_image_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (sum over row-major pixel index g of (g+1)*pixel) that pins not just
     the value multiset but the decoded pixel ORDER.  One Arrow batch pass:
     huffman -> dequant -> IDCT -> color convert -> featurize per row."""
-    _ship_jpeg_by_value()
+    ship_by_value("jpeg")
     from flinkexp_spark.functions.jpeg import decode_baseline_jpeg
 
     def stats(batches):
@@ -1011,7 +997,7 @@ def decode_image(
     the repo's last image stub through round 6.  Non-JPEG compressed
     formats (PNG/webp) still require PIL/opencv and raise inside the task,
     keeping the honest environment boundary visible."""
-    _ship_jpeg_by_value()
+    ship_by_value("jpeg")
     from flinkexp_spark.functions.jpeg import decode_baseline_jpeg
 
     def decode(batches):
@@ -1055,20 +1041,6 @@ FLAC_MIN_SAMPLES = 80
 FLAC_BLOCK = 64  # frame block size: short enough to cycle stereo modes
 
 
-def _ship_flac_by_value() -> None:
-    """Register functions/flac.py for BY-VALUE pickling (same rule as
-    _ship_jpeg_by_value: executors can't import the repo)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from flinkexp_spark.functions import flac  # noqa: F401 — force import
-
-    cloudpickle.register_pickle_by_value(
-        sys.modules["flinkexp_spark.functions.flac"]
-    )
-
-
 def with_flac_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1080,7 +1052,7 @@ def with_flac_payload(
     arithmetically reproducible in the oracle; the encoder cycles stereo
     decorrelation modes and subframe types frame-over-frame so a 100-doc
     fixture exercises every decoder path."""
-    _ship_flac_by_value()
+    ship_by_value("flac")
     from flinkexp_spark.functions.flac import encode_flac
 
     def encode(batches):
@@ -1124,7 +1096,7 @@ def flac_pcm_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     weighted over the INTERLEAVED samples, so channel order and sample
     order are both pinned, not just the value multiset.  Per-row
     independent work: no shuffle, linear in the corpus."""
-    _ship_flac_by_value()
+    ship_by_value("flac")
     from flinkexp_spark.functions.flac import decode_flac
 
     def decode(batches):
@@ -1189,7 +1161,7 @@ def decode_audio(
     tripping our own, so those stay behind this error until
     soundfile/librosa (or the spec tables) are available; wire them into
     the same mapInPandas closure as the FLAC path."""
-    _ship_flac_by_value()
+    ship_by_value("flac")
     from flinkexp_spark.functions.flac import FLAC_MAGIC, decode_flac
 
     def decode(batches):
@@ -1378,20 +1350,6 @@ ADPCM_RATE_BASE = 8000
 ADPCM_RATE_STEP = 4000  # sample_rate = 8000 + (doc_id % 3) * 4000
 
 
-def _ship_adpcm_by_value() -> None:
-    """Register functions/adpcm.py for BY-VALUE pickling (same rule as
-    _ship_jpeg_by_value: executors can't import the repo)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from flinkexp_spark.functions import adpcm  # noqa: F401 — force import
-
-    cloudpickle.register_pickle_by_value(
-        sys.modules["flinkexp_spark.functions.adpcm"]
-    )
-
-
 def with_adpcm_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1401,7 +1359,7 @@ def with_adpcm_payload(
     (s + 13*b + 7*g) % 16 — closed forms the SQL oracle mirrors before
     replaying the decode recurrence.  doc_id picks 1-3 blocks and the
     sample rate, exactly like the WAV/FLAC fixtures."""
-    _ship_adpcm_by_value()
+    ship_by_value("adpcm")
     from flinkexp_spark.functions.adpcm import build_ima_wav
 
     ba, rb, rs = ADPCM_BLOCK_ALIGN, ADPCM_RATE_BASE, ADPCM_RATE_STEP
@@ -1448,7 +1406,7 @@ def adpcm_pcm_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     pins sample ORDER across block boundaries — a block processed out of
     order or a nibble order flip hash-fails.  Per-row independent work:
     no shuffle, linear in the corpus."""
-    _ship_adpcm_by_value()
+    ship_by_value("adpcm")
     from flinkexp_spark.functions.adpcm import decode_ima_wav
 
     def decode(batches):
@@ -1503,20 +1461,6 @@ PNG_DIM_MIN = 9  # height = (strlen*3 + doc_id) % 24 + 9
 PNG_PAL_SIZE = 16  # palette variant: 16 entries
 
 
-def _ship_png_by_value() -> None:
-    """Register functions/png.py for BY-VALUE pickling (same rule as
-    _ship_jpeg_by_value: executors can't import the repo)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from flinkexp_spark.functions import png  # noqa: F401 — force import
-
-    cloudpickle.register_pickle_by_value(
-        sys.modules["flinkexp_spark.functions.png"]
-    )
-
-
 def with_png_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1535,7 +1479,7 @@ def with_png_payload(
     Non-palette sample (x, y, c) = (s + 31x + 17y + 97c) % 256.  The
     filter seed rotates per row so all five scanline filters appear, and
     every 5th doc splits its IDAT stream across multiple chunks."""
-    _ship_png_by_value()
+    ship_by_value("png")
     from flinkexp_spark.functions.png import encode_png
 
     dmod, dmin, psize = PNG_DIM_MOD, PNG_DIM_MIN, PNG_PAL_SIZE
@@ -1599,7 +1543,7 @@ def png_image_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     scanline order, channel order AND the Adam7 deinterlace are pinned —
     a pass scattered to the wrong lattice hash-fails.  Per-row
     independent work: no shuffle, linear in the corpus."""
-    _ship_png_by_value()
+    ship_by_value("png")
     from flinkexp_spark.functions.png import decode_png
 
     def decode(batches):
@@ -1655,20 +1599,6 @@ GIF_PAL_BASE = 16  # palette size = 16 + (doc_id % 3) * 8 -> 16/24/32
 GIF_PAL_STEP = 8  # (24 forces non-power-of-two color-table padding)
 
 
-def _ship_gif_by_value() -> None:
-    """Register functions/gif.py for BY-VALUE pickling (same rule as
-    _ship_jpeg_by_value: executors can't import the repo)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from flinkexp_spark.functions import gif  # noqa: F401 — force import
-
-    cloudpickle.register_pickle_by_value(
-        sys.modules["flinkexp_spark.functions.gif"]
-    )
-
-
 def with_gif_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1680,7 +1610,7 @@ def with_gif_payload(
     third of the corpus uses a 24-color table whose power-of-two padding
     the decoder must NOT misread as image data.  doc_id bit 0 toggles
     4-pass interlacing, bit 1 toggles local-vs-global color table."""
-    _ship_gif_by_value()
+    ship_by_value("gif")
     from flinkexp_spark.functions.gif import encode_gif
 
     dmod, dmin = GIF_DIM_MOD, GIF_DIM_MIN
@@ -1735,7 +1665,7 @@ def gif_image_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     channel order and the interlace inversion.  ``palette_slots`` is the
     decoder-visible (power-of-two padded) color-table size, pinning the
     size-field arithmetic.  Per-row independent: no shuffle."""
-    _ship_gif_by_value()
+    ship_by_value("gif")
     from flinkexp_spark.functions.gif import decode_gif
 
     def decode(batches):
@@ -1792,23 +1722,6 @@ MJPEG_FPS_STEP = 5
 MJPEG_FRAME_SEED = 97  # frame f gray ramp seed offset: s + 97*f
 
 
-def _ship_avi_by_value() -> None:
-    """Register functions/avi.py AND functions/jpeg.py for BY-VALUE
-    pickling (executors can't import the repo)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from flinkexp_spark.functions import avi, jpeg  # noqa: F401
-
-    cloudpickle.register_pickle_by_value(
-        sys.modules["flinkexp_spark.functions.avi"]
-    )
-    cloudpickle.register_pickle_by_value(
-        sys.modules["flinkexp_spark.functions.jpeg"]
-    )
-
-
 def with_mjpeg_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1819,7 +1732,7 @@ def with_mjpeg_payload(
     still-image fixture, so the LOSSY encode+decode round-trip lands on
     exact integers and the oracle recomputes every pixel of every frame
     arithmetically."""
-    _ship_avi_by_value()
+    ship_by_value("avi", "jpeg")
     from flinkexp_spark.functions.avi import build_mjpeg_avi
     from flinkexp_spark.functions.jpeg import encode_baseline_jpeg
 
@@ -1878,7 +1791,7 @@ def mjpeg_frame_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     f*W*H + y*W + x + 1, so frame ORDER is pinned on top of scanline
     order — frames demuxed out of index order hash-fail.  Per-row
     independent work: no shuffle, linear in the corpus."""
-    _ship_avi_by_value()
+    ship_by_value("avi", "jpeg")
     from flinkexp_spark.functions.avi import demux_mjpeg_avi
     from flinkexp_spark.functions.jpeg import decode_baseline_jpeg
 
@@ -1950,27 +1863,13 @@ G711_N_MIN = 64
 G711_RATE = 8000  # G.711's native telephony rate, both laws
 
 
-def _ship_g711_by_value() -> None:
-    """Register functions/g711.py for BY-VALUE pickling (same rule as
-    _ship_jpeg_by_value: executors can't import the repo)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from flinkexp_spark.functions import g711  # noqa: F401 — force import
-
-    cloudpickle.register_pickle_by_value(
-        sys.modules["flinkexp_spark.functions.g711"]
-    )
-
-
 def with_g711_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Attach a mono G.711 WAV payload: even doc_ids carry µ-law (0x0007),
     odd carry A-law (0x0006); the code bytes follow the closed form the
     SQL oracle mirrors before replaying the expansion formula."""
-    _ship_g711_by_value()
+    ship_by_value("g711")
     from flinkexp_spark.functions.g711 import (
         WAVE_FORMAT_ALAW,
         WAVE_FORMAT_MULAW,
@@ -2014,7 +1913,7 @@ def g711_pcm_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ``format_tag`` exposes which law decoded the row; ``pos_checksum``
     pins sample order.  Per-row independent work: no shuffle, linear in
     the corpus."""
-    _ship_g711_by_value()
+    ship_by_value("g711")
     from flinkexp_spark.functions.g711 import decode_g711_wav
 
     def decode(batches):
@@ -2079,24 +1978,11 @@ APNG_DIM_MOD = 12  # width  = strlen % 12 + 8  (8..19)
 APNG_DIM_MIN = 8  # height = (strlen*3 + doc_id) % 12 + 8
 
 
-def _ship_apng_by_value() -> None:
-    """Register functions/apng.py AND functions/png.py for BY-VALUE
-    pickling (apng imports png's chunk/filter machinery)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from flinkexp_spark.functions import apng, png  # noqa: F401 — force import
-
-    for mod in ("flinkexp_spark.functions.png", "flinkexp_spark.functions.apng"):
-        cloudpickle.register_pickle_by_value(sys.modules[mod])
-
-
 def with_apng_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Attach an APNG payload whose frames follow the closed forms above."""
-    _ship_apng_by_value()
+    ship_by_value("png", "apng")
     from flinkexp_spark.functions.apng import (
         BLEND_OVER,
         BLEND_SOURCE,
@@ -2164,7 +2050,7 @@ def apng_frame_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     channel order AND the compositing history (a wrong dispose op moves
     bytes at exact positions).  Per-row independent work: no shuffle,
     linear in the corpus."""
-    _ship_apng_by_value()
+    ship_by_value("png", "apng")
     from flinkexp_spark.functions.apng import decode_apng
 
     def decode(batches):
@@ -2229,20 +2115,6 @@ QOI_DIM_MOD = 25  # w = strlen(text) % 25 + 8; h = (3*strlen + doc_id) % 25 + 8
 QOI_DIM_MIN = 8
 
 
-def _ship_qoi_by_value() -> None:
-    """Register functions/qoi.py for BY-VALUE pickling (same rule as
-    _ship_jpeg_by_value: executors can't import the repo)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from flinkexp_spark.functions import qoi  # noqa: F401 — force import
-
-    cloudpickle.register_pickle_by_value(
-        sys.modules["flinkexp_spark.functions.qoi"]
-    )
-
-
 def qoi_fixture_pixels(doc_id: int, text: str):
     """Re-export of :func:`flinkexp_spark.functions.qoi.closed_chain_pixels`
     (it lives in qoi.py so worker closures ship it BY VALUE with the codec
@@ -2259,7 +2131,7 @@ def with_qoi_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Attach a QOI payload encoding the closed-form pixel chain."""
-    _ship_qoi_by_value()
+    ship_by_value("qoi")
     # close over qoi-module functions ONLY: the by-value registration ships
     # them with the closure; a reference to this module would pickle by
     # reference and break on executors that can't import the repo
@@ -2297,7 +2169,7 @@ def qoi_pixel_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     then exact-integer stats.  ``pos_checksum`` = sum((3i+ch+1) * value)
     over channel-major order pins pixel AND channel order.  Per-row
     independent work: no shuffle, linear in the corpus."""
-    _ship_qoi_by_value()
+    ship_by_value("qoi")
     from flinkexp_spark.functions.qoi import decode_qoi
 
     def decode(batches):
@@ -2347,99 +2219,31 @@ def qoi_pixel_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DEFLATE/zlib (from-spec inflate — functions/inflate.py, round 12)
+# General-purpose compression.  zlib/gzip, bzip2 and xz/LZMA2 payloads decode
+# through the strict stdlib wrappers (functions/inflate.py, bzip2.py, xz.py
+# over functions/drain.py); zstd, which has no stdlib module, through the
+# RFC 8878 frame walker in functions/zstd.py.  Every fixture compresses a
+# closed-form plaintext, so the DuckDB oracles recompute the byte stats
+# arithmetically and payload bytes never reach a hashed column.
 # ---------------------------------------------------------------------------
 
-DEFLATE_LEN_MOD = 3000
-DEFLATE_LEN_MIN = 2000
-DEFLATE_PERIOD = 64
 
-
-def _ship_inflate_by_value() -> None:
-    """Register functions/inflate.py for BY-VALUE pickling (same rule as
-    _ship_jpeg_by_value: executors can't import the repo)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from flinkexp_spark.functions import inflate  # noqa: F401 — force import
-
-    cloudpickle.register_pickle_by_value(
-        sys.modules["flinkexp_spark.functions.inflate"]
-    )
-
-
-def with_deflate_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+def byte_stats(
+    df: DataFrame, decompress: Callable[[bytes], bytes], id_col: str = "doc_id"
 ) -> DataFrame:
-    """Attach a REAL zlib/DEFLATE payload compressing the deterministic
-    plaintext byte[i] = (s + 3*(i % 64)) % 256 of length
-    len(text)*7 + doc_id mod 3000 + 2000.  ``doc_id % 3`` cycles the
-    decoder's three block-type paths:
-
-    * 0 — stored blocks (zlib level 0: BTYPE=0, LEN/NLEN framing)
-    * 1 — dynamic Huffman (zlib level 9: BTYPE=2 with LZ77 matches —
-      the periodic plaintext guarantees long overlapping copies)
-    * 2 — fixed Huffman (BTYPE=1) from the repo's own literal encoder,
-      since zlib's compressor never emits fixed blocks in practice
-
-    The COMPRESSORS may be stdlib zlib (encoding is fixture synthesis,
-    same stance as the APNG fixture writer); the decode side under test
-    never touches zlib."""
-    _ship_inflate_by_value()
-    from flinkexp_spark.functions.inflate import zlib_wrap_fixed
-
-    lmod, lmin, per = DEFLATE_LEN_MOD, DEFLATE_LEN_MIN, DEFLATE_PERIOD
-
-    def encode(batches):
-        import hashlib
-        import zlib as _z  # fixture synthesis only — decode is from-spec
-
-        import pandas as pd
-
-        def one(doc_id: int, text: str) -> bytes:
-            raw = text.encode("utf-8")
-            s = hashlib.md5(raw).digest()[0]
-            n = (len(raw) * 7 + doc_id) % lmod + lmin
-            plain = bytes((s + 3 * (i % per)) % 256 for i in range(n))
-            var = doc_id % 3
-            if var == 0:
-                return _z.compress(plain, 0)
-            if var == 1:
-                return _z.compress(plain, 9)
-            return zlib_wrap_fixed(plain)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": [
-                        one(int(d), str(t))
-                        for d, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
-
-    return df.mapInPandas(encode, schema=f"{id_col} long, payload binary")
-
-
-def deflate_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL from-spec zlib/DEFLATE decode (functions/inflate.py: container
-    header + Adler-32 verify, canonical Huffman tables, all three block
-    types, overlapping LZ77 copies) inside one Arrow mapInPandas pass,
-    then exact-integer byte stats.  ``pos_checksum`` is weighted by the
-    1-based byte offset, pinning the decode ORDER — a block emitted out
-    of sequence or a copy resolved backwards hash-fails.  Per-row
-    independent work: no shuffle, linear in the corpus."""
-    _ship_inflate_by_value()
-    from flinkexp_spark.functions.inflate import zlib_decompress
+    """Decode each row's ``payload`` with ``decompress`` inside one Arrow
+    mapInPandas pass, then exact-integer byte stats.  ``pos_checksum`` is
+    weighted by the 1-based byte offset, pinning the decode ORDER — a
+    member or block emitted out of sequence hash-fails.  Per-row
+    independent work: no shuffle, linear in the corpus.  The caller ships
+    the module that defines ``decompress`` (:func:`ship_by_value`)."""
 
     def decode(batches):
         import numpy as np
         import pandas as pd
 
         def one(payload: bytes):
-            plain = zlib_decompress(bytes(payload))
+            plain = decompress(bytes(payload))
             v = np.frombuffer(plain, dtype=np.uint8).astype(np.int64)
             pos = np.arange(1, len(v) + 1, dtype=np.int64)
             return (
@@ -2450,13 +2254,7 @@ def deflate_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 int((pos * v).sum()),
             )
 
-        cols = [
-            "n_bytes",
-            "byte_sum",
-            "byte_min",
-            "byte_max",
-            "pos_checksum",
-        ]
+        cols = ["n_bytes", "byte_sum", "byte_min", "byte_max", "pos_checksum"]
         for pdf in batches:
             rows = [one(p) for p in pdf["payload"]]
             out = {id_col: pdf[id_col]}
@@ -2473,6 +2271,65 @@ def deflate_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
+DEFLATE_LEN_MOD = 3000
+DEFLATE_LEN_MIN = 2000
+DEFLATE_PERIOD = 64
+
+
+def with_deflate_payload(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """Attach a zlib payload compressing the deterministic plaintext
+    byte[i] = (s + 3*(i % 64)) % 256 of length len(text)*7 + doc_id mod
+    3000 + 2000.  ``doc_id % 3`` cycles the three DEFLATE block types:
+
+    * 0 — stored blocks (level 0: BTYPE=0, LEN/NLEN framing)
+    * 1 — dynamic Huffman (level 9: BTYPE=2 with LZ77 matches — the
+      periodic plaintext guarantees long overlapping copies)
+    * 2 — fixed Huffman (strategy ``Z_FIXED``: BTYPE=1)"""
+    lmod, lmin, per = DEFLATE_LEN_MOD, DEFLATE_LEN_MIN, DEFLATE_PERIOD
+
+    def encode(batches):
+        import hashlib
+        import zlib
+
+        import pandas as pd
+
+        def one(doc_id: int, text: str) -> bytes:
+            raw = text.encode("utf-8")
+            s = hashlib.md5(raw).digest()[0]
+            n = (len(raw) * 7 + doc_id) % lmod + lmin
+            plain = bytes((s + 3 * (i % per)) % 256 for i in range(n))
+            var = doc_id % 3
+            if var == 0:
+                return zlib.compress(plain, 0)
+            if var == 1:
+                return zlib.compress(plain, 9)
+            co = zlib.compressobj(9, zlib.DEFLATED, 15, 9, zlib.Z_FIXED)
+            return co.compress(plain) + co.flush()
+
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    "payload": [
+                        one(int(d), str(t))
+                        for d, t in zip(pdf[id_col], pdf[text_col])
+                    ],
+                }
+            )
+
+    return df.mapInPandas(encode, schema=f"{id_col} long, payload binary")
+
+
+def deflate_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """zlib decode (functions/inflate.py) + :func:`byte_stats`."""
+    ship_by_value("drain", "inflate")
+    from flinkexp_spark.functions.inflate import zlib_decompress
+
+    return byte_stats(df, zlib_decompress, id_col)
+
+
 GZIP_LEN_MOD = 2000
 GZIP_LEN_MIN = 1500
 GZIP_PERIOD = 48
@@ -2481,25 +2338,20 @@ GZIP_PERIOD = 48
 def with_gzip_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Attach a REAL gzip (RFC 1952) payload compressing the deterministic
+    """Attach a gzip (RFC 1952) payload compressing the deterministic
     plaintext byte[i] = (s*5 + 11*(i % 48)) % 256 of length
     len(text)*3 + doc_id mod 2000 + 1500.  ``doc_id % 3`` cycles the
-    container walker's paths:
+    container layouts:
 
     * 0 — bare member, level 9 (dynamic blocks)
     * 1 — FNAME-bearing header (GzipFile filename), level 9
     * 2 — MULTI-MEMBER stream: the plaintext split across two
       concatenated members (second at level 0 -> stored blocks), which
-      per §2.2 must decode to the same concatenated plaintext
-
-    Encode side is stdlib gzip (fixture synthesis); the decode under
-    test is the from-spec walker in functions/inflate.py."""
-    _ship_inflate_by_value()
-
+      per §2.2 must decode to the same concatenated plaintext"""
     lmod, lmin, per = GZIP_LEN_MOD, GZIP_LEN_MIN, GZIP_PERIOD
 
     def encode(batches):
-        import gzip as _gz  # fixture synthesis only — decode is from-spec
+        import gzip as _gz
         import hashlib
         import io
 
@@ -2541,53 +2393,12 @@ def with_gzip_payload(
 
 
 def gzip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL from-spec gzip decode (functions/inflate.py: member walk with
-    flag-driven optional fields, raw inflate, table-driven CRC-32 and
-    ISIZE verification, multi-member concatenation) inside one Arrow
-    mapInPandas pass, then exact-integer byte stats.  Same envelope as
-    deflate_stats: per-row independent, no shuffle."""
-    _ship_inflate_by_value()
+    """gzip decode (functions/inflate.py) + :func:`byte_stats`."""
+    ship_by_value("drain", "inflate")
     from flinkexp_spark.functions.inflate import gzip_decompress
 
-    def decode(batches):
-        import numpy as np
-        import pandas as pd
+    return byte_stats(df, gzip_decompress, id_col)
 
-        def one(payload: bytes):
-            plain = gzip_decompress(bytes(payload))
-            v = np.frombuffer(plain, dtype=np.uint8).astype(np.int64)
-            pos = np.arange(1, len(v) + 1, dtype=np.int64)
-            return (
-                len(v),
-                int(v.sum()),
-                int(v.min()),
-                int(v.max()),
-                int((pos * v).sum()),
-            )
-
-        cols = ["n_bytes", "byte_sum", "byte_min", "byte_max", "pos_checksum"]
-        for pdf in batches:
-            rows = [one(p) for p in pdf["payload"]]
-            out = {id_col: pdf[id_col]}
-            for j, c in enumerate(cols):
-                out[c] = pd.Series([r[j] for r in rows], dtype="int64")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        decode,
-        schema=(
-            f"{id_col} long, n_bytes long, byte_sum long, "
-            "byte_min long, byte_max long, pos_checksum long"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# bzip2 (X5, r13): the second from-spec general-purpose compression family —
-# BWT + MTF + RLE + Huffman (functions/bzip2.py) next to the DEFLATE trio's
-# LZ77 + Huffman.  Same envelope: per-row independent Arrow mapInPandas,
-# encode side is stdlib bz2 (fixture synthesis ONLY), decode is from-spec.
-# ---------------------------------------------------------------------------
 
 BZIP2_LEN_MOD = 2500
 BZIP2_LEN_MIN = 1800
@@ -2595,43 +2406,25 @@ BZIP2_RUN = 9  # plaintext repeats each value 9x -> RLE1 runs (4 + count 5)
 BZIP2_PERIOD = 37
 
 
-def _ship_bzip2_by_value() -> None:
-    """Register functions/bzip2.py for BY-VALUE pickling (same rule as
-    _ship_inflate_by_value: executors can't import the repo)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from flinkexp_spark.functions import bzip2  # noqa: F401 — force import
-
-    cloudpickle.register_pickle_by_value(
-        sys.modules["flinkexp_spark.functions.bzip2"]
-    )
-
-
 def with_bzip2_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Attach a REAL .bz2 payload compressing the deterministic plaintext
+    """Attach a .bz2 payload compressing the deterministic plaintext
     byte[i] = (s*3 + 13*((i // 9) % 37)) % 256 of length
-    len(text)*5 + doc_id mod 2500 + 1800 — the 9-byte value runs make the
-    decoder's RLE1 stage live in every row (each run is 4 literal bytes +
-    a count byte on the wire).  ``doc_id % 3`` cycles the container paths:
+    len(text)*5 + doc_id mod 2500 + 1800 — the 9-byte value runs put
+    bzip2's RLE1 stage in every row (each run is 4 literal bytes + a
+    count byte on the wire).  ``doc_id % 3`` cycles the container
+    layouts:
 
     * 0 — single stream, level 9 (900k block size)
-    * 1 — single stream, level 1 (100k block size header path)
+    * 1 — single stream, level 1 (100k block size)
     * 2 — MULTI-STREAM: plaintext split across two byte-aligned
-      concatenated streams (stdlib ``bz2.decompress`` semantics)
-
-    Encode side is stdlib bz2 (fixture synthesis); the decode under test
-    is the from-spec BWT+MTF+RLE+Huffman pipeline in functions/bzip2.py."""
-    _ship_bzip2_by_value()
-
+      concatenated streams"""
     lmod, lmin = BZIP2_LEN_MOD, BZIP2_LEN_MIN
     run, per = BZIP2_RUN, BZIP2_PERIOD
 
     def encode(batches):
-        import bz2 as _bz2  # fixture synthesis only — decode is from-spec
+        import bz2 as _bz2
         import hashlib
 
         import pandas as pd
@@ -2668,45 +2461,11 @@ def with_bzip2_payload(
 
 
 def bzip2_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL from-spec bzip2 decode (functions/bzip2.py: Huffman group
-    selectors, RLE2+MTF, inverse BWT, RLE1, block + combined CRC-32
-    verification, multi-stream concatenation) inside one Arrow
-    mapInPandas pass, then exact-integer byte stats.  Same envelope as
-    gzip_stats: per-row independent, no shuffle."""
-    _ship_bzip2_by_value()
+    """bzip2 decode (functions/bzip2.py) + :func:`byte_stats`."""
+    ship_by_value("drain", "bzip2")
     from flinkexp_spark.functions.bzip2 import bz2_decompress
 
-    def decode(batches):
-        import numpy as np
-        import pandas as pd
-
-        def one(payload: bytes):
-            plain = bz2_decompress(bytes(payload))
-            v = np.frombuffer(plain, dtype=np.uint8).astype(np.int64)
-            pos = np.arange(1, len(v) + 1, dtype=np.int64)
-            return (
-                len(v),
-                int(v.sum()),
-                int(v.min()),
-                int(v.max()),
-                int((pos * v).sum()),
-            )
-
-        cols = ["n_bytes", "byte_sum", "byte_min", "byte_max", "pos_checksum"]
-        for pdf in batches:
-            rows = [one(p) for p in pdf["payload"]]
-            out = {id_col: pdf[id_col]}
-            for j, c in enumerate(cols):
-                out[c] = pd.Series([r[j] for r in rows], dtype="int64")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        decode,
-        schema=(
-            f"{id_col} long, n_bytes long, byte_sum long, "
-            "byte_min long, byte_max long, pos_checksum long"
-        ),
-    )
+    return byte_stats(df, bz2_decompress, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2718,20 +2477,6 @@ TIFF_W_MOD = 40
 TIFF_W_MIN = 24
 TIFF_H_MOD = 48
 TIFF_H_MIN = 16
-
-
-def _ship_tiff_by_value() -> None:
-    """Register functions/tiff.py for BY-VALUE pickling (same rule as
-    _ship_inflate_by_value: executors can't import the repo)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from flinkexp_spark.functions import tiff  # noqa: F401 — force import
-
-    cloudpickle.register_pickle_by_value(
-        sys.modules["flinkexp_spark.functions.tiff"]
-    )
 
 
 def with_tiff_payload(
@@ -2751,7 +2496,7 @@ def with_tiff_payload(
     synthesis — no stdlib TIFF exists); decode under test is the from-spec
     IFD walk + MSB-first early-change LZW + predictor undo, pinned to
     hand-derived spec vectors in tests/test_tiff_lzw.py."""
-    _ship_tiff_by_value()
+    ship_by_value("tiff")
     from flinkexp_spark.functions.tiff import tiff_encode_gray
 
     wmod, wmin, hmod, hmin = TIFF_W_MOD, TIFF_W_MIN, TIFF_H_MOD, TIFF_H_MIN
@@ -2798,7 +2543,7 @@ def tiff_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     both byte orders, strip assembly, MSB-first early-change LZW,
     Predictor-2 undo) inside one Arrow mapInPandas pass, then
     exact-integer pixel stats.  Per-row independent, no shuffle."""
-    _ship_tiff_by_value()
+    ship_by_value("tiff")
     from flinkexp_spark.functions.tiff import tiff_decode_gray
 
     def decode(batches):
@@ -2851,20 +2596,6 @@ ZSTD_RUN = 150  # 150-byte value runs -> RLE blocks on the wire
 ZSTD_PERIOD = 53
 
 
-def _ship_zstd_by_value() -> None:
-    """Register functions/zstd.py for BY-VALUE pickling (same rule as
-    _ship_inflate_by_value: executors can't import the repo)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from flinkexp_spark.functions import zstd  # noqa: F401 — force import
-
-    cloudpickle.register_pickle_by_value(
-        sys.modules["flinkexp_spark.functions.zstd"]
-    )
-
-
 def with_zstd_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -2883,7 +2614,7 @@ def with_zstd_payload(
     tests/test_zstd.py round-trips it through the system's REAL ``zstd``
     binary (both directions), so the fixture bytes are independently
     verified conformant."""
-    _ship_zstd_by_value()
+    ship_by_value("zstd")
     from flinkexp_spark.functions.zstd import (
         zstd_compress_stored,
         zstd_skippable_frame,
@@ -2931,113 +2662,52 @@ def with_zstd_payload(
 
 
 def zstd_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """From-spec zstd frame walk (functions/zstd.py: descriptor bit
-    fields, window arithmetic, FCS bias, raw/RLE block loop, xxHash64
-    content checksum, skippable frames, multi-frame concatenation) inside
-    one Arrow mapInPandas pass, then exact-integer byte stats.  Same
-    envelope as gzip_stats: per-row independent, no shuffle."""
-    _ship_zstd_by_value()
+    """zstd frame walk (functions/zstd.py) + :func:`byte_stats`."""
+    ship_by_value("zstd")
     from flinkexp_spark.functions.zstd import zstd_decompress
 
-    def decode(batches):
-        import numpy as np
-        import pandas as pd
-
-        def one(payload: bytes):
-            plain = zstd_decompress(bytes(payload))
-            v = np.frombuffer(plain, dtype=np.uint8).astype(np.int64)
-            pos = np.arange(1, len(v) + 1, dtype=np.int64)
-            return (
-                len(v),
-                int(v.sum()),
-                int(v.min()),
-                int(v.max()),
-                int((pos * v).sum()),
-            )
-
-        cols = ["n_bytes", "byte_sum", "byte_min", "byte_max", "pos_checksum"]
-        for pdf in batches:
-            rows = [one(p) for p in pdf["payload"]]
-            out = {id_col: pdf[id_col]}
-            for j, c in enumerate(cols):
-                out[c] = pd.Series([r[j] for r in rows], dtype="int64")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        decode,
-        schema=(
-            f"{id_col} long, n_bytes long, byte_sum long, "
-            "byte_min long, byte_max long, pos_checksum long"
-        ),
-    )
+    return byte_stats(df, zstd_decompress, id_col)
 
 
 # ---------------------------------------------------------------------------
-# xz container walker (X5, r14): the .xz file format over LZMA2
-# uncompressed chunks (functions/xz.py) with from-spec CRC-64/ECMA-182
-# and header CRC-32 verification — the fourth compression-container
-# family, pinned against the system's real ``xz`` binary AND stdlib lzma.
+# .xz payloads (functions/xz.py): multi-stream files with Stream Padding
+# (multimodal_decode_xz_frames) and the LZMA2 encoder presets/filter chains
+# (multimodal_decode_lzma2).
 # ---------------------------------------------------------------------------
 
 XZ_LEN_MOD = 2400
 XZ_LEN_MIN = 1500
-XZ_RUN = 170  # 170-byte value runs (payload variety, spans chunk splits)
+XZ_RUN = 170  # 170-byte value runs (payload variety)
 XZ_PERIOD = 47
-
-
-def _ship_xz_by_value() -> None:
-    """Register functions/xz.py AND its dependencies — crc32 from
-    functions/inflate.py and the r14 LZMA2 range decoder
-    (functions/lzma2.py, imported lazily inside the chunk walk) — for
-    by-value pickling: executors can't import the repo (same rule as
-    _ship_inflate_by_value)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from flinkexp_spark.functions import inflate, lzma2, xz  # noqa: F401
-
-    for mod in (
-        "flinkexp_spark.functions.inflate",
-        "flinkexp_spark.functions.lzma2",
-        "flinkexp_spark.functions.xz",
-    ):
-        cloudpickle.register_pickle_by_value(sys.modules[mod])
 
 
 def with_xz_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Attach a spec-valid .xz payload carrying the deterministic
-    plaintext byte[i] = (s*11 + 23*((i // 170) % 47)) % 256 of length
+    """Attach a .xz payload carrying the deterministic plaintext
+    byte[i] = (s*11 + 23*((i // 170) % 47)) % 256 of length
     len(text)*4 + doc_id mod 2400 + 1500.  ``doc_id % 4`` cycles the
-    walker's container paths:
+    integrity checks and the multi-stream layout:
 
-    * 0 — one block, CRC-64 check (the xz default)
-    * 1 — multi-block (700-byte blocks) WITH the optional
-      Compressed/Uncompressed Size header fields, CRC-32 check — the
-      layout the real multithreaded ``xz -T`` writes
-    * 2 — two concatenated streams split mid-payload with zero Stream
-      Padding between them (SHA-256 then no check)
-    * 3 — multi-block without size fields, no check
-
-    The encoder is the from-spec stored writer in functions/xz.py;
-    tests/test_xz.py round-trips it through the system's REAL ``xz``
-    binary and stdlib ``lzma``, so the fixture bytes are independently
-    verified conformant."""
-    _ship_xz_by_value()
-    from flinkexp_spark.functions.xz import (
-        xz_compress_stored,
-        xz_stream_padding,
-    )
-
+    * 0 — one stream, CRC-64 check (the xz default)
+    * 1 — one stream, CRC-32 check
+    * 2 — two concatenated streams split mid-payload (SHA-256, then no
+      check) with 4, 8 or 12 bytes of zero Stream Padding between them —
+      the layout ``lzma.decompress`` silently truncates
+    * 3 — one stream, no check"""
     lmod, lmin = XZ_LEN_MOD, XZ_LEN_MIN
     run, per = XZ_RUN, XZ_PERIOD
 
     def encode(batches):
         import hashlib
+        import lzma
 
         import pandas as pd
+
+        def xz(data: bytes, check: int) -> bytes:
+            # preset 0 is the cheapest encoder; the presets are
+            # multimodal_decode_lzma2's subject, not this fixture's
+            return lzma.compress(data, preset=0, check=check)
 
         def one(doc_id: int, text: str) -> bytes:
             raw = text.encode("utf-8")
@@ -3048,19 +2718,17 @@ def with_xz_payload(
             )
             var = doc_id % 4
             if var == 0:
-                return xz_compress_stored(plain, check="crc64")
+                return xz(plain, lzma.CHECK_CRC64)
             if var == 1:
-                return xz_compress_stored(
-                    plain, check="crc32", block_bytes=700, with_sizes=True
-                )
+                return xz(plain, lzma.CHECK_CRC32)
             if var == 2:
                 half = n // 2
                 return (
-                    xz_compress_stored(plain[:half], check="sha256")
-                    + xz_stream_padding(1 + doc_id % 3)
-                    + xz_compress_stored(plain[half:], check="none")
+                    xz(plain[:half], lzma.CHECK_SHA256)
+                    + b"\0" * (4 * (1 + doc_id % 3))
+                    + xz(plain[half:], lzma.CHECK_NONE)
                 )
-            return xz_compress_stored(plain, check="none", block_bytes=900)
+            return xz(plain, lzma.CHECK_NONE)
 
         for pdf in batches:
             yield pd.DataFrame(
@@ -3083,24 +2751,17 @@ LZMA2_LEN_MIN = 2000
 def with_lzma2_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Attach a REAL-COMPRESSED .xz payload (range-coded LZMA2 chunks)
+    """Attach a compressed .xz payload (range-coded LZMA2 chunks)
     carrying the deterministic plaintext byte[i] = (s*11 + 23*((i // 170)
     % 47)) % 256 of length len(text)*4 + doc_id mod 3000 + 2000.
-
-    The COMPRESSOR is stdlib liblzma — deliberately: the from-spec side
-    under test is the DECODER (functions/lzma2.py range decoder +
-    functions/xz.py container walk), and a conformant reference encoder
-    is exactly what pins it, the executor-side analog of test_xz.py's
-    real-binary round-trips.  ``doc_id % 4`` cycles encoder shapes:
+    ``doc_id % 4`` cycles encoder shapes:
 
     * 0 — preset 6, CRC-64 check (the xz default)
     * 1 — preset 0 (fast mode's different match emission), CRC-32
     * 2 — preset 9|EXTREME, SHA-256
-    * 3 — custom filter chain (64 KiB dict, lc=0 lp=2 pb=1: exercises
-      the non-default literal-context split), no check
+    * 3 — custom filter chain (64 KiB dict, lc=0 lp=2 pb=1: the
+      non-default literal-context split), no check
     """
-    _ship_xz_by_value()
-
     lmod, lmin = LZMA2_LEN_MOD, LZMA2_LEN_MIN
     run, per = XZ_RUN, XZ_PERIOD
 
@@ -3156,43 +2817,8 @@ def with_lzma2_payload(
 
 
 def xz_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """From-spec .xz container walk (functions/xz.py: stream header/footer
-    CRC-32s, block-header parse + CRC, the LZMA2 uncompressed-chunk loop,
-    block checks across all four types, Index record verification,
-    Backward Size, multi-stream + Stream Padding) inside one Arrow
-    mapInPandas pass, then exact-integer byte stats.  Same envelope as
-    zstd_stats: per-row independent, no shuffle."""
-    _ship_xz_by_value()
+    """.xz decode (functions/xz.py) + :func:`byte_stats`."""
+    ship_by_value("drain", "xz")
     from flinkexp_spark.functions.xz import xz_decompress
 
-    def decode(batches):
-        import numpy as np
-        import pandas as pd
-
-        def one(payload: bytes):
-            plain = xz_decompress(bytes(payload))
-            v = np.frombuffer(plain, dtype=np.uint8).astype(np.int64)
-            pos = np.arange(1, len(v) + 1, dtype=np.int64)
-            return (
-                len(v),
-                int(v.sum()),
-                int(v.min()),
-                int(v.max()),
-                int((pos * v).sum()),
-            )
-
-        cols = ["n_bytes", "byte_sum", "byte_min", "byte_max", "pos_checksum"]
-        for pdf in batches:
-            rows = [one(p) for p in pdf["payload"]]
-            out = {id_col: pdf[id_col]}
-            for j, c in enumerate(cols):
-                out[c] = pd.Series([r[j] for r in rows], dtype="int64")
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        decode,
-        schema=(
-            f"{id_col} long, n_bytes long, byte_sum long, "
-            "byte_min long, byte_max long, pos_checksum long"
-        ),
-    )
+    return byte_stats(df, xz_decompress, id_col)

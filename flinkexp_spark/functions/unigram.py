@@ -1,7 +1,7 @@
 """Pure-Python unigram-LM Viterbi segmenter — the per-word lattice DP.
 
 Kept in its own import-light module (stdlib only) so worker closures can
-ship it BY VALUE with ``cloudpickle.register_pickle_by_value`` — the same
+ship it BY VALUE with :func:`flinkexp_spark.functions.ship_by_value` — the same
 rule as the codec modules (functions/qoi.py, functions/g711.py): anything
 a pandas UDF calls must not pickle by reference to a repo module, because
 executors outside the repo can't import ``flinkexp_spark``.

@@ -1,387 +1,21 @@
-"""From-spec .xz container walker with full LZMA2 decode.
-
-Derived entirely from the public xz file-format specification (the
-Tukaani project's ``xz-file-format.txt``, v1.2.1) and, for CRC-64, the
-ECMA-182 polynomial:
-
-* stream header: 6-byte magic ``FD 37 7A 58 5A 00``, 2-byte Stream Flags
-  (check-type id with reserved bits enforced), CRC-32 of the flags
-* block headers: encoded-size byte ((v+1)*4), Block Flags (filter count,
-  optional Compressed/Uncompressed Size VLIs, reserved bits enforced),
-  Filter Flags (LZMA2 id 0x21, 1-byte dictionary-size property), header
-  padding, CRC-32 over everything before the CRC field
-* the LZMA2 chunk walk: control 0x00 end marker, 0x01/0x02 uncompressed
-  chunks (2-byte big-endian size-1; 0x01 also resets the dictionary and
-  is REQUIRED for a block's first chunk), >=0x80 compressed chunks
-* block padding to 4-byte alignment, then the integrity Check over the
-  block's UNCOMPRESSED bytes: None / CRC-32 (RFC 1952 reflected table,
-  reused from functions/inflate.py) / CRC-64 (ECMA-182 reflected,
-  implemented below) / SHA-256 (hashlib — the container is what is being
-  implemented from spec here, not the hash primitive)
-* the Index: 0x00 indicator, record count VLI, per-block (Unpadded Size,
-  Uncompressed Size) VLI pairs — each verified against the walked
-  blocks — padding, CRC-32
-* stream footer: CRC-32 over Backward Size + Stream Flags, Backward
-  Size ((stored+1)*4 must equal the real Index size), flags identical to
-  the header's, ``YZ`` magic
-* multi-stream concatenation with 4-byte-aligned zero Stream Padding
-
-LZMA2 COMPRESSED chunks (control >= 0x80) decode through the from-spec
-LZMA range decoder in functions/lzma2.py (r14 — the walker's original
-uncompressed-chunk scope boundary is retired), so ``xz_decompress``
-handles arbitrary conformant .xz files.  The stored ENCODER here still
-emits uncompressed chunks only (a from-spec LZMA encoder is an
-optimization search, not a format requirement) — tests/test_xz.py
-round-trips through the system's REAL ``xz`` binary and stdlib ``lzma``
-in BOTH directions across presets and multi-chunk payloads.  ``import
-lzma`` lives ONLY in tests.
+""".xz decode over stdlib ``lzma``, with the multi-stream rules of the
+xz file format: streams may be concatenated, separated or followed by
+zero Stream Padding in multiples of 4 bytes.  ``lzma.decompress`` stops
+at the first padding and drops every later stream; this wrapper decodes
+them all and raises :class:`~flinkexp_spark.functions.drain.CodecError`
+for truncation, a failed integrity check, misaligned padding or any
+other trailing byte.
 """
 
 from __future__ import annotations
 
-import hashlib
-import struct
+import functools
+import lzma
 
-from flinkexp_spark.functions.inflate import crc32
-from flinkexp_spark.functions.lzma2 import Lzma2Error, lzma2_decode_chunks
-
-_MAGIC = b"\xfd7zXZ\x00"
-_FOOTER_MAGIC = b"YZ"
-_FILTER_LZMA2 = 0x21
-
-# check-type id -> size of the Check field (spec §2.1.1.2: ids 0x01-0x03
-# are 4 bytes, 0x04-0x06 are 8, 0x07-0x09 are 16, 0x0A-0x0C are 32)
-_CHECK_NONE, _CHECK_CRC32, _CHECK_CRC64, _CHECK_SHA256 = 0x00, 0x01, 0x04, 0x0A
-_CHECK_SIZE = {0: 0}
-for _cid in range(1, 16):
-    _CHECK_SIZE[_cid] = 4 << ((_cid - 1) // 3)
-
-
-class XzError(ValueError):
-    """Malformed or out-of-scope .xz payload."""
-
-
-# ---------------------------------------------------------------------------
-# CRC-64 (ECMA-182 polynomial, reflected form 0xC96C5795D7870F42 — the
-# xz spec's Check id 0x04)
-# ---------------------------------------------------------------------------
-
-def _crc64_table() -> list[int]:
-    table = []
-    for n in range(256):
-        c = n
-        for _ in range(8):
-            c = (0xC96C5795D7870F42 ^ (c >> 1)) if c & 1 else c >> 1
-        table.append(c)
-    return table
-
-
-_CRC64_TABLE = _crc64_table()
-_M64 = (1 << 64) - 1
-
-
-def crc64_xz(data: bytes, value: int = 0) -> int:
-    """CRC-64/XZ: ECMA-182 reflected, init/xorout all-ones."""
-    c = (value ^ _M64) & _M64
-    for byte in data:
-        c = _CRC64_TABLE[(c ^ byte) & 0xFF] ^ (c >> 8)
-    return (c ^ _M64) & _M64
-
-
-# ---------------------------------------------------------------------------
-# Variable-length integers (spec §1.2: 7 bits per byte, low groups first,
-# high bit = continuation, at most 9 bytes)
-# ---------------------------------------------------------------------------
-
-def _vli_encode(v: int) -> bytes:
-    if not 0 <= v < (1 << 63):
-        raise XzError(f"VLI out of range: {v}")
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _vli_decode(data: bytes, pos: int) -> tuple[int, int]:
-    v = shift = 0
-    for i in range(9):
-        if pos >= len(data):
-            raise XzError("truncated VLI")
-        b = data[pos]
-        pos += 1
-        v |= (b & 0x7F) << shift
-        if not b & 0x80:
-            if b == 0 and i > 0:
-                raise XzError("non-minimal VLI encoding")
-            return v, pos
-        shift += 7
-    raise XzError("VLI longer than 9 bytes")
-
-
-# ---------------------------------------------------------------------------
-# Decoder (container walker)
-# ---------------------------------------------------------------------------
-
-def _check_of(check_id: int, plain: bytes) -> bytes:
-    if check_id == _CHECK_NONE:
-        return b""
-    if check_id == _CHECK_CRC32:
-        return struct.pack("<I", crc32(plain))
-    if check_id == _CHECK_CRC64:
-        return struct.pack("<Q", crc64_xz(plain))
-    if check_id == _CHECK_SHA256:
-        return hashlib.sha256(plain).digest()
-    raise XzError(f"check id {check_id:#04x} unsupported")
-
-
-def _decode_lzma2(data: bytes, pos: int, end: int | None) -> tuple[bytes, int]:
-    """Walk LZMA2 chunks from ``pos`` — stored AND compressed (r14: the
-    range-coded lane lives in functions/lzma2.py, pinned byte-exact
-    against stdlib lzma and the real ``xz`` binary).
-
-    ``end`` (when the block header declared Compressed Size) bounds the
-    walk; the 0x00 end-of-stream control terminates it either way.
-
-    NB the lzma2 import is MODULE-LEVEL: executors receive this module
-    pickled by value and a call-time import would try (and fail) to
-    import the repo on the worker."""
-    try:
-        return lzma2_decode_chunks(data, pos, end)
-    except Lzma2Error as ex:
-        raise XzError(str(ex)) from ex
-
-
-def _decode_block(data: bytes, pos: int, check_id: int) -> tuple[bytes, int, int]:
-    """One block starting at its header-size byte.
-
-    Returns (plaintext, new_pos, unpadded_size) — unpadded size is what
-    the Index records: header + compressed data + check, NO padding."""
-    start = pos
-    size_byte = data[pos]
-    hdr_size = (size_byte + 1) * 4
-    if pos + hdr_size > len(data):
-        raise XzError("truncated block header")
-    hdr = data[pos : pos + hdr_size]
-    (want_crc,) = struct.unpack_from("<I", hdr, hdr_size - 4)
-    if crc32(hdr[: hdr_size - 4]) != want_crc:
-        raise XzError("block header CRC32 mismatch")
-    flags = hdr[1]
-    if flags & 0x3C:
-        raise XzError("reserved block flag bits set")
-    n_filters = (flags & 0x03) + 1
-    hp = 2
-    comp_size = unc_size = None
-    if flags & 0x40:
-        comp_size, hp = _vli_decode(hdr, hp)
-    if flags & 0x80:
-        unc_size, hp = _vli_decode(hdr, hp)
-    for _ in range(n_filters):
-        fid, hp = _vli_decode(hdr, hp)
-        psize, hp = _vli_decode(hdr, hp)
-        props = hdr[hp : hp + psize]
-        hp += psize
-        if fid != _FILTER_LZMA2:
-            raise XzError(f"filter {fid:#x} unsupported (LZMA2 only)")
-        if psize != 1 or len(props) != 1 or props[0] > 40:
-            raise XzError("bad LZMA2 dictionary-size property")
-    if any(hdr[hp : hdr_size - 4]):
-        raise XzError("block header padding not zero")
-    pos += hdr_size
-    data_start = pos
-    end = None if comp_size is None else data_start + comp_size
-    plain, pos = _decode_lzma2(data, pos, end)
-    used = pos - data_start
-    if comp_size is not None and used != comp_size:
-        raise XzError(f"compressed size {comp_size} != walked {used}")
-    if unc_size is not None and unc_size != len(plain):
-        raise XzError(f"uncompressed size {unc_size} != decoded {len(plain)}")
-    pad = -used % 4
-    if any(data[pos : pos + pad]):
-        raise XzError("block padding not zero")
-    pos += pad
-    csize = _CHECK_SIZE[check_id]
-    if pos + csize > len(data):
-        raise XzError("truncated block check")
-    if check_id not in (_CHECK_NONE, _CHECK_CRC32, _CHECK_CRC64, _CHECK_SHA256):
-        raise XzError(f"check id {check_id:#04x} unsupported")
-    want = data[pos : pos + csize]
-    got = _check_of(check_id, plain)
-    if want != got:
-        raise XzError(
-            f"block check mismatch: {got.hex()} != {want.hex()}"
-        )
-    pos += csize
-    unpadded = hdr_size + used + csize
-    assert pos == start + hdr_size + used + pad + csize
-    return plain, pos, unpadded
-
-
-def _decode_stream(data: bytes, pos: int) -> tuple[bytes, int]:
-    """One stream starting at its magic byte."""
-    if data[pos : pos + 6] != _MAGIC:
-        raise XzError("bad stream header magic")
-    pos += 6
-    flags = data[pos : pos + 2]
-    if len(flags) < 2 or flags[0] != 0 or flags[1] & 0xF0:
-        raise XzError("reserved stream flag bits set")
-    check_id = flags[1]
-    if check_id not in _CHECK_SIZE:
-        raise XzError(f"invalid check id {check_id:#04x}")
-    (want,) = struct.unpack_from("<I", data, pos + 2)
-    if crc32(flags) != want:
-        raise XzError("stream header CRC32 mismatch")
-    pos += 6
-    out = bytearray()
-    records: list[tuple[int, int]] = []
-    while True:
-        if pos >= len(data):
-            raise XzError("stream truncated before its index")
-        if data[pos] == 0x00:  # index indicator (a block size byte is never 0)
-            break
-        plain, pos, unpadded = _decode_block(data, pos, check_id)
-        out += plain
-        records.append((unpadded, len(plain)))
-    # ---- index ----
-    idx_start = pos
-    pos += 1
-    n_rec, pos = _vli_decode(data, pos)
-    if n_rec != len(records):
-        raise XzError(f"index declares {n_rec} blocks, walked {len(records)}")
-    for i, (unp, unc) in enumerate(records):
-        got_unp, pos = _vli_decode(data, pos)
-        got_unc, pos = _vli_decode(data, pos)
-        if (got_unp, got_unc) != (unp, unc):
-            raise XzError(
-                f"index record {i}: ({got_unp}, {got_unc}) != "
-                f"walked ({unp}, {unc})"
-            )
-    pad = -(pos - idx_start) % 4
-    if any(data[pos : pos + pad]):
-        raise XzError("index padding not zero")
-    pos += pad
-    (want,) = struct.unpack_from("<I", data, pos)
-    if crc32(data[idx_start:pos]) != want:
-        raise XzError("index CRC32 mismatch")
-    pos += 4
-    idx_size = pos - idx_start
-    # ---- footer ----
-    if pos + 12 > len(data):
-        raise XzError("truncated stream footer")
-    (fcrc,) = struct.unpack_from("<I", data, pos)
-    if crc32(data[pos + 4 : pos + 10]) != fcrc:
-        raise XzError("stream footer CRC32 mismatch")
-    (bw,) = struct.unpack_from("<I", data, pos + 4)
-    if (bw + 1) * 4 != idx_size:
-        raise XzError(f"backward size {(bw + 1) * 4} != index size {idx_size}")
-    if data[pos + 8 : pos + 10] != flags:
-        raise XzError("footer stream flags differ from header's")
-    if data[pos + 10 : pos + 12] != _FOOTER_MAGIC:
-        raise XzError("bad stream footer magic")
-    return bytes(out), pos + 12
+from flinkexp_spark.functions.drain import drain
 
 
 def xz_decompress(data: bytes) -> bytes:
-    """Walk a multi-stream .xz payload (streams concatenate; zero Stream
-    Padding in 4-byte units between them is skipped)."""
-    if len(data) < 12:
-        raise XzError(f"payload too short: {len(data)} bytes")
-    out = bytearray()
-    pos = 0
-    while pos < len(data):
-        plain, pos = _decode_stream(data, pos)
-        out += plain
-        while pos + 4 <= len(data) and data[pos : pos + 4] == b"\x00\x00\x00\x00":
-            pos += 4  # stream padding
-        if pos < len(data) and data[pos] == 0:
-            raise XzError("stream padding not a multiple of 4 bytes")
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# Stored encoder (fixture synthesis; spec-valid for any decoder)
-# ---------------------------------------------------------------------------
-
-_CHUNK_MAX = 1 << 16  # 2-byte size-1 field
-_DICT_PROP = 0x16  # 8 MiB — the byte real `xz -6` writes; irrelevant to
-# uncompressed chunks but must be a valid dictionary-size encoding
-
-
-def _encode_block(chunk: bytes, check_id: int, with_sizes: bool) -> tuple[bytes, int]:
-    """One block carrying ``chunk`` as LZMA2 uncompressed chunks.
-
-    Returns (bytes_with_padding_and_check, unpadded_size)."""
-    body = bytearray()
-    for i in range(0, len(chunk), _CHUNK_MAX):
-        piece = chunk[i : i + _CHUNK_MAX]
-        body.append(0x01 if i == 0 else 0x02)  # first chunk resets dict
-        body += struct.pack(">H", len(piece) - 1)
-        body += piece
-    body.append(0x00)  # LZMA2 end marker
-    flags = 0x00
-    hdr_tail = bytearray()
-    if with_sizes:
-        flags |= 0xC0
-        hdr_tail += _vli_encode(len(body))
-        hdr_tail += _vli_encode(len(chunk))
-    hdr_tail += _vli_encode(_FILTER_LZMA2)
-    hdr_tail += _vli_encode(1)
-    hdr_tail.append(_DICT_PROP)
-    raw = 1 + 1 + len(hdr_tail)  # size byte + flags + tail (before pad+crc)
-    hdr_size = -(-(raw + 4) // 4) * 4  # round up to a multiple of 4
-    hdr = bytearray([hdr_size // 4 - 1, flags])
-    hdr += hdr_tail
-    hdr += b"\x00" * (hdr_size - 4 - len(hdr))
-    hdr += struct.pack("<I", crc32(bytes(hdr)))
-    out = hdr + body
-    out += b"\x00" * (-len(body) % 4)
-    out += _check_of(check_id, chunk)
-    unpadded = hdr_size + len(body) + _CHECK_SIZE[check_id]
-    return bytes(out), unpadded
-
-
-def xz_compress_stored(
-    data: bytes,
-    check: str = "crc64",
-    block_bytes: int | None = None,
-    with_sizes: bool = False,
-) -> bytes:
-    """Emit one spec-valid .xz stream using only LZMA2 uncompressed
-    chunks.  ``block_bytes`` splits the payload into multiple blocks
-    (fixture variety: a populated multi-record Index); ``with_sizes``
-    writes the optional Compressed/Uncompressed Size header fields.
-    Real xz/lzma decoders accept the result byte-for-byte (pinned
-    against both in tests/test_xz.py)."""
-    check_id = {
-        "none": _CHECK_NONE,
-        "crc32": _CHECK_CRC32,
-        "crc64": _CHECK_CRC64,
-        "sha256": _CHECK_SHA256,
-    }[check]
-    flags = bytes([0x00, check_id])
-    out = bytearray(_MAGIC + flags + struct.pack("<I", crc32(flags)))
-    step = block_bytes or max(len(data), 1)
-    records = []
-    for i in range(0, len(data), step):  # empty input -> zero blocks,
-        chunk = data[i : i + step]       # exactly like the real xz tool
-        blk, unpadded = _encode_block(chunk, check_id, with_sizes)
-        out += blk
-        records.append((unpadded, len(chunk)))
-    idx = bytearray(b"\x00") + _vli_encode(len(records))
-    for unp, unc in records:
-        idx += _vli_encode(unp) + _vli_encode(unc)
-    idx += b"\x00" * (-len(idx) % 4)
-    idx += struct.pack("<I", crc32(bytes(idx)))
-    out += idx
-    tail = struct.pack("<I", len(idx) // 4 - 1) + flags
-    out += struct.pack("<I", crc32(tail)) + tail + _FOOTER_MAGIC
-    return bytes(out)
-
-
-def xz_stream_padding(units: int = 1) -> bytes:
-    """Zero Stream Padding between concatenated streams (4-byte units)."""
-    return b"\x00\x00\x00\x00" * units
+    """Decode one or more concatenated .xz streams."""
+    new_decoder = functools.partial(lzma.LZMADecompressor, lzma.FORMAT_XZ)
+    return drain(new_decoder, data, "xz", padding=4)

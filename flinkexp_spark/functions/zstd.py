@@ -14,10 +14,11 @@ Derived entirely from RFC 8878 (public, complete):
 * skippable frames (magic 0x184D2A50-5F) and multi-frame concatenation
 
 ``Compressed_Block`` (FSE/Huffman sequence sections, RFC 8878 §3.1.1.3)
-is OUT OF SCOPE and rejected with an explicit error — this module is the
-container walker the round-12 verdict asked for, not a full entropy
-decoder; the from-spec entropy lanes live in functions/inflate.py
-(DEFLATE trio) and functions/bzip2.py.  The stored-block ENCODER here
+is OUT OF SCOPE and rejected with an explicit error — this module is a
+container walker, not a full entropy decoder.  It is from-spec because
+Python has no stdlib zstd module; DEFLATE, bzip2 and xz decode through
+stdlib ``zlib``, ``bz2`` and ``lzma`` (functions/inflate.py, bzip2.py,
+xz.py).  The stored-block ENCODER here
 emits spec-valid frames that any conformant zstd decoder accepts —
 tests/test_zstd.py round-trips them through the system's real ``zstd``
 binary in both directions, which also transitively pins the xxHash64
