@@ -6,7 +6,8 @@ Targets are in BASELINE.md (self-declared; the reference publishes none —
 see SURVEY.md §6).  Env knobs:
 
 * ``SPARK_GRAFT_SF_DIR``  — fixture dir (default /root/testdata/sf0.1)
-* ``SPARK_GRAFT_CPUS``    — local core count (default 32)
+* ``SPARK_GRAFT_CPUS``    — local core count (default: the cores this
+  process may run on, see ``session.default_cpus``)
 * ``SPARK_GRAFT_BENCH_REPEATS`` — runs per query (default 3)
 
 NOISE CONTROL: the host carries outside-container load that swings single
@@ -466,7 +467,7 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    # Stop Spark before the re-measure subprocess (so two 32-thread JVMs
+    # Stop Spark before the re-measure subprocess (so two full-width JVMs
     # never compute at once) and BEFORE the final print — nothing
     # (shutdown logs, late executor stderr) may land after the JSON line
     # in the merged capture.

@@ -72,10 +72,13 @@ def local_df(spark: SparkSession, rows: list, schema) -> DataFrame:
     """Small driver-local DataFrame in ONE partition.
 
     ``spark.createDataFrame(list)`` parallelizes to defaultParallelism
-    pickled-RDD slices (32 here); any downstream single-task action —
+    pickled-RDD slices (one per core); any downstream single-task action —
     ``coalesce(1).write``, a replay sentinel file, a tiny groupBy — then
-    pays one Python-worker round trip PER SLICE (~150 ms x 32 ≈ 5 s
-    measured for a 1-row write).  One slice makes it one round trip.
+    pays one Python-worker task PER SLICE.  Most of a stock worker's
+    ~150 ms per task is re-parsing Spark's zip archives, not Arrow or
+    pickling; the engine's worker entry point (``compat/pyworker``, see
+    ``session.py``) skips that, but each task is still a worker round
+    trip, so one slice stays the rule.
     Empty row lists skip the RDD path entirely (Spark requires a
     non-empty RDD to infer nothing from, and an empty LocalRelation is
     what callers want anyway).

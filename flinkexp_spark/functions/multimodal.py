@@ -2293,13 +2293,15 @@ def with_deflate_payload(
         import hashlib
         import zlib
 
+        import numpy as np
         import pandas as pd
 
         def one(doc_id: int, text: str) -> bytes:
             raw = text.encode("utf-8")
             s = hashlib.md5(raw).digest()[0]
             n = (len(raw) * 7 + doc_id) % lmod + lmin
-            plain = bytes((s + 3 * (i % per)) % 256 for i in range(n))
+            i = np.arange(n)
+            plain = ((s + 3 * (i % per)) % 256).astype(np.uint8).tobytes()
             var = doc_id % 3
             if var == 0:
                 return zlib.compress(plain, 0)
@@ -2355,13 +2357,17 @@ def with_gzip_payload(
         import hashlib
         import io
 
+        import numpy as np
         import pandas as pd
 
         def one(doc_id: int, text: str) -> bytes:
             raw = text.encode("utf-8")
             s = hashlib.md5(raw).digest()[0]
             n = (len(raw) * 3 + doc_id) % lmod + lmin
-            plain = bytes((s * 5 + 11 * (i % per)) % 256 for i in range(n))
+            i = np.arange(n)
+            plain = (
+                (s * 5 + 11 * (i % per)) % 256
+            ).astype(np.uint8).tobytes()
             var = doc_id % 3
             if var == 0:
                 return _gz.compress(plain, 9, mtime=0)
@@ -2427,15 +2433,17 @@ def with_bzip2_payload(
         import bz2 as _bz2
         import hashlib
 
+        import numpy as np
         import pandas as pd
 
         def one(doc_id: int, text: str) -> bytes:
             raw = text.encode("utf-8")
             s = hashlib.md5(raw).digest()[0]
             n = (len(raw) * 5 + doc_id) % lmod + lmin
-            plain = bytes(
-                (s * 3 + 13 * ((i // run) % per)) % 256 for i in range(n)
-            )
+            i = np.arange(n)
+            plain = (
+                (s * 3 + 13 * ((i // run) % per)) % 256
+            ).astype(np.uint8).tobytes()
             var = doc_id % 3
             if var == 0:
                 return _bz2.compress(plain, 9)
@@ -2626,15 +2634,17 @@ def with_zstd_payload(
     def encode(batches):
         import hashlib
 
+        import numpy as np
         import pandas as pd
 
         def one(doc_id: int, text: str) -> bytes:
             raw = text.encode("utf-8")
             s = hashlib.md5(raw).digest()[0]
             n = (len(raw) * 4 + doc_id) % lmod + lmin
-            plain = bytes(
-                (s * 7 + 17 * ((i // run) % per)) % 256 for i in range(n)
-            )
+            i = np.arange(n)
+            plain = (
+                (s * 7 + 17 * ((i // run) % per)) % 256
+            ).astype(np.uint8).tobytes()
             var = doc_id % 3
             if var == 0:
                 return zstd_compress_stored(plain)
@@ -2702,6 +2712,7 @@ def with_xz_payload(
         import hashlib
         import lzma
 
+        import numpy as np
         import pandas as pd
 
         def xz(data: bytes, check: int) -> bytes:
@@ -2713,9 +2724,10 @@ def with_xz_payload(
             raw = text.encode("utf-8")
             s = hashlib.md5(raw).digest()[0]
             n = (len(raw) * 4 + doc_id) % lmod + lmin
-            plain = bytes(
-                (s * 11 + 23 * ((i // run) % per)) % 256 for i in range(n)
-            )
+            i = np.arange(n)
+            plain = (
+                (s * 11 + 23 * ((i // run) % per)) % 256
+            ).astype(np.uint8).tobytes()
             var = doc_id % 4
             if var == 0:
                 return xz(plain, lzma.CHECK_CRC64)
@@ -2769,15 +2781,17 @@ def with_lzma2_payload(
         import hashlib
         import lzma
 
+        import numpy as np
         import pandas as pd
 
         def one(doc_id: int, text: str) -> bytes:
             raw = text.encode("utf-8")
             s = hashlib.md5(raw).digest()[0]
             n = (len(raw) * 4 + doc_id) % lmod + lmin
-            plain = bytes(
-                (s * 11 + 23 * ((i // run) % per)) % 256 for i in range(n)
-            )
+            i = np.arange(n)
+            plain = (
+                (s * 11 + 23 * ((i // run) % per)) % 256
+            ).astype(np.uint8).tobytes()
             var = doc_id % 4
             if var == 0:
                 return lzma.compress(

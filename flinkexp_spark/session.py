@@ -18,6 +18,15 @@ state backend (reference: study/pom.xml:72).  Our equivalent is a configured
   (and comparable against the DuckDB oracle, which is UTC-naive).
 * **shuffle partitions ~ cores** locally; at cluster scale AQE coalescing
   makes the static number mostly irrelevant, but we still expose it.
+* **Host-sized defaults**: local cores are the ones this process may run
+  on and the driver heap is a quarter of physical memory (1-8 GB), unless
+  ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` say otherwise.
+* **Python-worker entry point** ``compat/pyworker/pyspark_graft_worker.py``
+  (``spark.python.worker.module``): before Python 3.13 every worker task
+  re-parsed pyspark.zip, the py4j zip and the spark-core jar once per
+  cached zip importer (~0.2 s per task); the entry point re-reads an
+  archive only when it changed.  A session built elsewhere keeps the stock
+  worker unless it sets the same two things (``PYTHONPATH`` and the key).
 """
 
 from __future__ import annotations
@@ -26,9 +35,33 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_session", "DEFAULT_SHUFFLE_PARTITIONS"]
+__all__ = [
+    "get_session", "default_cpus", "default_driver_memory",
+    "DEFAULT_SHUFFLE_PARTITIONS",
+]
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# stdlib-only, one module: every Python worker gets it on its PYTHONPATH
+_PYWORKER_DIR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "compat", "pyworker"
+)
+
+
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else a quarter of MemTotal in 1-8 GB."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{max(1024, min(mem_mb // 4, 8192))}m"
+
+
+DEFAULT_SHUFFLE_PARTITIONS = default_cpus()
 
 
 def get_session(
@@ -42,7 +75,7 @@ def get_session(
     In local mode there is one JVM; on a real cluster the same config applies
     unchanged — nothing here assumes local execution.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
 
@@ -53,6 +86,13 @@ def get_session(
     from flinkexp_spark.compat.protobuf_shim import ensure_protobuf
 
     ensure_protobuf()
+    # Workers find their entry point (spark.python.worker.module below)
+    # through the same inherited PYTHONPATH.
+    pythonpath = os.environ.get("PYTHONPATH", "")
+    if _PYWORKER_DIR not in pythonpath.split(os.pathsep):
+        os.environ["PYTHONPATH"] = _PYWORKER_DIR + (
+            os.pathsep + pythonpath if pythonpath else ""
+        )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -68,6 +108,7 @@ def get_session(
         # --- python boundary ----------------------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.python.worker.module", "pyspark_graft_worker")
         # --- time semantics ------------------------------------------------
         .config("spark.sql.session.timeZone", "UTC")
         # --- streaming state -----------------------------------------------
@@ -88,7 +129,7 @@ def get_session(
         # so epoch arithmetic and window() work (see datasets.load).
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
