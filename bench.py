@@ -28,11 +28,12 @@ suite-level medians alone produce phantom regressions.  Defense: (a) load1
 is stamped per query (``queries_load1``), and (b) after the suite — in a
 FRESH process via tools/mini_bench.py, same drain/median/convergence
 methodology — every query whose suite median exceeds 2x its own history
-(the previous ``BENCH_LOCAL.json`` at the same sf) is re-measured.  BOTH
-numbers are recorded under ``remeasured``; the fresh median replaces the
-suite slot only when the fresh run CONFIRMS the inflation (fresh <
-suite/1.5).  A genuine regression re-measures at the suite level and is
-kept + recorded; a uniform slow host re-measures slow and is kept.
+(the previous ``BENCH_LOCAL.json`` at the same sf and core count, see
+``history_for``) is re-measured.  BOTH numbers are recorded under
+``remeasured``; the fresh median replaces the suite slot only when the
+fresh run CONFIRMS the inflation (fresh < suite/1.5).  A genuine
+regression re-measures at the suite level and is kept + recorded; a
+uniform slow host re-measures slow and is kept.
 Disable with SPARK_GRAFT_BENCH_REMEASURE=0.
 """
 
@@ -62,7 +63,11 @@ def _head_sha() -> str | None:
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flinkexp_spark.registry import REGISTRY, queries  # noqa: E402
-from flinkexp_spark.session import get_session  # noqa: E402
+from flinkexp_spark.session import (  # noqa: E402
+    default_cpus,
+    get_session,
+    host_memory_mb,
+)
 from flinkexp_spark.srcstate import source_tree_hash  # noqa: E402
 
 # Headline suite: one representative per BASELINE.md row.  Names absent from
@@ -260,6 +265,16 @@ def load_gate(
     return "refused", load1
 
 
+def history_for(prev: dict, sf: float, cpus: int) -> dict[str, float]:
+    """Per-query medians of a previous ``BENCH_LOCAL.json`` payload, or
+    nothing unless it was measured at the same ``sf`` on the same core
+    count: a run on another host size is no yardstick for an episode
+    (pure function; unit-tested in tests/test_api.py)."""
+    if prev.get("sf") != sf or prev.get("cpus") != cpus:
+        return {}
+    return {k: float(v) for k, v in (prev.get("queries") or {}).items()}
+
+
 def episode_outliers(
     medians: dict[str, float],
     hist: dict[str, float],
@@ -351,7 +366,8 @@ def main() -> None:
         sf = -1.0
 
     # Episode-control history: the previous full per-query map at the same
-    # sf (read BEFORE this run overwrites it at the end).
+    # sf and core count (read BEFORE this run overwrites it at the end).
+    cpus = default_cpus()
     hist: dict[str, float] = {}
     try:
         with open(
@@ -359,15 +375,12 @@ def main() -> None:
                 os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"
             )
         ) as f:
-            _prev = json.load(f)
-        if _prev.get("sf") == sf:
-            hist = {
-                k: float(v) for k, v in (_prev.get("queries") or {}).items()
-            }
+            hist = history_for(json.load(f), sf, cpus)
     except Exception:
         pass
 
     spark = get_session(app_name="flinkexp_spark_bench")
+    spark_version = spark.version
     # Runtime WARNs (e.g. WindowExec single-partition notes from bounded
     # demo queries) go to the merged capture; r06's 2000-byte tail was
     # mostly WARN spam and nearly pushed the JSON line out.  ERROR only.
@@ -514,6 +527,9 @@ def main() -> None:
             "load1_prerun": load1,
             "load1_postrun": round(os.getloadavg()[0], 2),
             "sf": sf,
+            "cpus": cpus,
+            "host_mem_mb": host_memory_mb(),
+            "spark_version": spark_version,
         }
     )
     # The driver captures only the LAST ~2000 bytes of merged output and

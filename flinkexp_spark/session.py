@@ -36,7 +36,7 @@ import os
 from pyspark.sql import SparkSession
 
 __all__ = [
-    "get_session", "default_cpus", "default_driver_memory",
+    "get_session", "default_cpus", "default_driver_memory", "host_memory_mb",
     "DEFAULT_SHUFFLE_PARTITIONS",
 ]
 
@@ -52,12 +52,17 @@ def default_cpus() -> int:
     return int(env) if env else len(os.sched_getaffinity(0))
 
 
+def host_memory_mb() -> int:
+    """Physical memory of this host in MiB."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+
+
 def default_driver_memory() -> str:
     """``SPARK_GRAFT_DRIVER_MEM``, else a quarter of MemTotal in 1-8 GB."""
     env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if env:
         return env
-    mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    mem_mb = host_memory_mb()
     return f"{max(1024, min(mem_mb // 4, 8192))}m"
 
 

@@ -221,3 +221,25 @@ def test_bench_episode_remeasure_logic():
     assert rem["d"]["fresh"] is None
     # untouched entries
     assert medians["c"] == 1.1 and "c" not in rem and "new_q" not in rem
+
+
+def test_bench_history_needs_same_sf_and_cpus():
+    """Episode-control history is per host size: a previous run counts
+    only at the same sf AND core count.  A payload without ``cpus`` (the
+    shape of BENCH_LOCAL.json before the stamp) gives no history."""
+    import importlib.util
+    import os as _os
+
+    spec = importlib.util.spec_from_file_location(
+        "bench_mod3",
+        _os.path.join(_os.path.dirname(__file__), "..", "bench.py"),
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+
+    prev = {"sf": 0.1, "cpus": 4, "queries": {"a": 1, "b": 2.5}}
+    assert bench.history_for(prev, 0.1, 4) == {"a": 1.0, "b": 2.5}
+    assert bench.history_for(prev, 0.1, 8) == {}
+    assert bench.history_for(prev, 0.01, 4) == {}
+    unstamped = {k: v for k, v in prev.items() if k != "cpus"}
+    assert bench.history_for(unstamped, 0.1, 4) == {}

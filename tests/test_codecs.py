@@ -6,7 +6,8 @@ generate; the rejection table covers truncation, trailing garbage, a
 corrupt checksum and bad padding for each format.  The padded multi-stream
 xz case and every trailing-garbage case fail against the lenient one-shot
 ``zlib``/``bz2``/``lzma.decompress``, which is what the wrappers exist to
-prevent.
+prevent.  The last test runs every multimodal encoder and decoder closure
+in a process that cannot import the package.
 """
 
 from __future__ import annotations
@@ -16,6 +17,7 @@ import gzip
 import io
 import lzma
 import os
+import pickle
 import random
 import subprocess
 import sys
@@ -196,32 +198,97 @@ def test_lzma2_end_offset_leaves_trailing_bytes_to_caller() -> None:
     assert lzma2_decode_chunks(framed, 4, end) == (PLAIN, end)
 
 
+# Every fixture encoder of functions/multimodal.py and the decoders that
+# read its payloads.  Y4M's reader is the 1->N frame sampler.
+SHELL_PAIRS = {
+    "with_ppm_payload": ["decode_ppm", "image_stats"],
+    "with_jpeg_payload": ["decode_jpeg_meta"],
+    "with_jpeg_pixel_payload": ["jpeg_image_stats", "decode_image"],
+    "with_wav_payload": ["decode_wav", "audio_stats"],
+    "with_ogg_payload": ["decode_ogg_meta"],
+    "with_mp3_payload": ["decode_mp3_meta"],
+    "with_flac_payload": ["flac_pcm_stats", "decode_audio"],
+    "with_y4m_payload": ["sample_y4m_frames"],
+    "with_adpcm_payload": ["adpcm_pcm_stats"],
+    "with_png_payload": ["png_image_stats"],
+    "with_gif_payload": ["gif_image_stats"],
+    "with_mjpeg_payload": ["mjpeg_frame_stats"],
+    "with_g711_payload": ["g711_pcm_stats"],
+    "with_apng_payload": ["apng_frame_stats"],
+    "with_qoi_payload": ["qoi_pixel_stats"],
+    "with_deflate_payload": ["deflate_stats"],
+    "with_gzip_payload": ["gzip_stats"],
+    "with_bzip2_payload": ["bzip2_stats"],
+    "with_tiff_payload": ["tiff_stats"],
+    "with_zstd_payload": ["zstd_stats"],
+    "with_xz_payload": ["xz_stats"],
+    "with_lzma2_payload": ["xz_stats"],
+}
+
+
+class _Capture:
+    """Stands in for a DataFrame: ``mapInPandas`` hands back the worker
+    function and its schema instead of planning a Spark job."""
+
+    def mapInPandas(self, fn, schema):
+        return fn, schema
+
+
 def test_decode_closure_unpickles_without_the_repo() -> None:
-    """The by-value rule: a worker closure over a codec wrapper must load
+    """The by-value rule: every multimodal worker closure must load and run
     in a process that cannot import flinkexp_spark, as on executors of a
-    driver started outside the repo."""
+    driver started outside the repo.  All encoder -> decoder pairs run in
+    one such process on doc_ids 0-3, which hits every variant cycle; each
+    decoder frame must carry exactly its schema's columns, all int64, and
+    equal the frame the same closures give in this process."""
+    import pandas as pd
     from pyspark import cloudpickle
 
-    from flinkexp_spark.functions import ship_by_value
+    from flinkexp_spark.functions import multimodal as M
 
-    ship_by_value("drain", "xz")
-    from flinkexp_spark.functions.xz import xz_decompress as decompress
+    def capture(name: str):
+        return getattr(M, name)(_Capture())
 
-    def decode(payload: bytes) -> int:
-        return len(decompress(payload))
-
-    payload = ROUNDTRIPS["xz-padded-multi-stream"][1](PLAIN)
-    blob = cloudpickle.dumps((decode, payload))
+    pairs = {
+        enc: (capture(enc)[0], {dec: capture(dec)[0] for dec in decs})
+        for enc, decs in SHELL_PAIRS.items()
+    }
+    schemas = {
+        dec: capture(dec)[1] for decs in SHELL_PAIRS.values() for dec in decs
+    }
+    batch = pd.DataFrame(
+        {
+            "doc_id": pd.Series(range(4), dtype="int64"),
+            "text": [f"doc {i}: " + "payload " * (3 * i + 1) for i in range(4)],
+        }
+    )
     script = (
         "import importlib.util, pickle, sys\n"
         "assert importlib.util.find_spec('flinkexp_spark') is None\n"
-        "fn, payload = pickle.loads(sys.stdin.buffer.read())\n"
-        "print(fn(payload))\n"
+        "pairs, batch = pickle.loads(sys.stdin.buffer.read())\n"
+        "out = {}\n"
+        "for enc, (encode, decoders) in pairs.items():\n"
+        "    (payloads,) = encode(iter([batch]))\n"
+        "    for dec, decode in decoders.items():\n"
+        "        (out[enc, dec],) = decode(iter([payloads]))\n"
+        "sys.stdout.buffer.write(pickle.dumps(out))\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
-        [sys.executable, "-c", script], input=blob, capture_output=True,
-        cwd=tempfile.gettempdir(), env=env, timeout=120,
+        [sys.executable, "-c", script],
+        input=cloudpickle.dumps((pairs, batch)), capture_output=True,
+        cwd=tempfile.gettempdir(), env=env, timeout=300,
     )
     assert proc.returncode == 0, proc.stderr.decode()[-2000:]
-    assert proc.stdout.decode().strip() == str(len(PLAIN))
+    frames = pickle.loads(proc.stdout)
+    assert sorted(frames) == sorted(
+        (enc, dec) for enc, decs in SHELL_PAIRS.items() for dec in decs
+    )
+    for (enc, dec), frame in frames.items():
+        names = [c.split()[0] for c in schemas[dec].split(",")]
+        assert list(frame.columns) == names, (enc, dec)
+        assert (frame.dtypes == "int64").all(), (enc, dec, frame.dtypes)
+        encode, decoders = pairs[enc]
+        (payloads,) = encode(iter([batch]))
+        (local,) = decoders[dec](iter([payloads]))
+        pd.testing.assert_frame_equal(frame, local)
