@@ -45,6 +45,7 @@ import re
 import subprocess
 import sys
 import time
+from collections.abc import Callable
 
 
 def _head_sha() -> str | None:
@@ -275,6 +276,27 @@ def history_for(prev: dict, sf: float, cpus: int) -> dict[str, float]:
     return {k: float(v) for k, v in (prev.get("queries") or {}).items()}
 
 
+def converge(
+    run_once: Callable[[], float], base: int, max_attempts: int
+) -> tuple[int, float, float, float, bool]:
+    """Per-query noise convergence: call ``run_once`` (returns seconds)
+    until the latest window of ``base`` runs has spread (max - min) <=
+    max(window min, 0.2 s), or ``max(base, max_attempts)`` runs are spent.
+    A cold or contended run simply falls out of the window.  Returns
+    (runs made, median, min, max, converged) of that latest window (pure
+    function; unit-tested in tests/test_api.py; tools/mini_bench.py uses
+    it too)."""
+    runs: list[float] = []
+    while True:
+        runs.append(run_once())
+        if len(runs) < base:
+            continue
+        w = sorted(runs[-base:])
+        converged = (w[-1] - w[0]) <= max(w[0], 0.2)
+        if converged or len(runs) >= max(base, max_attempts):
+            return len(runs), w[len(w) // 2], w[0], w[-1], converged
+
+
 def episode_outliers(
     medians: dict[str, float],
     hist: dict[str, float],
@@ -439,40 +461,32 @@ def main() -> None:
     q_load1: dict[str, float] = {}
     noisy: list[str] = []
 
-    def _window_stats(window: list[float]) -> tuple[float, float, float, bool]:
-        w = sorted(window)
-        spread_ok = (w[-1] - w[0]) <= max(w[0], 0.2)
-        return w[len(w) // 2], w[0], w[-1], spread_ok
-
     for name in suite:
-        runs: list[float] = []
         base = max(repeats, extra_repeats.get(name, 0))
-        converged = False
-        while len(runs) < max(base, max_attempts):
+        last: dict = {}
+
+        def run_once() -> float:
             t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
+            last["df"] = df = qs[name](spark, sf_dir)
             # Drain through a noop write, NOT count(): count() lets
             # Catalyst prune every computed column, so map-only queries
             # (classifier scores, encodings) would be timed without doing
             # their actual work.  noop materializes every output column.
             df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-            if len(runs) >= base:
-                med, mn, mx, converged = _window_stats(runs[-base:])
-                if converged:
-                    break
-        n = df.count()
-        med, mn, mx, converged = _window_stats(runs[-base:])
+            return time.perf_counter() - t0
+
+        n_runs, med, mn, mx, converged = converge(run_once, base, max_attempts)
+        n = last["df"].count()
         medians[name] = round(med, 3)
         mins[name] = round(mn, 3)
         maxes[name] = round(mx, 3)
-        attempts[name] = len(runs)
+        attempts[name] = n_runs
         # per-query load stamp (r14 VERDICT #3: the suite-level load gate
         # cannot see an episode that starts mid-suite)
         q_load1[name] = round(os.getloadavg()[0], 2)
         if not converged:
             noisy.append(name)
-        retry = f" attempts={len(runs)}" if len(runs) > base else ""
+        retry = f" attempts={n_runs}" if n_runs > base else ""
         print(
             f"# {name}: median={medians[name]:.2f}s min={mins[name]:.2f}s "
             f"max={maxes[name]:.2f}s ({n} rows){retry}"

@@ -23,8 +23,6 @@ same footing as the streaming replay rigs, not an engine data path.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +30,7 @@ from pyspark.sql import functions as F
 
 from flinkexp_spark import datasets
 from flinkexp_spark.registry import register
+from flinkexp_spark.streaming.replay import scratch_dir
 
 N_PARTITIONS = 5
 N_EVENTS = 4000  # first N by event_id — sf-independent fixture slice
@@ -139,8 +138,7 @@ def q_source_kafka_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkexp_spark.sources.kafkalog import register_kafka_log_source
 
     register_kafka_log_source(spark)
-    work = tempfile.mkdtemp(prefix="kafkalog_")
-    try:
+    with scratch_dir("kafkalog") as work:
         topic = f"events_{uuid.uuid4().hex[:8]}"
         _produce_topic(spark, sf_dir, work, topic)
         df = (
@@ -152,8 +150,6 @@ def q_source_kafka_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize before the log dir is removed
         return _summarize(df).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _ROUNDTRIP_ORACLE = f"""
@@ -197,8 +193,7 @@ def q_pipeline_kafka_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_kafka_log_source(spark)
-    work = tempfile.mkdtemp(prefix="kafkalog_")
-    try:
+    with scratch_dir("kafkalog") as work:
         in_topic = f"events_{uuid.uuid4().hex[:8]}"
         out_topic = f"totals_{uuid.uuid4().hex[:8]}"
         _produce_topic(spark, sf_dir, work, in_topic)
@@ -236,8 +231,6 @@ def q_pipeline_kafka_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .load()
         )
         return _summarize(out).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register("stream_kafka_contract", oracle=_ORACLE, tags=("S5", "T9", "S11"))
@@ -258,39 +251,38 @@ def q_stream_kafka_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkexp_spark.sources.kafkalog import register_kafka_log_source
 
     register_kafka_log_source(spark)
-    work = tempfile.mkdtemp(prefix="kafkalog_")
     name = f"kafka_mem_{uuid.uuid4().hex[:8]}"
-    try:
-        topic = f"events_{uuid.uuid4().hex[:8]}"
-        _produce_topic(spark, sf_dir, work, topic, lo=0, hi=N_EVENTS // 4)
-        stream = (
-            spark.readStream.format("kafkalog")
-            .option("path", work)
-            .option("subscribe", topic)
-            .option("startingOffsets", "earliest")
-            .option("maxRecordsPerBatch", "1000")
-            .load()
-        )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option(
-                "checkpointLocation", os.path.join(work, "_checkpoint")
-            )
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
+    with scratch_dir("kafkalog") as work:
         try:
-            q.processAllAvailable()  # stage 1: initial tail, one batch
-            _produce_topic(spark, sf_dir, work, topic, lo=N_EVENTS // 4, hi=N_EVENTS)
-            q.processAllAvailable()  # stage 2: live growth, throttled
+            topic = f"events_{uuid.uuid4().hex[:8]}"
+            _produce_topic(spark, sf_dir, work, topic, lo=0, hi=N_EVENTS // 4)
+            stream = (
+                spark.readStream.format("kafkalog")
+                .option("path", work)
+                .option("subscribe", topic)
+                .option("startingOffsets", "earliest")
+                .option("maxRecordsPerBatch", "1000")
+                .load()
+            )
+            q = (
+                stream.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("append")
+                .option(
+                    "checkpointLocation", os.path.join(work, "_checkpoint")
+                )
+                .trigger(processingTime="0 seconds")
+                .start()
+            )
+            try:
+                q.processAllAvailable()  # stage 1: initial tail, one batch
+                _produce_topic(spark, sf_dir, work, topic, lo=N_EVENTS // 4, hi=N_EVENTS)
+                q.processAllAvailable()  # stage 2: live growth, throttled
+            finally:
+                q.stop()
+            return _summarize(spark.table(name)).localCheckpoint()
         finally:
-            q.stop()
-        return _summarize(spark.table(name)).localCheckpoint()
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(work, ignore_errors=True)
+            spark.catalog.dropTempView(name)
 
 
 @register("stream_kafka_restart_recovery", oracle=_ORACLE, tags=("S5", "T10"))
@@ -310,8 +302,7 @@ def q_stream_kafka_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFra
     from flinkexp_spark.sources.kafkalog import register_kafka_log_source
 
     register_kafka_log_source(spark)
-    work = tempfile.mkdtemp(prefix="kafkalog_")
-    try:
+    with scratch_dir("kafkalog") as work:
         topic = f"events_{uuid.uuid4().hex[:8]}"
         ckpt = os.path.join(work, "_ckpt")
         out = os.path.join(work, "_out")
@@ -365,8 +356,6 @@ def q_stream_kafka_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFra
             .orderBy("partition")
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register("stream_kafka_exactly_once", oracle=_ORACLE, tags=("S5", "T9"))
@@ -387,8 +376,7 @@ def q_stream_kafka_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_kafka_log_source(spark)
-    work = tempfile.mkdtemp(prefix="kafkalog_")
-    try:
+    with scratch_dir("kafkalog") as work:
         in_topic = f"events_{uuid.uuid4().hex[:8]}"
         out_topic = f"relay_{uuid.uuid4().hex[:8]}"
         # stage the production around the first drain: the first batch takes
@@ -434,8 +422,6 @@ def q_stream_kafka_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             .load()
         )
         return _summarize(out).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -453,8 +439,7 @@ def q_pipeline_kafka_datasource_writer(spark: SparkSession, sf_dir: str) -> Data
     from flinkexp_spark.sources.kafkalog import register_kafka_log_source
 
     register_kafka_log_source(spark)
-    work = tempfile.mkdtemp(prefix="kafkalog_")
-    try:
+    with scratch_dir("kafkalog") as work:
         in_topic = f"events_{uuid.uuid4().hex[:8]}"
         out_topic = f"totals_{uuid.uuid4().hex[:8]}"
         _produce_topic(spark, sf_dir, work, in_topic)
@@ -498,8 +483,6 @@ def q_pipeline_kafka_datasource_writer(spark: SparkSession, sf_dir: str) -> Data
             .load()
         )
         return _summarize(out).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register("stream_kafka_datasource_writer", oracle=_ORACLE, tags=("S5", "T9"))
@@ -513,8 +496,7 @@ def q_stream_kafka_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFr
     from flinkexp_spark.sources.kafkalog import register_kafka_log_source
 
     register_kafka_log_source(spark)
-    work = tempfile.mkdtemp(prefix="kafkalog_")
-    try:
+    with scratch_dir("kafkalog") as work:
         in_topic = f"events_{uuid.uuid4().hex[:8]}"
         out_topic = f"relay_{uuid.uuid4().hex[:8]}"
         _produce_topic(spark, sf_dir, work, in_topic, lo=0, hi=N_EVENTS // 4)
@@ -554,5 +536,3 @@ def q_stream_kafka_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFr
             .load()
         )
         return _summarize(out).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)

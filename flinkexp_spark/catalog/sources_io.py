@@ -10,8 +10,6 @@ original parquet.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,13 +17,7 @@ from pyspark.sql import functions as F
 from flinkexp_spark import datasets, sources
 from flinkexp_spark.catalog._util import o_dsum
 from flinkexp_spark.registry import register
-from flinkexp_spark.streaming.replay import SCRATCH_ROOT
-
-
-def _scratch(tag: str) -> str:
-    path = os.path.join(SCRATCH_ROOT, f"{tag}_{uuid.uuid4().hex[:12]}")
-    os.makedirs(path, exist_ok=True)
-    return path
+from flinkexp_spark.streaming.replay import scratch_dir
 
 
 @register(
@@ -44,8 +36,7 @@ def q_source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents.text is written as raw lines (the reference's socket payload
     shape) and read back via the file text source.
     """
-    work = _scratch("text")
-    try:
+    with scratch_dir("text") as work:
         docs = datasets.load(spark, sf_dir, "documents").select(
             F.col("text").alias("value")
         )
@@ -59,8 +50,6 @@ def q_source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = out.localCheckpoint()  # materialize before scratch cleanup
         return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -78,8 +67,7 @@ def q_source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Timestamps ride as formatted strings: CSV is a textual format, and the
     engine contract is explicit schemas on read, never inference.
     """
-    work = _scratch("csv")
-    try:
+    with scratch_dir("csv") as work:
         o = (
             datasets.load(spark, sf_dir, "orders")
             .filter(F.col("o_orderkey") < 5000)
@@ -104,8 +92,6 @@ def q_source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"), dsum("o_totalprice", "total")
         )
         return out.localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -120,8 +106,7 @@ def q_source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4: JSON-lines sink -> source round-trip incl. nested JSON parsing."""
-    work = _scratch("json")
-    try:
+    with scratch_dir("json") as work:
         e = (
             datasets.load(spark, sf_dir, "events")
             .filter(F.col("event_id") < 5000)
@@ -137,8 +122,6 @@ def q_source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.get_json_object("props", "$.k").cast("int")).alias("k_sum"),
         )
         return out.localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -162,8 +145,7 @@ def q_source_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     routes to a dead-letter sink for replay.  The oracle recomputes the
     good/corrupt split from the corruption rule itself.
     """
-    work = _scratch("json_corrupt")
-    try:
+    with scratch_dir("json_corrupt") as work:
         e = (
             datasets.load(spark, sf_dir, "events")
             .filter(F.col("event_id") < 3000)
@@ -193,8 +175,6 @@ def q_source_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n"))
         )
         return out.localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -244,8 +224,7 @@ def q_sink_kv_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = datasets.load(spark, sf_dir, "events").filter(
         F.col("event_id") < 3000
     )
-    spool = _scratch("kvspool")
-    try:
+    with scratch_dir("kvspool") as spool:
         writer = sources.kv_sink(
             ["event_type"], ["n"], sources.spool_kv_client_factory(spool)
         )
@@ -257,8 +236,6 @@ def q_sink_kv_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, events, transform, writer, output_mode="complete"
         )
         store = sources.read_kv_spool(spool)
-    finally:
-        shutil.rmtree(spool, ignore_errors=True)
     rows = [(k[0], int(v[0])) for k, v in store.items()]
     return datasets.local_df(spark, rows, "k string, n long")
 
@@ -280,8 +257,7 @@ def q_source_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     directories are scanned — the layout that makes a 100 TB fact table
     prunable (verified in tests/test_plans.py).
     """
-    work = _scratch("pq")
-    try:
+    with scratch_dir("pq") as work:
         li = datasets.load(spark, sf_dir, "lineitem").withColumn(
             "ship_year", F.year("l_shipdate")
         )
@@ -294,8 +270,6 @@ def q_source_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ship_year").cast("long").alias("ship_year"), "n"
         )
         return out.localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -320,8 +294,7 @@ def q_join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkexp_spark.catalog._util import dsum
     from flinkexp_spark.operators.bucketing import bucketed_tables
 
-    work = _scratch("bucketed")
-    try:
+    with scratch_dir("bucketed") as work:
         li = datasets.load(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_extendedprice"
         )
@@ -342,8 +315,6 @@ def q_join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             return out.localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -362,8 +333,7 @@ def q_source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reads only the original parquet, so both connector directions
     are proven.
     """
-    work = _scratch("orc")
-    try:
+    with scratch_dir("orc") as work:
         li = (
             datasets.load(spark, sf_dir, "lineitem")
             .filter(F.col("l_orderkey") < 5000)
@@ -378,8 +348,6 @@ def q_source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"), dsum("l_extendedprice", "total")
         )
         return out.localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -401,11 +369,11 @@ def q_source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the read plans as parallel range scans — the exact ingest shape for
     MySQL at scale (flink-jdbc analog, study/pom.xml:105).
     """
-    db = os.path.join(SCRATCH_ROOT, f"derby_{uuid.uuid4().hex[:10]}")
-    url = f"jdbc:derby:{db};create=true"
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
     nation = datasets.load(spark, sf_dir, "nation")
-    try:
+    with scratch_dir("derby") as work:
+        # Derby refuses to create a database in an existing directory
+        url = f"jdbc:derby:{os.path.join(work, 'db')};create=true"
         (
             nation.write.format("jdbc")
             .option("url", url)
@@ -433,8 +401,6 @@ def q_source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()  # materialize before the Derby dir vanishes
         )
-    finally:
-        shutil.rmtree(db, ignore_errors=True)
 
 
 @register(
@@ -463,8 +429,7 @@ def q_sink_wide_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = datasets.load(spark, sf_dir, "events").filter(
         F.col("event_id") < 3000
     )
-    spool = _scratch("wc_spool")
-    try:
+    with scratch_dir("wc_spool") as spool:
         writer = sources.wide_column_sink(
             "user_id",
             "stats",
@@ -484,8 +449,6 @@ def q_sink_wide_column(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, events, transform, writer, output_mode="complete"
         )
         store = sources.read_wide_column_spool(spool)
-    finally:
-        shutil.rmtree(spool, ignore_errors=True)
     rows = [
         (int(rk), int(cells[("stats", "n")]), int(cells[("stats", "cents")]))
         for rk, cells in store.items()
@@ -523,8 +486,7 @@ def q_maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from flinkexp_spark.operators.maintenance import compact_parquet
 
-    work = _scratch("compact")
-    try:
+    with scratch_dir("compact") as work:
         docs = datasets.load(spark, sf_dir, "documents").filter(
             F.col("doc_id") < 2000
         )
@@ -544,8 +506,6 @@ def q_maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint()  # materialize before scratch cleanup
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -574,8 +534,7 @@ def q_layout_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from flinkexp_spark.operators.layout import write_zordered
 
-    work = _scratch("zorder")
-    try:
+    with scratch_dir("zorder") as work:
         events = datasets.load(spark, sf_dir, "events").withColumn(
             "ts_epoch", F.col("ts").cast("long")
         )
@@ -591,8 +550,6 @@ def q_layout_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint()  # materialize before scratch cleanup
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 DPP_KEEP = {1996: "keep", 1997: "keep", 1995: "drop", 1998: "drop"}
@@ -627,8 +584,7 @@ def q_join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from flinkexp_spark.catalog._util import dec
 
-    work = _scratch("dpp")
-    try:
+    with scratch_dir("dpp") as work:
         li = datasets.load(spark, sf_dir, "lineitem").withColumn(
             "ship_year", F.year("l_shipdate")
         )
@@ -656,8 +612,6 @@ def q_join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint()  # materialize before scratch cleanup
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(

@@ -107,13 +107,12 @@ def q_stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from flinkexp_spark.operators.maintenance import merge_upsert
-    from flinkexp_spark.streaming.replay import _scratch, replay_foreach_batch
+    from flinkexp_spark.streaming.replay import replay_foreach_batch, scratch_dir
 
     events = datasets.load(spark, sf_dir, "events")
-    work = _scratch("merge_sink")
-    snap = os.path.join(work, "snapshot")
     out_schema = "user_id long, ts timestamp, event_type string, value double"
-    try:
+    with scratch_dir("merge_sink") as work:
+        snap = os.path.join(work, "snapshot")
 
         def writer(batch_df: DataFrame, epoch_id: int) -> None:
             # compact the epoch to one row per key (last by version vector);
@@ -153,8 +152,6 @@ def q_stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             order_col="ts",
         )
         rows = spark.read.schema(out_schema).parquet(snap).collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     out = datasets.local_df(
         spark, rows, out_schema
     )
@@ -279,38 +276,21 @@ def q_stream_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     are collected by the same listener but asserted only in pytest
     (tests/test_streaming.py) — hashing them would pin noise.
     """
-    import os
-    import shutil
-    import time as _time
     import uuid
 
     from flinkexp_spark.streaming.replay import (
-        _scratch,
+        _stage,
         _stream_partitions,
         _time_split,
         capture_stream_metrics,
+        scratch_dir,
     )
 
     events = datasets.load(spark, sf_dir, "events").select(
         "event_id", "ts", "value"
     )
-    work = _scratch("observe")
-    input_dir = os.path.join(work, "input")
-    os.makedirs(input_dir)
-    try:
-        parts = _time_split(events, 3, "ts")
-        for i, p in enumerate(parts):
-            fdir = os.path.join(input_dir, f"f{i:04d}")
-            p.coalesce(1).write.mode("overwrite").parquet(fdir)
-            ts = _time.time() - (len(parts) - i) * 10
-            for root, _, files in os.walk(fdir):
-                for f in files:
-                    os.utime(os.path.join(root, f), (ts, ts))
-        reader = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(os.path.join(input_dir, "f*"))
-        )
+    with scratch_dir("observe") as work:
+        reader = _stage(spark, _time_split(events, 3, "ts"), work)
         observed = reader.observe(
             "feed_metrics",
             F.count(F.lit(1)).alias("batch_rows"),
@@ -359,8 +339,6 @@ def q_stream_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"listener saw {mx.input_rows_total} input rows, "
                 f"observe() saw {totals[0]}"
             )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     row = (
         totals[0],
         totals[1],

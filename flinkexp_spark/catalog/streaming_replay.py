@@ -97,19 +97,19 @@ def q_stream_text_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     socket payload shape (one `value: string` column) read via
     ``readStream.text``; word count in complete mode."""
     import os
-    import shutil
-    import uuid
 
-    from flinkexp_spark.streaming.replay import SCRATCH_ROOT, _stream_partitions
+    from flinkexp_spark import sources
+    from flinkexp_spark.streaming.replay import (
+        _stream_partitions,
+        drain_memory_sink,
+        scratch_dir,
+    )
 
     docs = datasets.load(spark, sf_dir, "documents")
-    work = os.path.join(SCRATCH_ROOT, f"txt_{uuid.uuid4().hex[:12]}")
-    try:
+    with scratch_dir("txt") as work:
         docs.select(F.col("text").alias("value")).coalesce(1).write.mode(
             "overwrite"
         ).text(os.path.join(work, "lines"))
-        from flinkexp_spark import sources
-
         lines = sources.read_text(
             spark, os.path.join(work, "lines"), streaming=True
         )
@@ -119,21 +119,8 @@ def q_stream_text_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("word")
             .agg(F.count("*").alias("cnt"))
         )
-        name = f"sink_{uuid.uuid4().hex[:12]}"
         with _stream_partitions(spark):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        rows = spark.table(name).collect()
-        spark.catalog.dropTempView(name)
-        return datasets.local_df(spark, rows, "word string, cnt long")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+            return drain_memory_sink(spark, out, output_mode="complete")
 
 
 @register(
@@ -739,10 +726,8 @@ def q_stream_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     as Flink's processing-time temporal join).  State cost: zero (the
     as-of window runs inside each micro-batch; nothing carries over).
     """
-    import shutil
-
     from flinkexp_spark.operators.asof import asof_join
-    from flinkexp_spark.streaming.replay import _scratch, replay_foreach_batch
+    from flinkexp_spark.streaming.replay import replay_foreach_batch, scratch_dir
 
     events = datasets.load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
@@ -759,8 +744,7 @@ def q_stream_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.max_by("o_totalprice", "o_orderkey").alias("o_totalprice"))
     )
-    outdir = _scratch("temporal_out")
-    try:
+    with scratch_dir("temporal_out") as outdir:
 
         def writer(batch_df: DataFrame, epoch: int) -> None:
             enriched = asof_join(
@@ -793,8 +777,6 @@ def q_stream_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()  # materialize before the scratch dir vanishes
         )
-    finally:
-        shutil.rmtree(outdir, ignore_errors=True)
 
 
 @register(

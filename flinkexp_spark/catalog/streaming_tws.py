@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from flinkexp_spark import datasets
 from flinkexp_spark.registry import register
-from flinkexp_spark.streaming.replay import TWS_SHUFFLE_PARTITIONS, replay
+from flinkexp_spark.streaming.replay import replay
 
 _PROBE_CACHE: dict[str, bool] = {}
 
@@ -96,7 +96,6 @@ def q_stream_map_state_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame
         use_checkpoint=True,
         no_data_batches=False,
         state_provider="rocksdb" if use_tws else None,
-        partitions=TWS_SHUFFLE_PARTITIONS,
     )
 
 
@@ -158,7 +157,6 @@ def q_stream_list_state_recent_tws(spark: SparkSession, sf_dir: str) -> DataFram
         use_checkpoint=True,
         no_data_batches=False,
         state_provider="rocksdb" if use_tws else None,
-        partitions=TWS_SHUFFLE_PARTITIONS,
     )
 
 
@@ -251,7 +249,6 @@ def q_stream_stateful_bootstrap_tws(spark: SparkSession, sf_dir: str) -> DataFra
         use_checkpoint=True,
         no_data_batches=False,
         state_provider="rocksdb" if use_tws else None,
-        partitions=TWS_SHUFFLE_PARTITIONS,
     )
 
 
@@ -324,7 +321,6 @@ def q_stream_session_timers_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="ts",
         sentinel_df=sentinel,
         state_provider="rocksdb" if use_tws else None,
-        partitions=TWS_SHUFFLE_PARTITIONS,
     )
     return out.filter(F.col("user_id") >= 0)
 
@@ -367,5 +363,4 @@ def q_stream_stateful_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         no_data_batches=False,
         # multi-column-family state (tws) exists only on RocksDB
         state_provider="rocksdb" if use_tws else None,
-        partitions=TWS_SHUFFLE_PARTITIONS,
     )

@@ -167,16 +167,14 @@ def q_stream_wordcount_adapter(spark: SparkSession, sf_dir: str) -> DataFrame:
     certifies env.execute()'s streaming job-submission path end-to-end.
     """
     import os
-    import shutil
     import uuid
 
     from flinkexp_spark.datastream import StreamExecutionEnvironment
-    from flinkexp_spark.streaming.replay import SCRATCH_ROOT, _stream_partitions
+    from flinkexp_spark.streaming.replay import _stream_partitions, scratch_dir
 
     docs = datasets.load(spark, sf_dir, "documents")
-    work = os.path.join(SCRATCH_ROOT, f"dsa_{uuid.uuid4().hex[:12]}")
     name = f"sink_{uuid.uuid4().hex[:12]}"
-    try:
+    with scratch_dir("dsa") as work:
         docs.select(F.col("text")).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(work, "in")
         )
@@ -193,11 +191,12 @@ def q_stream_wordcount_adapter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .sum(1)
             .sink_memory(name, output_mode="complete")
         )
-        with _stream_partitions(spark):
-            [q] = env.execute("Test", available_now=True)
-            q.awaitTermination()
-        rows = spark.table(name).collect()
-        spark.catalog.dropTempView(name)
+        try:
+            with _stream_partitions(spark):
+                [q] = env.execute("Test", available_now=True)
+                q.awaitTermination()
+            rows = spark.table(name).collect()
+        finally:
+            # drop even when the stream fails (see drain_memory_sink)
+            spark.catalog.dropTempView(name)
         return datasets.local_df(spark, rows, "word string, one long")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)

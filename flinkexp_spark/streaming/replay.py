@@ -18,8 +18,9 @@ Key mechanics:
 * ``sentinel`` appends a far-future row as the LAST file so the final
   watermark passes every real window's end — append-mode windowed aggs then
   emit all real windows.  Callers filter the sentinel's own window out.
-* Everything (input files, checkpoints, sink) lives under ``.tmp/`` in the
-  repo and is cleaned per run.
+* ``scratch_dir`` is the one way to get a workspace: input files,
+  checkpoints and sinks live in a per-call directory under ``SCRATCH_ROOT``
+  and are removed when the call returns.
 """
 
 from __future__ import annotations
@@ -60,41 +61,25 @@ SCRATCH_ROOT = _scratch_root()
 
 # Stateful-operator parallelism for bounded replays.  The shuffle-partition
 # count is baked into a streaming checkpoint at first start and fixes the
-# number of state-store (RocksDB) instances per operator — it should track
-# STATE SIZE, not the session's batch shuffle width.  Fixture replays carry
-# tiny state, and per-instance open/commit overhead dominates: measured at
-# sf0.1, 8 partitions run the windowed replays ~2x faster than 32.  On a
-# real cluster, size this to keep per-instance state in memory
+# number of state-store instances per operator — it should track STATE
+# SIZE, not the session's batch shuffle width.  Fixture replays carry tiny
+# state, and per-instance open/commit overhead dominates: measured at
+# sf0.1, 8 partitions run the windowed replays ~2x faster than 32, and on a
+# 4-core host 4 partitions beat 8 (stream_wordcount_update 0.81 s vs
+# 0.98 s).  So a replay uses one instance per core, at most 8.  On a real
+# cluster, size this to keep per-instance state in memory
 # (state_bytes / ~1 GB), NOT to the batch width.
-STREAM_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-
-# Separate knob for the transformWithStateInPandas / applyInPandasWithState
-# replays, whose cost profile differs from the windowed replays (per-key
-# Python + protobuf state-server IPC vs per-instance open/commit).  The r14
-# VERDICT asked for FEWER partitions here (state ~1.5k keys); the measured
-# partition scan at sf0.1 / 32 cores (stream_stateful_totals_tws) says 8 is
-# already the optimum: fresh-session medians 2 parts 6.64s / 4 parts 5.20s /
-# 8 parts 4.59s (startup cost does NOT dominate — fewer instances serialize
-# the per-key Python work), and the interleaved SAME-SESSION A/B of 8 vs 16
-# gives 4.91s vs 5.72s median (a fresh-session scan that favored 16 did not
-# reproduce — host drift).  Default stays the windowed value; the env knob
-# remains for real clusters, where this should track total executor cores.
-TWS_SHUFFLE_PARTITIONS = int(
-    os.environ.get(
-        "SPARK_GRAFT_TWS_PARTITIONS", str(STREAM_SHUFFLE_PARTITIONS)
-    )
-)
+_MAX_STREAM_PARTITIONS = 8
 
 # State-store provider for BOUNDED REPLAYS only.  A replay's state is tiny
 # (fixture-sized) and its checkpoint is fresh + throwaway, so the in-memory
 # HDFSBackedStateStoreProvider is the right choice: measured ~35% faster
 # end-to-end than RocksDB at sf0.01 (RocksDB pays native-instance open +
-# changelog commit per partition per batch).  PRODUCTION streaming jobs —
-# anything long-running with real state — keep the session default
-# (RocksDBStateStoreProvider, session.py:66) which spills keyed state to
-# disk instead of OOMing.  Override with SPARK_GRAFT_STREAM_STATE=rocksdb to
-# run replays against the production provider (tests/test_streaming.py does
-# this for the checkpoint-restart test).
+# changelog commit per partition per batch).  Long-running streaming jobs
+# keep the session default (RocksDBStateStoreProvider, see
+# ``session.get_session``), which spills keyed state to disk instead of
+# OOMing; a replay that needs RocksDB (transformWithStateInPandas: multiple
+# state column families) passes ``state_provider="rocksdb"``.
 _PROVIDERS = {
     "memory": (
         "org.apache.spark.sql.execution.streaming.state."
@@ -105,41 +90,28 @@ _PROVIDERS = {
         "RocksDBStateStoreProvider"
     ),
 }
-REPLAY_STATE_PROVIDER = _PROVIDERS[
-    os.environ.get("SPARK_GRAFT_STREAM_STATE", "memory")
-]
 
 
 class _stream_partitions:
     """Replay-scoped session conf: shuffle partitions sized to fixture state
-    (STREAM_SHUFFLE_PARTITIONS instances per stateful op, not the batch
-    width) + the throwaway-checkpoint state provider.  Restores on exit."""
-
-    _KEYS = {
-        "spark.sql.shuffle.partitions": str(STREAM_SHUFFLE_PARTITIONS),
-        "spark.sql.streaming.stateStore.providerClass": REPLAY_STATE_PROVIDER,
-    }
+    (one state-store instance per core, at most _MAX_STREAM_PARTITIONS,
+    not the batch width) + the throwaway-checkpoint state provider.
+    Restores on exit."""
 
     def __init__(
         self,
         spark: SparkSession,
         state_provider: str | None = None,
         no_data_batches: bool = True,
-        partitions: int | None = None,
     ):
         self.spark = spark
-        self.keys = dict(self._KEYS)
-        if partitions is not None:
-            # Per-replay override: the per-key-Python stateful operators
-            # (TWS / applyInPandasWithState) want MORE instances than the
-            # windowed default — see TWS_SHUFFLE_PARTITIONS above.
-            self.keys["spark.sql.shuffle.partitions"] = str(partitions)
-        if state_provider is not None:
-            # Per-replay override: transformWithStateInPandas needs multiple
-            # state column families, which only RocksDB supports.
-            self.keys["spark.sql.streaming.stateStore.providerClass"] = (
-                _PROVIDERS[state_provider]
-            )
+        parts = min(_MAX_STREAM_PARTITIONS, spark.sparkContext.defaultParallelism)
+        self.keys = {
+            "spark.sql.shuffle.partitions": str(parts),
+            "spark.sql.streaming.stateStore.providerClass": _PROVIDERS[
+                state_provider or "memory"
+            ],
+        }
         if not no_data_batches:
             # Skip the trailing zero-row micro-batch.  Only set by replays
             # whose OUTPUT cannot depend on it: complete mode (last data
@@ -167,22 +139,54 @@ class _stream_partitions:
             self.spark.conf.set(k, v)
 
 
-def _scratch(tag: str) -> str:
-    path = os.path.join(SCRATCH_ROOT, f"{tag}_{uuid.uuid4().hex[:12]}")
-    os.makedirs(path, exist_ok=True)
-    return path
-
-
 @contextlib.contextmanager
 def scratch_dir(tag: str):
     """Self-cleaning scratch directory under SCRATCH_ROOT — THE shared
     write-then-read-back workspace for source/sink queries (one place for
     naming, creation, and cleanup policy)."""
-    path = _scratch(tag)
+    path = os.path.join(SCRATCH_ROOT, f"{tag}_{uuid.uuid4().hex[:12]}")
+    os.makedirs(path, exist_ok=True)
     try:
         yield path
     finally:
         shutil.rmtree(path, ignore_errors=True)
+
+
+def _stage(spark: SparkSession, parts: list[DataFrame], work: str):
+    """Write ``parts`` as replay input files under ``work`` and return the
+    ``readStream`` reader that replays them one file per micro-batch.
+
+    Each part becomes one ``coalesce(1)`` parquet file in its own
+    directory.  The writes are independent single-task jobs, so several
+    parts are submitted concurrently: the next part's write back-fills the
+    scheduler while the previous one commits (guide §2.6 — overlap
+    independent jobs); a single part is written on the calling thread.
+    File mtimes are then pinned oldest-first, because the file source
+    replays in mtime order."""
+    input_dir = os.path.join(work, "input")
+
+    def _write_part(i: int, p: DataFrame) -> None:
+        fdir = os.path.join(input_dir, f"f{i:04d}")
+        p.coalesce(1).write.mode("overwrite").parquet(fdir)
+
+    if len(parts) > 1:
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=min(4, len(parts))) as pool:
+            list(pool.map(lambda ip: _write_part(*ip), enumerate(parts)))
+    else:
+        _write_part(0, parts[0])
+    now = time.time()
+    for i in range(len(parts)):
+        ts = now - (len(parts) - i) * 10
+        for root, _, files in os.walk(os.path.join(input_dir, f"f{i:04d}")):
+            for f in files:
+                os.utime(os.path.join(root, f), (ts, ts))
+    return (
+        spark.readStream.schema(parts[0].schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(os.path.join(input_dir, "f*"))
+    )
 
 
 def replay(
@@ -198,7 +202,6 @@ def replay(
     state_provider: str | None = None,
     sink: str = "memory",
     no_data_batches: bool = True,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Replay ``source_df`` through Structured Streaming; return the sink table.
 
@@ -208,55 +211,14 @@ def replay(
     INPUT-SIZED outputs (see drain_file_sink); per-batch aggregate outputs
     stay on the memory sink.
     """
-    work = _scratch("replay")
-    input_dir = os.path.join(work, "input")
-    os.makedirs(input_dir)
-    try:
-        schema = source_df.schema
-
-        parts = _time_split(source_df, n_files, order_col)
-
-        if extra_files:
-            parts.extend(extra_files)
-        if sentinel_df is not None:
-            parts.append(sentinel_df)
-
-        # The per-part writes are independent single-task jobs; submit them
-        # concurrently so the next part's write back-fills the scheduler
-        # while the previous one commits (guide §2.6 — overlap independent
-        # jobs).  Contents and per-file row order are untouched: each part
-        # still runs its own coalesce(1) plan exactly as before.
-        def _write_part(i: int, p: DataFrame) -> None:
-            fdir = os.path.join(input_dir, f"f{i:04d}")
-            p.coalesce(1).write.mode("overwrite").parquet(fdir)
-
-        if len(parts) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(4, len(parts))) as pool:
-                list(pool.map(lambda ip: _write_part(*ip), enumerate(parts)))
-        else:
-            _write_part(0, parts[0])
-        for i in range(len(parts)):
-            # one data file per dir; pin mtimes so the file source replays
-            # oldest-first in our intended order
-            fdir = os.path.join(input_dir, f"f{i:04d}")
-            ts = time.time() - (len(parts) - i) * 10
-            for root, _, files in os.walk(fdir):
-                for f in files:
-                    os.utime(os.path.join(root, f), (ts, ts))
-
-        reader = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(os.path.join(input_dir, "f*"))
-        )
-        out = transform(reader)
+    parts = _time_split(source_df, n_files, order_col)
+    parts.extend(extra_files or [])
+    if sentinel_df is not None:
+        parts.append(sentinel_df)
+    with scratch_dir("replay") as work:
+        out = transform(_stage(spark, parts, work))
         with _stream_partitions(
-            spark,
-            state_provider=state_provider,
-            no_data_batches=no_data_batches,
-            partitions=partitions,
+            spark, state_provider=state_provider, no_data_batches=no_data_batches
         ):
             drain = drain_file_sink if sink == "files" else drain_memory_sink
             return drain(
@@ -267,8 +229,6 @@ def replay(
                 if use_checkpoint
                 else None,
             )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def drain_memory_sink(
@@ -415,34 +375,18 @@ def replay_foreach_batch(
     the epoch id and performs its own idempotent upserts).  ``n_files`` > 1
     splits the input by ``order_col`` quantiles and runs one micro-batch per
     file, so the writer sees a real incremental sequence."""
-    work = _scratch("feb")
-    input_dir = os.path.join(work, "input")
-    os.makedirs(input_dir)
-    try:
-        parts = _time_split(source_df, n_files, order_col)
-        for i, p in enumerate(parts):
-            fdir = os.path.join(input_dir, f"f{i:04d}")
-            p.coalesce(1).write.mode("overwrite").parquet(fdir)
-            ts = time.time() - (len(parts) - i) * 10
-            for root, _, files in os.walk(fdir):
-                for f in files:
-                    os.utime(os.path.join(root, f), (ts, ts))
-        reader = spark.readStream.schema(source_df.schema)
-        if len(parts) > 1:
-            reader = reader.option("maxFilesPerTrigger", "1")
-        reader = reader.parquet(os.path.join(input_dir, "f*"))
+    parts = _time_split(source_df, n_files, order_col)
+    with scratch_dir("feb") as work:
+        out = transform(_stage(spark, parts, work))
         with _stream_partitions(spark):
             q = (
-                transform(reader)
-                .writeStream.foreachBatch(writer)
+                out.writeStream.foreachBatch(writer)
                 .outputMode(output_mode)
                 .trigger(availableNow=True)
                 .option("checkpointLocation", os.path.join(work, "checkpoint"))
                 .start()
             )
             q.awaitTermination()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def replay_update_mode(

@@ -243,3 +243,34 @@ def test_bench_history_needs_same_sf_and_cpus():
     assert bench.history_for(prev, 0.01, 4) == {}
     unstamped = {k: v for k, v in prev.items() if k != "cpus"}
     assert bench.history_for(unstamped, 0.1, 4) == {}
+
+
+def test_bench_converge_on_scripted_run_times():
+    """The one timing loop bench.py and tools/mini_bench.py share: a cold
+    first run falls out of the latest window, and a query that never
+    settles stops at the attempt cap flagged as not converged."""
+    import importlib.util
+    import os as _os
+
+    spec = importlib.util.spec_from_file_location(
+        "bench_mod4",
+        _os.path.join(_os.path.dirname(__file__), "..", "bench.py"),
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+
+    def scripted(times):
+        it = iter(times)
+        return lambda: next(it)
+
+    # cold first run: [5, 1, 1] spreads 4 s, [1, 1, 1] converges
+    assert bench.converge(scripted([5, 1, 1, 1]), 3, 9) == (4, 1, 1, 1, True)
+    # already quiet: exactly `base` runs
+    assert bench.converge(scripted([1.0, 1.1, 1.05]), 3, 9) == (
+        3, 1.05, 1.0, 1.1, True,
+    )
+    # never converges: stops at the cap, reports the last window
+    n, med, mn, mx, ok = bench.converge(scripted([1, 9] * 10), 3, 7)
+    assert (n, ok) == (7, False) and (mn, med, mx) == (1, 1, 9)
+    # the cap never cuts a window short
+    assert bench.converge(scripted([1, 9, 1, 9]), 4, 2)[0] == 4

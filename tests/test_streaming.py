@@ -5,7 +5,6 @@ helper), rate/socket plumbing."""
 from __future__ import annotations
 
 import os
-import shutil
 import time
 import uuid
 from datetime import datetime, timedelta
@@ -14,13 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flinkexp_spark.streaming.late_data import LateRowRouter
-from flinkexp_spark.streaming.replay import SCRATCH_ROOT
-
-
-def _work(tag):
-    p = os.path.join(SCRATCH_ROOT, f"{tag}_{uuid.uuid4().hex[:8]}")
-    os.makedirs(p, exist_ok=True)
-    return p
+from flinkexp_spark.streaming.replay import scratch_dir
 
 
 def _write_file(df, d, i, base_time=None):
@@ -37,8 +30,7 @@ def test_update_mode_multibatch_cadence(spark):
     """SURVEY §2.1 semantic note: update mode emits the refreshed per-key
     total each micro-batch — 'a a' yields (a,1) then (a,2) at batch
     granularity, the reference's rolling-sum cadence."""
-    work = _work("cadence")
-    try:
+    with scratch_dir("cadence") as work:
         schema = "word string"
         input_dir = os.path.join(work, "in")
         os.makedirs(input_dir)
@@ -68,8 +60,6 @@ def test_update_mode_multibatch_cadence(spark):
         assert batches[0] == [("a", 1), ("b", 1)]
         # second batch: only the changed key re-emits, with the new total
         assert batches[1] == [("a", 3)]
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def test_replay_update_mode_multi_file(spark):
@@ -105,8 +95,7 @@ def test_replay_update_mode_multi_file(spark):
 def test_checkpoint_restart_resumes_state(spark):
     """T10: kill the query, add data, restart from the same checkpoint —
     state (running counts) must carry over, not restart from zero."""
-    work = _work("ckpt")
-    try:
+    with scratch_dir("ckpt") as work:
         schema = "k string"
         input_dir = os.path.join(work, "in")
         ckpt = os.path.join(work, "checkpoint")
@@ -137,15 +126,12 @@ def test_checkpoint_restart_resumes_state(spark):
         _write_file(spark.createDataFrame([("x",), ("z",)], schema), input_dir, 1)
         second = run_once()
         assert second == {"x": 2, "y": 1, "z": 1}
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def test_late_row_router_side_output(spark):
     """T5 helper: rows behind the tracked watermark land in the side sink,
     on-time rows in the main handler."""
-    work = _work("late")
-    try:
+    with scratch_dir("late") as work:
         schema = "id long, ts timestamp"
         input_dir = os.path.join(work, "in")
         side = os.path.join(work, "side")
@@ -185,8 +171,6 @@ def test_late_row_router_side_output(spark):
         assert sorted(on_time_ids) == [1, 3]
         late_ids = [r.id for r in spark.read.parquet(side).collect()]
         assert late_ids == [2]
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def test_rate_source_smoke(spark):
@@ -474,22 +458,19 @@ def test_listener_rig_captures_rates_and_watermark(spark, sf_dir):
     every batch, each non-empty batch reports a positive processing rate,
     and the deterministic accumulators agree with a plain batch count."""
     import os
-    import shutil
     import uuid
 
     import pyspark.sql.functions as F
 
     from flinkexp_spark import datasets
     from flinkexp_spark.streaming.replay import (
-        _scratch,
         _stream_partitions,
         capture_stream_metrics,
     )
 
     events = datasets.load(spark, sf_dir, "events").select("event_id", "ts")
     n_expected = events.count()
-    work = _scratch("listener_probe")
-    try:
+    with scratch_dir("listener_probe") as work:
         src = os.path.join(work, "input")
         events.repartition(2).write.parquet(src)
         reader = spark.readStream.schema(events.schema).option(
@@ -507,8 +488,6 @@ def test_listener_rig_captures_rates_and_watermark(spark, sf_dir):
                 mx.await_batch(q.lastProgress["batchId"])
             finally:
                 spark.catalog.dropTempView(name)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     assert mx.input_rows_total == n_expected
     assert mx.nonempty_batches >= 2  # two input files -> >= two data batches
     nonzero_rates = [r for r in mx.rates if r > 0]
@@ -543,3 +522,66 @@ def test_observed_metrics_query_agrees_with_batch_truth(spark, sf_dir):
     open_w = wins.filter(F.col("wend_ms") > row.watermark_ms).count()
     assert row.emitted_windows == emitted
     assert row.state_rows_final == open_w
+
+
+def test_failed_drain_drops_its_sink_view(spark):
+    """A stream that fails mid-drain must not leave its ``sink_*`` memory
+    view registered in the long-lived session: the error propagates and
+    the view is gone."""
+    from flinkexp_spark.streaming.replay import drain_memory_sink
+
+    with scratch_dir("failed_drain") as work:
+        spark.range(10).write.parquet(os.path.join(work, "in"))
+        stream = spark.readStream.schema("id long").parquet(
+            os.path.join(work, "in")
+        )
+        out = stream.select(
+            F.when(F.col("id") == 3, F.raise_error(F.lit("poison row 3")))
+            .otherwise(F.col("id"))
+            .alias("id")
+        )
+        with pytest.raises(Exception, match="poison row 3"):
+            drain_memory_sink(spark, out)
+    leaked = [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("sink_")
+    ]
+    assert leaked == []
+
+
+def test_replay_partitions_follow_session_parallelism(spark):
+    """Replays size their state partitions from the session: one per core,
+    at most 8 (8 on a ``local[8]`` driver session, 4 on a 4-core engine
+    session), with the in-memory state provider unless a replay asks for
+    RocksDB; both settings are restored on exit."""
+    from types import SimpleNamespace
+
+    from flinkexp_spark.streaming.replay import _stream_partitions
+
+    parts = "spark.sql.shuffle.partitions"
+    provider = "spark.sql.streaming.stateStore.providerClass"
+
+    for cores, want in ((2, "2"), (4, "4"), (8, "8"), (32, "8")):
+        fake = SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=cores)
+        )
+        assert _stream_partitions(fake).keys[parts] == want, cores
+
+    saved = spark.conf.get(parts)
+    spark.conf.set(parts, "3")
+    try:
+        before = (spark.conf.get(parts), spark.conf.get(provider))
+        with _stream_partitions(spark):
+            assert spark.conf.get(parts) == str(
+                min(8, spark.sparkContext.defaultParallelism)
+            )
+            assert spark.conf.get(provider).endswith(
+                ".HDFSBackedStateStoreProvider"
+            )
+        assert (spark.conf.get(parts), spark.conf.get(provider)) == before
+        with _stream_partitions(spark, state_provider="rocksdb"):
+            assert spark.conf.get(provider).endswith(
+                ".RocksDBStateStoreProvider"
+            )
+        assert (spark.conf.get(parts), spark.conf.get(provider)) == before
+    finally:
+        spark.conf.set(parts, saved)

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Subset bench with bench.py's exact convergence methodology (guide §1):
-noop-sink drain, median of the latest window of N runs, re-run until the
-window spread <= max(window_min, 0.2s), capped attempts.  For in-session
-A/B of individual queries without paying for the whole suite.
+noop-sink drain, then ``bench.converge`` — median of the latest window of
+N runs, re-run until the window spread <= max(window_min, 0.2s), capped
+attempts.  For in-session A/B of individual queries without paying for
+the whole suite.
 
 Usage: python tools/mini_bench.py name1,name2 [--repeats 3] [--max-attempts 9]
 """
@@ -16,6 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import converge  # noqa: E402
 from flinkexp_spark.registry import queries  # noqa: E402
 from flinkexp_spark.session import get_session  # noqa: E402
 
@@ -42,36 +44,25 @@ def main() -> None:
 
     qs = queries()
 
-    def window_stats(window: list[float]) -> tuple[float, float, float, bool]:
-        w = sorted(window)
-        return (
-            w[len(w) // 2],
-            w[0],
-            w[-1],
-            (w[-1] - w[0]) <= max(w[0], 0.2),
-        )
-
     for name in args.names.split(","):
         name = name.strip()
         if name not in qs:
             print(f"{name}: NOT REGISTERED", flush=True)
             continue
-        runs: list[float] = []
-        base = args.repeats
-        converged = False
-        while len(runs) < max(base, args.max_attempts):
+
+        def run_once() -> float:
             t0 = time.perf_counter()
-            df = qs[name](spark, args.sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-            if len(runs) >= base:
-                med, mn, mx, converged = window_stats(runs[-base:])
-                if converged:
-                    break
-        med, mn, mx, converged = window_stats(runs[-base:])
+            qs[name](spark, args.sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            return time.perf_counter() - t0
+
+        n_runs, med, mn, mx, converged = converge(
+            run_once, args.repeats, args.max_attempts
+        )
         print(
             f"# {name}: median={med:.2f}s min={mn:.2f}s max={mx:.2f}s "
-            f"attempts={len(runs)}" + ("" if converged else " NOISY"),
+            f"attempts={n_runs}" + ("" if converged else " NOISY"),
             flush=True,
         )
 
