@@ -865,8 +865,8 @@ _R13_NEW: tuple[str, ...] = (
     # from-spec TIFF 6.0 + MSB-first EARLY-CHANGE LZW + Predictor 2, the
     # counterpart of GIF's LSB-first late-change variant (functions/tiff.py)
     "multimodal_decode_tiff_lzw",
-    # RFC 8878 zstd frame walker over raw/RLE blocks with from-spec
-    # xxHash64, pinned to the system's real zstd binary (functions/zstd.py)
+    # zstd frames through pyarrow's libzstd, pinned to the system's real
+    # zstd binary (functions/zstd.py)
     "multimodal_decode_zstd_frames",
     # Kruskal-Wallis H: k-group rank test completing the rank-stats family
     # (doubled-midrank exact ints + order-pinned float fold)

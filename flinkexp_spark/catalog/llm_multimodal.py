@@ -1351,11 +1351,8 @@ def q_multimodal_decode_tiff_lzw(spark: SparkSession, sf_dir: str) -> DataFrame:
     "multimodal_decode_zstd_frames",
     # Oracle recomputes the synthesized plaintext arithmetically (byte i =
     # (s*7 + 17*((i // 150) % 53)) % 256 over n = len*4 + doc_id mod 2200
-    # + 1600 bytes); the engine's from-spec RFC 8878 frame walk (header
-    # descriptor bit fields, window arithmetic, the 2-byte FCS bias,
-    # raw/RLE block loop, xxHash64 content checksums, skippable frames,
-    # multi-frame concatenation) must land the stats exactly.  The
-    # 150-byte value runs put RLE blocks on the wire for every row.
+    # + 1600 bytes); the engine's decode of single, skippable-prefixed and
+    # concatenated frames must land the stats exactly.
     oracle=f"""
         WITH m AS (
             SELECT doc_id,
@@ -1384,23 +1381,15 @@ def q_multimodal_decode_tiff_lzw(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("X5", "U2"),
 )
 def q_multimodal_decode_zstd_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X5: from-spec Zstandard FRAME WALKER (RFC 8878, functions/zstd.py)
-    — the container layer of the third modern compression family: magic
-    and skippable-frame routing, Frame_Header_Descriptor bit fields with
-    reserved-bit enforcement, Window_Descriptor exponent/mantissa
-    arithmetic, the +256 bias of the 2-byte Frame_Content_Size field,
-    the 3-byte little-endian block loop over Raw and RLE blocks, and
-    xxHash64 content checksums implemented from the published algorithm.
-    Compressed_Block entropy sections (FSE/Huffman) are explicitly out
-    of scope and rejected with a clear error.  zstd has no stdlib module
-    (unlike DEFLATE, bzip2 and xz, which decode through stdlib ``zlib``,
-    ``bz2`` and ``lzma``), so this walker is from-spec; a REAL reference
-    binary exists in this environment: tests/test_zstd.py round-trips our
-    frames through the system ``zstd`` executable in BOTH directions
-    (it verifies our checksums; our walker decodes its raw-block output
-    for incompressible data), pinning container and hash to the
-    reference implementation, not just the RFC text.  doc_id % 3 cycles
-    windowed / skippable+single-segment / multi-frame layouts.  Per-row
+    """X5: Zstandard frames (RFC 8878) decoded by pyarrow's libzstd
+    (functions/zstd.py) — the third modern compression family.  zstd has
+    no stdlib module before Python 3.14, unlike DEFLATE, bzip2 and xz,
+    which decode through stdlib ``zlib``, ``bz2`` and ``lzma``.  doc_id %
+    3 cycles one frame / skippable metadata frame + frame / two
+    concatenated frames, so frame routing and multi-frame concatenation
+    are both on the hashed path; malformed payloads fail inside the task
+    with a ``zstd:`` error.  tests/test_zstd.py round-trips the frames
+    through the system ``zstd`` binary in both directions.  Per-row
     independent work: no shuffle, linear in the corpus."""
     docs = datasets.load(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return M.zstd_stats(M.with_zstd_payload(docs))

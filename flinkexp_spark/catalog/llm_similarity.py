@@ -389,7 +389,7 @@ def _ivf_assign_top1_df(emb: DataFrame, cent: DataFrame) -> DataFrame:
     band = 2.0 * (10.0 ** -n_dec)
 
     def assign(batches):
-        # closure: pickled by value (ids/C/cn ride along; K x DIM small)
+        # ids/C/cn ride along in the closure (K x DIM, small)
         import numpy as _np
         import pandas as _pd
         from decimal import ROUND_HALF_UP, Decimal

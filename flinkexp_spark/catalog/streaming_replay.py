@@ -1410,7 +1410,6 @@ def q_stream_wordcount_per_record(spark: SparkSession, sf_dir: str) -> DataFrame
         from pyspark.sql.streaming.state import GroupStateTimeout
 
         def per_bucket(key, pdfs, state):
-            # closure: pickled by value (workers can't import the repo)
             import pandas as pd
 
             if state.exists:

@@ -35,7 +35,6 @@ def workers_have_protobuf(spark: SparkSession) -> bool:
         return True
 
     def probe(batches):
-        # closure: pickled by value (see streaming/stateful.py module doc)
         import pandas as pd
 
         try:
@@ -213,7 +212,6 @@ def q_stream_stateful_bootstrap_tws(spark: SparkSession, sf_dir: str) -> DataFra
 
         def transform(stream):
             def totals(key, pdfs, state):
-                # closure: pickled by value (streaming/stateful.py module doc)
                 import numpy as np
                 import pandas as pd
 

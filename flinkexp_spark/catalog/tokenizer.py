@@ -376,9 +376,7 @@ def bpe_subword_count_udf(merges: list[tuple[int, str, str, str, int]]):
     ``apply_bpe_merges`` fold — pinned equal in tests/test_tokenizer.py)
     and return the subword count.  The merge table rides into the plan as
     a closure literal — thousands of merges cost a dict lookup per pair,
-    not a Catalyst expression per merge.  Closure-scoped on purpose:
-    module-level UDFs pickle by reference and workers outside the repo
-    can't import it (sources/pysource.py rule)."""
+    not a Catalyst expression per merge."""
     merge_list = [(a, b, m) for _, a, b, m, _ in merges]
 
     @F.pandas_udf("int")

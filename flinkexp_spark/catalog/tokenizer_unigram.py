@@ -50,7 +50,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flinkexp_spark import datasets
-from flinkexp_spark.functions import ship_by_value
 from flinkexp_spark.functions.text import tokens_sql
 from flinkexp_spark.registry import register
 
@@ -243,10 +242,9 @@ _SUBSTR_EXPR = (
 def _viterbi_udf(scores: dict[str, int], max_piece: int):
     """Arrow-batched Viterbi segmenter (word -> piece array) carrying the
     integer micro-nat score table as a closure literal.  The DP and its
-    tie-break live in functions/unigram.py (shipped by value) — the same
+    tie-break live in functions/unigram.py — the same
     rule the oracle's recursive CTE applies (checked k=4..1), so path
     selection is bit-identical; tests pin it against brute force."""
-    ship_by_value("unigram")
     from flinkexp_spark.functions.unigram import viterbi_segment
 
     table = dict(scores)
@@ -470,7 +468,6 @@ def q_text_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB), all pinned linear."""
     docs = datasets.load(spark, sf_dir, "documents")
     scores = {p: s for p, _, s in trained_unigram(spark, sf_dir)}
-    ship_by_value("unigram")
     from flinkexp_spark.functions.unigram import viterbi_segment
 
     table = dict(scores)

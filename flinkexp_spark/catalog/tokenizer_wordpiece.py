@@ -109,8 +109,7 @@ def q_tokenizer_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     See the module docstring for the vocabulary rule and scale plan.
     The pandas_udf runs the greedy scan per DISTINCT word only; the
     vocab rides into the closure as two frozensets (the BPE-merge-table
-    treatment — closure-scoped because module-level UDFs pickle by
-    reference and workers outside the repo can't import them).
+    treatment).
     """
     docs = datasets.load(spark, sf_dir, "documents")
     words = docs.select(

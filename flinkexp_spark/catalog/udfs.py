@@ -5,9 +5,8 @@ Reference analog: the lambdas in StreamSocket.scala:15 are user code run
 per record (U1/U2 shape); the Table API envelope declares ScalarFunction /
 TableFunction / AggregateFunction (study/pom.xml:149-165).
 
-All UDFs here are Arrow-vectorized (pandas batches, never row-at-a-time)
-and defined as closures so they pickle by value (see
-streaming/stateful.py).  Numeric contracts are chosen so numpy and DuckDB
+All UDFs here are Arrow-vectorized (pandas batches, never row-at-a-time).
+Numeric contracts are chosen so numpy and DuckDB
 compute bit-identical doubles (same op order, or exact integer math).
 """
 

@@ -33,8 +33,7 @@ Two expression paths, chosen per call:
   codegen; this is the fast path and what the scale rule requires.
 * **Python callable** — Arrow-batched ``mapInPandas`` with per-element
   semantics, exactly PyFlink's Python ``flat_map``/``map`` contract
-  (PyFlink also requires the ``output_type`` declaration).  Closures only
-  (pickle-by-value), per the repo rule.
+  (PyFlink also requires the ``output_type`` declaration).
 
 Tuple fields are positional: ``key_by(0)`` / ``sum(1)`` resolve against
 the current column order, Flink ``Tuple`` parity.
@@ -132,7 +131,7 @@ class DataStream:
         # parameterized types like decimal(10,2) or map<string,long>
         out_names = [fld.name for fld in StructType.fromDDL(output_type).fields]
 
-        def run(batches):  # closure: pickled by value
+        def run(batches):
             import pandas as pd
 
             for pdf in batches:
@@ -504,7 +503,7 @@ class KeyedStream:
         if df.isStreaming:
             state_schema = StructType([fields[c] for c in vals])
 
-            def step(key, pdfs, state):  # closure: pickled by value
+            def step(key, pdfs, state):
                 import pandas as pd
 
                 acc = tuple(state.get) if state.exists else None
@@ -525,7 +524,7 @@ class KeyedStream:
             )
         else:
 
-            def fold(pdf):  # closure: pickled by value
+            def fold(pdf):
                 import pandas as pd
 
                 acc = None
@@ -549,8 +548,7 @@ class KeyedStream:
         """Flink ``KeyedProcessFunction`` seam: raw ``applyInPandasWithState``
         passthrough — keyed state + (with ``GroupStateTimeout
         .EventTimeTimeout``) event-time timers, exactly the pairing
-        stream_session_timers uses (streaming/stateful.py).  ``func`` must
-        be a closure (pickle-by-value rule)."""
+        stream_session_timers uses (streaming/stateful.py)."""
         self._no_window("process")
         out = self.df.groupBy(*self.keys).applyInPandasWithState(
             func, output_schema, state_schema, output_mode, timeout

@@ -15,12 +15,7 @@ Two shells carry every codec family.  :func:`with_payload` runs an
 encoder ``one(doc_id, text) -> bytes`` per row and returns
 ``doc_id long, payload binary``; :func:`int_stats` runs a decoder
 ``one(payload) -> tuple[int, ...]`` per row and returns ``doc_id`` plus
-one ``long`` column per name.  Each public helper defines its ``one`` in
-its own body, so cloudpickle ships it BY VALUE with the task.  ``one``
-may call closure-local code and the codec modules the helper names in
-:func:`ship_by_value`, never a module-level function of this file: that
-pickles by reference and fails with ModuleNotFoundError on executors of
-a driver started outside the repo.
+one ``long`` column per name.
 
 Scale notes: binary payloads ride in parquet as byte arrays; mapInPandas
 streams Arrow batches (``spark.sql.execution.arrow.maxRecordsPerBatch``)
@@ -44,7 +39,6 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flinkexp_spark.functions import ship_by_value
 
 FAKE_FEATURE_DIM = 4
 
@@ -90,6 +84,15 @@ def int_stats(
 
     schema = ", ".join(f"{c} long" for c in ("doc_id", *cols))
     return df.mapInPandas(stats, schema=schema)
+
+
+def value_stats(values: np.ndarray) -> tuple[int, int, int, int]:
+    """``(sum, min, max, pos_checksum)`` of an integer array in row-major
+    order.  ``pos_checksum`` weights each value by its 1-based position,
+    so it pins the decode ORDER, not just the value multiset."""
+    v = values.astype(np.int64).reshape(-1)
+    pos = np.arange(1, v.size + 1, dtype=np.int64)
+    return int(v.sum()), int(v.min()), int(v.max()), int((pos * v).sum())
 
 
 def with_binary_payload(df: DataFrame) -> DataFrame:
@@ -426,7 +429,6 @@ def with_jpeg_pixel_payload(df: DataFrame) -> DataFrame:
     reordering of the same coefficients, so the decoded planes are EXACT
     integers in every mode and the oracle recomputes every pixel
     arithmetically (R = round-half-even(y + 1.402*(cr-128)))."""
-    ship_by_value("jpeg")
     from flinkexp_spark.functions.jpeg import (
         encode_baseline_jpeg,
         encode_progressive_jpeg,
@@ -476,24 +478,13 @@ def jpeg_image_stats(df: DataFrame) -> DataFrame:
     (sum over row-major pixel index g of (g+1)*pixel) that pins not just
     the value multiset but the decoded pixel ORDER.  One Arrow batch pass:
     huffman -> dequant -> IDCT -> color convert -> featurize per row."""
-    ship_by_value("jpeg")
     from flinkexp_spark.functions.jpeg import decode_baseline_jpeg
 
     def one(payload: bytes):
         px = decode_baseline_jpeg(bytes(payload))
-        gray = (px[..., 0] if px.ndim == 3 else px).astype(np.int64)
+        gray = px[..., 0] if px.ndim == 3 else px
         h, w = gray.shape
-        flat = gray.reshape(-1)
-        g = np.arange(1, flat.size + 1, dtype=np.int64)
-        return (
-            w,
-            h,
-            w * h,
-            int(flat.sum()),
-            int(flat.min()),
-            int(flat.max()),
-            int((g * flat).sum()),
-        )
+        return (w, h, w * h, *value_stats(gray))
 
     cols = [
         "width", "height", "n_pixels", "px_sum", "px_min", "px_max",
@@ -783,7 +774,6 @@ def decode_image(df: DataFrame) -> DataFrame:
     the repo's last image stub through round 6.  Non-JPEG compressed
     formats (PNG/webp) still require PIL/opencv and raise inside the task,
     keeping the honest environment boundary visible."""
-    ship_by_value("jpeg")
     from flinkexp_spark.functions.jpeg import decode_baseline_jpeg
 
     def one(payload: bytes):
@@ -819,7 +809,6 @@ def with_flac_payload(df: DataFrame) -> DataFrame:
     arithmetically reproducible in the oracle; the encoder cycles stereo
     decorrelation modes and subframe types frame-over-frame so a 100-doc
     fixture exercises every decoder path."""
-    ship_by_value("flac")
     from flinkexp_spark.functions.flac import encode_flac
 
     def one(doc_id: int, text: str) -> bytes:
@@ -845,22 +834,12 @@ def flac_pcm_stats(df: DataFrame) -> DataFrame:
     weighted over the INTERLEAVED samples, so channel order and sample
     order are both pinned, not just the value multiset.  Per-row
     independent work: no shuffle, linear in the corpus."""
-    ship_by_value("flac")
     from flinkexp_spark.functions.flac import decode_flac
 
     def one(payload: bytes):
         pcm, rate = decode_flac(bytes(payload))
-        inter = pcm.reshape(-1).astype(np.int64)  # row-major: interleaved
-        pos = np.arange(1, len(inter) + 1, dtype=np.int64)
-        return (
-            rate,
-            pcm.shape[1],
-            pcm.shape[0],
-            int(inter.sum()),
-            int(inter.min()),
-            int(inter.max()),
-            int((pos * inter).sum()),
-        )
+        # row-major (sample, channel): the interleaved samples
+        return (rate, pcm.shape[1], pcm.shape[0], *value_stats(pcm))
 
     cols = [
         "sample_rate", "n_channels", "n_samples", "sample_sum", "sample_min",
@@ -885,7 +864,6 @@ def decode_audio(df: DataFrame) -> DataFrame:
     tripping our own, so those stay behind this error until
     soundfile/librosa (or the spec tables) are available; wire them into
     the same mapInPandas closure as the FLAC path."""
-    ship_by_value("flac")
     from flinkexp_spark.functions.flac import FLAC_MAGIC, decode_flac
 
     def one(payload: bytes):
@@ -1047,7 +1025,6 @@ def with_adpcm_payload(df: DataFrame) -> DataFrame:
     (s + 13*b + 7*g) % 16 — closed forms the SQL oracle mirrors before
     replaying the decode recurrence.  doc_id picks 1-3 blocks and the
     sample rate, exactly like the WAV/FLAC fixtures."""
-    ship_by_value("adpcm")
     from flinkexp_spark.functions.adpcm import build_ima_wav
 
     ba, rb, rs = ADPCM_BLOCK_ALIGN, ADPCM_RATE_BASE, ADPCM_RATE_STEP
@@ -1077,21 +1054,11 @@ def adpcm_pcm_stats(df: DataFrame) -> DataFrame:
     pins sample ORDER across block boundaries — a block processed out of
     order or a nibble order flip hash-fails.  Per-row independent work:
     no shuffle, linear in the corpus."""
-    ship_by_value("adpcm")
     from flinkexp_spark.functions.adpcm import decode_ima_wav
 
     def one(payload: bytes):
         pcm, rate = decode_ima_wav(bytes(payload))
-        pos = np.arange(1, len(pcm) + 1, dtype=np.int64)
-        return (
-            rate,
-            1,
-            len(pcm),
-            int(pcm.sum()),
-            int(pcm.min()),
-            int(pcm.max()),
-            int((pos * pcm).sum()),
-        )
+        return (rate, 1, len(pcm), *value_stats(pcm))
 
     cols = [
         "sample_rate", "n_channels", "n_samples", "sample_sum", "sample_min",
@@ -1125,7 +1092,6 @@ def with_png_payload(df: DataFrame) -> DataFrame:
     Non-palette sample (x, y, c) = (s + 31x + 17y + 97c) % 256.  The
     filter seed rotates per row so all five scanline filters appear, and
     every 5th doc splits its IDAT stream across multiple chunks."""
-    ship_by_value("png")
     from flinkexp_spark.functions.png import encode_png
 
     dmod, dmin, psize = PNG_DIM_MOD, PNG_DIM_MIN, PNG_PAL_SIZE
@@ -1171,22 +1137,11 @@ def png_image_stats(df: DataFrame) -> DataFrame:
     scanline order, channel order AND the Adam7 deinterlace are pinned —
     a pass scattered to the wrong lattice hash-fails.  Per-row
     independent work: no shuffle, linear in the corpus."""
-    ship_by_value("png")
     from flinkexp_spark.functions.png import decode_png
 
     def one(payload: bytes):
         img, meta = decode_png(bytes(payload))
-        flat = img.reshape(-1).astype(np.int64)  # row-major
-        pos = np.arange(1, len(flat) + 1, dtype=np.int64)
-        return (
-            meta["width"],
-            meta["height"],
-            img.shape[2],
-            int(flat.sum()),
-            int(flat.min()),
-            int(flat.max()),
-            int((pos * flat).sum()),
-        )
+        return (meta["width"], meta["height"], img.shape[2], *value_stats(img))
 
     cols = [
         "width", "height", "n_channels", "pix_sum", "pix_min", "pix_max",
@@ -1214,7 +1169,6 @@ def with_gif_payload(df: DataFrame) -> DataFrame:
     third of the corpus uses a 24-color table whose power-of-two padding
     the decoder must NOT misread as image data.  doc_id bit 0 toggles
     4-pass interlacing, bit 1 toggles local-vs-global color table."""
-    ship_by_value("gif")
     from flinkexp_spark.functions.gif import encode_gif
 
     dmod, dmin = GIF_DIM_MOD, GIF_DIM_MIN
@@ -1251,21 +1205,13 @@ def gif_image_stats(df: DataFrame) -> DataFrame:
     channel order and the interlace inversion.  ``palette_slots`` is the
     decoder-visible (power-of-two padded) color-table size, pinning the
     size-field arithmetic.  Per-row independent: no shuffle."""
-    ship_by_value("gif")
     from flinkexp_spark.functions.gif import decode_gif
 
     def one(payload: bytes):
         img, meta = decode_gif(bytes(payload))
-        flat = img.reshape(-1).astype(np.int64)  # row-major RGB
-        pos = np.arange(1, len(flat) + 1, dtype=np.int64)
         return (
-            meta["width"],
-            meta["height"],
-            meta["palette_size"],
-            int(flat.sum()),
-            int(flat.min()),
-            int(flat.max()),
-            int((pos * flat).sum()),
+            meta["width"], meta["height"], meta["palette_size"],
+            *value_stats(img),
         )
 
     cols = [
@@ -1294,7 +1240,6 @@ def with_mjpeg_payload(df: DataFrame) -> DataFrame:
     still-image fixture, so the LOSSY encode+decode round-trip lands on
     exact integers and the oracle recomputes every pixel of every frame
     arithmetically."""
-    ship_by_value("avi", "jpeg")
     from flinkexp_spark.functions.avi import build_mjpeg_avi
     from flinkexp_spark.functions.jpeg import encode_baseline_jpeg
 
@@ -1335,7 +1280,6 @@ def mjpeg_frame_stats(df: DataFrame) -> DataFrame:
     f*W*H + y*W + x + 1, so frame ORDER is pinned on top of scanline
     order — frames demuxed out of index order hash-fail.  Per-row
     independent work: no shuffle, linear in the corpus."""
-    ship_by_value("avi", "jpeg")
     from flinkexp_spark.functions.avi import demux_mjpeg_avi
     from flinkexp_spark.functions.jpeg import decode_baseline_jpeg
 
@@ -1348,17 +1292,9 @@ def mjpeg_frame_stats(df: DataFrame) -> DataFrame:
             if gray.shape != (meta["height"], meta["width"]):
                 raise ValueError("frame geometry disagrees with header")
             grays.append(gray.astype(np.int64).reshape(-1))
-        flat = np.concatenate(grays)
-        pos = np.arange(1, flat.size + 1, dtype=np.int64)
         return (
-            meta["n_frames"],
-            meta["width"],
-            meta["height"],
-            meta["fps"],
-            int(flat.sum()),
-            int(flat.min()),
-            int(flat.max()),
-            int((pos * flat).sum()),
+            meta["n_frames"], meta["width"], meta["height"], meta["fps"],
+            *value_stats(np.concatenate(grays)),
         )
 
     cols = [
@@ -1387,7 +1323,6 @@ def with_g711_payload(df: DataFrame) -> DataFrame:
     """Attach a mono G.711 WAV payload: even doc_ids carry µ-law (0x0007),
     odd carry A-law (0x0006); the code bytes follow the closed form the
     SQL oracle mirrors before replaying the expansion formula."""
-    ship_by_value("g711")
     from flinkexp_spark.functions.g711 import (
         WAVE_FORMAT_ALAW,
         WAVE_FORMAT_MULAW,
@@ -1414,23 +1349,11 @@ def g711_pcm_stats(df: DataFrame) -> DataFrame:
     ``format_tag`` exposes which law decoded the row; ``pos_checksum``
     pins sample order.  Per-row independent work: no shuffle, linear in
     the corpus."""
-    ship_by_value("g711")
     from flinkexp_spark.functions.g711 import decode_g711_wav
 
     def one(payload: bytes):
         pcm, rate, tag = decode_g711_wav(bytes(payload))
-        pcm = pcm.astype(np.int64)
-        pos = np.arange(1, len(pcm) + 1, dtype=np.int64)
-        return (
-            tag,
-            rate,
-            1,
-            len(pcm),
-            int(pcm.sum()),
-            int(pcm.min()),
-            int(pcm.max()),
-            int((pos * pcm).sum()),
-        )
+        return (tag, rate, 1, len(pcm), *value_stats(pcm))
 
     cols = [
         "format_tag", "sample_rate", "n_channels", "n_samples", "sample_sum",
@@ -1457,7 +1380,6 @@ APNG_DIM_MIN = 8  # height = (strlen*3 + doc_id) % 12 + 8
 
 def with_apng_payload(df: DataFrame) -> DataFrame:
     """Attach an APNG payload whose frames follow the closed forms above."""
-    ship_by_value("png", "apng")
     from flinkexp_spark.functions.apng import (
         BLEND_OVER,
         BLEND_SOURCE,
@@ -1507,21 +1429,13 @@ def apng_frame_stats(df: DataFrame) -> DataFrame:
     channel order AND the compositing history (a wrong dispose op moves
     bytes at exact positions).  Per-row independent work: no shuffle,
     linear in the corpus."""
-    ship_by_value("png", "apng")
     from flinkexp_spark.functions.apng import decode_apng
 
     def one(payload: bytes):
         canv, meta = decode_apng(bytes(payload))
-        flat = canv.astype(np.int64).ravel()
-        pos = np.arange(1, flat.size + 1, dtype=np.int64)
         return (
-            meta["n_frames"],
-            meta["width"],
-            meta["height"],
-            int(flat.sum()),
-            int(flat.min()),
-            int(flat.max()),
-            int((pos * flat).sum()),
+            meta["n_frames"], meta["width"], meta["height"],
+            *value_stats(canv),
         )
 
     cols = [
@@ -1551,10 +1465,7 @@ QOI_DIM_MIN = 8
 
 
 def qoi_fixture_pixels(doc_id: int, text: str):
-    """Re-export of :func:`flinkexp_spark.functions.qoi.closed_chain_pixels`
-    (it lives in qoi.py so worker closures ship it BY VALUE with the codec
-    — module-level functions here pickle by reference and break when the
-    driver runs from outside the repo; see streaming/stateful.py)."""
+    """Re-export of :func:`flinkexp_spark.functions.qoi.closed_chain_pixels`."""
     from flinkexp_spark.functions.qoi import closed_chain_pixels
 
     return closed_chain_pixels(
@@ -1564,10 +1475,6 @@ def qoi_fixture_pixels(doc_id: int, text: str):
 
 def with_qoi_payload(df: DataFrame) -> DataFrame:
     """Attach a QOI payload encoding the closed-form pixel chain."""
-    ship_by_value("qoi")
-    # close over qoi-module functions ONLY: the by-value registration ships
-    # them with the closure; a reference to this module would pickle by
-    # reference and break on executors that can't import the repo
     from flinkexp_spark.functions.qoi import closed_chain_pixels, encode_qoi
 
     dim_mod, dim_min = QOI_DIM_MOD, QOI_DIM_MIN
@@ -1588,23 +1495,11 @@ def qoi_pixel_stats(df: DataFrame) -> DataFrame:
     then exact-integer stats.  ``pos_checksum`` = sum((3i+ch+1) * value)
     over channel-major order pins pixel AND channel order.  Per-row
     independent work: no shuffle, linear in the corpus."""
-    ship_by_value("qoi")
     from flinkexp_spark.functions.qoi import decode_qoi
 
     def one(payload: bytes):
         w, h, channels, px = decode_qoi(bytes(payload))
-        flat = px[:, :channels].astype(np.int64).reshape(-1)
-        pos = np.arange(1, len(flat) + 1, dtype=np.int64)
-        return (
-            w,
-            h,
-            channels,
-            w * h,
-            int(flat.sum()),
-            int(flat.min()),
-            int(flat.max()),
-            int((pos * flat).sum()),
-        )
+        return (w, h, channels, w * h, *value_stats(px[:, :channels]))
 
     cols = [
         "width", "height", "channels", "n_px", "px_sum", "px_min", "px_max",
@@ -1616,8 +1511,8 @@ def qoi_pixel_stats(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # General-purpose compression.  zlib/gzip, bzip2 and xz/LZMA2 payloads decode
 # through the strict stdlib wrappers (functions/inflate.py, bzip2.py, xz.py
-# over functions/drain.py); zstd, which has no stdlib module, through the
-# RFC 8878 frame walker in functions/zstd.py.  Every fixture compresses a
+# over functions/drain.py); zstd, which has no stdlib module, through
+# pyarrow's libzstd (functions/zstd.py).  Every fixture compresses a
 # closed-form plaintext, so the DuckDB oracles recompute the byte stats
 # arithmetically and payload bytes never reach a hashed column.
 # ---------------------------------------------------------------------------
@@ -1628,20 +1523,11 @@ def byte_stats(df: DataFrame, decompress: Callable[[bytes], bytes]) -> DataFrame
     mapInPandas pass, then exact-integer byte stats.  ``pos_checksum`` is
     weighted by the 1-based byte offset, pinning the decode ORDER — a
     member or block emitted out of sequence hash-fails.  Per-row
-    independent work: no shuffle, linear in the corpus.  The caller ships
-    the module that defines ``decompress`` (:func:`ship_by_value`)."""
+    independent work: no shuffle, linear in the corpus."""
 
     def one(payload: bytes):
         plain = decompress(bytes(payload))
-        v = np.frombuffer(plain, dtype=np.uint8).astype(np.int64)
-        pos = np.arange(1, len(v) + 1, dtype=np.int64)
-        return (
-            len(v),
-            int(v.sum()),
-            int(v.min()),
-            int(v.max()),
-            int((pos * v).sum()),
-        )
+        return (len(plain), *value_stats(np.frombuffer(plain, dtype=np.uint8)))
 
     cols = ["n_bytes", "byte_sum", "byte_min", "byte_max", "pos_checksum"]
     return int_stats(df, cols, one)
@@ -1682,7 +1568,6 @@ def with_deflate_payload(df: DataFrame) -> DataFrame:
 
 def deflate_stats(df: DataFrame) -> DataFrame:
     """zlib decode (functions/inflate.py) + :func:`byte_stats`."""
-    ship_by_value("drain", "inflate")
     from flinkexp_spark.functions.inflate import zlib_decompress
 
     return byte_stats(df, zlib_decompress)
@@ -1735,7 +1620,6 @@ def with_gzip_payload(df: DataFrame) -> DataFrame:
 
 def gzip_stats(df: DataFrame) -> DataFrame:
     """gzip decode (functions/inflate.py) + :func:`byte_stats`."""
-    ship_by_value("drain", "inflate")
     from flinkexp_spark.functions.inflate import gzip_decompress
 
     return byte_stats(df, gzip_decompress)
@@ -1785,7 +1669,6 @@ def with_bzip2_payload(df: DataFrame) -> DataFrame:
 
 def bzip2_stats(df: DataFrame) -> DataFrame:
     """bzip2 decode (functions/bzip2.py) + :func:`byte_stats`."""
-    ship_by_value("drain", "bzip2")
     from flinkexp_spark.functions.bzip2 import bz2_decompress
 
     return byte_stats(df, bz2_decompress)
@@ -1817,7 +1700,6 @@ def with_tiff_payload(df: DataFrame) -> DataFrame:
     synthesis — no stdlib TIFF exists); decode under test is the from-spec
     IFD walk + MSB-first early-change LZW + predictor undo, pinned to
     hand-derived spec vectors in tests/test_tiff_lzw.py."""
-    ship_by_value("tiff")
     from flinkexp_spark.functions.tiff import tiff_encode_gray
 
     wmod, wmin, hmod, hmin = TIFF_W_MOD, TIFF_W_MIN, TIFF_H_MOD, TIFF_H_MIN
@@ -1847,23 +1729,12 @@ def tiff_stats(df: DataFrame) -> DataFrame:
     both byte orders, strip assembly, MSB-first early-change LZW,
     Predictor-2 undo) inside one Arrow mapInPandas pass, then
     exact-integer pixel stats.  Per-row independent, no shuffle."""
-    ship_by_value("tiff")
     from flinkexp_spark.functions.tiff import tiff_decode_gray
 
     def one(payload: bytes):
-        img = tiff_decode_gray(bytes(payload)).astype(np.int64)
+        img = tiff_decode_gray(bytes(payload))
         h, w = img.shape
-        flat = img.reshape(-1)
-        pos = np.arange(1, flat.size + 1, dtype=np.int64)
-        return (
-            w,
-            h,
-            flat.size,
-            int(flat.sum()),
-            int(flat.min()),
-            int(flat.max()),
-            int((pos * flat).sum()),
-        )
+        return (w, h, img.size, *value_stats(img))
 
     cols = [
         "width", "height", "n_px", "px_sum", "px_min", "px_max",
@@ -1873,35 +1744,28 @@ def tiff_stats(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# zstd frame walker (X5, r13): RFC 8878 container over raw/RLE blocks
-# (functions/zstd.py) with from-spec xxHash64 content checksums.
+# zstd frames (X5, r13) through pyarrow's libzstd (functions/zstd.py).
 # ---------------------------------------------------------------------------
 
 ZSTD_LEN_MOD = 2200
 ZSTD_LEN_MIN = 1600
-ZSTD_RUN = 150  # 150-byte value runs -> RLE blocks on the wire
+ZSTD_RUN = 150  # 150-byte value runs
 ZSTD_PERIOD = 53
 
 
 def with_zstd_payload(df: DataFrame) -> DataFrame:
-    """Attach a spec-valid zstd payload (RFC 8878 raw/RLE frames) carrying
-    the deterministic plaintext byte[i] = (s*7 + 17*((i // 150) % 53)) %
-    256 of length len(text)*4 + doc_id mod 2200 + 1600 — the 150-byte
-    value runs become RLE blocks, the run boundaries raw blocks.
-    ``doc_id % 3`` cycles the walker's container paths:
+    """Attach a zstd payload carrying the deterministic plaintext byte[i] =
+    (s*7 + 17*((i // 150) % 53)) % 256 of length len(text)*4 + doc_id mod
+    2200 + 1600.  ``doc_id % 3`` cycles the container layouts:
 
-    * 0 — one windowed frame, FCS present, content checksum
-    * 1 — skippable metadata frame + one SINGLE-SEGMENT frame w/ checksum
-    * 2 — two concatenated frames splitting the plaintext (first without
-      checksum, second single-segment) — multi-frame semantics
+    * 0 — one frame
+    * 1 — skippable metadata frame + one frame
+    * 2 — two concatenated frames splitting the plaintext
 
-    The encoder is the from-spec stored-frame writer in functions/zstd.py;
-    tests/test_zstd.py round-trips it through the system's REAL ``zstd``
-    binary (both directions), so the fixture bytes are independently
-    verified conformant."""
-    ship_by_value("zstd")
+    tests/test_zstd.py round-trips the frames through the system's
+    ``zstd`` binary in both directions."""
     from flinkexp_spark.functions.zstd import (
-        zstd_compress_stored,
+        zstd_compress,
         zstd_skippable_frame,
     )
 
@@ -1918,22 +1782,19 @@ def with_zstd_payload(df: DataFrame) -> DataFrame:
         ).astype(np.uint8).tobytes()
         var = doc_id % 3
         if var == 0:
-            return zstd_compress_stored(plain)
+            return zstd_compress(plain)
         if var == 1:
             return zstd_skippable_frame(
                 b"doc metadata", doc_id % 16
-            ) + zstd_compress_stored(plain, single_segment=True)
+            ) + zstd_compress(plain)
         half = n // 2
-        return zstd_compress_stored(
-            plain[:half], checksum=False
-        ) + zstd_compress_stored(plain[half:], single_segment=True)
+        return zstd_compress(plain[:half]) + zstd_compress(plain[half:])
 
     return with_payload(df, one)
 
 
 def zstd_stats(df: DataFrame) -> DataFrame:
-    """zstd frame walk (functions/zstd.py) + :func:`byte_stats`."""
-    ship_by_value("zstd")
+    """zstd decode (functions/zstd.py) + :func:`byte_stats`."""
     from flinkexp_spark.functions.zstd import zstd_decompress
 
     return byte_stats(df, zstd_decompress)
@@ -2052,7 +1913,6 @@ def with_lzma2_payload(df: DataFrame) -> DataFrame:
 
 def xz_stats(df: DataFrame) -> DataFrame:
     """.xz decode (functions/xz.py) + :func:`byte_stats`."""
-    ship_by_value("drain", "xz")
     from flinkexp_spark.functions.xz import xz_decompress
 
     return byte_stats(df, xz_decompress)

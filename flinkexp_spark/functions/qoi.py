@@ -250,8 +250,7 @@ def closed_chain_pixels(
     closed-form pixel chain (palette jumps + DIFF/LUMA-range deltas + runs),
     designed so every QOI chunk op is live and a SQL oracle can recompute
     the pixels as last-jump window algebra (catalog/llm_multimodal.py
-    ``multimodal_decode_qoi_pixels``).  Lives here, not in multimodal.py,
-    so worker closures ship it BY VALUE with the codec.
+    ``multimodal_decode_qoi_pixels``).
 
     Every 4th doc (doc_id % 4 == 0) is RGBA: its alpha is constant between
     jumps and changes AT each palette jump (alpha = 200 + 10*k for palette

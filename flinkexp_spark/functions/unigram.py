@@ -1,11 +1,5 @@
 """Pure-Python unigram-LM Viterbi segmenter — the per-word lattice DP.
 
-Kept in its own import-light module (stdlib only) so worker closures can
-ship it BY VALUE with :func:`flinkexp_spark.functions.ship_by_value` — the same
-rule as the codec modules (functions/qoi.py, functions/g711.py): anything
-a pandas UDF calls must not pickle by reference to a repo module, because
-executors outside the repo can't import ``flinkexp_spark``.
-
 The DP and its tie-break are the cross-engine contract: at every position
 the best path maximizes the exact integer score sum, and a tie is won by
 the LONGER last piece (k checked high-to-low).  The DuckDB oracle's

@@ -16,11 +16,14 @@ Spark side uses — the driver sorts columns by name before value-hashing.
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from flinkexp_spark.session import ship_package
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -97,13 +100,23 @@ REGISTRY: dict[str, Query] = {}
 def register(
     name: str, oracle: str | None = None, tags: tuple[str, ...] = ()
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: add a query to the engine catalog."""
+    """Decorator: add a query to the engine catalog.
+
+    The catalog entry ships the package to the session's Python workers
+    (:func:`~flinkexp_spark.session.ship_package`) before running ``fn``;
+    the decorator itself returns ``fn`` unchanged."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
         osql = _materialize_multiref_ctes(oracle) if oracle else oracle
-        REGISTRY[name] = Query(name, fn, osql, tuple(tags), fn.__doc__)
+
+        @functools.wraps(fn)
+        def shipped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            ship_package(spark)
+            return fn(spark, sf_dir)
+
+        REGISTRY[name] = Query(name, shipped, osql, tuple(tags), fn.__doc__)
         return fn
 
     return deco

@@ -27,23 +27,32 @@ state backend (reference: study/pom.xml:72).  Our equivalent is a configured
   cached zip importer (~0.2 s per task); the entry point re-reads an
   archive only when it changed.  A session built elsewhere keeps the stock
   worker unless it sets the same two things (``PYTHONPATH`` and the key).
+
+:func:`ship_package` is the one way Python workers get the package: the
+registry calls it before every query body, on whatever session the caller
+passes, so workers of a driver started outside the repo import
+``flinkexp_spark`` from the shipped zip.
 """
 
 from __future__ import annotations
 
+import hashlib
+import io
 import os
+import uuid
+import zipfile
 
 from pyspark.sql import SparkSession
 
 __all__ = [
-    "get_session", "default_cpus", "default_driver_memory", "host_memory_mb",
-    "DEFAULT_SHUFFLE_PARTITIONS",
+    "get_session", "ship_package", "default_cpus", "default_driver_memory",
+    "host_memory_mb", "DEFAULT_SHUFFLE_PARTITIONS",
 ]
 
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
 # stdlib-only, one module: every Python worker gets it on its PYTHONPATH
-_PYWORKER_DIR = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "compat", "pyworker"
-)
+_PYWORKER_DIR = os.path.join(_PACKAGE_DIR, "compat", "pyworker")
+ARCHIVE_PREFIX = "flinkexp_spark-"
 
 
 def default_cpus() -> int:
@@ -141,3 +150,39 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Ship every .py file of ``flinkexp_spark`` to this SparkContext's
+    Python workers as one zip, once per context.
+
+    cloudpickle pickles module-level functions and classes by reference,
+    so a worker must be able to import the package even when its driver
+    runs outside the repo.  Whether the context already has the archive is
+    read from its own ``_python_includes``, so a recreated context ships
+    again.  The zip is named by content hash under the scratch root and
+    written through a rename, so concurrent processes share one file; it
+    is never deleted, because executors fetch it lazily."""
+    sc = spark.sparkContext
+    if any(name.startswith(ARCHIVE_PREFIX) for name in sc._python_includes):
+        return
+    from flinkexp_spark.srcstate import package_files
+    from flinkexp_spark.streaming.replay import SCRATCH_ROOT
+
+    repo = os.path.dirname(_PACKAGE_DIR)
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as z:
+        for path in package_files(repo):
+            with open(path, "rb") as f:
+                # a bare ZipInfo has a fixed timestamp: same files, same bytes
+                z.writestr(zipfile.ZipInfo(os.path.relpath(path, repo)), f.read())
+    data = buf.getvalue()
+    digest = hashlib.sha256(data).hexdigest()[:16]
+    archive = os.path.join(SCRATCH_ROOT, f"{ARCHIVE_PREFIX}{digest}.zip")
+    if not os.path.exists(archive):
+        os.makedirs(SCRATCH_ROOT, exist_ok=True)
+        tmp = f"{archive}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "wb") as f:
+            f.write(data)
+        os.replace(tmp, archive)
+    sc.addPyFile(archive)

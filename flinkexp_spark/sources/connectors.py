@@ -222,8 +222,6 @@ def kv_sink(
     ``(key_tuple, value_tuple)`` pairs (a Redis client would MSET/pipeline
     them) and ``close()`` releases the connection.  Upserts are idempotent
     per key, so checkpoint replay is exactly-once at the store level.
-    ``client_factory`` must be a closure (pickled by value — see
-    streaming/stateful.py module doc).
     """
     kc, vc = list(key_cols), list(value_cols)
 
@@ -260,7 +258,7 @@ def spool_kv_client_factory(spool_dir: str) -> Callable[[int], tuple[Callable, C
     """
 
     def factory(epoch: int):
-        # closure: pickled by value; runs on the executor
+        # runs on the executor
         import json as _json
         import os as _os
         import uuid as _uuid

@@ -44,10 +44,6 @@ writers to one topic are out of contract (single-writer-per-topic —
 Kafka's one-leader-per-partition analog); each STREAMING query stages
 under its own run-scoped dir, so overlapping queries cannot interleave
 staged files even when misconfigured.
-
-SERIALIZATION RULE (see sources/pysource.py): the DataSource classes are
-closure-scoped so cloudpickle ships them by value — executors launched by
-a driver running outside the repo cannot import ``flinkexp_spark``.
 """
 
 from __future__ import annotations
@@ -110,7 +106,7 @@ def produce(
 
 
 def make_kafka_log_source():
-    """Build the ``kafkalog`` DataSource class (closure-scoped)."""
+    """Build the ``kafkalog`` DataSource class."""
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceReader,
@@ -121,9 +117,6 @@ def make_kafka_log_source():
         WriterCommitMessage,
     )
 
-    # closure copies of the module helpers: everything the pickled classes
-    # touch must ship BY VALUE (workers can't import flinkexp_spark)
-    #
     # LOG LAYOUT: a topic-partition's records are the concatenation of its
     # base file ``{topic}/p{N}.jsonl`` (the produce() append log) and its
     # committed SEGMENTS ``{topic}/seg-*/p{N}-*.jsonl`` in (segment dir,
@@ -605,7 +598,7 @@ def kafka_log_sink(
             .alias("partition"),
         )
 
-        stage_dir = staging  # closure copies — executors can't import the repo
+        stage_dir = staging  # closure copy
 
         def _stage(rows) -> None:
             import json as _json

@@ -10,14 +10,6 @@ deterministic synthetic crawl shard — every field derives from
 ``md5(str(doc_id))``, the repo's standard cross-engine-reproducible hash,
 so the DuckDB oracle can recompute the whole dataset arithmetically.
 
-SERIALIZATION RULE (same as every executor-bound callable in this repo,
-see streaming/stateful.py): the DataSource classes are defined INSIDE the
-factory below, so cloudpickle ships them BY VALUE.  Module-level classes
-pickle by reference, and workers launched by a driver running outside the
-repo (the driver contract runs from an arbitrary cwd) cannot import
-``flinkexp_spark`` — exactly the ModuleNotFoundError the /tmp driver-sim
-exists to catch (and did).
-
 At 100 TB the same skeleton wraps a real paginated API / blob listing:
 ``partitions()`` returns one InputPartition per shard/page-range, and
 ``read()`` streams that shard only.  Arrow-batch the yields (the API also
@@ -31,7 +23,7 @@ SYNTH_SCHEMA = "doc_id bigint, shard int, score bigint"
 
 
 def make_synth_crawl_source():
-    """Build the DataSource class (closure-scoped -> pickled by value)."""
+    """Build the DataSource class."""
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceReader,
@@ -101,8 +93,7 @@ def make_synth_stream_source():
     """Streaming variant: a SimpleDataSourceStreamReader with explicit
     offset management ({"pos": n} checkpoints; ``readBetweenOffsets``
     replays a committed range after restart) — the no-JVM path for
-    paginated/poll-based feeds.  Closure-scoped for by-value pickling,
-    like the batch source above."""
+    paginated/poll-based feeds."""
     from pyspark.sql.datasource import (
         DataSource,
         SimpleDataSourceStreamReader,

@@ -8,6 +8,9 @@ The invariant the wire actually wants is "both benches measured the SAME
 engine source", so both artifacts now stamp a content hash of the
 perf-relevant tree and the trip-wire compares that, falling back to git
 HEAD only for artifacts predating the field.
+
+:func:`package_files` is also the file list ``session.ship_package`` zips
+for Python workers.
 """
 
 from __future__ import annotations
@@ -17,24 +20,28 @@ import os
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Files whose content can change measured performance.  Tests, tools and
-# markdown artifacts deliberately excluded: editing them must NOT demand a
-# bench re-run.
-_PERF_ROOTS = ("flinkexp_spark",)
+# Files whose content can change measured performance: the package plus
+# these two.  Tests, tools and markdown artifacts deliberately excluded:
+# editing them must NOT demand a bench re-run.
+_PACKAGE = "flinkexp_spark"
 _PERF_FILES = ("bench.py", "__spark_entry__.py")
+
+
+def package_files(repo: str = _REPO) -> list[str]:
+    """Every .py file under the ``flinkexp_spark`` package, sorted."""
+    paths: list[str] = []
+    for dirpath, dirnames, filenames in os.walk(os.path.join(repo, _PACKAGE)):
+        dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+        for fn in filenames:
+            if fn.endswith(".py"):
+                paths.append(os.path.join(dirpath, fn))
+    return sorted(paths)
 
 
 def source_tree_hash(repo: str = _REPO) -> str:
     """SHA-256 over (relpath, content) of every perf-relevant .py file."""
     h = hashlib.sha256()
-    paths: list[str] = []
-    for root_name in _PERF_ROOTS:
-        root = os.path.join(repo, root_name)
-        for dirpath, dirnames, filenames in os.walk(root):
-            dirnames[:] = [d for d in dirnames if d != "__pycache__"]
-            for fn in filenames:
-                if fn.endswith(".py"):
-                    paths.append(os.path.join(dirpath, fn))
+    paths = package_files(repo)
     for fn in _PERF_FILES:
         p = os.path.join(repo, fn)
         if os.path.exists(p):

@@ -9,12 +9,6 @@ underneath.
 Money is accumulated in integer CENTS, not floats: state updates must be
 exact and order-independent (a float running sum would drift per partition
 ordering and break exactly-once replay equivalence).
-
-Every Python function shipped to executors in this package is defined as a
-CLOSURE (nested function), never at module top level: cloudpickle serializes
-module-level functions by reference, which requires ``flinkexp_spark`` to be
-importable on every worker.  Closures serialize by value, so the engine works
-from any driver process without cluster-wide package installation.
 """
 
 from __future__ import annotations
@@ -60,7 +54,6 @@ def running_totals_tws_transform(stream: DataFrame) -> DataFrame:
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
     class RunningTotals(StatefulProcessor):
-        # defined inside the closure: pickled by value (module doc)
         def init(self, handle):
             self._state = handle.getValueState("totals", STATE_SCHEMA)
 
@@ -165,7 +158,6 @@ def stateful_sessionize(stream: DataFrame) -> DataFrame:
     """
 
     def sessions(key, pdfs, state):
-        # closure: pickled by value (see module doc)
         import numpy as np
         import pandas as pd
 
@@ -302,7 +294,6 @@ def sessionize_tws_transform(stream: DataFrame) -> DataFrame:
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
     class Sessionizer(StatefulProcessor):
-        # defined inside the closure: pickled by value (module doc)
         def init(self, handle):
             self._handle = handle
             self._state = handle.getValueState("session", SESSION_TWS_STATE_SCHEMA)
@@ -456,7 +447,6 @@ def map_totals_tws_transform(stream: DataFrame) -> DataFrame:
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
     class MapTotals(StatefulProcessor):
-        # defined inside the closure: pickled by value (module doc)
         def init(self, handle):
             self._m = handle.getMapState(
                 "totals", "event_type string", "n long, cents long"
@@ -524,7 +514,6 @@ def recent_events_tws_transform(stream: DataFrame) -> DataFrame:
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
     class RecentEvents(StatefulProcessor):
-        # defined inside the closure: pickled by value (module doc)
         def init(self, handle):
             self._buf = handle.getListState("recent", "ts_ns long, event_id long")
 
@@ -575,7 +564,6 @@ def bootstrapped_totals_tws_transform(initial_state_df):
         from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
         class Bootstrapped(StatefulProcessor):
-            # defined inside the closure: pickled by value (module doc)
             def init(self, handle):
                 self._state = handle.getValueState("totals", STATE_SCHEMA)
 
@@ -637,7 +625,7 @@ def ewma_transform(stream: DataFrame, alpha: float = 0.2) -> DataFrame:
     guarantees it; a production job gets it from watermarked sources).
     """
 
-    def ewma(key, pdfs, state):  # closure: pickled by value
+    def ewma(key, pdfs, state):
         import pandas as pd
 
         n, acc = (state.get if state.exists else (0, 0.0))

@@ -6,8 +6,10 @@ generate; the rejection table covers truncation, trailing garbage, a
 corrupt checksum and bad padding for each format.  The padded multi-stream
 xz case and every trailing-garbage case fail against the lenient one-shot
 ``zlib``/``bz2``/``lzma.decompress``, which is what the wrappers exist to
-prevent.  The last test runs every multimodal encoder and decoder closure
-in a process that cannot import the package.
+prevent.  The last two tests run every multimodal encoder -> decoder pair
+in process, and every codec query on a plain session whose driver runs
+outside the repo, where workers import the package only from the archive
+the registry ships.
 """
 
 from __future__ import annotations
@@ -15,13 +17,13 @@ from __future__ import annotations
 import bz2
 import gzip
 import io
+import json
 import lzma
 import os
-import pickle
 import random
 import subprocess
 import sys
-import tempfile
+import textwrap
 import zlib
 
 import pytest
@@ -234,13 +236,11 @@ class _Capture:
         return fn, schema
 
 
-def test_decode_closure_unpickles_without_the_repo() -> None:
-    """The by-value rule: every multimodal worker closure must load and run
-    in a process that cannot import flinkexp_spark, as on executors of a
-    driver started outside the repo.  All encoder -> decoder pairs run in
-    one such process on doc_ids 0-3, which hits every variant cycle; each
-    decoder frame must carry exactly its schema's columns, all int64, and
-    equal the frame the same closures give in this process."""
+def test_shell_pairs_give_int64_frames_of_their_schema() -> None:
+    """Every encoder -> decoder pair on doc_ids 0-3, which hits every
+    variant cycle: each decoder frame carries exactly its schema's
+    columns, all int64, and the cloudpickled worker functions (what a
+    task ships) give the same frame as the local ones."""
     import pandas as pd
     from pyspark import cloudpickle
 
@@ -249,46 +249,97 @@ def test_decode_closure_unpickles_without_the_repo() -> None:
     def capture(name: str):
         return getattr(M, name)(_Capture())
 
-    pairs = {
-        enc: (capture(enc)[0], {dec: capture(dec)[0] for dec in decs})
-        for enc, decs in SHELL_PAIRS.items()
-    }
-    schemas = {
-        dec: capture(dec)[1] for decs in SHELL_PAIRS.values() for dec in decs
-    }
+    def shipped(fn):
+        return cloudpickle.loads(cloudpickle.dumps(fn))
+
     batch = pd.DataFrame(
         {
             "doc_id": pd.Series(range(4), dtype="int64"),
             "text": [f"doc {i}: " + "payload " * (3 * i + 1) for i in range(4)],
         }
     )
-    script = (
-        "import importlib.util, pickle, sys\n"
-        "assert importlib.util.find_spec('flinkexp_spark') is None\n"
-        "pairs, batch = pickle.loads(sys.stdin.buffer.read())\n"
-        "out = {}\n"
-        "for enc, (encode, decoders) in pairs.items():\n"
-        "    (payloads,) = encode(iter([batch]))\n"
-        "    for dec, decode in decoders.items():\n"
-        "        (out[enc, dec],) = decode(iter([payloads]))\n"
-        "sys.stdout.buffer.write(pickle.dumps(out))\n"
-    )
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    proc = subprocess.run(
-        [sys.executable, "-c", script],
-        input=cloudpickle.dumps((pairs, batch)), capture_output=True,
-        cwd=tempfile.gettempdir(), env=env, timeout=300,
-    )
-    assert proc.returncode == 0, proc.stderr.decode()[-2000:]
-    frames = pickle.loads(proc.stdout)
-    assert sorted(frames) == sorted(
-        (enc, dec) for enc, decs in SHELL_PAIRS.items() for dec in decs
-    )
-    for (enc, dec), frame in frames.items():
-        names = [c.split()[0] for c in schemas[dec].split(",")]
-        assert list(frame.columns) == names, (enc, dec)
-        assert (frame.dtypes == "int64").all(), (enc, dec, frame.dtypes)
-        encode, decoders = pairs[enc]
+    for enc, decs in SHELL_PAIRS.items():
+        encode = capture(enc)[0]
         (payloads,) = encode(iter([batch]))
-        (local,) = decoders[dec](iter([payloads]))
-        pd.testing.assert_frame_equal(frame, local)
+        (remote,) = shipped(encode)(iter([batch]))
+        pd.testing.assert_frame_equal(remote, payloads)
+        for dec in decs:
+            decode, schema = capture(dec)
+            (local,) = decode(iter([payloads]))
+            names = [c.split()[0] for c in schema.split(",")]
+            assert list(local.columns) == names, (enc, dec)
+            assert (local.dtypes == "int64").all(), (enc, dec, local.dtypes)
+            (remote,) = shipped(decode)(iter([payloads]))
+            pd.testing.assert_frame_equal(remote, local)
+
+
+OUTSIDE_REPO_SCRIPT = textwrap.dedent(
+    """
+    import json, os, sys
+
+    repo, sf_dir = sys.argv[1:]
+    sys.path.insert(0, repo)
+    from pyspark.sql import SparkSession
+
+    from flinkexp_spark.registry import queries
+    from flinkexp_spark.testing.oracle import compare_query, duck_connection
+
+    spark = (
+        SparkSession.builder.master("local[2]")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    names = [
+        n for n in queries()
+        if n.startswith(("multimodal_", "tokenizer_unigram_"))
+    ]
+    con = duck_connection(sf_dir)
+    results = [compare_query(spark, con, n, sf_dir) for n in names]
+
+    def where(batches):
+        import flinkexp_spark
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"file": [flinkexp_spark.__file__]})
+
+    files = spark.range(2).mapInPandas(where, "file string").collect()
+    print(json.dumps({
+        "names": names,
+        "failed": [[r.name, r.detail] for r in results if not r.ok],
+        "files": sorted({r.file for r in files}),
+        "includes": spark.sparkContext._python_includes,
+    }))
+    spark.stop()
+    """
+)
+
+
+def test_codec_queries_match_oracles_from_outside_the_repo(
+    tmp_path, sf_dir
+) -> None:
+    """The driver's setup: a plain ``local[2]`` session started from a
+    directory without the package and with no ``PYTHONPATH``.  Every
+    ``multimodal_*`` and ``tokenizer_unigram_*`` query must match its
+    oracle at sf0.001, and workers must import ``flinkexp_spark`` from
+    the archive ``registry`` shipped."""
+    from flinkexp_spark.session import ARCHIVE_PREFIX
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_SCRATCH"] = str(tmp_path / "scratch")
+    proc = subprocess.run(
+        [sys.executable, "-c", OUTSIDE_REPO_SCRIPT, repo, sf_dir],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert len(out["names"]) >= 30, out["names"]
+    assert out["failed"] == []
+    (archive,) = [i for i in out["includes"] if i.startswith(ARCHIVE_PREFIX)]
+    assert out["files"] and all(
+        f.endswith(os.path.join(archive, "flinkexp_spark", "__init__.py"))
+        for f in out["files"]
+    ), out["files"]

@@ -338,7 +338,7 @@ def test_keyed_process_custom_state(spark, tmp_path):
         [StructField("n", LongType()), StructField("vmax", LongType())]
     )
 
-    def fn(key, pdfs, state):  # closure: pickled by value
+    def fn(key, pdfs, state):
         import pandas as pd
 
         n, vmax = (state.get if state.exists else (0, None))

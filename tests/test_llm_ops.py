@@ -1,5 +1,5 @@
 """Unit tests for the X1-X5 extension operators beyond the oracle gate:
-structural properties of dedup/similarity, multimodal stubs, closure rules.
+structural properties of dedup/similarity, multimodal stubs.
 """
 
 from __future__ import annotations

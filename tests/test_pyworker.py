@@ -1,4 +1,5 @@
-"""Python-worker entry point (compat/pyworker) and host-sized session defaults.
+"""Python-worker entry point (compat/pyworker), the package archive
+(``session.ship_package``) and host-sized session defaults.
 
 The guard replaces ``zipimport.zipimporter.invalidate_caches`` for the
 whole interpreter, so its semantics are checked in a subprocess; the wiring
@@ -7,14 +8,17 @@ is checked from inside a real worker task.
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
 import textwrap
+import zipfile
 
 import pytest
 
 from flinkexp_spark import session
+from flinkexp_spark.srcstate import package_files
 
 GUARD_SCRIPT = textwrap.dedent(
     """
@@ -133,6 +137,132 @@ def test_worker_dir_holds_only_the_entry_point():
     # every Python worker has this directory on its PYTHONPATH
     entries = set(os.listdir(session._PYWORKER_DIR)) - {"__pycache__"}
     assert entries == {"pyspark_graft_worker.py"}
+
+
+class _FakeContext:
+    def __init__(self):
+        self._python_includes = []
+        self.added = []
+
+    def addPyFile(self, path):
+        self.added.append(path)
+        self._python_includes.append(os.path.basename(path))
+
+
+class _FakeSession:
+    def __init__(self):
+        self.sparkContext = _FakeContext()
+
+
+def test_ship_package_adds_one_archive_per_context(spark, tmp_path, monkeypatch):
+    # the real context: exactly one archive, however often queries ship
+    session.ship_package(spark)
+    includes = list(spark.sparkContext._python_includes)
+    session.ship_package(spark)
+    assert spark.sparkContext._python_includes == includes
+    assert sum(i.startswith(session.ARCHIVE_PREFIX) for i in includes) == 1
+
+    from flinkexp_spark.streaming import replay
+
+    monkeypatch.setattr(replay, "SCRATCH_ROOT", str(tmp_path))
+    first, second = _FakeSession(), _FakeSession()
+    for s in (first, second, first, second):
+        session.ship_package(s)
+    # a new context ships again; a second call on the same one adds nothing
+    (a,) = first.sparkContext.added
+    assert second.sparkContext.added == [a]
+    assert os.listdir(tmp_path) == [os.path.basename(a)]
+
+    repo = os.path.dirname(session._PACKAGE_DIR)
+    files = package_files(repo)
+    with zipfile.ZipFile(a) as z:
+        assert z.namelist() == [os.path.relpath(p, repo) for p in files]
+        for p in files:
+            with open(p, "rb") as f:
+                assert z.read(os.path.relpath(p, repo)) == f.read(), p
+
+
+ARCHIVE_READS_SCRIPT = textwrap.dedent(
+    """
+    import json, sys
+
+    sys.path.insert(0, sys.argv[1])
+    from flinkexp_spark.session import ARCHIVE_PREFIX, get_session, ship_package
+
+    spark = get_session(app_name="archive_reads", master="local[1]")
+
+    def probe(batches):
+        import collections, os, sys, zipimport
+
+        import pandas as pd
+
+        if not hasattr(zipimport, "_probe_reads"):
+            reads = zipimport._probe_reads = collections.Counter()
+            read_directory = zipimport._read_directory
+
+            def counting_read(archive):
+                reads[archive] += 1
+                return read_directory(archive)
+
+            zipimport._read_directory = counting_read
+        for pdf in batches:
+            if pdf["ship"].iloc[0]:
+                import flinkexp_spark.functions.zstd  # noqa: F401
+
+        def shipped(archive):
+            return os.path.basename(archive).startswith(ARCHIVE_PREFIX)
+
+        yield pd.DataFrame({
+            "pid": [os.getpid()],
+            "reads": [sum(
+                n for a, n in zipimport._probe_reads.items() if shipped(a)
+            )],
+            "importers": [sum(
+                isinstance(i, zipimport.zipimporter) and shipped(i.archive)
+                for i in sys.path_importer_cache.values()
+            )],
+        })
+
+    def task(ship):
+        df = spark.range(1, numPartitions=1).selectExpr(f"{ship} AS ship")
+        (row,) = df.mapInPandas(probe, "pid long, reads long, importers long")\
+            .collect()
+        return list(row)
+
+    rows = [task(False)]
+    ship_package(spark)
+    rows += [task(True) for _ in range(4)]
+    print(json.dumps(rows))
+    spark.stop()
+    """
+)
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 13),
+    reason="Python 3.13+ invalidates zip caches lazily; no guard installed",
+)
+def test_worker_does_not_reread_the_shipped_archive(tmp_path):
+    """On a ``get_session`` worker the guard covers the package archive:
+    each zip importer reads it at most once more after it is built, and
+    later tasks do not read it at all (the stock worker re-reads it on
+    every task)."""
+    env = dict(os.environ, SPARK_GRAFT_SCRATCH=str(tmp_path / "scratch"))
+    env.pop("PYTHONPATH", None)
+    repo = os.path.dirname(session._PACKAGE_DIR)
+    out = subprocess.run(
+        [sys.executable, "-c", ARCHIVE_READS_SCRIPT, repo],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    rows = json.loads(out.stdout.strip().splitlines()[-1])
+    pids = {pid for pid, _, _ in rows}
+    assert len(pids) == 1, rows  # one reused worker ran every task
+    reads = [n for _, n, _ in rows]
+    importers = rows[-1][2]
+    assert reads[0] == 0 and reads[1] >= 1 and importers >= 1, rows
+    assert reads[-1] <= 1 + importers, rows
+    assert reads[2] == reads[3] == reads[4], rows
 
 
 def test_session_defaults_come_from_the_host(monkeypatch):

@@ -27,7 +27,7 @@ from flinkexp_spark.functions.unigram import viterbi_segment
 
 
 def _segment_fn(scores: dict[str, int]):
-    """The same pure DP the pandas UDF ships by value."""
+    """The same pure DP the pandas UDF runs."""
 
     def one(word: str) -> list[str]:
         return viterbi_segment(word, scores, UNI_MAX_PIECE)

@@ -1,32 +1,27 @@
-"""From-spec zstd frame walker (functions/zstd.py) vs the REAL zstd binary.
+"""zstd through pyarrow's libzstd (functions/zstd.py) vs the REAL zstd binary.
 
-This environment ships an actual ``zstd`` executable, so unlike the
-TIFF-LZW suite this one has a reference implementation to pin against in
-BOTH directions:
+This environment ships an actual ``zstd`` executable, so the frames are
+pinned in BOTH directions:
 
-* every stored frame OUR encoder emits must decode byte-identical under
-  the real binary (which also verifies our xxHash64 content checksums —
-  a wrong hash would fail its integrity check);
-* the real binary's output for INCOMPRESSIBLE data consists of raw
-  blocks, which our walker must decode byte-identical.
+* every frame OUR encoder emits must decode byte-identical under the real
+  binary;
+* the real binary's output, raw blocks and compressed ``-19`` blocks
+  alike, must decode byte-identical here.
 
-Compressed_Block (FSE/Huffman) frames are out of the walker's documented
-scope and must fail with the explicit scope error, never a wrong answer.
+Malformed payloads raise :class:`ZstdError` with a ``zstd:`` message.
 """
 
 from __future__ import annotations
 
 import random
 import shutil
-import struct
 import subprocess
 
 import pytest
 
 from flinkexp_spark.functions.zstd import (
     ZstdError,
-    xxh64,
-    zstd_compress_stored,
+    zstd_compress,
     zstd_decompress,
     zstd_skippable_frame,
 )
@@ -37,6 +32,12 @@ needs_zstd = pytest.mark.skipif(_ZSTD_BIN is None, reason="no zstd binary")
 
 def _real_decode(blob: bytes) -> bytes:
     p = subprocess.run([_ZSTD_BIN, "-d", "-c"], input=blob, capture_output=True)
+    assert p.returncode == 0, p.stderr.decode()[:300]
+    return p.stdout
+
+
+def _real_encode(data: bytes, *flags: str) -> bytes:
+    p = subprocess.run([_ZSTD_BIN, "-c", *flags], input=data, capture_output=True)
     assert p.returncode == 0, p.stderr.decode()[:300]
     return p.stdout
 
@@ -53,118 +54,75 @@ def _corpora():
 
 def test_stored_frames_roundtrip_self() -> None:
     for data in _corpora():
-        for kw in (
-            {},
-            {"checksum": False},
-            {"single_segment": True},
-            {"with_fcs": False},
-        ):
-            assert zstd_decompress(zstd_compress_stored(data, **kw)) == data
+        assert zstd_decompress(zstd_compress(data)) == data
 
 
 @needs_zstd
 def test_stored_frames_accepted_by_real_zstd() -> None:
-    """Our frames are spec-valid for the reference implementation —
-    including the checksummed variants, which transitively pins the
-    from-spec xxHash64 (a wrong hash fails zstd's integrity check)."""
     for data in _corpora():
-        for kw in ({}, {"single_segment": True}, {"with_fcs": False}):
-            assert _real_decode(zstd_compress_stored(data, **kw)) == data
+        assert _real_decode(zstd_compress(data)) == data
 
 
 @needs_zstd
 def test_walker_decodes_real_zstd_raw_blocks() -> None:
     """The reference encoder stores incompressible input as raw blocks;
-    our walker must decode its actual output byte-identical."""
+    the decoder must read its actual output byte-identical."""
     rng = random.Random(7)
     data = bytes(rng.randrange(256) for _ in range(200_000))
-    p = subprocess.run([_ZSTD_BIN, "-c"], input=data, capture_output=True)
-    assert p.returncode == 0
-    assert zstd_decompress(p.stdout) == data
+    assert zstd_decompress(_real_encode(data)) == data
 
 
 @needs_zstd
-def test_xxh64_matches_reference_checksums() -> None:
-    """Low-32 of XXH64(content) must equal the checksum the reference
-    binary writes (zstd -C) for the same content."""
-    for data in (b"", b"a", b"hello world", bytes(range(256)) * 10):
-        p = subprocess.run(
-            [_ZSTD_BIN, "-c", "-C"], input=data, capture_output=True
-        )
-        (want,) = struct.unpack("<I", p.stdout[-4:])
-        assert (xxh64(data) & 0xFFFFFFFF) == want
+def test_real_compressed_frame_decodes_to_its_input() -> None:
+    """Compressible data makes the reference emit Compressed_Blocks
+    (FSE/Huffman sequences); ``zstd -19`` output must decode exactly."""
+    data = b"compress me " * 5000 + bytes(range(256)) * 40
+    frame = _real_encode(data, "-19")
+    assert len(frame) < len(data) // 10  # really compressed, not stored
+    assert zstd_decompress(frame) == data
 
 
 def test_multi_frame_and_skippable() -> None:
     a, b = b"alpha" * 100, bytes(range(250))
-    joined = (
-        zstd_compress_stored(a)
-        + zstd_skippable_frame(b"metadata!", 3)
-        + zstd_compress_stored(b, single_segment=True)
-    )
+    joined = zstd_compress(a) + zstd_skippable_frame(b"metadata!", 3) + zstd_compress(b)
     assert zstd_decompress(joined) == a + b
-
-
-@needs_zstd
-def test_compressed_block_is_a_scope_error_not_a_wrong_answer() -> None:
-    """Compressible data makes the reference emit Compressed_Blocks; the
-    walker must refuse them with the documented scope error."""
-    p = subprocess.run(
-        [_ZSTD_BIN, "-c"], input=b"compress me " * 5000, capture_output=True
-    )
-    with pytest.raises(ZstdError, match="Compressed_Block"):
-        zstd_decompress(p.stdout)
+    assert zstd_decompress(zstd_skippable_frame(b"x", 15) + zstd_compress(a)) == a
 
 
 def test_error_paths() -> None:
-    with pytest.raises(ZstdError, match="short"):
-        zstd_decompress(b"\x28")
-    with pytest.raises(ZstdError, match="magic"):
-        zstd_decompress(b"\x00\x00\x00\x00" + b"\x00" * 8)
-    good = bytearray(zstd_compress_stored(b"payload" * 100))
-    bad = good[:]
-    bad[-1] ^= 0xFF  # corrupt the content checksum
-    with pytest.raises(ZstdError, match="checksum"):
+    good = zstd_compress(b"payload" * 100)
+    cases = {
+        b"": "empty",
+        b"\x28": "truncated",
+        b"\x00\x00\x00\x00" + b"\x00" * 8: "unknown frame descriptor",
+        good[:10]: "truncated",
+        good + b"trailing garbage": "unknown frame descriptor",
+        # reserved Frame_Header_Descriptor bit
+        good[:4] + bytes([good[4] | 0x08]) + good[5:]: "unsupported",
+    }
+    for blob, reason in cases.items():
+        with pytest.raises(ZstdError, match=f"(?i)^zstd: .*{reason}"):
+            zstd_decompress(blob)
+    with pytest.raises(ZstdError, match="^zstd: .*nibble"):
+        zstd_skippable_frame(b"", 16)
+
+
+@needs_zstd
+def test_corrupt_content_checksum_is_rejected() -> None:
+    bad = bytearray(_real_encode(b"payload" * 100, "--check"))
+    bad[-1] ^= 0xFF  # the frame's last 4 bytes are its content checksum
+    with pytest.raises(ZstdError, match="^zstd: .*checksum"):
         zstd_decompress(bytes(bad))
-    with pytest.raises(ZstdError, match="truncated"):
-        zstd_decompress(bytes(good[:10]))
-    # reserved descriptor bit
-    hdr = bytearray(zstd_compress_stored(b"x" * 300))
-    hdr[4] |= 0x08
-    with pytest.raises(ZstdError, match="reserved"):
-        zstd_decompress(bytes(hdr))
-    # frame content size vs decoded length
-    fcs_bad = bytearray(zstd_compress_stored(b"y" * 300))
-    fcs_bad[6] ^= 0x01  # 2-byte FCS field low byte
-    with pytest.raises(ZstdError, match="content size|checksum"):
-        zstd_decompress(bytes(fcs_bad))
 
 
 def test_long_rle_runs_split_at_block_maximum_size() -> None:
-    """Runs longer than 128 KB must be split into multiple RLE blocks
-    (RFC 8878 Block_Maximum_Size); a 3 MB run would previously overflow
-    the 21-bit Block_Size field entirely (r13 ADVICE item)."""
+    """Runs far longer than the 128 KB Block_Maximum_Size round-trip."""
     data = b"\xaa" * (3 * 1024 * 1024) + b"tail" + b"\x07" * 200_000
-    frame = zstd_compress_stored(data, checksum=True)
-    # walk the emitted blocks: every declared size must be <= 128 KB
-    pos = 4 + 1  # magic + FHD (no single-segment -> +1 window byte)
-    pos += 1  # window descriptor
-    fcs_flag = frame[4] >> 6
-    pos += {0: 0, 1: 2, 2: 4, 3: 8}[fcs_flag]
-    sizes = []
-    while True:
-        hdr = int.from_bytes(frame[pos : pos + 3], "little")
-        last, btype, size = hdr & 1, (hdr >> 1) & 3, hdr >> 3
-        sizes.append(size)
-        pos += 3 + (size if btype == 0 else 1)
-        if last:
-            break
-    assert max(sizes) <= 128 * 1024
-    assert sum(sizes) == len(data)
-    assert zstd_decompress(frame) == data
+    assert zstd_decompress(zstd_compress(data)) == data
 
 
 @needs_zstd
 def test_split_rle_frame_accepted_by_real_zstd() -> None:
     data = b"\x55" * (1024 * 1024) + b"x"
-    assert _real_decode(zstd_compress_stored(data, checksum=True)) == data
+    assert _real_decode(zstd_compress(data)) == data
+    assert zstd_decompress(_real_encode(data)) == data

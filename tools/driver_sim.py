@@ -5,7 +5,8 @@ Differences from tools/gate_sim.py (which uses the engine's own session and
 oracle helper): this script reproduces the driver's hostile conditions —
 
 * runs from a NEUTRAL cwd (chdir to /tmp) so cwd-relative imports can't
-  mask path bugs and Python-worker pickling by reference fails loudly,
+  mask path bugs and workers import the package only from the archive
+  the registry ships,
 * imports ``__spark_entry__`` the way the driver does,
 * builds a PLAIN SparkSession (local[8], UTC, UI off) — not
   flinkexp_spark.session.get_session — so engine-session-only configs
