@@ -5,6 +5,12 @@ columnar scans with Catalyst predicate pushdown and column pruning.  At
 100 TB scale the same code path works against a partitioned table root —
 ``spark.read.parquet`` prunes partitions from the directory layout and
 pushes filters into the parquet row-group stats.
+
+A table's schema is inferred once per file version: :func:`load` keys the
+inferred ``StructType`` by the table path, every file's size and mtime
+under it, and the one session conf that changes inference, then hands it
+to every later read.  Spark's parquet inference reads a footer through a
+Spark job, so after the first read of a file, ``load`` runs no Spark job.
 """
 
 from __future__ import annotations
@@ -36,6 +42,40 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# (table path, file versions, nanosAsLong) -> the schema Spark inferred.
+# Only the schema is remembered, never the DataFrame: every load must be a
+# fresh relation with fresh attribute ids, or two loads of one table in a
+# query become an ambiguous self-join.
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def _file_versions(path: str) -> tuple:
+    """``(path, size, mtime_ns)`` for every file at or under ``path``; empty
+    for a missing path, whose first read then raises Spark's own error."""
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = [os.path.join(d, f) for d, _, names in os.walk(path) for f in names]
+    out = []
+    for p in sorted(files):
+        st = os.stat(p)
+        out.append((p, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    path = os.path.abspath(path)
+    key = (
+        path,
+        _file_versions(path),
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return spark.read.schema(schema).parquet(path)
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown fixture table: {name}")
@@ -52,7 +92,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = _read(spark, table_path(sf_dir, name))
     for field in df.schema.fields:
         if field.name == "ts" and isinstance(field.dataType, T.LongType):
             # TIMESTAMP(NANOS) generation read as raw ns longs under
@@ -106,10 +146,10 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for ``spark.sql`` queries.
 
     Memoized per session: ~24 SQL-entry queries call this on every
-    invocation, and re-reading 10 parquet footers per query is pure
-    repeated I/O.  Re-registers whenever sf_dir differs from what this
-    session's views currently point at; stopped sessions fall out of the
-    weak dict on their own.
+    invocation, and rebuilding 10 relations and re-issuing 10 view
+    commands per query is pure repeated driver work.  Re-registers
+    whenever sf_dir differs from what this session's views currently
+    point at; stopped sessions fall out of the weak dict on their own.
     """
     if _VIEWS_CURRENT.get(spark) == sf_dir:
         return

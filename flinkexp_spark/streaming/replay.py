@@ -396,13 +396,14 @@ def replay_update_mode(
     n_files: int = 1,
     order_col: str | None = None,
 ) -> list:
-    """Replay in UPDATE output mode via foreachBatch (the memory sink doesn't
-    support update).  Returns the list of per-batch updated-row batches —
-    the reference's per-record emission stream at micro-batch granularity
-    (SURVEY §2.1 semantic note).  ``n_files`` > 1 splits the input by
-    ``order_col`` quantiles into one micro-batch per file (the same
-    incremental sequence as :func:`replay_foreach_batch`, which this
-    delegates to with a capturing writer)."""
+    """Replay in UPDATE output mode via foreachBatch, which keeps each
+    micro-batch's updated rows apart (a memory sink accepts update mode but
+    appends every batch into one table).  Returns the list of per-batch
+    updated-row batches — the reference's per-record emission stream at
+    micro-batch granularity (SURVEY §2.1 semantic note).  ``n_files`` > 1
+    splits the input by ``order_col`` quantiles into one micro-batch per
+    file (the same incremental sequence as :func:`replay_foreach_batch`,
+    which this delegates to with a capturing writer)."""
     batches: list = []
 
     def capture(df: DataFrame, epoch: int) -> None:

@@ -181,6 +181,10 @@ def main() -> int:
         "sf": 1.0,
         "head": head_sha(),
         "src_hash": source_tree_hash(),
+        # the host the sf1 run measured, as bench.py stamped it
+        "cpus": sf1.get("cpus"),
+        "host_mem_mb": sf1.get("host_mem_mb"),
+        "spark_version": sf1.get("spark_version"),
         "value": sf1["value"],
         "unit": "sec",
         "repeats": sf1["repeats"],
