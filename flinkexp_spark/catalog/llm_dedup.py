@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from flinkexp_spark import datasets
 from flinkexp_spark.functions import text as T
 from flinkexp_spark.registry import register
+from flinkexp_spark.session import memo
 
 NGRAM_DF_CAP = 100  # drop shingles appearing in more docs than this
 JACCARD_MIN = 0.5
@@ -83,22 +84,23 @@ _O_SCORED_BODY = f"""
 # 17-ints/doc MinHash signature table, and each uses it on 3+ plan branches.
 # Materialize it ONCE per (session, sf_dir) and reuse:
 #
-# * mode "checkpoint" (default): localCheckpoint + in-process cache — right
-#   at fixture scale, where the table fits an executor.
+# * mode "checkpoint" (default): localCheckpoint, memoized per SparkContext
+#   (session.memo) — right at fixture scale, where the table fits an
+#   executor.
 # * mode "bucketed" (SPARK_GRAFT_SIG_MATERIALIZE=bucketed): write-once
 #   bucketed parquet table (bucketBy doc_id) — the 100 TB shape: the
 #   signature side of every downstream doc_id equi-join reads pre-hashed
 #   buckets (no Exchange on that side, SelectedBucketsCount in the plan),
 #   and the table survives the session for reuse across jobs.
-_SIG_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def signature_table(spark: SparkSession, sf_dir: str, mode: str | None = None) -> DataFrame:
     mode = mode or os.environ.get("SPARK_GRAFT_SIG_MATERIALIZE", "checkpoint")
-    key = (spark.sparkContext.applicationId, sf_dir, mode)
-    cached = _SIG_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return memo(
+        spark, ("minhash_signatures", sf_dir, mode),
+        lambda: _materialize_signatures(spark, sf_dir, mode),
+    )
+
+
+def _materialize_signatures(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
     sig = T.minhash_signatures(datasets.load(spark, sf_dir, "documents"))
     if mode == "bucketed":
         name = f"minhash_sig_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
@@ -122,11 +124,8 @@ def signature_table(spark: SparkSession, sf_dir: str, mode: str | None = None) -
             .format("parquet")
             .saveAsTable(name)
         )
-        sig = spark.table(name)
-    else:
-        sig = sig.localCheckpoint()
-    _SIG_CACHE[key] = sig
-    return sig
+        return spark.table(name)
+    return sig.localCheckpoint()
 
 
 @register(

@@ -16,6 +16,7 @@ from flinkexp_spark import datasets
 from flinkexp_spark.functions import text as T
 from flinkexp_spark.functions import vectors as V
 from flinkexp_spark.registry import register
+from flinkexp_spark.session import memo
 
 N_QUERIES = 20  # vec_id < 20 are the probe set
 TOP_K = 10
@@ -431,9 +432,6 @@ def _ivf_assign_top1_df(emb: DataFrame, cent: DataFrame) -> DataFrame:
     return src.mapInPandas(assign, out_schema)
 
 
-_CENT_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
 def _scaled_k_sql(src: str = "embeddings") -> str:
     """SQL mirror of ``scaled_ivf_k(COUNT(*))`` for K-dynamic oracles.
 
@@ -511,10 +509,7 @@ def _ivf_assign_scaled_df(emb: DataFrame, cent: DataFrame, k: int) -> DataFrame:
 
 
 def _ivf_centroids_df(
-    spark: SparkSession,
-    emb: DataFrame,
-    cache_key: str | None = None,
-    k: int | None = None,
+    spark: SparkSession, emb: DataFrame, key: str, k: int = IVF_K
 ) -> DataFrame:
     """K seed centroids refined by IVF_ITERS Lloyd rounds (fixed-point means).
 
@@ -523,57 +518,87 @@ def _ivf_centroids_df(
     round then starts from a literal centroid table instead of replaying the
     previous round's whole plan, keeping per-round cost one corpus pass.
 
-    ``cache_key`` (the sf_dir) memoizes the refined table per session —
-    sim_search_ivf and dedup_semantic share one quantizer, exactly like the
-    shared MinHash signature table (llm_dedup.signature_table).
-    ``k=None`` keeps the fixed IVF_K quantizer; callers that must stay
-    linear under corpus growth pass :func:`scaled_ivf_k` of their count.
+    ``key`` names the corpus (the sf_dir, or an audit's sample key): the
+    refined table is memoized per (key, k) per SparkContext, so
+    sim_search_ivf, the graph build and dedup_semantic share one quantizer
+    at fixture scale, like the shared MinHash signature table
+    (llm_dedup.signature_table).  Callers that must stay linear under
+    corpus growth pass :func:`scaled_ivf_k` of their count as ``k``.
     """
-    app_id = spark.sparkContext.applicationId
-    # Evict entries from previous (stopped) applications: at most one app
-    # is live per process, and a dead app's entries would pin its session's
-    # plan graphs forever in a long-lived driver.
-    for stale in [k_ for k_ in _CENT_CACHE if k_[0] != app_id]:
-        del _CENT_CACHE[stale]
-    if k is None:
-        k = IVF_K
-    key = (app_id, cache_key or "", k)
-    if cache_key is not None and key in _CENT_CACHE:
-        return _CENT_CACHE[key]
-    cent = emb.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").cast("array<double>").alias("centv"),
-    )
-    for _ in range(IVF_ITERS):
-        members = _ivf_assign_top1_df(emb, cent).select(
-            "cent_id", "embedding"
+
+    def train() -> DataFrame:
+        cent = emb.filter(F.col("vec_id") < k).select(
+            F.col("vec_id").alias("cent_id"),
+            F.col("embedding").cast("array<double>").alias("centv"),
         )
-        comp = members.select(
-            "cent_id", F.posexplode("embedding").alias("pos", "x")
-        ).select(
-            "cent_id",
-            "pos",
-            F.floor(F.col("x").cast("double") * IVF_FP).cast("long").alias("fp"),
-        )
-        mean_fp = comp.groupBy("cent_id", "pos").agg(
-            F.floor(F.sum("fp") / F.count("*")).cast("long").alias("mfp")
-        )
-        cent_rows = (
-            mean_fp.groupBy("cent_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mfp"))),
-                    lambda s: s["mfp"] / F.lit(float(IVF_FP)),
-                ).alias("centv")
+        for _ in range(IVF_ITERS):
+            members = _ivf_assign_top1_df(emb, cent).select(
+                "cent_id", "embedding"
             )
-            .collect()
+            cent = _lloyd_means(
+                spark, members, ["cent_id"], "embedding", "centv", IVF_FP
+            )
+        return cent
+
+    return memo(spark, ("ivf_centroids", key, k), train)
+
+
+def _lloyd_means(
+    spark: SparkSession,
+    members: DataFrame,
+    keys: list[str],
+    vec: str,
+    out: str,
+    fp: int,
+) -> DataFrame:
+    """One fixed-point Lloyd mean step, collected to a driver-local table.
+
+    ``members`` holds one row per (cell ``keys``, member vector ``vec``);
+    each component becomes floor(x * fp) as BIGINT, the per-(cell, pos)
+    mean is the floored integer mean, and the new centroid ``out`` is the
+    pos-sorted list of means / fp.  :func:`_lloyd_mean_ctes` is the SQL
+    mirror; both engines build bit-identical centroids."""
+    comp = members.select(*keys, F.posexplode(vec).alias("pos", "x")).select(
+        *keys,
+        "pos",
+        F.floor(F.col("x").cast("double") * fp).cast("long").alias("fp"),
+    )
+    mean_fp = comp.groupBy(*keys, "pos").agg(
+        F.floor(F.sum("fp") / F.count("*")).cast("long").alias("mfp")
+    )
+    rows = (
+        mean_fp.groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "mfp"))),
+                lambda t: t["mfp"] / F.lit(float(fp)),
+            ).alias(out)
         )
-        cent = datasets.local_df(
-            spark, cent_rows, "cent_id long, centv array<double>"
-        )
-    if cache_key is not None:
-        _CENT_CACHE[key] = cent
-    return cent
+        .collect()
+    )
+    schema = "".join(f"{c} long, " for c in keys) + f"{out} array<double>"
+    return datasets.local_df(spark, rows, schema)
+
+
+def _lloyd_mean_ctes(
+    members: str, mean: str, cent: str, key: str, vec: str, out: str,
+    dim: int, fp: int,
+) -> list[str]:
+    """SQL mirror of :func:`_lloyd_means`: ``mean`` holds the per-(key,
+    pos) fixed-point means of ``members``' ``vec`` components, ``cent``
+    the refined (key, ``out``) centroids."""
+    return [
+        f"""{mean} AS (
+            SELECT {key}, i.pos,
+                   CAST(floor(SUM(CAST(floor(CAST({vec}[i.pos + 1] AS DOUBLE)
+                                              * {fp}) AS BIGINT))
+                              / COUNT(*)) AS BIGINT) AS mfp
+            FROM {members}, (SELECT unnest(range({dim})) AS pos) i
+            GROUP BY {key}, i.pos)""",
+        f"""{cent} AS (
+            SELECT {key}, array_agg(mfp / {float(fp)} ORDER BY pos) AS {out}
+            FROM {mean} GROUP BY {key})""",
+    ]
 
 
 def _lloyd_ctes(
@@ -600,28 +625,19 @@ def _lloyd_ctes(
         cos = V.cosine_sql("e.embedding", "c.centv")
         ctes.append(
             f"""assign{t} AS (
-            SELECT e.vec_id, e.embedding, c.cent_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY round({cos}, {V.COS_DECIMALS}) DESC, c.cent_id
-                   ) AS crnk
-            FROM {src} e CROSS JOIN cent{t} c)"""
+            SELECT embedding, cent_id FROM (
+                SELECT e.embedding, c.cent_id,
+                       row_number() OVER (
+                           PARTITION BY e.vec_id
+                           ORDER BY round({cos}, {V.COS_DECIMALS}) DESC,
+                                    c.cent_id
+                       ) AS crnk
+                FROM {src} e CROSS JOIN cent{t} c)
+            WHERE crnk = 1)"""
         )
-        ctes.append(
-            f"""comp{t} AS (
-            SELECT cent_id, i.pos,
-                   CAST(floor(SUM(CAST(floor(CAST(embedding[i.pos + 1] AS DOUBLE)
-                                              * {IVF_FP}) AS BIGINT))
-                              / COUNT(*)) AS BIGINT) AS mfp
-            FROM assign{t}, (SELECT unnest(range({V.DIM})) AS pos) i
-            WHERE crnk = 1
-            GROUP BY cent_id, i.pos)"""
-        )
-        ctes.append(
-            f"""cent{t + 1} AS (
-            SELECT cent_id,
-                   array_agg(mfp / {float(IVF_FP)} ORDER BY pos) AS centv
-            FROM comp{t} GROUP BY cent_id)"""
+        ctes += _lloyd_mean_ctes(
+            f"assign{t}", f"comp{t}", f"cent{t + 1}", "cent_id",
+            "embedding", "centv", V.DIM, IVF_FP,
         )
     return ctes, f"cent{IVF_ITERS}"
 
@@ -733,7 +749,7 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     force — see the knob comment above for measured recall.
     """
     emb = datasets.load(spark, sf_dir, "embeddings")
-    cent = _ivf_centroids_df(spark, emb, cache_key=sf_dir)
+    cent = _ivf_centroids_df(spark, emb, sf_dir)
     ranked = _ivf_assign_df(emb, cent)
     cells = ranked.filter(F.col("crnk") <= IVF_REPL).select(
         F.col("vec_id").alias("match_id"),
@@ -751,7 +767,16 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             V.norm(F.col("embedding")).alias("nq"),
         )
     )
-    scored = (
+    return _topk(_cell_pairs(probes, cells))
+
+
+def _cell_pairs(probes: DataFrame, cells: DataFrame) -> DataFrame:
+    """(query_id, match_id, score) for every probe x indexed vector that
+    share a cell, scored by rounded cosine from precomputed norms.  With
+    replication a pair can meet in several shared cells; the score is
+    pair-deterministic, so pair-dedup is exact (oracles mirror it with
+    SELECT DISTINCT)."""
+    return (
         probes.join(cells, "cell")
         .filter(F.col("query_id") != F.col("match_id"))
         .select(
@@ -762,12 +787,8 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 V.COS_DECIMALS,
             ).alias("score"),
         )
-        # with replication a pair can meet in several shared cells; the
-        # score is pair-deterministic, so pair-dedup is exact (oracle
-        # mirrors with SELECT DISTINCT)
         .dropDuplicates(["query_id", "match_id"])
     )
-    return _topk(scored)
 
 
 # --- int8 scalar quantization ------------------------------------------------
@@ -903,7 +924,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # precondition stays trip-wired by tests/test_llm_ops.py::
     # test_scaled_ivf_k_agrees_with_unrolled_oracles_at_fixture_scale.
     k = scaled_ivf_k(emb.count())
-    cent = _ivf_centroids_df(spark, emb, cache_key=sf_dir, k=k)
+    cent = _ivf_centroids_df(spark, emb, sf_dir, k)
     # Assignment branches on K (r10 verdict #6): flat N*K below
     # IVF2_SWITCH_K, two-level sqrt-K descent above — the oracle's
     # _aff_scaled_ctes mirrors the same branch, so the sf1 sweep
@@ -1184,20 +1205,18 @@ def q_embed_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # not a silent quality drift.
 
 
-def _recall_oracle_sql() -> str:
-    """Nest the EXACT constituent oracles (brute = ground truth, IVF =
-    candidate) as CTEs — the recall contract derives from the same SQL
-    the driver already hash-checks, so the three queries can never drift
-    apart."""
-    from flinkexp_spark.registry import REGISTRY
-
-    brute = REGISTRY["sim_search_topk"].oracle
-    ivf = REGISTRY["sim_search_ivf"].oracle
+def _recall_oracle_sql(brute_sql: str, cand_sql: str) -> str:
+    """Recall@k of the candidate top-k oracle ``cand_sql`` against the
+    brute-force ground truth ``brute_sql`` — the SQL mirror of
+    :func:`_recall_frame`.  Both constituent oracles nest verbatim as CTEs,
+    so a recall contract derives from the same SQL the driver already
+    hash-checks and can never drift from it.  ``ann`` is a CTE name no
+    constituent defines."""
     return f"""
-        WITH brute AS ({brute}),
-        ivf AS ({ivf}),
+        WITH brute AS ({brute_sql}),
+        ann AS ({cand_sql}),
         h AS (SELECT CAST(COUNT(*) AS BIGINT) AS hits
-              FROM brute b JOIN ivf i
+              FROM brute b JOIN ann i
                 ON b.query_id = i.query_id AND b.match_id = i.match_id),
         t AS (SELECT CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
                      CAST(COUNT(*) AS BIGINT) AS truth_pairs
@@ -1209,24 +1228,19 @@ def _recall_oracle_sql() -> str:
     """
 
 
-@register(
-    "sim_search_recall_ivf",
-    oracle=_recall_oracle_sql(),
-    tags=("X3", "A2"),
-)
-def q_sim_search_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@k of the IVF index against the brute-force ground truth,
-    as ONE plan: both searches run their normal paths (sharing the
-    centroid cache and the embeddings scan), the hit count is the inner
-    join of the two (query, match) top-k sets, and recall lands as an
-    exact integer permille (floor(hits*1000 / (n_queries*k))) so the
-    DuckDB mirror hashes identically.  The denominator is the brute-force
-    result size — per-query top-k is exactly TOP_K rows whenever the
-    corpus has > TOP_K vectors, and counting it (rather than assuming it)
-    keeps the contract honest on tiny fixtures."""
-    brute = q_sim_search_topk(spark, sf_dir).select("query_id", "match_id")
-    ivf = q_sim_search_ivf(spark, sf_dir).select("query_id", "match_id")
-    hits = brute.join(ivf, ["query_id", "match_id"], "left_semi")
+def _recall_frame(brute: DataFrame, cand: DataFrame) -> DataFrame:
+    """The one Spark recall@k summary row: hits/truth over the
+    (query_id, match_id) pairs of a brute-force and a candidate top-k
+    frame, as an exact integer permille (floor(hits*1000 / truth_pairs))
+    so the DuckDB mirror (:func:`_recall_oracle_sql`) hashes identically.
+    The denominator is the brute-force result size — per-query top-k is
+    exactly TOP_K rows whenever the corpus has > TOP_K vectors, and
+    counting it (rather than assuming it) keeps the contract honest on
+    tiny fixtures."""
+    brute = brute.select("query_id", "match_id")
+    hits = brute.join(
+        cand.select("query_id", "match_id"), ["query_id", "match_id"], "left_semi"
+    )
     return (
         brute.agg(
             F.countDistinct("query_id").alias("n_queries"),
@@ -1242,6 +1256,21 @@ def q_sim_search_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("recall_x1000"),
         )
+    )
+
+
+@register(
+    "sim_search_recall_ivf",
+    oracle=_recall_oracle_sql(_brute_oracle_sql(), _ivf_oracle_sql()),
+    tags=("X3", "A2"),
+)
+def q_sim_search_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@k of the IVF index against the brute-force ground truth,
+    as ONE plan: both searches run their normal paths (sharing the
+    memoized centroids and the embeddings scan) and :func:`_recall_frame`
+    counts the hits."""
+    return _recall_frame(
+        q_sim_search_topk(spark, sf_dir), q_sim_search_ivf(spark, sf_dir)
     )
 
 
@@ -1373,43 +1402,35 @@ def q_sim_search_graph_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     query and a narrow beam evicts them before they are expanded.
     """
     emb = datasets.load(spark, sf_dir, "embeddings")
-    return _graph_beam_df(spark, emb, cache_key=sf_dir)
+    return _graph_beam_df(spark, emb, sf_dir)
 
 
-# Built (cells, adjacency) memoized per (application, corpus key) — the
-# kNN-graph build is deterministic and by far the pipeline's dominant
-# cost, and at 100 TB the adjacency IS a persisted table a real pipeline
-# keeps (the same rationale as the disk-resident bucketed IVF index and
-# _CENT_CACHE): repeated searches in one session must pay beam cost, not
-# rebuild cost.  Same eviction discipline as _CENT_CACHE.
-_GRAPH_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
-def _graph_beam_df(spark: SparkSession, emb: DataFrame, cache_key: str) -> DataFrame:
+def _graph_beam_df(spark: SparkSession, emb: DataFrame, key: str) -> DataFrame:
     """Graph-ANN build + beam search over ``emb`` — the whole
     q_sim_search_graph_beam pipeline, parametrized by the corpus DF so the
     sampled-subcorpus sf1 audit (q_sim_search_graph_beam_sf_audit) can run
-    the identical code path.  The build half memoizes per (application,
-    corpus key); the search half always runs."""
-    app_id = spark.sparkContext.applicationId
-    for stale in [k_ for k_ in _GRAPH_CACHE if k_[0] != app_id]:
-        del _GRAPH_CACHE[stale]
-    gkey = (app_id, cache_key)
-    if gkey not in _GRAPH_CACHE:
-        _GRAPH_CACHE[gkey] = _graph_build(spark, emb, cache_key)
-    cells, graph = _GRAPH_CACHE[gkey]
+    the identical code path.
+
+    The build half is memoized per corpus ``key`` per SparkContext: it is
+    deterministic and by far the pipeline's dominant cost, and at 100 TB
+    the adjacency IS a persisted table a real pipeline keeps (like the
+    disk-resident bucketed IVF index), so repeated searches in one session
+    pay beam cost, not rebuild cost.  The search half always runs."""
+    cells, graph = memo(
+        spark, ("ivf_graph", key), lambda: _graph_build(spark, emb, key)
+    )
     return _graph_search(cells, graph)
 
 
 def _graph_build(
-    spark: SparkSession, emb: DataFrame, cache_key: str
+    spark: SparkSession, emb: DataFrame, key: str
 ) -> tuple[DataFrame, DataFrame]:
     """One-time (per corpus) half: scaled-K quantize, cell-blocked kNN
     scoring, top-GRAPH_DEG symmetrized adjacency.  Both returned frames
     are localCheckpoint'd loop invariants — at scale, the persisted
     index tables."""
     k = scaled_ivf_k(emb.count())
-    cent = _ivf_centroids_df(spark, emb, cache_key=cache_key, k=k)
+    cent = _ivf_centroids_df(spark, emb, key, k)
     # Assignment branches on K like dedup_semantic's (r10 verdict #6):
     # flat below IVF2_SWITCH_K, sqrt-K two-level descent above, mirrored
     # branch-for-branch by _aff_scaled_ctes in the oracle.
@@ -1504,20 +1525,7 @@ def _graph_search(cells: DataFrame, graph: DataFrame) -> DataFrame:
             F.col("nc").alias("nq"),
         )
     )
-    visited = (
-        probes.join(cells, "cell")
-        .filter(F.col("query_id") != F.col("match_id"))
-        .select(
-            "query_id",
-            "match_id",
-            F.round(
-                V.dot(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("nc")),
-                V.COS_DECIMALS,
-            ).alias("score"),
-        )
-        .dropDuplicates(["query_id", "match_id"])
-        .localCheckpoint()
-    )
+    visited = _cell_pairs(probes, cells).localCheckpoint()
     w_q = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("match_id")
     )
@@ -1554,62 +1562,17 @@ def _graph_search(cells: DataFrame, graph: DataFrame) -> DataFrame:
     return _topk(visited)
 
 
-def _recall_graph_oracle_sql() -> str:
-    """Same never-drift construction as _recall_oracle_sql: nest the two
-    hash-checked constituent oracles verbatim."""
-    from flinkexp_spark.registry import REGISTRY
-
-    brute = REGISTRY["sim_search_topk"].oracle
-    g = REGISTRY["sim_search_graph_beam"].oracle
-    return f"""
-        WITH brute AS ({brute}),
-        g AS ({g}),
-        h AS (SELECT CAST(COUNT(*) AS BIGINT) AS hits
-              FROM brute b JOIN g i
-                ON b.query_id = i.query_id AND b.match_id = i.match_id),
-        t AS (SELECT CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-                     CAST(COUNT(*) AS BIGINT) AS truth_pairs
-              FROM brute)
-        SELECT n_queries, CAST({TOP_K} AS BIGINT) AS k, truth_pairs, hits,
-               CAST(FLOOR(hits * 1000.0 / truth_pairs) AS BIGINT)
-                 AS recall_x1000
-        FROM t CROSS JOIN h
-    """
-
-
 @register(
     "sim_search_recall_graph",
-    oracle=_recall_graph_oracle_sql(),
+    oracle=_recall_oracle_sql(_brute_oracle_sql(), _graph_oracle_sql()),
     tags=("X3", "A2"),
 )
 def q_sim_search_recall_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the graph beam search against brute-force ground truth —
     same one-plan permille contract as sim_search_recall_ivf; the floor is
     pinned by tests/test_llm_ops.py (outputs, not prose)."""
-    brute = q_sim_search_topk(spark, sf_dir).select("query_id", "match_id")
-    g = q_sim_search_graph_beam(spark, sf_dir).select("query_id", "match_id")
-    return _recall_frame(brute, g)
-
-
-def _recall_frame(brute: DataFrame, g: DataFrame) -> DataFrame:
-    """The shared recall@k summary row: hits/truth over (query_id, match_id)
-    frames — used by the recall contracts and their sf1 audits."""
-    hits = brute.join(g, ["query_id", "match_id"], "left_semi")
-    return (
-        brute.agg(
-            F.countDistinct("query_id").alias("n_queries"),
-            F.count("*").alias("truth_pairs"),
-        )
-        .crossJoin(hits.agg(F.count("*").alias("hits")))
-        .select(
-            "n_queries",
-            F.lit(TOP_K).cast("long").alias("k"),
-            "truth_pairs",
-            "hits",
-            F.floor(F.col("hits") * 1000 / F.col("truth_pairs"))
-            .cast("long")
-            .alias("recall_x1000"),
-        )
+    return _recall_frame(
+        q_sim_search_topk(spark, sf_dir), q_sim_search_graph_beam(spark, sf_dir)
     )
 
 
@@ -1675,32 +1638,16 @@ def q_sim_search_graph_beam_sf_audit(
     sf1 sweep records where the full-corpus oracle is excluded as a
     deliberate quadratic proof (tools/make_sf1_artifact.py)."""
     return _graph_beam_df(
-        spark, _audit_emb_df(spark, sf_dir), cache_key=f"{sf_dir}#graph_audit"
+        spark, _audit_emb_df(spark, sf_dir), f"{sf_dir}#graph_audit"
     )
-
-
-def _recall_graph_audit_oracle_sql() -> str:
-    brute = _brute_oracle_sql("emb_audit", (_audit_emb_cte(),))
-    g = _graph_oracle_sql(src="emb_audit", prefix_ctes=(_audit_emb_cte(),))
-    return f"""
-        WITH brute AS ({brute}),
-        g AS ({g}),
-        h AS (SELECT CAST(COUNT(*) AS BIGINT) AS hits
-              FROM brute b JOIN g i
-                ON b.query_id = i.query_id AND b.match_id = i.match_id),
-        t AS (SELECT CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-                     CAST(COUNT(*) AS BIGINT) AS truth_pairs
-              FROM brute)
-        SELECT n_queries, CAST({TOP_K} AS BIGINT) AS k, truth_pairs, hits,
-               CAST(FLOOR(hits * 1000.0 / truth_pairs) AS BIGINT)
-                 AS recall_x1000
-        FROM t CROSS JOIN h
-    """
 
 
 @register(
     "sim_search_recall_graph_sf_audit",
-    oracle=_recall_graph_audit_oracle_sql(),
+    oracle=_recall_oracle_sql(
+        _brute_oracle_sql("emb_audit", (_audit_emb_cte(),)),
+        _graph_oracle_sql(src="emb_audit", prefix_ctes=(_audit_emb_cte(),)),
+    ),
     tags=("X3", "A2"),
 )
 def q_sim_search_recall_graph_sf_audit(
@@ -1713,11 +1660,9 @@ def q_sim_search_recall_graph_sf_audit(
     pytest floor applies to the shipped fixtures where the sample is the
     whole corpus; at sf1 the contract is the cross-engine hash."""
     emb = _audit_emb_df(spark, sf_dir)
-    brute = _brute_topk_df(emb).select("query_id", "match_id")
-    g = _graph_beam_df(spark, emb, cache_key=f"{sf_dir}#graph_audit").select(
-        "query_id", "match_id"
+    return _recall_frame(
+        _brute_topk_df(emb), _graph_beam_df(spark, emb, f"{sf_dir}#graph_audit")
     )
-    return _recall_frame(brute, g)
 
 
 # --- two-level IVF: hierarchical coarse assignment ---------------------------
@@ -1880,7 +1825,7 @@ def q_sim_search_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the one-level index's.
     """
     emb = datasets.load(spark, sf_dir, "embeddings")
-    cent = _ivf_centroids_df(spark, emb, cache_key=sf_dir)
+    cent = _ivf_centroids_df(spark, emb, sf_dir)
     cells = (
         _ivf2_assign_df(emb, cent, sprobe=IVF2_IREPL)
         .filter(F.col("crnk") <= IVF_REPL)
@@ -1903,46 +1848,12 @@ def q_sim_search_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
             V.norm(F.col("embedding")).alias("nq"),
         )
     )
-    scored = (
-        probes.join(cells, "cell")
-        .filter(F.col("query_id") != F.col("match_id"))
-        .select(
-            "query_id",
-            "match_id",
-            F.round(
-                V.dot(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("nc")),
-                V.COS_DECIMALS,
-            ).alias("score"),
-        )
-        .dropDuplicates(["query_id", "match_id"])
-    )
-    return _topk(scored)
-
-
-def _recall_ivf2_oracle_sql() -> str:
-    from flinkexp_spark.registry import REGISTRY
-
-    brute = REGISTRY["sim_search_topk"].oracle
-    ivf2 = REGISTRY["sim_search_ivf2"].oracle
-    return f"""
-        WITH brute AS ({brute}),
-        ivf2 AS ({ivf2}),
-        h AS (SELECT CAST(COUNT(*) AS BIGINT) AS hits
-              FROM brute b JOIN ivf2 i
-                ON b.query_id = i.query_id AND b.match_id = i.match_id),
-        t AS (SELECT CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-                     CAST(COUNT(*) AS BIGINT) AS truth_pairs
-              FROM brute)
-        SELECT n_queries, CAST({TOP_K} AS BIGINT) AS k, truth_pairs, hits,
-               CAST(FLOOR(hits * 1000.0 / truth_pairs) AS BIGINT)
-                 AS recall_x1000
-        FROM t CROSS JOIN h
-    """
+    return _topk(_cell_pairs(probes, cells))
 
 
 @register(
     "sim_search_recall_ivf2",
-    oracle=_recall_ivf2_oracle_sql(),
+    oracle=_recall_oracle_sql(_brute_oracle_sql(), _ivf2_oracle_sql()),
     tags=("X3", "A2"),
 )
 def q_sim_search_recall_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1950,24 +1861,8 @@ def q_sim_search_recall_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality price of the sqrt-K assignment, measured and hash-pinned the
     same way as `sim_search_recall_ivf` (tests pin the floor; the oracle
     derives from the same nested SQL so the contract cannot drift)."""
-    brute = q_sim_search_topk(spark, sf_dir).select("query_id", "match_id")
-    ivf2 = q_sim_search_ivf2(spark, sf_dir).select("query_id", "match_id")
-    hits = brute.join(ivf2, ["query_id", "match_id"], "left_semi")
-    return (
-        brute.agg(
-            F.countDistinct("query_id").alias("n_queries"),
-            F.count("*").alias("truth_pairs"),
-        )
-        .crossJoin(hits.agg(F.count("*").alias("hits")))
-        .select(
-            "n_queries",
-            F.lit(TOP_K).cast("long").alias("k"),
-            "truth_pairs",
-            "hits",
-            F.floor(F.col("hits") * 1000 / F.col("truth_pairs"))
-            .cast("long")
-            .alias("recall_x1000"),
-        )
+    return _recall_frame(
+        q_sim_search_topk(spark, sf_dir), q_sim_search_ivf2(spark, sf_dir)
     )
 
 
@@ -2005,9 +1900,6 @@ PQ_COARSE_C = 120         # candidates surviving the ADC stage (measured
 IVFPQ_NPROBE = 3
 IVFPQ_COARSE_C = 200
 
-_PQ_CB_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _pq_l2_rank(sv_col: str, cv_col: str):
     """Argmin-by-L2 ranking expression: |x-c|^2 = x·x + c·c - 2 x·c, and
     x·x is candidate-independent, so rank by round(c·c - 2 x·c, 6) with
@@ -2017,19 +1909,16 @@ def _pq_l2_rank(sv_col: str, cv_col: str):
     return F.round(cc - 2.0 * xc, 6)
 
 
-def _pq_codebooks_df(
-    spark: SparkSession, emb: DataFrame, cache_key: str | None = None
-) -> DataFrame:
+def _pq_codebooks_df(spark: SparkSession, emb: DataFrame, key: str) -> DataFrame:
     """(sub, code, cv) codebook table: per subspace, PQ_K seed codewords
     (the first PQ_K vectors' subvectors) refined by PQ_ITERS Lloyd rounds
     with the same fixed-point means as the IVF quantizer — bit-identical
-    codebooks on both engines, broadcast-sized (PQ_M x PQ_K rows)."""
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _PQ_CB_CACHE if k[0] != app_id]:
-        del _PQ_CB_CACHE[stale]
-    key = (app_id, cache_key or "")
-    if cache_key is not None and key in _PQ_CB_CACHE:
-        return _PQ_CB_CACHE[key]
+    codebooks on both engines, broadcast-sized (PQ_M x PQ_K rows).
+    Memoized per corpus ``key`` (the sf_dir) per SparkContext."""
+    return memo(spark, ("pq_codebooks", key), lambda: _pq_train(spark, emb))
+
+
+def _pq_train(spark: SparkSession, emb: DataFrame) -> DataFrame:
     # r14 (guide §2.2/§2.3): all PQ_M subspace codebooks train TOGETHER —
     # one corpus pass per Lloyd round instead of PQ_M sequential
     # driver-looped jobs, and the rank-1 window became a map-side-combined
@@ -2055,36 +1944,8 @@ def _pq_codebooks_df(
             )
             .select("sub", F.col("m.code").alias("code"), F.col("m.sv").alias("sv"))
         )
-        comp = members.select(
-            "sub", "code", F.posexplode("sv").alias("pos", "x")
-        ).select(
-            "sub",
-            "code",
-            "pos",
-            F.floor(F.col("x") * PQ_FP).cast("long").alias("fp"),
-        )
-        mean_fp = comp.groupBy("sub", "code", "pos").agg(
-            F.floor(F.sum("fp") / F.count("*")).cast("long").alias("mfp")
-        )
-        rows = (
-            mean_fp.groupBy("sub", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mfp"))),
-                    lambda t: t["mfp"] / F.lit(float(PQ_FP)),
-                ).alias("cv")
-            )
-            .collect()
-        )
-        cent = datasets.local_df(
-            spark,
-            [(r["sub"], r["code"], r["cv"]) for r in rows],
-            "sub long, code long, cv array<double>",
-        )
-    cb = cent
-    if cache_key is not None:
-        _PQ_CB_CACHE[key] = cb
-    return cb
+        cent = _lloyd_means(spark, members, ["sub", "code"], "sv", "cv", PQ_FP)
+    return cent
 
 
 def _pq_subvectors(emb: DataFrame) -> DataFrame:
@@ -2127,6 +1988,60 @@ def _pq_codes_long(emb: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
 
+def _pq_adc_table(emb: DataFrame, cb: DataFrame) -> DataFrame:
+    """(query_id, sub, code, dot_fp): each probe's ADC lookup table — the
+    PQ_M x PQ_K subvector dots in fixed point, so estimated inner products
+    are order-independent integer sums."""
+    qsub = None
+    for s in range(PQ_M):
+        lo = s * PQ_SUBDIM + 1
+        part = emb.filter(F.col("vec_id") < N_QUERIES).select(
+            F.col("vec_id").alias("query_id"),
+            F.lit(s).cast("long").alias("sub"),
+            F.slice("embedding", lo, PQ_SUBDIM)
+            .cast("array<double>")
+            .alias("qv"),
+        )
+        qsub = part if qsub is None else qsub.unionByName(part)
+    return qsub.join(cb, "sub").select(
+        "query_id",
+        "sub",
+        "code",
+        F.floor(V.dot(F.col("qv"), F.col("cv")) * PQ_FP)
+        .cast("long")
+        .alias("dot_fp"),
+    )
+
+
+def _exact_rerank(emb: DataFrame, coarse: DataFrame) -> DataFrame:
+    """Top-k of the (query_id, match_id) survivors of a coarse code-only
+    stage, by exact cosine over the full float vectors."""
+    qv = emb.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qfull"),
+        V.norm(F.col("embedding")).alias("nq"),
+    )
+    mv = emb.select(
+        F.col("vec_id").alias("match_id"),
+        F.col("embedding").alias("mfull"),
+        V.norm(F.col("embedding")).alias("nm"),
+    )
+    rer = (
+        coarse.join(F.broadcast(qv), "query_id")
+        .join(mv, "match_id")
+        .select(
+            "query_id",
+            "match_id",
+            F.round(
+                V.dot(F.col("qfull"), F.col("mfull"))
+                / (F.col("nq") * F.col("nm")),
+                V.COS_DECIMALS,
+            ).alias("score"),
+        )
+    )
+    return _topk(rer)
+
+
 def _pq_cb_ctes() -> str:
     """Unrolled per-subspace codebook CTEs (pqc{s}: code, cv) mirroring
     :func:`_pq_codebooks_df` — seed, L2 argmin assign, fixed-point means."""
@@ -2155,20 +2070,10 @@ def _pq_cb_ctes() -> str:
                     CROSS JOIN {prev} c)
                 WHERE crnk = 1)"""
             )
-            parts.append(
-                f"""pq{s}m{t} AS (
-                SELECT code, i.pos,
-                       CAST(floor(SUM(CAST(floor(CAST(sv[i.pos + 1] AS DOUBLE)
-                                                  * {PQ_FP}) AS BIGINT))
-                                  / COUNT(*)) AS BIGINT) AS mfp
-                FROM pq{s}a{t}, (SELECT unnest(range({PQ_SUBDIM})) AS pos) i
-                GROUP BY code, i.pos)"""
-            )
             prev = f"pq{s}c{t + 1}"
-            parts.append(
-                f"""{prev} AS (
-                SELECT code, array_agg(mfp / {float(PQ_FP)} ORDER BY pos) AS cv
-                FROM pq{s}m{t} GROUP BY code)"""
+            parts += _lloyd_mean_ctes(
+                f"pq{s}a{t}", f"pq{s}m{t}", prev, "code", "sv", "cv",
+                PQ_SUBDIM, PQ_FP,
             )
         parts.append(
             f"pqc{s} AS (SELECT {s} AS sub, code, cv FROM {prev})"
@@ -2234,7 +2139,7 @@ def q_embed_quantize_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered folds, so codes hash identically on both engines.
     """
     emb = datasets.load(spark, sf_dir, "embeddings")
-    cb = _pq_codebooks_df(spark, emb, cache_key=sf_dir)
+    cb = _pq_codebooks_df(spark, emb, sf_dir)
     codes = _pq_codes_long(emb, cb)
     aggs = [
         F.max(F.when(F.col("sub") == s, F.col("code")))
@@ -2245,7 +2150,8 @@ def q_embed_quantize_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return codes.groupBy("vec_id").agg(*aggs).orderBy("vec_id")
 
 
-def _pq_adc_oracle() -> str:
+def _pq_adc_sql() -> str:
+    """``qsub`` + ``adc`` CTEs: the SQL mirror of :func:`_pq_adc_table`."""
     qsub = " UNION ALL ".join(
         f"""SELECT vec_id AS query_id, {s} AS sub,
                    embedding[{s * PQ_SUBDIM + 1}:{(s + 1) * PQ_SUBDIM}] AS qv
@@ -2253,14 +2159,18 @@ def _pq_adc_oracle() -> str:
         for s in range(PQ_M)
     )
     qdot = V.dot_sql_n("q.qv", "c.cv", PQ_SUBDIM)
-    return f"""
-        WITH {_pq_cb_ctes()},
-        {_pq_codes_sql()},
-        qsub AS ({qsub}),
+    return f"""qsub AS ({qsub}),
         adc AS (
             SELECT q.query_id, c.sub, c.code,
                    CAST(floor({qdot} * {PQ_FP}) AS BIGINT) AS dot_fp
-            FROM qsub q JOIN pqcb c ON q.sub = c.sub),
+            FROM qsub q JOIN pqcb c ON q.sub = c.sub)"""
+
+
+def _pq_adc_oracle() -> str:
+    return f"""
+        WITH {_pq_cb_ctes()},
+        {_pq_codes_sql()},
+        {_pq_adc_sql()},
         est AS (
             SELECT a.query_id, k.vec_id AS match_id,
                    CAST(SUM(a.dot_fp) AS BIGINT) AS est_fp
@@ -2300,27 +2210,9 @@ def q_sim_search_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut of `embed_quantize_pq` made queryable.
     """
     emb = datasets.load(spark, sf_dir, "embeddings")
-    cb = _pq_codebooks_df(spark, emb, cache_key=sf_dir)
+    cb = _pq_codebooks_df(spark, emb, sf_dir)
     codes = _pq_codes_long(emb, cb)
-    qsub = None
-    for s in range(PQ_M):
-        lo = s * PQ_SUBDIM + 1
-        part = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.lit(s).cast("long").alias("sub"),
-            F.slice("embedding", lo, PQ_SUBDIM)
-            .cast("array<double>")
-            .alias("qv"),
-        )
-        qsub = part if qsub is None else qsub.unionByName(part)
-    adc = qsub.join(cb, "sub").select(
-        "query_id",
-        "sub",
-        "code",
-        F.floor(V.dot(F.col("qv"), F.col("cv")) * PQ_FP)
-        .cast("long")
-        .alias("dot_fp"),
-    )
+    adc = _pq_adc_table(emb, cb)
     est = (
         codes.join(F.broadcast(adc), ["sub", "code"])
         .filter(F.col("query_id") != F.col("vec_id"))
@@ -2335,93 +2227,26 @@ def q_sim_search_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("crnk") <= PQ_COARSE_C)
         .select("query_id", "match_id")
     )
-    qv = emb.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qfull"),
-        V.norm(F.col("embedding")).alias("nq"),
-    )
-    mv = emb.select(
-        F.col("vec_id").alias("match_id"),
-        F.col("embedding").alias("mfull"),
-        V.norm(F.col("embedding")).alias("nm"),
-    )
-    rer = (
-        coarse.join(F.broadcast(qv), "query_id")
-        .join(mv, "match_id")
-        .select(
-            "query_id",
-            "match_id",
-            F.round(
-                V.dot(F.col("qfull"), F.col("mfull"))
-                / (F.col("nq") * F.col("nm")),
-                V.COS_DECIMALS,
-            ).alias("score"),
-        )
-    )
-    return _topk(rer)
-
-
-def _recall_pq_oracle_sql() -> str:
-    from flinkexp_spark.registry import REGISTRY
-
-    brute = REGISTRY["sim_search_topk"].oracle
-    pq = REGISTRY["sim_search_pq_adc"].oracle
-    return f"""
-        WITH brute AS ({brute}),
-        pq AS ({pq}),
-        h AS (SELECT CAST(COUNT(*) AS BIGINT) AS hits
-              FROM brute b JOIN pq i
-                ON b.query_id = i.query_id AND b.match_id = i.match_id),
-        t AS (SELECT CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-                     CAST(COUNT(*) AS BIGINT) AS truth_pairs
-              FROM brute)
-        SELECT n_queries, CAST({TOP_K} AS BIGINT) AS k, truth_pairs, hits,
-               CAST(FLOOR(hits * 1000.0 / truth_pairs) AS BIGINT)
-                 AS recall_x1000
-        FROM t CROSS JOIN h
-    """
+    return _exact_rerank(emb, coarse)
 
 
 @register(
     "sim_search_recall_pq",
-    oracle=_recall_pq_oracle_sql(),
+    oracle=_recall_oracle_sql(_brute_oracle_sql(), _pq_adc_oracle()),
     tags=("X3", "A2"),
 )
 def q_sim_search_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of PQ-ADC vs brute-force ground truth — the quality price
     of the 64x compression, measured and hash-pinned like the IVF and
     two-level-IVF contracts (tests pin the floor)."""
-    brute = q_sim_search_topk(spark, sf_dir).select("query_id", "match_id")
-    pq = q_sim_search_pq_adc(spark, sf_dir).select("query_id", "match_id")
-    hits = brute.join(pq, ["query_id", "match_id"], "left_semi")
-    return (
-        brute.agg(
-            F.countDistinct("query_id").alias("n_queries"),
-            F.count("*").alias("truth_pairs"),
-        )
-        .crossJoin(hits.agg(F.count("*").alias("hits")))
-        .select(
-            "n_queries",
-            F.lit(TOP_K).cast("long").alias("k"),
-            "truth_pairs",
-            "hits",
-            F.floor(F.col("hits") * 1000 / F.col("truth_pairs"))
-            .cast("long")
-            .alias("recall_x1000"),
-        )
+    return _recall_frame(
+        q_sim_search_topk(spark, sf_dir), q_sim_search_pq_adc(spark, sf_dir)
     )
 
 
 def _ivfpq_oracle() -> str:
     lloyd_ctes, final = _lloyd_ctes()
     cos_final = V.cosine_sql("e.embedding", "c.centv")
-    qdot = V.dot_sql_n("q.qv", "c.cv", PQ_SUBDIM)
-    qsub = " UNION ALL ".join(
-        f"""SELECT vec_id AS query_id, {s} AS sub,
-                   embedding[{s * PQ_SUBDIM + 1}:{(s + 1) * PQ_SUBDIM}] AS qv
-            FROM embeddings WHERE vec_id < {N_QUERIES}"""
-        for s in range(PQ_M)
-    )
     return f"""
         WITH {",".join(lloyd_ctes)},
         {_pq_cb_ctes()},
@@ -2441,11 +2266,7 @@ def _ivfpq_oracle() -> str:
             SELECT DISTINCT p.query_id, c.match_id
             FROM prb p JOIN cells c ON p.cell = c.cell
             WHERE p.query_id <> c.match_id),
-        qsub AS ({qsub}),
-        adc AS (
-            SELECT q.query_id, c.sub, c.code,
-                   CAST(floor({qdot} * {PQ_FP}) AS BIGINT) AS dot_fp
-            FROM qsub q JOIN pqcb c ON q.sub = c.sub),
+        {_pq_adc_sql()},
         est AS (
             SELECT cand.query_id, cand.match_id,
                    CAST(SUM(a.dot_fp) AS BIGINT) AS est_fp
@@ -2487,8 +2308,8 @@ def q_sim_search_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     measures and pins it like every other ANN contract here.
     """
     emb = datasets.load(spark, sf_dir, "embeddings")
-    cent = _ivf_centroids_df(spark, emb, cache_key=sf_dir)
-    cb = _pq_codebooks_df(spark, emb, cache_key=sf_dir)
+    cent = _ivf_centroids_df(spark, emb, sf_dir)
+    cb = _pq_codebooks_df(spark, emb, sf_dir)
     ranked = _ivf_assign_df(emb, cent)
     cells = ranked.filter(F.col("crnk") <= IVF_REPL).select(
         F.col("vec_id").alias("match_id"), F.col("cent_id").alias("cell")
@@ -2504,25 +2325,7 @@ def q_sim_search_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     codes = _pq_codes_long(emb, cb)
-    qsub = None
-    for s in range(PQ_M):
-        lo = s * PQ_SUBDIM + 1
-        part = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.lit(s).cast("long").alias("sub"),
-            F.slice("embedding", lo, PQ_SUBDIM)
-            .cast("array<double>")
-            .alias("qv"),
-        )
-        qsub = part if qsub is None else qsub.unionByName(part)
-    adc = qsub.join(cb, "sub").select(
-        "query_id",
-        "sub",
-        "code",
-        F.floor(V.dot(F.col("qv"), F.col("cv")) * PQ_FP)
-        .cast("long")
-        .alias("dot_fp"),
-    )
+    adc = _pq_adc_table(emb, cb)
     est = (
         cand.join(codes, cand.match_id == codes.vec_id)
         .join(F.broadcast(adc), ["query_id", "sub", "code"])
@@ -2537,79 +2340,19 @@ def q_sim_search_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("crnk") <= IVFPQ_COARSE_C)
         .select("query_id", "match_id")
     )
-    qv = emb.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qfull"),
-        V.norm(F.col("embedding")).alias("nq"),
-    )
-    mv = emb.select(
-        F.col("vec_id").alias("match_id"),
-        F.col("embedding").alias("mfull"),
-        V.norm(F.col("embedding")).alias("nm"),
-    )
-    rer = (
-        coarse.join(F.broadcast(qv), "query_id")
-        .join(mv, "match_id")
-        .select(
-            "query_id",
-            "match_id",
-            F.round(
-                V.dot(F.col("qfull"), F.col("mfull"))
-                / (F.col("nq") * F.col("nm")),
-                V.COS_DECIMALS,
-            ).alias("score"),
-        )
-    )
-    return _topk(rer)
-
-
-def _recall_ivfpq_oracle_sql() -> str:
-    from flinkexp_spark.registry import REGISTRY
-
-    brute = REGISTRY["sim_search_topk"].oracle
-    ivfpq = REGISTRY["sim_search_ivfpq_adc"].oracle
-    return f"""
-        WITH brute AS ({brute}),
-        ivfpq AS ({ivfpq}),
-        h AS (SELECT CAST(COUNT(*) AS BIGINT) AS hits
-              FROM brute b JOIN ivfpq i
-                ON b.query_id = i.query_id AND b.match_id = i.match_id),
-        t AS (SELECT CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-                     CAST(COUNT(*) AS BIGINT) AS truth_pairs
-              FROM brute)
-        SELECT n_queries, CAST({TOP_K} AS BIGINT) AS k, truth_pairs, hits,
-               CAST(FLOOR(hits * 1000.0 / truth_pairs) AS BIGINT)
-                 AS recall_x1000
-        FROM t CROSS JOIN h
-    """
+    return _exact_rerank(emb, coarse)
 
 
 @register(
     "sim_search_recall_ivfpq",
-    oracle=_recall_ivfpq_oracle_sql(),
+    oracle=_recall_oracle_sql(_brute_oracle_sql(), _ivfpq_oracle()),
     tags=("X3", "A2"),
 )
 def q_sim_search_recall_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the combined IVF + PQ-ADC pipeline vs brute force —
     the compounded approximation cost, hash-pinned like its parents."""
-    brute = q_sim_search_topk(spark, sf_dir).select("query_id", "match_id")
-    got = q_sim_search_ivfpq_adc(spark, sf_dir).select("query_id", "match_id")
-    hits = brute.join(got, ["query_id", "match_id"], "left_semi")
-    return (
-        brute.agg(
-            F.countDistinct("query_id").alias("n_queries"),
-            F.count("*").alias("truth_pairs"),
-        )
-        .crossJoin(hits.agg(F.count("*").alias("hits")))
-        .select(
-            "n_queries",
-            F.lit(TOP_K).cast("long").alias("k"),
-            "truth_pairs",
-            "hits",
-            F.floor(F.col("hits") * 1000 / F.col("truth_pairs"))
-            .cast("long")
-            .alias("recall_x1000"),
-        )
+    return _recall_frame(
+        q_sim_search_topk(spark, sf_dir), q_sim_search_ivfpq_adc(spark, sf_dir)
     )
 
 
@@ -2626,54 +2369,57 @@ def q_sim_search_recall_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # buys the ≥0.85 floor the r09 verdict asks for (#4).
 IVFB_NPROBE = 3
 
-_IVFB_PATH_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _ivf_bucketed_index_path(
     spark: SparkSession, emb: DataFrame, sf_dir: str
 ) -> str:
-    """Write (once per session per sf_dir) the IVF index as a parquet
-    dataset partitioned by ``cell`` and return its path.
+    """Write (once per SparkContext per resolved sf_dir) the IVF index as a
+    parquet dataset partitioned by ``cell`` and return its path.
 
     Deterministic and idempotent: the cell assignment is the same
-    fixed-point Lloyd quantizer every IVF query shares (one centroid
-    cache), and the writer overwrites, so a stale on-disk index from an
-    older session can never leak into this one's results."""
-    import hashlib
-    import pathlib
+    fixed-point Lloyd quantizer every IVF query shares (one memoized
+    centroid table), and the writer overwrites, so a stale on-disk index
+    from an older session can never leak into this one's results.
 
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _IVFB_PATH_CACHE if k[0] != app_id]:
-        del _IVFB_PATH_CACHE[stale]
-    # Key by the FULL sf_dir (matching _CENT_CACHE), not its basename: two
-    # fixture dirs sharing a basename (/a/sf0.1 vs /b/sf0.1) must not reuse
-    # each other's on-disk index (round-11 ADVICE).  The path component is
-    # "<basename>-<dirhash8>" so it stays readable but collision-free, and
-    # the directory is app-id-scoped so concurrent sessions never race on
-    # the same mode=overwrite target.
+    Keyed by the FULL resolved sf_dir, not its basename: two fixture dirs
+    sharing a basename (/a/sf0.1 vs /b/sf0.1) must not reuse each other's
+    index.  The directory lives under the scratch root, is named
+    "ivf_bucketed-<app-id>-<basename>-<dirhash8>" (readable, collision-free,
+    and app-scoped so concurrent sessions never race on one overwrite
+    target), and is removed when the driver process exits."""
+    import atexit
+    import hashlib
+    import os
+    import pathlib
+    import shutil
+
+    from flinkexp_spark.streaming.replay import SCRATCH_ROOT
+
     full = str(pathlib.Path(sf_dir).resolve())
-    key = (app_id, full)
-    if key in _IVFB_PATH_CACHE:
-        return _IVFB_PATH_CACHE[key]
-    tag = "{}-{}".format(
-        pathlib.Path(full).name or "default",
-        hashlib.sha256(full.encode()).hexdigest()[:8],
-    )
-    repo_root = pathlib.Path(__file__).resolve().parents[2]
-    path = str(repo_root / "spark-warehouse" / "ivf_bucketed" / app_id / tag)
-    cent = _ivf_centroids_df(spark, emb, cache_key=sf_dir)
-    index = (
-        _ivf_assign_df(emb, cent)
-        .filter(F.col("crnk") <= IVF_REPL)
-        .select(
-            F.col("vec_id").alias("match_id"),
-            F.col("embedding").alias("cv"),
-            F.col("cent_id").cast("int").alias("cell"),
+
+    def write() -> str:
+        path = os.path.join(
+            SCRATCH_ROOT,
+            "ivf_bucketed-{}-{}-{}".format(
+                spark.sparkContext.applicationId,
+                pathlib.Path(full).name or "default",
+                hashlib.sha256(full.encode()).hexdigest()[:8],
+            ),
         )
-    )
-    index.write.mode("overwrite").partitionBy("cell").parquet(path)
-    _IVFB_PATH_CACHE[key] = path
-    return path
+        cent = _ivf_centroids_df(spark, emb, sf_dir)
+        index = (
+            _ivf_assign_df(emb, cent)
+            .filter(F.col("crnk") <= IVF_REPL)
+            .select(
+                F.col("vec_id").alias("match_id"),
+                F.col("embedding").alias("cv"),
+                F.col("cent_id").cast("int").alias("cell"),
+            )
+        )
+        index.write.mode("overwrite").partitionBy("cell").parquet(path)
+        atexit.register(shutil.rmtree, path, True)
+        return path
+
+    return memo(spark, ("ivf_bucketed_index", full), write)
 
 
 @register(
@@ -2700,7 +2446,7 @@ def q_sim_search_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = datasets.load(spark, sf_dir, "embeddings")
     path = _ivf_bucketed_index_path(spark, emb, sf_dir)
     index = spark.read.parquet(path)
-    cent = _ivf_centroids_df(spark, emb, cache_key=sf_dir)
+    cent = _ivf_centroids_df(spark, emb, sf_dir)
     probes = (
         _ivf_assign_df(emb.filter(F.col("vec_id") < N_QUERIES), cent)
         .filter(F.col("crnk") <= IVFB_NPROBE)
@@ -2727,31 +2473,11 @@ def q_sim_search_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _topk(pairs)
 
 
-def _recall_ivfb_oracle_sql() -> str:
-    """Nested-constituent recall contract, same shape as _recall_oracle_sql."""
-    from flinkexp_spark.registry import REGISTRY
-
-    brute = REGISTRY["sim_search_topk"].oracle
-    ivfb = REGISTRY["sim_search_ivf_bucketed"].oracle
-    return f"""
-        WITH brute AS ({brute}),
-        ivfb AS ({ivfb}),
-        h AS (SELECT CAST(COUNT(*) AS BIGINT) AS hits
-              FROM brute b JOIN ivfb i
-                ON b.query_id = i.query_id AND b.match_id = i.match_id),
-        t AS (SELECT CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
-                     CAST(COUNT(*) AS BIGINT) AS truth_pairs
-              FROM brute)
-        SELECT n_queries, CAST({TOP_K} AS BIGINT) AS k, truth_pairs, hits,
-               CAST(FLOOR(hits * 1000.0 / truth_pairs) AS BIGINT)
-                 AS recall_x1000
-        FROM t CROSS JOIN h
-    """
-
-
 @register(
     "sim_search_recall_ivf_bucketed",
-    oracle=_recall_ivfb_oracle_sql(),
+    oracle=_recall_oracle_sql(
+        _brute_oracle_sql(), _ivf_oracle_sql(nprobe=IVFB_NPROBE)
+    ),
     tags=("X3", "A2"),
 )
 def q_sim_search_recall_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2759,22 +2485,6 @@ def q_sim_search_recall_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFr
     plan — hash-pinned like its parents; the ≥0.85 floor is asserted in
     tests/test_llm_ops.py (measured 0.85+ at both fixture scales with
     nprobe=3)."""
-    brute = q_sim_search_topk(spark, sf_dir).select("query_id", "match_id")
-    got = q_sim_search_ivf_bucketed(spark, sf_dir).select("query_id", "match_id")
-    hits = brute.join(got, ["query_id", "match_id"], "left_semi")
-    return (
-        brute.agg(
-            F.countDistinct("query_id").alias("n_queries"),
-            F.count("*").alias("truth_pairs"),
-        )
-        .crossJoin(hits.agg(F.count("*").alias("hits")))
-        .select(
-            "n_queries",
-            F.lit(TOP_K).cast("long").alias("k"),
-            "truth_pairs",
-            "hits",
-            F.floor(F.col("hits") * 1000 / F.col("truth_pairs"))
-            .cast("long")
-            .alias("recall_x1000"),
-        )
+    return _recall_frame(
+        q_sim_search_topk(spark, sf_dir), q_sim_search_ivf_bucketed(spark, sf_dir)
     )

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from flinkexp_spark import datasets
 from flinkexp_spark.functions import text as T
 from flinkexp_spark.registry import register
+from flinkexp_spark.session import memo
 
 BPE_MERGES = 8
 
@@ -168,28 +169,21 @@ def word_histogram(docs: DataFrame) -> DataFrame:
     )
 
 
-# Learned merges memoized per (application, corpus, n_merges) — training
-# is deterministic, and both catalog queries (and repeated bench runs)
-# otherwise re-run the same n_merges driver-paced rounds.  The cached
-# value is a plain Python list (no DataFrame/plan pinned); same eviction
-# discipline as llm_similarity._CENT_CACHE.
-_MERGES_CACHE: dict[tuple[str, str, int], list] = {}
-
-
 def trained_merges(
     spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
 ) -> list[tuple[int, str, str, str, int]]:
-    """Merges for the documents corpus at ``sf_dir``, memoized per session."""
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _MERGES_CACHE if k[0] != app_id]:
-        del _MERGES_CACHE[stale]
-    key = (app_id, sf_dir, n_merges)
-    if key not in _MERGES_CACHE:
-        docs = datasets.load(spark, sf_dir, "documents")
-        _MERGES_CACHE[key] = train_bpe_merges(
-            spark, word_histogram(docs), n_merges
-        )
-    return _MERGES_CACHE[key]
+    """Merges for the documents corpus at ``sf_dir``, memoized per
+    (corpus, n_merges) per SparkContext — training is deterministic, and
+    both catalog queries (and repeated bench runs) otherwise re-run the
+    same n_merges driver-paced rounds."""
+    return memo(
+        spark,
+        ("bpe_merges", sf_dir, n_merges),
+        lambda: train_bpe_merges(
+            spark, word_histogram(datasets.load(spark, sf_dir, "documents")),
+            n_merges,
+        ),
+    )
 
 
 def _select_exact_batch(

@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from flinkexp_spark import datasets
 from flinkexp_spark.functions.text import tokens_sql
 from flinkexp_spark.registry import register
+from flinkexp_spark.session import memo
 
 from .tokenizer import word_histogram
 
@@ -264,26 +265,21 @@ def _score(counts: dict[str, int], total: int) -> dict[str, int]:
     }
 
 
-# Trained vocab memoized per (application, corpus) — training is
-# deterministic and both catalog queries otherwise re-run the EM rounds
-# (same discipline as tokenizer._MERGES_CACHE).
-_UNI_CACHE: dict[tuple[str, str], list[tuple[str, int, int]]] = {}
-
-
 def trained_unigram(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[str, int, int]]:
     """[(piece, final_raw_count, final_score)] after UNI_EM_ITERS hard-EM
-    rounds, memoized per session.  Driver-side state is vocabulary-bounded
-    (UNI_VOCAB_MULTI + alphabet rows); all corpus-sized work — histogram,
-    candidate explode, per-word Viterbi — stays distributed."""
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _UNI_CACHE if k[0] != app_id]:
-        del _UNI_CACHE[stale]
-    key = (app_id, sf_dir)
-    if key in _UNI_CACHE:
-        return _UNI_CACHE[key]
+    rounds, memoized per corpus per SparkContext (training is
+    deterministic and both catalog queries otherwise re-run the EM
+    rounds).  Driver-side state is vocabulary-bounded (UNI_VOCAB_MULTI +
+    alphabet rows); all corpus-sized work — histogram, candidate explode,
+    per-word Viterbi — stays distributed."""
+    return memo(
+        spark, ("unigram_vocab", sf_dir), lambda: _train_unigram(spark, sf_dir)
+    )
 
+
+def _train_unigram(spark: SparkSession, sf_dir: str) -> list[tuple[str, int, int]]:
     docs = datasets.load(spark, sf_dir, "documents")
     hist = word_histogram(docs).localCheckpoint()  # reused by every pass
 
@@ -321,8 +317,7 @@ def trained_unigram(
         smoothed = {p: c + 1 for p, c in raw.items()}
         scores = _score(smoothed, sum(smoothed.values()))
 
-    _UNI_CACHE[key] = [(p, raw[p], scores[p]) for p in sorted(vocab)]
-    return _UNI_CACHE[key]
+    return [(p, raw[p], scores[p]) for p in sorted(vocab)]
 
 
 @register(

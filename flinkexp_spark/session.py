@@ -31,7 +31,9 @@ state backend (reference: study/pom.xml:72).  Our equivalent is a configured
 :func:`ship_package` is the one way Python workers get the package: the
 registry calls it before every query body, on whatever session the caller
 passes, so workers of a driver started outside the repo import
-``flinkexp_spark`` from the shipped zip.
+``flinkexp_spark`` from the shipped zip.  :func:`memo` is the one
+per-SparkContext cache for driver-built state (trained quantizers,
+codebooks, vocabularies, checkpointed tables).
 """
 
 from __future__ import annotations
@@ -41,11 +43,13 @@ import io
 import os
 import uuid
 import zipfile
+from collections.abc import Callable, Hashable
+from typing import Any
 
 from pyspark.sql import SparkSession
 
 __all__ = [
-    "get_session", "ship_package", "default_cpus", "default_driver_memory",
+    "get_session", "ship_package", "memo", "default_cpus", "default_driver_memory",
     "host_memory_mb", "DEFAULT_SHUFFLE_PARTITIONS",
 ]
 
@@ -53,6 +57,8 @@ _PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
 # stdlib-only, one module: every Python worker gets it on its PYTHONPATH
 _PYWORKER_DIR = os.path.join(_PACKAGE_DIR, "compat", "pyworker")
 ARCHIVE_PREFIX = "flinkexp_spark-"
+# (applicationId, key) -> built value; only the live application's entries
+_MEMO: dict[tuple[str, Hashable], Any] = {}
 
 
 def default_cpus() -> int:
@@ -186,3 +192,19 @@ def ship_package(spark: SparkSession) -> None:
             f.write(data)
         os.replace(tmp, archive)
     sc.addPyFile(archive)
+
+
+def memo(spark: SparkSession, key: Hashable, build: Callable[[], Any]) -> Any:
+    """``build()`` once per ``key`` per SparkContext, then the same value.
+
+    Entries of any other application are dropped first: one application
+    is live per driver process, and a stopped one's entries would pin its
+    checkpoints and plans forever.  ``key`` names the value and everything
+    it depends on besides the context (corpus path, K, mode)."""
+    app_id = spark.sparkContext.applicationId
+    for stale in [k for k in _MEMO if k[0] != app_id]:
+        del _MEMO[stale]
+    full = (app_id, key)
+    if full not in _MEMO:
+        _MEMO[full] = build()
+    return _MEMO[full]

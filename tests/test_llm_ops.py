@@ -321,7 +321,8 @@ def test_bucketed_signature_table_matches_checkpoint(spark, sf_dir):
     import contextlib
     import io
 
-    from flinkexp_spark.catalog.llm_dedup import _SIG_CACHE, signature_table
+    from flinkexp_spark import session
+    from flinkexp_spark.catalog.llm_dedup import signature_table
 
     ck = signature_table(spark, sf_dir, mode="checkpoint")
     bk = signature_table(spark, sf_dir, mode="bucketed")
@@ -335,8 +336,12 @@ def test_bucketed_signature_table_matches_checkpoint(spark, sf_dir):
             bk.join(probe.hint("merge"), "doc_id").explain("formatted")
         assert "Bucketed: true" in buf.getvalue()
     finally:
-        _SIG_CACHE.pop(
-            (spark.sparkContext.applicationId, sf_dir, "bucketed"), None
+        session._MEMO.pop(
+            (
+                spark.sparkContext.applicationId,
+                ("minhash_signatures", sf_dir, "bucketed"),
+            ),
+            None,
         )
 
 
@@ -349,7 +354,8 @@ def test_bucketed_sig_mode_env_var_drives_lsh(spark, sf_dir, monkeypatch):
     import contextlib
     import io
 
-    from flinkexp_spark.catalog.llm_dedup import _SIG_CACHE, signature_table
+    from flinkexp_spark import session
+    from flinkexp_spark.catalog.llm_dedup import signature_table
     from flinkexp_spark.registry import queries
 
     baseline = sorted(
@@ -385,8 +391,12 @@ def test_bucketed_sig_mode_env_var_drives_lsh(spark, sf_dir, monkeypatch):
         finally:
             spark.conf.set(auto_key, saved)
     finally:
-        _SIG_CACHE.pop(
-            (spark.sparkContext.applicationId, sf_dir, "bucketed"), None
+        session._MEMO.pop(
+            (
+                spark.sparkContext.applicationId,
+                ("minhash_signatures", sf_dir, "bucketed"),
+            ),
+            None,
         )
 
 
@@ -402,7 +412,7 @@ def test_ivf_lloyd_reduces_quantization_error(spark, sf_dir):
         F.col("vec_id").alias("cent_id"),
         F.col("embedding").cast("array<double>").alias("centv"),
     )
-    refined = S._ivf_centroids_df(spark, emb)
+    refined = S._ivf_centroids_df(spark, emb, sf_dir)
 
     def mean_assigned_cos(cent):
         return (
@@ -593,7 +603,7 @@ def test_ivf_bucketed_matches_flat_ivf_at_same_nprobe(spark, sf_dir):
     from pyspark.sql import functions as F
 
     emb = datasets.load(spark, sf_dir, "embeddings")
-    cent = S._ivf_centroids_df(spark, emb, cache_key=sf_dir)
+    cent = S._ivf_centroids_df(spark, emb, sf_dir)
     aff = S._ivf_assign_df(emb, cent)
     cells = aff.filter(F.col("crnk") <= S.IVF_REPL).select(
         F.col("vec_id").alias("match_id"),

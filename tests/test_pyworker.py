@@ -143,6 +143,7 @@ class _FakeContext:
     def __init__(self):
         self._python_includes = []
         self.added = []
+        self.applicationId = f"local-fake-{id(self)}"
 
     def addPyFile(self, path):
         self.added.append(path)
@@ -180,6 +181,37 @@ def test_ship_package_adds_one_archive_per_context(spark, tmp_path, monkeypatch)
         for p in files:
             with open(p, "rb") as f:
                 assert z.read(os.path.relpath(p, repo)) == f.read(), p
+
+
+def test_memo_builds_once_per_key_per_context(monkeypatch):
+    monkeypatch.setattr(session, "_MEMO", {})
+    builds = []
+
+    def get(s, key):
+        return session.memo(s, key, lambda: builds.append(key) or len(builds))
+
+    first, second = _FakeSession(), _FakeSession()
+    cent8 = ("ivf_centroids", "/a/sf0.1", 8)
+    # one build per key per context, however often it is asked for
+    assert get(first, cent8) == get(first, cent8) == 1
+    # a different k or a different corpus path is a different entry
+    assert get(first, ("ivf_centroids", "/a/sf0.1", 80)) == 2
+    assert get(first, ("ivf_centroids", "/b/sf0.1", 8)) == 3
+    assert get(first, ("ivf_bucketed_index", "/a/sf0.1")) == 4
+    assert len(builds) == 4
+    # a second application drops every entry of the first one
+    assert get(second, cent8) == 5
+    assert {app for app, _ in session._MEMO} == {second.sparkContext.applicationId}
+    assert get(second, cent8) == 5
+    assert get(first, cent8) == 6
+    assert builds == [
+        cent8,
+        ("ivf_centroids", "/a/sf0.1", 80),
+        ("ivf_centroids", "/b/sf0.1", 8),
+        ("ivf_bucketed_index", "/a/sf0.1"),
+        cent8,
+        cent8,
+    ]
 
 
 ARCHIVE_READS_SCRIPT = textwrap.dedent(

@@ -73,7 +73,7 @@ def test_scaled_assignment_collapses_to_flat_below_switch(spark, sf_dir):
     from flinkexp_spark import datasets
 
     emb = datasets.load(spark, sf_dir, "embeddings")
-    cent = LS._ivf_centroids_df(spark, emb, cache_key=sf_dir)
+    cent = LS._ivf_centroids_df(spark, emb, sf_dir)
     flat = LS._ivf_assign_df(emb, cent).select("vec_id", "cent_id", "crnk")
     scaled = LS._ivf_assign_scaled_df(emb, cent, LS.IVF_K).select(
         "vec_id", "cent_id", "crnk"
@@ -92,7 +92,7 @@ def test_scaled_assignment_descends_above_switch(spark, sf_dir):
 
     emb = datasets.load(spark, sf_dir, "embeddings")
     k = LS.IVF2_SWITCH_K + 8
-    cent = LS._ivf_centroids_df(spark, emb, cache_key=f"{sf_dir}#sw", k=k)
+    cent = LS._ivf_centroids_df(spark, emb, f"{sf_dir}#sw", k)
     ranked = LS._ivf_assign_scaled_df(emb, cent, k)
     max_depth = ranked.agg(F.max("crnk")).collect()[0][0]
     # flat ranking would rank all K cells per vector; the descent ranks
@@ -131,3 +131,30 @@ def test_ivf_bucketed_index_path_distinct_per_full_sf_dir(spark, sf_dir):
     assert p1 != p2
     # and the app id scopes the directory against cross-process overwrite
     assert spark.sparkContext.applicationId in p1
+
+
+def test_ivf_bucketed_index_is_scratch_removed_at_exit(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The on-disk IVF index is a throwaway write: it lives under the
+    scratch root (never in the repo), is keyed by the resolved sf_dir, and
+    is removed when the driver process exits."""
+    import atexit
+    import os
+    import shutil
+
+    from flinkexp_spark import datasets
+    from flinkexp_spark.streaming import replay
+
+    at_exit = []
+    monkeypatch.setattr(atexit, "register", lambda fn, *a: at_exit.append((fn, a)))
+    emb = datasets.load(spark, sf_dir, "embeddings")
+    alias = str(tmp_path / os.path.basename(sf_dir))
+    path = LS._ivf_bucketed_index_path(spark, emb, alias)
+    assert os.path.commonpath([path, replay.SCRATCH_ROOT]) == replay.SCRATCH_ROOT
+    assert os.listdir(path)
+    # another spelling of the same directory is the same entry: no rewrite
+    assert LS._ivf_bucketed_index_path(spark, emb, alias + "/.") == path
+    (args,) = [a for fn, a in at_exit if fn is shutil.rmtree]
+    shutil.rmtree(*args)
+    assert not os.path.exists(path)

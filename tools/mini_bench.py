@@ -5,15 +5,25 @@ N runs, re-run until the window spread <= max(window_min, 0.2s), capped
 attempts.  For in-session A/B of individual queries without paying for
 the whole suite.
 
-Usage: python tools/mini_bench.py name1,name2 [--repeats 3] [--max-attempts 9]
+Each query prints one line: the window median, min and max, and the
+build (query callable: plan construction plus the eager jobs it triggers)
+/ drain (noop write) split of the median run.  ``--plans-dir`` also
+builds the query once more after timing and writes its
+``.explain("formatted")`` to ``<plans-dir>/<name>_<suffix>.txt``.
+
+Usage:
+  python tools/mini_bench.py name1,name2 [--repeats 3] [--max-attempts 9] \\
+      [--plans-dir plans/r14 --suffix before] [--sf-dir DIR]
 """
 
 from __future__ import annotations
 
 import argparse
+import io
 import os
 import sys
 import time
+from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,6 +41,8 @@ def main() -> None:
         "--sf-dir",
         default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
     )
+    ap.add_argument("--plans-dir", default=None)
+    ap.add_argument("--suffix", default="before")
     args = ap.parse_args()
 
     spark = get_session(app_name="flinkexp_mini_bench")
@@ -49,22 +61,36 @@ def main() -> None:
         if name not in qs:
             print(f"{name}: NOT REGISTERED", flush=True)
             continue
+        runs: list[tuple[float, float, float]] = []
 
         def run_once() -> float:
             t0 = time.perf_counter()
-            qs[name](spark, args.sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            return time.perf_counter() - t0
+            df = qs[name](spark, args.sf_dir)
+            t1 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.perf_counter()
+            runs.append((t2 - t0, t1 - t0, t2 - t1))
+            return t2 - t0
 
         n_runs, med, mn, mx, converged = converge(
             run_once, args.repeats, args.max_attempts
         )
+        build, drain = next((b, d) for t, b, d in runs if t == med)
         print(
             f"# {name}: median={med:.2f}s min={mn:.2f}s max={mx:.2f}s "
+            f"build={build:.2f}s drain={drain:.2f}s "
             f"attempts={n_runs}" + ("" if converged else " NOISY"),
             flush=True,
         )
+        if args.plans_dir:
+            os.makedirs(args.plans_dir, exist_ok=True)
+            out = os.path.join(args.plans_dir, f"{name}_{args.suffix}.txt")
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                qs[name](spark, args.sf_dir).explain("formatted")
+            with open(out, "w") as f:
+                f.write(buf.getvalue())
+            print(f"{name}: plan -> {out}", flush=True)
 
 
 if __name__ == "__main__":
