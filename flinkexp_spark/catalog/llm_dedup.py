@@ -21,6 +21,7 @@ Scale design per operator:
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
 import shutil
@@ -32,6 +33,7 @@ from flinkexp_spark import datasets
 from flinkexp_spark.functions import text as T
 from flinkexp_spark.registry import register
 from flinkexp_spark.session import memo
+from flinkexp_spark.streaming.replay import SCRATCH_ROOT
 
 NGRAM_DF_CAP = 100  # drop shingles appearing in more docs than this
 JACCARD_MIN = 0.5
@@ -91,7 +93,8 @@ _O_SCORED_BODY = f"""
 #   bucketed parquet table (bucketBy doc_id) — the 100 TB shape: the
 #   signature side of every downstream doc_id equi-join reads pre-hashed
 #   buckets (no Exchange on that side, SelectedBucketsCount in the plan),
-#   and the table survives the session for reuse across jobs.
+#   and every later job of the driver reuses the table (it lives under the
+#   scratch root until the driver exits).
 def signature_table(spark: SparkSession, sf_dir: str, mode: str | None = None) -> DataFrame:
     mode = mode or os.environ.get("SPARK_GRAFT_SIG_MATERIALIZE", "checkpoint")
     return memo(
@@ -103,18 +106,17 @@ def signature_table(spark: SparkSession, sf_dir: str, mode: str | None = None) -
 def _materialize_signatures(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
     sig = T.minhash_signatures(datasets.load(spark, sf_dir, "documents"))
     if mode == "bucketed":
-        name = f"minhash_sig_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-        # The metastore is per-session but the warehouse dir persists; a
-        # location left behind by a killed session makes saveAsTable fail
-        # with LOCATION_ALREADY_EXISTS even in overwrite mode (the table
-        # isn't in THIS session's catalog).  Clear both sides first.
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        # An external table under the scratch root, named by application
+        # and fixture dir and removed when the driver exits (the bucketed
+        # IVF index's rule), never the cwd's warehouse dir: a warehouse
+        # location outlives the process and nothing would delete it.
+        digest = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+        name = f"minhash_sig_{digest}"
         loc = os.path.join(
-            spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").removeprefix(
-                "file:"
-            ),
-            name,
+            SCRATCH_ROOT,
+            f"minhash_sig-{spark.sparkContext.applicationId}-{digest}",
         )
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
         shutil.rmtree(loc, ignore_errors=True)
         (
             sig.repartition(16, "doc_id")  # one file per bucket (same murmur3)
@@ -122,8 +124,10 @@ def _materialize_signatures(spark: SparkSession, sf_dir: str, mode: str) -> Data
             .sortBy("doc_id")
             .mode("overwrite")
             .format("parquet")
+            .option("path", loc)
             .saveAsTable(name)
         )
+        atexit.register(shutil.rmtree, loc, True)
         return spark.table(name)
     return sig.localCheckpoint()
 

@@ -11,6 +11,12 @@ inferred ``StructType`` by the table path, every file's size and mtime
 under it, and the one session conf that changes inference, then hands it
 to every later read.  Spark's parquet inference reads a footer through a
 Spark job, so after the first read of a file, ``load`` runs no Spark job.
+
+A ``load`` result that is the table file exactly as stored (a single
+file, none of ``load``'s column conversions applied) is remembered with
+that file's path, so a consumer that would otherwise rewrite the frame to
+disk can copy the file instead (:func:`fixture_file`; the replay rig's
+staging step does this).
 """
 
 from __future__ import annotations
@@ -47,6 +53,18 @@ def table_path(sf_dir: str, name: str) -> str:
 # fresh relation with fresh attribute ids, or two loads of one table in a
 # query become an ambiguous self-join.
 _SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+# Frame -> its table file, for frames ``load`` returned unchanged from a
+# single-file table.  Keyed by the frame object, so any operator a caller
+# adds (a new DataFrame) is not in here; weak, so frames die as usual.
+_UNTOUCHED: "weakref.WeakKeyDictionary[DataFrame, str]" = weakref.WeakKeyDictionary()
+
+
+def fixture_file(df: DataFrame) -> str | None:
+    """The table file ``df`` reads, if ``df`` is an unmodified :func:`load`
+    result over a single-file table; else ``None``."""
+    return _UNTOUCHED.get(df)
 
 
 def _file_versions(path: str) -> tuple:
@@ -92,7 +110,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = _read(spark, table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    df = loaded = _read(spark, path)
     for field in df.schema.fields:
         if field.name == "ts" and isinstance(field.dataType, T.LongType):
             # TIMESTAMP(NANOS) generation read as raw ns longs under
@@ -105,6 +124,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # NTZ→LTZ cast interprets the naive value in the session tz,
             # which the line above pinned to UTC — an exact reinterpretation.
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
+    if df is loaded and os.path.isfile(path):
+        _UNTOUCHED[df] = os.path.abspath(path)
     return df
 
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import functools
 import re
+from collections import Counter
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -30,20 +31,20 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 __all__ = ["Query", "REGISTRY", "register", "queries", "oracle_sql"]
 
 
-def _cte_bodies(sql: str):
-    """Yield ``(name, body)`` for each ``name AS (...)`` CTE definition,
-    body found by paren-balance scan from the opening parenthesis."""
-    for m in re.finditer(r"\b(\w+) AS (?:MATERIALIZED )?\(", sql):
-        depth, i = 0, m.end() - 1
-        while i < len(sql):
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            i += 1
-        yield m.group(1), sql[m.end(): i]
+def _cte_bodies(sql: str) -> list[tuple[str, str]]:
+    """``(name, body)`` for each ``name AS (...)`` CTE definition.  The body
+    runs to the parenthesis that balances the opening one (to the end of
+    ``sql`` if none does); one pass pairs every parenthesis first."""
+    close, stack = {}, []
+    for m in re.finditer(r"[()]", sql):
+        if m.group() == "(":
+            stack.append(m.start())
+        elif stack:
+            close[stack.pop()] = m.start()
+    return [
+        (m.group(1), sql[m.end(): close.get(m.end() - 1, len(sql))])
+        for m in re.finditer(r"\b(\w+) AS (?:MATERIALIZED )?\(", sql)
+    ]
 
 
 def _materialize_multiref_ctes(sql: str) -> str:
@@ -61,10 +62,9 @@ def _materialize_multiref_ctes(sql: str) -> str:
     left alone — non-recursive members of a WITH RECURSIVE list still get
     the hint (valid DuckDB, verified on 1.0.0).
     """
+    bodies = _cte_bodies(sql)
     self_ref = {
-        name
-        for name, body in _cte_bodies(sql)
-        if re.search(rf"\b{name}\b", body)
+        name for name, body in bodies if re.search(rf"\b{name}\b", body)
     }
     # SQL named windows (`... WINDOW w AS (PARTITION BY ...)`, possibly a
     # comma-chained list) share the `name AS (` shape but are not CTEs — a
@@ -72,15 +72,17 @@ def _materialize_multiref_ctes(sql: str) -> str:
     # query keyword, a CTE body always does.
     windows = {
         name
-        for name, body in _cte_bodies(sql)
+        for name, body in bodies
         if not re.match(r"\s*(--[^\n]*\n\s*)*(SELECT|WITH|VALUES|FROM)\b",
                         body, re.IGNORECASE)
     }
+    # A whole-word occurrence of a name is a maximal \w run, so one word
+    # count serves every name; a name's definitions are its CTE matches.
+    words = Counter(re.findall(r"\w+", sql))
+    defs = Counter(name for name, _ in bodies)
     out = sql
-    for name in {n for n, _ in _cte_bodies(sql)} - self_ref - windows:
-        n_defs = len(re.findall(rf"\b{name} AS (?:MATERIALIZED )?\(", sql))
-        n_refs = len(re.findall(rf"\b{name}\b", sql)) - n_defs
-        if n_refs >= 2:
+    for name in set(defs) - self_ref - windows:
+        if words[name] - defs[name] >= 2:
             out = re.sub(rf"\b({name}) AS \(", r"\1 AS MATERIALIZED (", out)
     return out
 

@@ -21,6 +21,26 @@ Key mechanics:
 * ``scratch_dir`` is the one way to get a workspace: input files,
   checkpoints and sinks live in a per-call directory under ``SCRATCH_ROOT``
   and are removed when the call returns.
+* Staging copies what it need not rewrite: a part that is an unmodified
+  ``datasets.load`` frame over a single-file table is copied byte for byte
+  into the replay input (``shutil.copyfile``, a new inode, so pinning the
+  copy's mtime leaves the fixture and its cached schema alone); every
+  other part (time splits, sentinels, derived frames) is written by a
+  ``coalesce(1)`` Spark job.
+* Replay checkpoints go through Hadoop's ``FileSystem`` API
+  (``FileSystemBasedCheckpointFileManager``), set only inside the
+  replay-scoped conf context.  Without a native Hadoop library every
+  local file create forks ``chmod``, and every rename through Spark's
+  default ``FileContext`` manager also forks ``readlink``: timed in the
+  driver JVM on a 4-core host, a rename took 31 ms that way and 0.9 ms
+  through ``FileSystem`` (a create+close 8.9 ms either way).  Each
+  micro-batch renames its offsets and commit files, every state
+  partition's delta and the checksum file of each.  The ``FileSystem``
+  manager is only as safe as the target file system's rename; a replay
+  checkpoint is local, has one writer and is deleted when the call
+  returns, and a local ``rename(2)`` is atomic.  Hadoop ``.crc`` files and
+  Spark's checkpoint checksum files are written and verified either way.
+  Streaming jobs outside the rig keep the session's default manager.
 """
 
 from __future__ import annotations
@@ -34,16 +54,23 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from flinkexp_spark.datasets import fixture_file
+
+
 def _scratch_root() -> str:
     """Scratch filesystem for replay inputs/checkpoints/sinks.
 
     Everything written here is throwaway (created and deleted within one
-    query call), but the streaming checkpoint's offset/commit logs are
-    fsync'd once per micro-batch and the input files are written + read
-    back per replay — on a spinning/virtual disk that I/O is a fixed tax
-    on every bounded replay (guide §6).  Prefer a tmpfs when the host has
-    one; `SPARK_GRAFT_SCRATCH` overrides (point it at a real disk if the
-    fixtures outgrow RAM — replay scratch is fixture-sized, MBs).
+    query call).  A tmpfs is used when the host has one, but the medium is
+    not where a replay's fixed cost goes: with the root on ``/dev/shm``
+    or on a virtual disk, ``stream_wordcount_update`` at sf0.1 took
+    1.64 vs 1.73 s (median of 3 sessions each, 4-core host; sessions
+    ranged 1.3-2.7 s).  The per-file cost is Hadoop's: without a native
+    library it forks ``chmod`` for every file create and ``readlink`` for
+    every ``FileContext`` rename, which is why replay checkpoints use the
+    ``FileSystem``-API manager (module docstring).  `SPARK_GRAFT_SCRATCH`
+    overrides the root (point it at a real disk if the fixtures outgrow
+    RAM — replay scratch is fixture-sized, MBs).
     """
     env = os.environ.get("SPARK_GRAFT_SCRATCH")
     if env:
@@ -92,11 +119,20 @@ _PROVIDERS = {
 }
 
 
+# Checkpoint file manager for BOUNDED REPLAYS only (module docstring):
+# Hadoop FileSystem-API creates and renames instead of FileContext ones.
+_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
 class _stream_partitions:
     """Replay-scoped session conf: shuffle partitions sized to fixture state
     (one state-store instance per core, at most _MAX_STREAM_PARTITIONS,
-    not the batch width) + the throwaway-checkpoint state provider.
-    Restores on exit."""
+    not the batch width), the throwaway-checkpoint state provider and the
+    FileSystem-API checkpoint manager.  Restores on exit, unsetting keys
+    that had no value before."""
 
     def __init__(
         self,
@@ -111,6 +147,7 @@ class _stream_partitions:
             "spark.sql.streaming.stateStore.providerClass": _PROVIDERS[
                 state_provider or "memory"
             ],
+            "spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_MANAGER,
         }
         if not no_data_batches:
             # Skip the trailing zero-row micro-batch.  Only set by replays
@@ -130,13 +167,16 @@ class _stream_partitions:
             )
 
     def __enter__(self):
-        self.saved = {k: self.spark.conf.get(k) for k in self.keys}
+        self.saved = {k: self.spark.conf.get(k, None) for k in self.keys}
         for k, v in self.keys.items():
             self.spark.conf.set(k, v)
 
     def __exit__(self, *exc):
         for k, v in self.saved.items():
-            self.spark.conf.set(k, v)
+            if v is None:
+                self.spark.conf.unset(k)
+            else:
+                self.spark.conf.set(k, v)
 
 
 @contextlib.contextmanager
@@ -156,26 +196,36 @@ def _stage(spark: SparkSession, parts: list[DataFrame], work: str):
     """Write ``parts`` as replay input files under ``work`` and return the
     ``readStream`` reader that replays them one file per micro-batch.
 
-    Each part becomes one ``coalesce(1)`` parquet file in its own
-    directory.  The writes are independent single-task jobs, so several
-    parts are submitted concurrently: the next part's write back-fills the
-    scheduler while the previous one commits (guide §2.6 — overlap
-    independent jobs); a single part is written on the calling thread.
-    File mtimes are then pinned oldest-first, because the file source
-    replays in mtime order."""
+    Each part becomes one parquet file in its own directory.  A part that
+    is an unmodified ``datasets.load`` frame over a single-file table is
+    copied (no Spark job); every other part is a ``coalesce(1)`` write.
+    Those writes are independent single-task jobs, so several are
+    submitted concurrently: the next part's write back-fills the scheduler
+    while the previous one commits (guide §2.6 — overlap independent
+    jobs); a single write runs on the calling thread.  File mtimes are
+    then pinned oldest-first, because the file source replays in mtime
+    order."""
     input_dir = os.path.join(work, "input")
-
-    def _write_part(i: int, p: DataFrame) -> None:
+    writes = []
+    for i, p in enumerate(parts):
         fdir = os.path.join(input_dir, f"f{i:04d}")
+        src = fixture_file(p)
+        if src is None:
+            writes.append((fdir, p))
+        else:
+            os.makedirs(fdir)
+            shutil.copyfile(src, os.path.join(fdir, os.path.basename(src)))
+
+    def _write_part(fdir: str, p: DataFrame) -> None:
         p.coalesce(1).write.mode("overwrite").parquet(fdir)
 
-    if len(parts) > 1:
+    if len(writes) > 1:
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=min(4, len(parts))) as pool:
-            list(pool.map(lambda ip: _write_part(*ip), enumerate(parts)))
-    else:
-        _write_part(0, parts[0])
+        with ThreadPoolExecutor(max_workers=min(4, len(writes))) as pool:
+            list(pool.map(lambda w: _write_part(*w), writes))
+    elif writes:
+        _write_part(*writes[0])
     now = time.time()
     for i in range(len(parts)):
         ts = now - (len(parts) - i) * 10
@@ -511,16 +561,29 @@ class ReplayMetricsListener:
         ops = self._final().get("stateOperators") or []
         return sum(int(o.get("numRowsTotal") or 0) for o in ops)
 
-    @property
-    def final_watermark_ms(self) -> int:
-        """Final event-time watermark as epoch milliseconds (UTC)."""
+    @staticmethod
+    def _watermark_ms(progress: dict) -> int:
         import datetime as _dt
 
-        wm = (self._final().get("eventTime") or {}).get("watermark")
+        wm = (progress.get("eventTime") or {}).get("watermark")
         if not wm:
             return 0
         ts = _dt.datetime.fromisoformat(wm.replace("Z", "+00:00"))
-        return int(ts.timestamp() * 1000)
+        epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+        return (ts - epoch) // _dt.timedelta(milliseconds=1)
+
+    @property
+    def final_watermark_ms(self) -> int:
+        """Final event-time watermark as epoch milliseconds (UTC)."""
+        return self._watermark_ms(self._final())
+
+    @property
+    def watermarks_ms(self) -> list[int]:
+        """Each batch's event-time watermark (epoch ms, UTC), in batch order."""
+        return [
+            self._watermark_ms(p)
+            for p in sorted(self.progresses, key=lambda p: p["batchId"])
+        ]
 
     @property
     def rates(self) -> list[float]:

@@ -68,15 +68,16 @@ def test_two_loads_of_one_table_self_join(spark, sf_dir):
 
 
 # Build jobs a warm query runs in its own job group.  The replay's micro-
-# batches run on the stream thread, outside the group, so
-# stream_wordcount_update counts only its one staging write.  The sim_search,
+# batches run on the stream thread, outside the group, and
+# stream_wordcount_update's input is the untouched documents table, which
+# staging copies without a job.  The sim_search,
 # PQ, MinHash and tokenizer queries build on state trained once per
 # SparkContext (session.memo): a warm build that retrains runs jobs here.
 WARM_BUILD_JOBS = {
     "wordcount_batch": 0,
     "join_broadcast_star": 0,
     "multimodal_decode_bzip2": 0,
-    "stream_wordcount_update": 1,
+    "stream_wordcount_update": 0,
     "sql_tpch_q5": 0,
     "sim_search_ivf": 0,
     "sim_search_recall_ivf": 0,

@@ -345,6 +345,39 @@ def test_bucketed_signature_table_matches_checkpoint(spark, sf_dir):
         )
 
 
+def test_bucketed_signature_table_is_scratch_removed_at_exit(
+    spark, sf_dir, monkeypatch
+):
+    """The bucketed signature table is written under the scratch root with
+    an application-scoped name and removed when the driver exits; nothing
+    lands in the cwd's ``spark-warehouse``."""
+    import atexit
+    import shutil
+    from urllib.parse import urlparse
+
+    from flinkexp_spark.catalog.llm_dedup import _materialize_signatures
+    from flinkexp_spark.streaming.replay import SCRATCH_ROOT
+
+    at_exit = []
+    monkeypatch.setattr(atexit, "register", lambda fn, *a: at_exit.append((fn, a)))
+    sig = _materialize_signatures(spark, sf_dir, "bucketed")
+    (name,) = {t.name for t in spark.catalog.listTables() if t.name.startswith("minhash_sig_")}
+    try:
+        files = [urlparse(f).path for f in sig.inputFiles()]
+        assert files
+        for f in files:
+            assert os.path.commonpath([f, SCRATCH_ROOT]) == SCRATCH_ROOT, f
+            assert spark.sparkContext.applicationId in f
+            assert not f.startswith(os.getcwd() + os.sep), f
+        (args,) = [a for fn, a in at_exit if fn is shutil.rmtree]
+        loc = args[0]
+        assert all(f.startswith(loc + os.sep) for f in files)
+        shutil.rmtree(*args)
+        assert not os.path.exists(loc)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
 def test_bucketed_sig_mode_env_var_drives_lsh(spark, sf_dir, monkeypatch):
     """SPARK_GRAFT_SIG_MATERIALIZE=bucketed (the 100 TB materialization
     path) must flow through the env var into `dedup_minhash_lsh`: same

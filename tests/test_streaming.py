@@ -585,3 +585,159 @@ def test_replay_partitions_follow_session_parallelism(spark):
         assert (spark.conf.get(parts), spark.conf.get(provider)) == before
     finally:
         spark.conf.set(parts, saved)
+
+
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def test_replay_checkpoint_manager_is_scoped_to_the_replay(spark):
+    """Replays run their checkpoints through the FileSystem-API manager,
+    and the key is back to what it was afterwards: unset when it was
+    unset (also after a drain that raises), the old value otherwise."""
+    from flinkexp_spark.streaming.replay import replay, replay_foreach_batch
+
+    assert spark.conf.get(CHECKPOINT_MANAGER, None) is None
+    seen = []
+    replay_foreach_batch(
+        spark,
+        spark.range(5),
+        lambda s: s,
+        lambda df, epoch: seen.append(df.sparkSession.conf.get(CHECKPOINT_MANAGER, None)),
+        output_mode="append",
+    )
+    assert seen and all(
+        v.endswith(".checkpointing.FileSystemBasedCheckpointFileManager") for v in seen
+    ), seen
+    assert spark.conf.get(CHECKPOINT_MANAGER, None) is None
+
+    def poison(s):
+        return s.select(
+            F.when(F.col("id") == 3, F.raise_error(F.lit("poison row 3")))
+            .otherwise(F.col("id"))
+            .alias("id")
+        )
+
+    with pytest.raises(Exception, match="poison row 3"):
+        replay(spark, spark.range(5), poison)
+    assert spark.conf.get(CHECKPOINT_MANAGER, None) is None
+
+    own = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    spark.conf.set(CHECKPOINT_MANAGER, own)
+    try:
+        assert replay(spark, spark.range(5), lambda s: s).count() == 5
+        assert spark.conf.get(CHECKPOINT_MANAGER) == own
+    finally:
+        spark.conf.unset(CHECKPOINT_MANAGER)
+
+
+def test_replay_checkpoint_keeps_hadoop_and_spark_checksums(spark):
+    """A checkpoint written under the replay's manager still has Hadoop's
+    ``.<name>.crc`` beside every log and state file and Spark's
+    ``<name>.crc`` checksum beside every state delta, and a restart from it
+    resumes the state."""
+    from flinkexp_spark.streaming.replay import _stream_partitions, drain_memory_sink
+
+    def counts(df):
+        return {r.w: r["count"] for r in df.collect()}
+
+    with scratch_dir("ckpt_checksums") as work:
+        src, ck = os.path.join(work, "in"), os.path.join(work, "ck")
+        base = time.time()
+        _write_file(spark.createDataFrame([("a",), ("b",), ("a",)], "w string"), src, 0, base)
+        out = (
+            spark.readStream.schema("w string")
+            .parquet(os.path.join(src, "f*"))
+            .groupBy("w")
+            .count()
+        )
+        with _stream_partitions(spark):
+            first = drain_memory_sink(spark, out, output_mode="complete", checkpoint=ck)
+        assert counts(first) == {"a": 2, "b": 1}
+
+        files = {
+            os.path.relpath(os.path.join(d, f), ck)
+            for d, _, names in os.walk(ck)
+            for f in names
+        }
+
+        def hadoop_crc(rel):
+            d, f = os.path.split(rel)
+            return os.path.join(d, f".{f}.crc")
+
+        deltas = sorted(f for f in files if f.endswith(".delta"))
+        assert deltas, sorted(files)
+        for f in ["offsets/0", "commits/0", "metadata", *deltas]:
+            assert hadoop_crc(f) in files, f
+        for f in deltas:
+            assert f + ".crc" in files and hadoop_crc(f + ".crc") in files, f
+
+        _write_file(spark.createDataFrame([("a",)], "w string"), src, 1, base)
+        with _stream_partitions(spark):
+            second = drain_memory_sink(spark, out, output_mode="complete", checkpoint=ck)
+        assert counts(second) == {"a": 3, "b": 1}
+
+
+def test_replay_copies_an_untouched_fixture_without_touching_it(spark, sf_dir, monkeypatch):
+    """An unmodified ``datasets.load`` frame is staged by copying its file;
+    the fixture's inode and mtime (the schema cache's key) are unchanged."""
+    import shutil
+
+    from flinkexp_spark import datasets
+    from flinkexp_spark.streaming.replay import replay
+
+    path = os.path.abspath(datasets.table_path(sf_dir, "events"))
+    events = datasets.load(spark, sf_dir, "events")
+    assert datasets.fixture_file(events) == path
+    assert datasets.fixture_file(events.select("ts")) is None
+
+    copies = []
+    copyfile = shutil.copyfile
+    monkeypatch.setattr(
+        shutil, "copyfile", lambda a, b: copies.append(a) or copyfile(a, b)
+    )
+    before = os.stat(path)
+    out = replay(spark, events, lambda s: s.groupBy().count(), output_mode="complete")
+    assert out.collect()[0][0] == events.count()
+    after = os.stat(path)
+    assert copies == [path]
+    assert (after.st_ino, after.st_nlink, after.st_mtime_ns) == (
+        before.st_ino,
+        before.st_nlink,
+        before.st_mtime_ns,
+    )
+
+
+def test_multi_part_replay_keeps_batches_and_watermarks(spark, sf_dir):
+    """``stream_watermark_append`` replays two time-split files and a
+    sentinel: three data batches and the no-data batch that closes the
+    last windows, each with the watermark the previous batches set
+    (1 hour behind their latest event) and no row dropped."""
+    from flinkexp_spark import datasets
+    from flinkexp_spark.registry import queries
+    from flinkexp_spark.streaming.replay import _time_split, capture_stream_metrics
+
+    parts = _time_split(datasets.load(spark, sf_dir, "events"), 2, "ts")
+
+    def latest_ms(df):
+        return df.agg(F.floor(F.max(F.unix_micros("ts")) / 1000)).first()[0]
+
+    hour = 3_600_000
+    sentinel_ms = 1_893_456_000_000  # the query's sentinel event, 2030-01-01 UTC
+    with capture_stream_metrics(spark) as mx:
+        queries()["stream_watermark_append"](spark, sf_dir)
+        mx.await_batch(3)
+    progresses = sorted(mx.progresses, key=lambda p: p["batchId"])
+    assert [p["batchId"] for p in progresses] == [0, 1, 2, 3]
+    assert [p["numInputRows"] for p in progresses] == [parts[0].count(), parts[1].count(), 1, 0]
+    assert mx.watermarks_ms == [
+        0,
+        latest_ms(parts[0]) - hour,
+        max(latest_ms(parts[0]), latest_ms(parts[1])) - hour,
+        sentinel_ms - hour,
+    ]
+    assert [
+        o["numRowsDroppedByWatermark"] for p in progresses for o in p["stateOperators"]
+    ] == [0, 0, 0, 0]

@@ -7,7 +7,12 @@ the whole suite.
 
 Each query prints one line: the window median, min and max, and the
 build (query callable: plan construction plus the eager jobs it triggers)
-/ drain (noop write) split of the median run.  ``--plans-dir`` also
+/ drain (noop write) split of the median run.  For a streaming query the
+median run's micro-batches follow, one line each from a
+``StreamingQueryListener``: input rows, every ``durationMs`` phase
+(triggerExecution, latestOffset, queryPlanning, walCommit, addBatch,
+commitOffsets, ...) and the summed state-store ``commitTimeMs``, then
+the same figures summed over the run.  ``--plans-dir`` also
 builds the query once more after timing and writes its
 ``.explain("formatted")`` to ``<plans-dir>/<name>_<suffix>.txt``.
 
@@ -20,9 +25,11 @@ from __future__ import annotations
 
 import argparse
 import io
+import json
 import os
 import sys
 import time
+from collections import Counter
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -30,6 +37,62 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bench import converge  # noqa: E402
 from flinkexp_spark.registry import queries  # noqa: E402
 from flinkexp_spark.session import get_session  # noqa: E402
+
+
+class _Progress:
+    """Every streaming query's progress on the session, kept per run.  A
+    query's progress events reach the listener before its termination
+    event, so once every started query has terminated the run's batches
+    are all here."""
+
+    def __init__(self, spark) -> None:
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        self.progresses: list[dict] = []
+        self.started = self.terminated = 0
+        outer = self
+
+        class _L(StreamingQueryListener):
+            def onQueryStarted(self, event):  # noqa: N802 (Spark API names)
+                outer.started += 1
+
+            def onQueryProgress(self, event):  # noqa: N802
+                outer.progresses.append(json.loads(event.progress.json))
+
+            def onQueryIdle(self, event):  # noqa: N802
+                pass
+
+            def onQueryTerminated(self, event):  # noqa: N802
+                outer.terminated += 1
+
+        spark.streams.addListener(_L())
+
+    def settle(self, timeout_s: float = 10.0) -> None:
+        deadline = time.monotonic() + timeout_s
+        while self.terminated < self.started and time.monotonic() < deadline:
+            time.sleep(0.02)
+
+
+def _batch_lines(progresses: list[dict]) -> list[str]:
+    """One line per micro-batch, then their sum (none for batch queries)."""
+    lines, total = [], Counter()
+    for p in progresses:
+        row = Counter({"rows": int(p.get("numInputRows") or 0)})
+        row.update(dict(sorted((p.get("durationMs") or {}).items())))
+        row["stateCommit"] = sum(
+            int(o.get("commitTimeMs") or 0) for o in p.get("stateOperators") or []
+        )
+        total.update(row)
+        lines.append(f"#   {p['runId'][:8]} batch {p['batchId']}: {_fmt(row)}")
+    if progresses:
+        lines.append(f"#   {len(progresses)} batches: {_fmt(total)}")
+    return lines
+
+
+def _fmt(row: Counter) -> str:
+    return " ".join(
+        f"{k}={v}" if k == "rows" else f"{k}={v}ms" for k, v in row.items()
+    )
 
 
 def main() -> None:
@@ -55,33 +118,40 @@ def main() -> None:
             ).save()
 
     qs = queries()
+    stream = _Progress(spark)
 
     for name in args.names.split(","):
         name = name.strip()
         if name not in qs:
             print(f"{name}: NOT REGISTERED", flush=True)
             continue
-        runs: list[tuple[float, float, float]] = []
+        runs: list[tuple[float, float, float, list[dict]]] = []
 
         def run_once() -> float:
+            seen = len(stream.progresses)
             t0 = time.perf_counter()
             df = qs[name](spark, args.sf_dir)
             t1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
-            runs.append((t2 - t0, t1 - t0, t2 - t1))
+            stream.settle()
+            runs.append((t2 - t0, t1 - t0, t2 - t1, stream.progresses[seen:]))
             return t2 - t0
 
         n_runs, med, mn, mx, converged = converge(
             run_once, args.repeats, args.max_attempts
         )
-        build, drain = next((b, d) for t, b, d in runs if t == med)
+        build, drain, batches = next(
+            (b, d, p) for t, b, d, p in runs if t == med
+        )
         print(
             f"# {name}: median={med:.2f}s min={mn:.2f}s max={mx:.2f}s "
             f"build={build:.2f}s drain={drain:.2f}s "
             f"attempts={n_runs}" + ("" if converged else " NOISY"),
             flush=True,
         )
+        for line in _batch_lines(batches):
+            print(line, flush=True)
         if args.plans_dir:
             os.makedirs(args.plans_dir, exist_ok=True)
             out = os.path.join(args.plans_dir, f"{name}_{args.suffix}.txt")
