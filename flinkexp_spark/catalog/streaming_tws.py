@@ -204,7 +204,11 @@ def q_stream_stateful_bootstrap_tws(spark: SparkSession, sf_dir: str) -> DataFra
     else:
         from pyspark.sql.streaming.state import GroupStateTimeout
 
-        from flinkexp_spark.streaming.stateful import OUTPUT_SCHEMA, STATE_SCHEMA
+        from flinkexp_spark.streaming.stateful import (
+            OUTPUT_SCHEMA,
+            STATE_SCHEMA,
+            to_cents,
+        )
 
         sp_map = {
             int(r.user_id): (int(r.n), int(r.cents)) for r in savepoint.collect()
@@ -212,7 +216,6 @@ def q_stream_stateful_bootstrap_tws(spark: SparkSession, sf_dir: str) -> DataFra
 
         def transform(stream):
             def totals(key, pdfs, state):
-                import numpy as np
                 import pandas as pd
 
                 if state.exists:
@@ -221,11 +224,7 @@ def q_stream_stateful_bootstrap_tws(spark: SparkSession, sf_dir: str) -> DataFra
                     n, c = sp_map.get(int(key[0]), (0, 0))
                 for pdf in pdfs:
                     n += len(pdf)
-                    c += int(
-                        np.floor(pdf["value"].to_numpy() * 100 + 0.5)
-                        .astype("int64")
-                        .sum()
-                    )
+                    c += int(to_cents(pdf["value"]).sum())
                 state.update((n, c))
                 yield pd.DataFrame(
                     {"user_id": [key[0]], "n_events": [n], "value_cents": [c]}

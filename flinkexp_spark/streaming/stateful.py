@@ -13,6 +13,7 @@ ordering and break exactly-once replay equivalence).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
@@ -33,6 +34,20 @@ OUTPUT_SCHEMA = StructType(
 STATE_SCHEMA = StructType(
     [StructField("n", LongType()), StructField("cents", LongType())]
 )
+
+
+def to_cents(values) -> np.ndarray:
+    """Amounts -> int64 cents, rounded half away from zero like the oracles'
+    ``round(v * 100, 0)`` (pandas' ``.round()`` is half-even).  A null
+    amount counts 0 cents, so a sum over the result skips it as SQL ``SUM``
+    does; it is never cast, since a NaN cast to int64 is INT64_MIN.
+
+    A ``transformWithStateInPandas`` processor imports it inside
+    ``handleInputRows``: Spark's pre-init runner unpickles the processor in
+    a driver-side Python process that never gets the shipped package
+    archive, so the class must not reference package code as a global."""
+    x = np.asarray(values, dtype="float64") * 100
+    return np.nan_to_num(np.sign(x) * np.floor(np.abs(x) + 0.5)).astype("int64")
 
 
 def running_totals_tws_transform(stream: DataFrame) -> DataFrame:
@@ -58,7 +73,8 @@ def running_totals_tws_transform(stream: DataFrame) -> DataFrame:
             self._state = handle.getValueState("totals", STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
+            # imported here, not used as a global: see to_cents
+            from flinkexp_spark.streaming.stateful import to_cents
 
             # ONE state-server round trip, not two: get() returns None when
             # the key has no state, so the separate exists() probe is a
@@ -68,11 +84,7 @@ def running_totals_tws_transform(stream: DataFrame) -> DataFrame:
             n, cents = prev if prev is not None else (0, 0)
             for pdf in rows:
                 n += len(pdf)
-                # half-away-from-zero (oracle round(v*100, 0) semantics), not
-                # pandas' banker's rounding — values are non-negative amounts
-                cents += int(
-                    np.floor(pdf["value"].to_numpy() * 100 + 0.5).astype("int64").sum()
-                )
+                cents += int(to_cents(pdf["value"]).sum())
             self._state.update((n, cents))
             yield pd.DataFrame(
                 {"user_id": [key[0]], "n_events": [n], "value_cents": [cents]}
@@ -93,8 +105,6 @@ def running_totals_transform(stream: DataFrame) -> DataFrame:
     import pandas as pd
 
     def running_totals(key, pdfs, state):
-        import numpy as np
-
         # Per-user running (count, cents) totals; emits current totals per batch.
         if state.exists:
             n, cents = state.get
@@ -102,11 +112,7 @@ def running_totals_transform(stream: DataFrame) -> DataFrame:
             n, cents = 0, 0
         for pdf in pdfs:
             n += len(pdf)
-            # half-away-from-zero, mirroring the oracle's round(v*100, 0)
-            # (pandas .round() is banker's half-even — diverges on .5 cases)
-            cents += int(
-                np.floor(pdf["value"].to_numpy() * 100 + 0.5).astype("int64").sum()
-            )
+            cents += int(to_cents(pdf["value"]).sum())
         state.update((n, cents))
         yield pd.DataFrame(
             {"user_id": [key[0]], "n_events": [n], "value_cents": [cents]}
@@ -453,12 +459,11 @@ def map_totals_tws_transform(stream: DataFrame) -> DataFrame:
             )
 
         def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
+            # imported here, not used as a global: see to_cents
+            from flinkexp_spark.streaming.stateful import to_cents
 
             for pdf in rows:
-                cents = np.floor(pdf["value"].to_numpy() * 100 + 0.5).astype(
-                    "int64"
-                )
+                cents = to_cents(pdf["value"])
                 g = pd.DataFrame(
                     {"event_type": pdf["event_type"], "cents": cents}
                 ).groupby("event_type", sort=False)
@@ -577,17 +582,14 @@ def bootstrapped_totals_tws_transform(initial_state_df):
                 )
 
             def handleInputRows(self, key, rows, timerValues):
-                import numpy as np
+                # imported here, not used as a global: see to_cents
+                from flinkexp_spark.streaming.stateful import to_cents
 
                 prev = self._state.get()  # None when absent: one IPC, not two
                 n, cents = prev if prev is not None else (0, 0)
                 for pdf in rows:
                     n += len(pdf)
-                    cents += int(
-                        np.floor(pdf["value"].to_numpy() * 100 + 0.5)
-                        .astype("int64")
-                        .sum()
-                    )
+                    cents += int(to_cents(pdf["value"]).sum())
                 self._state.update((n, cents))
                 yield pd.DataFrame(
                     {"user_id": [key[0]], "n_events": [n], "value_cents": [cents]}

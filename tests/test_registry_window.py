@@ -1,138 +1,90 @@
-"""Pin the driver's official-artifact window (registration positions 1-50).
+"""Pin the driver's official window (registration positions 1-50) and the
+order of the whole registry.
 
-The correctness driver checks exactly the first 50 registered queries per
-round (observed in CORRECTNESS_r01..r08: each contains precisely the
-first 50 names in registration order).  The catalog plans each round's
-window as ``_R{N}_NEW`` (queries first registered that round — each earns
-its first official row the round it ships) padded to 50 with
-``_R{N}_REVERIFY`` slots.
+The correctness driver checks exactly the first 50 registered queries
+(each ``CORRECTNESS_r*.json`` artifact holds precisely those names).  The
+catalog pins them in ``catalog._WINDOW``; ``_apply_rotation`` moves them to
+the front of the registry.  The official set is the union of every
+``CORRECTNESS_r*.json`` artifact in the repo, read from the artifacts
+alone.
 
-ROTATION-PROOF BY DESIGN (round-8 verdict #1): earlier versions of this
-file hard-coded the round number and rotted at every rotation.  The
-current round is now DERIVED from the catalog — the highest N for which
-``_R{N}_NEW`` exists — and the closed ledger is every
-``CORRECTNESS_r*.json`` artifact from prior rounds.  Starting a new round
-means adding ``_R{N+1}_NEW`` / ``_R{N+1}_REVERIFY`` / ``_r{N+1}_window()``
-to catalog/__init__.py and pointing ``_apply_rotation`` at it; this test
-follows without edits.
+Changing the window: edit ``_WINDOW``, then re-pin ``REGISTRY_ORDER_SHA256``
+below (registry order is the driver's contract, so a moved position must
+be a conscious edit).
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import pathlib
-import re
 
 import flinkexp_spark.catalog as catalog  # noqa: F401  (import = registration)
 from flinkexp_spark.registry import REGISTRY
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
+WINDOW: tuple[str, ...] = catalog._WINDOW
 
-
-def _current_round() -> int:
-    rounds = [
-        int(m.group(1))
-        for attr in dir(catalog)
-        if (m := re.fullmatch(r"_R(\d+)_NEW", attr))
-    ]
-    assert rounds, "catalog defines no _R{N}_NEW rotation attrs"
-    return max(rounds)
-
-
-ROUND = _current_round()
-NEW: tuple[str, ...] = getattr(catalog, f"_R{ROUND:02d}_NEW")
-REVERIFY: tuple[str, ...] = getattr(catalog, f"_R{ROUND:02d}_REVERIFY")
-WINDOW: tuple[str, ...] = getattr(catalog, f"_r{ROUND:02d}_window")()
-
-
-def _artifact_round(path: pathlib.Path) -> int | None:
-    m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
-    return int(m.group(1)) if m else None
+# sha256 of "\n".join(REGISTRY): all 338 positions, window first.
+REGISTRY_ORDER_SHA256 = (
+    "bfa25902e74cd07658a997e179af9f3210316deb64569bf51588c005dfcb578a"
+)
 
 
 def _official() -> set[str]:
-    """Union of all official rows from rounds BEFORE the current one."""
+    """Union of the official rows of every CORRECTNESS_r*.json artifact."""
     names: set[str] = set()
     for p in REPO.glob("CORRECTNESS_r*.json"):
-        rnd = _artifact_round(p)
-        if rnd is not None and rnd < ROUND:
-            names |= set(json.loads(p.read_text()))
+        names |= set(json.loads(p.read_text()))
     return names
 
 
+def test_registry_order_is_pinned() -> None:
+    names = list(REGISTRY)
+    digest = hashlib.sha256("\n".join(names).encode()).hexdigest()
+    assert (len(names), digest) == (338, REGISTRY_ORDER_SHA256), (
+        "registry order moved — if intended, re-pin REGISTRY_ORDER_SHA256"
+    )
+
+
 def test_rotation_points_at_latest_round() -> None:
-    """_apply_rotation must consume the newest window plan — a stale
-    pointer would ship last round's window again."""
+    """The registry head is ``_WINDOW``, in order."""
     assert tuple(REGISTRY)[: len(WINDOW)] == WINDOW, (
-        f"registry head does not match _r{ROUND:02d}_window() — "
-        "_apply_rotation likely still points at an older round"
+        "registry head does not match catalog._WINDOW"
     )
 
 
 def test_window_is_exactly_50() -> None:
-    assert len(WINDOW) == 50, (
-        f"window plan holds {len(WINDOW)} names — _R{ROUND:02d}_NEW plus "
-        "the pads must fill exactly 50 slots (add re-verify pads or trim)"
+    assert len(WINDOW) == 50 and len(set(WINDOW)) == 50, (
+        f"_WINDOW holds {len(WINDOW)} names ({len(set(WINDOW))} unique) — "
+        "the driver checks exactly 50"
     )
 
 
-def test_prior_windows_were_shipped_exactly() -> None:
-    """Each committed artifact from r05 on must stay in lockstep with its
-    frozen window plan — the ledger's provenance claim ('rN shipped
-    exactly this list') is load-bearing for COVERAGE.md."""
-    for p in REPO.glob("CORRECTNESS_r*.json"):
-        rnd = _artifact_round(p)
-        if rnd is None or rnd < 5 or rnd >= ROUND:
-            continue  # r01-r04 predate the explicit window plans
-        if rnd == 5:
-            planned = set(catalog._R05_WINDOW)
-        else:
-            fn = getattr(catalog, f"_r{rnd:02d}_window", None)
-            if fn is None:
-                continue
-            planned = set(fn())
-        assert set(json.loads(p.read_text())) == planned, (
-            f"{p.name} does not match the frozen _r{rnd:02d}_window() plan"
-        )
-
-
 def test_every_prior_query_is_official() -> None:
-    """r06 closed the ledger: every query that predates the current round
-    must hold an official CORRECTNESS row in some prior artifact.  A hole
-    here means a rotation-planning regression."""
-    official = _official()
-    prior = set(REGISTRY) - set(NEW)
-    never = sorted(prior - official)
+    """Every registered query outside ``_WINDOW`` must already hold an
+    official row.  A new query has none yet, so it must sit in the window
+    to earn one."""
+    never = sorted(set(REGISTRY) - set(WINDOW) - _official())
     assert not never, (
-        f"pre-r{ROUND:02d} queries without an official row: {never}"
+        f"queries outside _WINDOW without an official row (add them to "
+        f"_WINDOW): {never}"
     )
 
 
 def test_new_queries_are_ledgered_and_in_window() -> None:
-    """Every query absent from the prior rounds' artifacts must be listed
-    in _R{N}_NEW (conscious ledger update) and must sit inside the first
-    50 (so it earns an official row the round it ships)."""
-    window = set(list(REGISTRY)[:50])
-    missing = [n for n in NEW if n not in window]
-    assert not missing, (
-        f"_R{ROUND:02d}_NEW queries fell outside the window: {missing}"
-    )
-    # the inverse — anything unaccounted for in the rotation plan — is drift
-    covered = _official() | set(NEW)
-    dropped = sorted(set(REGISTRY) - covered)
-    assert not dropped, (
-        f"queries outside the rotation plan (append to _R{ROUND:02d}_NEW): "
-        f"{dropped}"
-    )
-
-
-def test_reverify_slots_are_already_official() -> None:
-    """Re-verification pads must be queries that already hold an official
-    row — a never-official query in the pad list would mask a carry-over
-    planning bug."""
-    not_official = sorted(set(REVERIFY) - _official())
-    assert not not_official, (
-        f"_R{ROUND:02d}_REVERIFY names lack official rows: {not_official}"
+    """Every registered query without an official row must sit inside the
+    first 50 registry positions — the ones the driver actually checks — so
+    it earns an official row the round it ships, and every ``_WINDOW`` name
+    must resolve to a registered query."""
+    unknown = sorted(set(WINDOW) - set(REGISTRY))
+    assert not unknown, f"_WINDOW names no registered query: {unknown}"
+    head = set(list(REGISTRY)[:50])
+    new = set(REGISTRY) - _official()
+    outside = sorted(new - head)
+    assert not outside, (
+        f"queries without an official row fell outside the first 50 "
+        f"registry positions (add them to _WINDOW): {outside}"
     )
 
 

@@ -5,6 +5,8 @@ helper), rate/socket plumbing."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import time
 import uuid
 from datetime import datetime, timedelta
@@ -326,6 +328,82 @@ def test_transform_with_state_parity(spark):
     )
     got = {r.user_id: (r.n_events, r.value_cents) for r in out.collect()}
     assert got == {7: (2, 375), 9: (1, 75)}
+
+
+def test_cents_fold_skips_null_values(spark):
+    """The stateful totals fold money as SQL ``SUM`` does: a null amount
+    adds no cents (a NaN cast to int64 would add INT64_MIN), and .5 cents
+    round away from zero like the oracles' ``round(v * 100, 0)``."""
+    from flinkexp_spark.streaming.replay import replay
+    from flinkexp_spark.streaming.stateful import running_totals_transform, to_cents
+
+    assert int(to_cents([1.25, float("nan"), 2.0]).sum()) == 325
+    assert list(to_cents([0.125, -0.125])) == [13, -13]
+
+    events = spark.createDataFrame(
+        [(1, datetime(2024, 1, 1), 7, "click", 1.25, "{}"),
+         (2, datetime(2024, 1, 1), 7, "view", None, "{}"),
+         (3, datetime(2024, 1, 1), 7, "click", 2.0, "{}")],
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double, props string",
+    )
+    out = replay(
+        spark, events, running_totals_transform,
+        output_mode="update", use_checkpoint=True, no_data_batches=False,
+    )
+    got = {r.user_id: (r.n_events, r.value_cents) for r in out.collect()}
+    assert got == {7: (3, 325)}
+
+
+class _CaptureStream:
+    """Stands in for a streaming DataFrame: keeps the processor a
+    ``*_tws_transform`` hands to ``transformWithStateInPandas``."""
+
+    def withWatermark(self, *args):
+        return self
+
+    def groupBy(self, *args):
+        return self
+
+    def transformWithStateInPandas(self, statefulProcessor, **kwargs):
+        self.processor = statefulProcessor
+        return self
+
+
+def test_tws_processors_unpickle_without_the_package(tmp_path):
+    """Spark's transformWithState pre-init runner unpickles the processor
+    in a driver-side Python process that never gets the shipped package
+    archive, so no processor may reference package code as a global; one
+    that did failed every ``*_tws`` query run from outside the repo."""
+    from pyspark import cloudpickle
+
+    from flinkexp_spark.streaming import stateful as st
+
+    transforms = {
+        "running_totals": st.running_totals_tws_transform,
+        "sessionize": st.sessionize_tws_transform,
+        "map_totals": st.map_totals_tws_transform,
+        "recent_events": st.recent_events_tws_transform,
+        "bootstrapped_totals": st.bootstrapped_totals_tws_transform(
+            _CaptureStream()
+        ),
+    }
+    processors = {}
+    for name, transform in transforms.items():
+        cap = _CaptureStream()
+        transform(cap)
+        processors[name] = cap.processor
+    blob = tmp_path / "processors.pkl"
+    blob.write_bytes(cloudpickle.dumps(processors))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         "import pickle, sys; print(sorted(pickle.load(open(sys.argv[1], 'rb'))))",
+         str(blob)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.strip() == str(sorted(transforms))
 
 
 def test_tws_timer_sessionizer_matches_timeout_sessionizer(spark):

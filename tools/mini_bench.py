@@ -108,7 +108,12 @@ def main() -> None:
     ap.add_argument("--suffix", default="before")
     args = ap.parse_args()
 
-    spark = get_session(app_name="flinkexp_mini_bench")
+    # no console progress bar: its \r text would swallow the result lines
+    # when stderr and stdout share a pipe
+    spark = get_session(
+        app_name="flinkexp_mini_bench",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
     for t in ("nation", "documents", "events", "lineitem", "embeddings"):
         p = os.path.join(args.sf_dir, f"{t}.parquet")
