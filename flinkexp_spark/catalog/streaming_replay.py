@@ -490,16 +490,33 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "stream_stateful_count",
-    oracle="""
+# The per-user (count, cents) totals contract, shared with
+# stream_stateful_totals_tws (catalog/streaming_tws.py).
+STATEFUL_TOTALS_ORACLE = """
         SELECT user_id, COUNT(*) AS n_events,
                CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
                    AS value_cents
         FROM events GROUP BY user_id
-    """,
-    tags=("T7",),
-)
+    """
+
+
+def keyed_state_replay(
+    spark: SparkSession, df: DataFrame, transform, state_provider: str | None = None
+) -> DataFrame:
+    """Replay ``df`` as ONE update-mode micro-batch through a keyed-state
+    ``transform``, so the emitted rows are each key's final state."""
+    return replay(
+        spark,
+        df,
+        transform,
+        output_mode="update",
+        use_checkpoint=True,
+        no_data_batches=False,
+        state_provider=state_provider,
+    )
+
+
+@register("stream_stateful_count", oracle=STATEFUL_TOTALS_ORACLE, tags=("T7",))
 def q_stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T7: custom stateful per-key process function (Flink KeyedProcessFunction /
     RocksDB keyed-state analog, study/pom.xml:72) via applyInPandasWithState.
@@ -511,14 +528,7 @@ def q_stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkexp_spark.streaming.stateful import running_totals_transform
 
     events = datasets.load(spark, sf_dir, "events")
-    return replay(
-        spark,
-        events,
-        running_totals_transform,
-        output_mode="update",
-        use_checkpoint=True,
-        no_data_batches=False,
-    )
+    return keyed_state_replay(spark, events, running_totals_transform)
 
 
 @register(
@@ -862,9 +872,9 @@ def q_stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "stream_session_timers",
-    oracle="""
+# Batch gaps-and-islands over (user, ts) with a 30-minute gap: the session
+# contract of both timer sessionizers (stream_session_timers_tws too).
+SESSION_TIMERS_ORACLE = """
         WITH ordered AS (
             SELECT user_id, ts, value,
                    CASE WHEN lag(ts) OVER (PARTITION BY user_id
@@ -888,8 +898,39 @@ def q_stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS duration_s
         FROM sessions
         GROUP BY user_id, sid
-    """,
-    tags=("T7", "T4", "T5"),
+    """
+
+
+def session_timers(
+    spark: SparkSession, sf_dir: str, transform, state_provider: str | None = None
+) -> DataFrame:
+    """Replay ``events`` in two time-ordered files through a timer
+    sessionizer.  A far-future sentinel row (user -1, dropped from the
+    result) moves the watermark past every open session, so its final
+    no-data micro-batch fires the remaining timers."""
+    events = datasets.load(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "value"
+    )
+    sentinel = datasets.local_df(
+        spark,
+        [(int(-1), datetime(2030, 1, 1), int(-1), 0.0)],
+        "event_id long, ts timestamp, user_id long, value double",
+    )
+    out = replay(
+        spark,
+        events,
+        transform,
+        output_mode="append",
+        n_files=2,
+        order_col="ts",
+        sentinel_df=sentinel,
+        state_provider=state_provider,
+    )
+    return out.filter(F.col("user_id") >= 0)
+
+
+@register(
+    "stream_session_timers", oracle=SESSION_TIMERS_ORACLE, tags=("T7", "T4", "T5")
 )
 def q_stream_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T7 with TIMERS: custom per-key sessionization through
@@ -904,24 +945,7 @@ def q_stream_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from flinkexp_spark.streaming.stateful import stateful_sessionize
 
-    events = datasets.load(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "value"
-    )
-    sentinel = datasets.local_df(
-        spark,
-        [(int(-1), datetime(2030, 1, 1), int(-1), 0.0)],
-        "event_id long, ts timestamp, user_id long, value double",
-    )
-    out = replay(
-        spark,
-        events,
-        stateful_sessionize,
-        output_mode="append",
-        n_files=2,
-        order_col="ts",
-        sentinel_df=sentinel,
-    )
-    return out.filter(F.col("user_id") >= 0)
+    return session_timers(spark, sf_dir, stateful_sessionize)
 
 
 @register(
@@ -1148,14 +1172,7 @@ def q_stream_ewma_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = datasets.load(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
-    return replay(
-        spark,
-        events,
-        ewma_transform,
-        output_mode="update",
-        use_checkpoint=True,
-        no_data_batches=False,
-    )
+    return keyed_state_replay(spark, events, ewma_transform)
 
 
 HISTQ_WIDTH = 10  # value in [0, ~500] -> <= ~50 bins per window

@@ -1,10 +1,18 @@
 """T7: custom stateful per-key processing (SURVEY §2.2 T7).
 
 Reference analog: Flink's ``KeyedProcessFunction`` with RocksDB keyed state
-(declared via flink-statebackend-rocksdb, study/pom.xml:72).  Spark
-realization: ``applyInPandasWithState`` — Arrow-batched per-key state with
-the streaming state store (RocksDB provider set in the session factory)
-underneath.
+(declared via flink-statebackend-rocksdb, study/pom.xml:72).  Two Spark
+realizations carry each contract: ``applyInPandasWithState`` (one GroupState
+value per key, event-time timeouts) and Spark 4's
+``transformWithStateInPandas`` (typed Value/Map/List state, explicit timers;
+it needs protobuf on the workers, see catalog/streaming_tws.py).  The state
+store is chosen per bounded replay (streaming/replay.py): replays run on the
+in-memory provider, and the tws transforms pass ``state_provider="rocksdb"``,
+the only provider with the column families they need.
+
+Each contract has one implementation that both APIs call: ``fold_totals``
+is the per-key (count, cents) fold and ``sessionize_batch`` the gap-session
+kernel.
 
 Money is accumulated in integer CENTS, not floats: state updates must be
 exact and order-independent (a float running sum would drift per partition
@@ -42,81 +50,42 @@ def to_cents(values) -> np.ndarray:
     amount counts 0 cents, so a sum over the result skips it as SQL ``SUM``
     does; it is never cast, since a NaN cast to int64 is INT64_MIN.
 
-    A ``transformWithStateInPandas`` processor imports it inside
-    ``handleInputRows``: Spark's pre-init runner unpickles the processor in
-    a driver-side Python process that never gets the shipped package
-    archive, so the class must not reference package code as a global."""
+    A ``transformWithStateInPandas`` processor imports this module's helpers
+    inside its handler methods: Spark's pre-init runner unpickles the
+    processor in a driver-side Python process that never gets the shipped
+    package archive, so the class must not reference package code as a
+    global."""
     x = np.asarray(values, dtype="float64") * 100
     return np.nan_to_num(np.sign(x) * np.floor(np.abs(x) + 0.5)).astype("int64")
 
 
-def running_totals_tws_transform(stream: DataFrame) -> DataFrame:
-    """T7 on the Spark 4 ``transformWithStateInPandas`` API (the successor
-    of applyInPandasWithState): typed per-key ValueState managed by a
-    StatefulProcessor, RocksDB-backed, with timer support.
-
-    Same contract as :func:`running_totals_transform` — per-user
-    (count, cents) running totals emitted each batch.
-
-    CAPABILITY-GATED: the state-server IPC needs ``google.protobuf`` on
-    driver AND workers (compat/protobuf_shim.py bridges the host SDK's
-    runtime when pip protobuf is absent).  The registered query
-    ``stream_stateful_totals_tws`` (catalog/streaming_tws.py) probes the
-    worker environment and falls back to :func:`running_totals_transform`
-    — same contract, no extra dependency — when the probe fails.
-    """
+def fold_totals(key, prev, pdfs):
+    """Fold one key's batch into its running ``(n, cents)`` totals, starting
+    from ``prev`` (zero when None).  Returns the new totals and the one-row
+    ``OUTPUT_SCHEMA`` frame that emits them."""
     import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle):
-            self._state = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            # imported here, not used as a global: see to_cents
-            from flinkexp_spark.streaming.stateful import to_cents
-
-            # ONE state-server round trip, not two: get() returns None when
-            # the key has no state, so the separate exists() probe is a
-            # second full protobuf IPC per key for nothing (guide §1.2 —
-            # measured: ~1500 keys x 1 saved round trip per batch)
-            prev = self._state.get()
-            n, cents = prev if prev is not None else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(to_cents(pdf["value"]).sum())
-            self._state.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "value_cents": [cents]}
-            )
-
-        def close(self):
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
+    n, cents = prev if prev is not None else (0, 0)
+    for pdf in pdfs:
+        n += len(pdf)
+        cents += int(to_cents(pdf["value"]).sum())
+    return (n, cents), pd.DataFrame(
+        {"user_id": [key[0]], "n_events": [n], "value_cents": [cents]}
     )
 
 
-def running_totals_transform(stream: DataFrame) -> DataFrame:
-    import pandas as pd
+def running_totals_transform(stream: DataFrame, seed=None) -> DataFrame:
+    """T7 per-user running (count, cents) totals through
+    ``applyInPandasWithState``, emitted for every key each batch.  ``seed``
+    maps a user_id to the totals its key starts from (a savepoint); other
+    keys start at zero."""
+    seed = seed or {}
 
     def running_totals(key, pdfs, state):
-        # Per-user running (count, cents) totals; emits current totals per batch.
-        if state.exists:
-            n, cents = state.get
-        else:
-            n, cents = 0, 0
-        for pdf in pdfs:
-            n += len(pdf)
-            cents += int(to_cents(pdf["value"]).sum())
-        state.update((n, cents))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "value_cents": [cents]}
-        )
+        prev = state.get if state.exists else seed.get(int(key[0]))
+        totals, out = fold_totals(key, prev, pdfs)
+        state.update(totals)
+        yield out
 
     return stream.groupBy("user_id").applyInPandasWithState(
         running_totals,
@@ -127,7 +96,69 @@ def running_totals_transform(stream: DataFrame) -> DataFrame:
     )
 
 
-# --- T7 with TIMERS: per-key sessionization via EventTimeTimeout -------------
+def running_totals_tws_transform(
+    stream: DataFrame, initial_state: DataFrame | None = None
+) -> DataFrame:
+    """T7 on the Spark 4 ``transformWithStateInPandas`` API (the successor
+    of applyInPandasWithState): typed per-key ValueState managed by a
+    StatefulProcessor, RocksDB-backed, with timer support.
+
+    Same contract as :func:`running_totals_transform`.  ``initial_state``
+    holds (user_id, n, cents) savepoint rows that seed each key's state in
+    batch 0 (``handleInitialState``).
+
+    CAPABILITY-GATED: the state-server IPC needs ``google.protobuf`` on
+    driver AND workers (compat/protobuf_shim.py bridges the host SDK's
+    runtime when pip protobuf is absent).  The registered queries probe the
+    worker environment and fall back to :func:`running_totals_transform`
+    when the probe fails (catalog/streaming_tws.py).
+    """
+    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
+
+    class RunningTotals(StatefulProcessor):
+        def init(self, handle):
+            self._state = handle.getValueState("totals", STATE_SCHEMA)
+
+        def handleInitialState(self, key, initialState, timerValues):
+            # one pandas row group per key from the initialState plan
+            self._state.update(
+                (int(initialState["n"].sum()), int(initialState["cents"].sum()))
+            )
+
+        def handleInputRows(self, key, rows, timerValues):
+            # imported here, not used as a global: see to_cents
+            from flinkexp_spark.streaming.stateful import fold_totals
+
+            # get() is None when the key has no state: one state-server
+            # round trip, not an exists() probe plus a get()
+            totals, out = fold_totals(key, self._state.get(), rows)
+            self._state.update(totals)
+            yield out
+
+    return stream.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=RunningTotals(),
+        outputStructType=OUTPUT_SCHEMA,
+        outputMode="Update",
+        timeMode="None",
+        initialState=None
+        if initial_state is None
+        else initial_state.groupBy("user_id"),
+    )
+
+
+def bootstrapped_totals_tws_transform(initial_state_df):
+    """T7 state bootstrap on the forward API: the Flink savepoint-bootstrap
+    analog (State Processor API).  Migrate an engine by materializing its
+    state as a table and resuming the stream on top of it.
+
+    ``initial_state_df`` carries (user_id, n, cents) "savepoint" rows; the
+    returned transform is :func:`running_totals_tws_transform` seeded from
+    them, so the totals emitted per batch equal savepoint + streamed.
+    """
+    return lambda stream: running_totals_tws_transform(stream, initial_state_df)
+
+
+# --- T7 with TIMERS: per-key sessionization -----------------------------------
 
 SESSION_OUT_SCHEMA = StructType(
     [
@@ -149,6 +180,88 @@ SESSION_STATE_SCHEMA = StructType(
 SESSION_GAP_S = 1800
 
 
+def session_frame(key, spans):
+    """ONE ``SESSION_OUT_SCHEMA`` frame for a key's closed sessions, each a
+    (start_ns, last_ns, n, cents) span.  One frame per invocation (guide
+    §4.2): a 1-row frame plus a scalar strftime per session was the
+    handlers' dominant cost at sf1.  np.floor(x/1e9) reproduces the old
+    math.floor(ns/1e9) float64 semantics bit-for-bit."""
+    import pandas as pd
+
+    s = np.array([x[0] for x in spans], dtype="int64")
+    e = np.array([x[1] for x in spans], dtype="int64")
+    return pd.DataFrame(
+        {
+            "user_id": [key[0]] * len(spans),
+            "session_start": pd.Series(s.astype("datetime64[ns]")).dt.strftime(
+                "%Y-%m-%d %H:%M:%S"
+            ),
+            "n_events": [x[2] for x in spans],
+            "cents": [x[3] for x in spans],
+            "duration_s": (np.floor(e / 1e9) - np.floor(s / 1e9)).astype("int64"),
+        }
+    )
+
+
+def sessionize_batch(key, cur, pdfs):
+    """The T7 gap-session kernel for one key's micro-batch.
+
+    Sorts the batch by (ts, event_id), splits it where consecutive events
+    are more than ``SESSION_GAP_S`` apart, and stitches the first run onto
+    the carried session ``cur`` (a (start_ns, last_ns, n, cents) span, or
+    None).  Returns the session left open (None only for an empty batch
+    with nothing carried) and the :func:`session_frame` of the sessions it
+    closed (None when none closed)."""
+    import pandas as pd
+
+    # One key's batch arrives as multiple Arrow chunks in ARRIVAL order,
+    # not time order — one lexsort over the concatenated arrays, else
+    # chunk boundaries split or merge sessions nondeterministically.
+    # Memory = this key's rows in this batch (bounded by batch size, not
+    # stream length).
+    chunks = list(pdfs)
+    whole = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    closed = []
+    if len(whole):
+        gap_ns = SESSION_GAP_S * 1_000_000_000
+        ts = whole["ts"].to_numpy().astype("datetime64[ns]").astype("int64")
+        order = np.lexsort((whole["event_id"].to_numpy(), ts))
+        t = ts[order]
+        c = to_cents(whole["value"].to_numpy()[order])
+        # vectorized gaps-and-islands within the batch; the carried state
+        # stitches across batches
+        brk = np.empty(len(t), dtype=bool)
+        brk[0] = cur is None or (t[0] - cur[1]) > gap_ns
+        brk[1:] = (t[1:] - t[:-1]) > gap_ns
+        starts = np.flatnonzero(brk)
+        ends = np.append(starts[1:], len(t))
+        if brk[0] and cur is not None:
+            # the batch's first row exceeds the gap: the carried session
+            # closes now
+            closed.append(cur)
+            cur = None
+        if not brk[0]:
+            # rows [0, first break) continue the carried session
+            cont = int(starts[0]) if len(starts) else len(t)
+            cur = (
+                cur[0],
+                max(cur[1], int(t[cont - 1])),  # chunks can arrive
+                # time-interleaved within a batch; last must not regress
+                cur[2] + cont,
+                cur[3] + int(c[:cont].sum()),
+            )
+            if len(starts):  # a later break closes the carried session
+                closed.append(cur)
+                cur = None
+        for i, (s, e) in enumerate(zip(starts, ends)):
+            span = (int(t[s]), int(t[e - 1]), int(e - s), int(c[s:e].sum()))
+            if i < len(starts) - 1:
+                closed.append(span)
+            else:
+                cur = span  # the last span stays open for the next batch
+    return cur, (session_frame(key, closed) if closed else None)
+
+
 def stateful_sessionize(stream: DataFrame) -> DataFrame:
     """T7 with event-time TIMERS: gap-based sessionization through
     ``applyInPandasWithState`` + ``EventTimeTimeout`` — the full Flink
@@ -164,98 +277,18 @@ def stateful_sessionize(stream: DataFrame) -> DataFrame:
     """
 
     def sessions(key, pdfs, state):
-        import numpy as np
-        import pandas as pd
-
-        def frame(spans):
-            # ONE output frame per invocation (guide §4.2): the old 1-row
-            # pd.DataFrame + scalar strftime per closed session was the
-            # handler's dominant cost at sf1 (~15k keys x 3 batches of
-            # invocations).  np.floor(x/1e9) reproduces the old
-            # math.floor(ns/1e9) float64 semantics bit-for-bit.
-            s = np.array([x[0] for x in spans], dtype="int64")
-            e = np.array([x[1] for x in spans], dtype="int64")
-            return pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(spans),
-                    "session_start": pd.Series(
-                        s.astype("datetime64[ns]")
-                    ).dt.strftime("%Y-%m-%d %H:%M:%S"),
-                    "n_events": [x[2] for x in spans],
-                    "cents": [x[3] for x in spans],
-                    "duration_s": (
-                        np.floor(e / 1e9) - np.floor(s / 1e9)
-                    ).astype("int64"),
-                }
-            )
-
         if state.hasTimedOut:
-            s_ns, e_ns, n, cents = state.get
+            span = state.get
             state.remove()
-            yield frame([(s_ns, e_ns, n, cents)])
+            yield session_frame(key, [span])
             return
-        cur = state.get if state.exists else None
-        closed = []
-        gap_ns = SESSION_GAP_S * 1_000_000_000
-        # One key's batch arrives as multiple Arrow chunks in ARRIVAL order,
-        # not time order — one lexsort over the concatenated arrays, else
-        # chunk boundaries split or merge sessions nondeterministically.
-        # Memory = this key's rows in this batch (bounded by batch size,
-        # not stream length).  lexsort on the extracted columns replaces
-        # the old concat + DataFrame.sort_values (same (ts, event_id)
-        # order, no sorted-frame copy).
-        chunks = list(pdfs)
-        whole = (
-            chunks[0]
-            if len(chunks) == 1
-            else pd.concat(chunks, ignore_index=True)
-        )
-        if len(whole):
-            ts_np = (
-                whole["ts"].to_numpy().astype("datetime64[ns]").astype("int64")
-            )
-            order = np.lexsort((whole["event_id"].to_numpy(), ts_np))
-            t = ts_np[order]
-            c = np.floor(
-                whole["value"].to_numpy()[order] * 100 + 0.5
-            ).astype("int64")
-            # vectorized gaps-and-islands within the batch; the carried
-            # state stitches across batches
-            brk = np.empty(len(t), dtype=bool)
-            brk[0] = cur is None or (t[0] - cur[1]) > gap_ns
-            brk[1:] = (t[1:] - t[:-1]) > gap_ns
-            starts = np.flatnonzero(brk)
-            ends = np.append(starts[1:], len(t))
-            if brk[0] and cur is not None:
-                # batch's first row exceeds the gap: the carried session
-                # closes NOW (the row loop's "emit then open" first branch)
-                closed.append(cur)
-                cur = None
-            if not brk[0]:
-                # rows [0, first break) continue the carried session
-                cont = int(starts[0]) if len(starts) else len(t)
-                cur = (
-                    cur[0],
-                    max(cur[1], int(t[cont - 1])),  # chunks can arrive
-                    # time-interleaved within a batch; last must not regress
-                    cur[2] + cont,
-                    cur[3] + int(c[:cont].sum()),
-                )
-                if len(starts):  # a later break closes the carried session
-                    closed.append(cur)
-                    cur = None
-            for i, (s, e) in enumerate(zip(starts, ends)):
-                span = (int(t[s]), int(t[e - 1]), int(e - s), int(c[s:e].sum()))
-                if i < len(starts) - 1:
-                    closed.append(span)
-                else:
-                    cur = span  # last span stays open for the next batch
+        cur, out = sessionize_batch(key, state.get if state.exists else None, pdfs)
         state.update(cur)
         # re-arm the event-time timer: fire when the watermark passes the
         # session's gap horizon (ms epoch, per the GroupState API)
         state.setTimeoutTimestamp(cur[1] // 1_000_000 + SESSION_GAP_S * 1000)
-        if closed:
-            yield frame(closed)
+        if out is not None:
+            yield out
 
     return (
         stream.withWatermark("ts", "1 second")
@@ -293,10 +326,10 @@ def sessionize_tws_transform(stream: DataFrame) -> DataFrame:
     .registerEventTimeTimer`` + ``onTimer``), one step more explicit than
     :func:`stateful_sessionize`'s EventTimeTimeout.
 
-    Same contract as :func:`stateful_sessionize` (identical oracle).
-    Capability-gated like :func:`running_totals_tws_transform`.
+    Same contract as :func:`stateful_sessionize` (identical oracle, same
+    :func:`sessionize_batch` kernel).  Capability-gated like
+    :func:`running_totals_tws_transform`.
     """
-    import pandas as pd
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
     class Sessionizer(StatefulProcessor):
@@ -304,115 +337,37 @@ def sessionize_tws_transform(stream: DataFrame) -> DataFrame:
             self._handle = handle
             self._state = handle.getValueState("session", SESSION_TWS_STATE_SCHEMA)
 
-        @staticmethod
-        def _frame(key, spans):
-            # ONE output frame per invocation — same vectorized emit as
-            # stateful_sessionize.frame (np.floor(x/1e9) == the old
-            # math.floor(ns/1e9) float64 semantics bit-for-bit).
-            import numpy as np
-
-            s = np.array([x[0] for x in spans], dtype="int64")
-            e = np.array([x[1] for x in spans], dtype="int64")
-            return pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(spans),
-                    "session_start": pd.Series(
-                        s.astype("datetime64[ns]")
-                    ).dt.strftime("%Y-%m-%d %H:%M:%S"),
-                    "n_events": [x[2] for x in spans],
-                    "cents": [x[3] for x in spans],
-                    "duration_s": (
-                        np.floor(e / 1e9) - np.floor(s / 1e9)
-                    ).astype("int64"),
-                }
-            )
-
         def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
+            # imported here, not used as a global: see to_cents
+            from flinkexp_spark.streaming.stateful import sessionize_batch
 
-            gap_ns = SESSION_GAP_S * 1_000_000_000
             cur = None
             prev = self._state.get()  # None when absent: one IPC, not two
             if prev is not None:
-                s_ns, e_ns, n, cents, timer_ms = prev
-                cur = (s_ns, e_ns, n, cents)
+                cur = tuple(prev[:4])
                 # the armed timer is stale the moment new data arrives
-                self._handle.deleteTimer(timer_ms)
-            closed = []
-            chunks = list(rows)
-            whole = (
-                chunks[0]
-                if len(chunks) == 1
-                else pd.concat(chunks, ignore_index=True)
-            )
-            if len(whole):
-                # same vectorized gaps-and-islands as stateful_sessionize:
-                # lexsort the batch, break where the gap exceeds, stitch
-                # the carried session across batches
-                ts_np = (
-                    whole["ts"]
-                    .to_numpy()
-                    .astype("datetime64[ns]")
-                    .astype("int64")
-                )
-                order = np.lexsort((whole["event_id"].to_numpy(), ts_np))
-                t = ts_np[order]
-                c = np.floor(
-                    whole["value"].to_numpy()[order] * 100 + 0.5
-                ).astype("int64")
-                brk = np.empty(len(t), dtype=bool)
-                brk[0] = cur is None or (t[0] - cur[1]) > gap_ns
-                brk[1:] = (t[1:] - t[:-1]) > gap_ns
-                starts = np.flatnonzero(brk)
-                ends = np.append(starts[1:], len(t))
-                if brk[0] and cur is not None:
-                    closed.append(cur)
-                    cur = None
-                if not brk[0]:
-                    cont = int(starts[0]) if len(starts) else len(t)
-                    cur = (
-                        cur[0],
-                        max(cur[1], int(t[cont - 1])),
-                        cur[2] + cont,
-                        cur[3] + int(c[:cont].sum()),
-                    )
-                    if len(starts):
-                        closed.append(cur)
-                        cur = None
-                for i, (s, e) in enumerate(zip(starts, ends)):
-                    span = (
-                        int(t[s]), int(t[e - 1]), int(e - s), int(c[s:e].sum())
-                    )
-                    if i < len(starts) - 1:
-                        closed.append(span)
-                    else:
-                        cur = span
+                self._handle.deleteTimer(prev[4])
+            cur, out = sessionize_batch(key, cur, rows)
             if cur is not None:
                 # re-arm: fire when the watermark passes the gap horizon
                 timer_ms = cur[1] // 1_000_000 + SESSION_GAP_S * 1000
                 self._handle.registerTimer(timer_ms)
                 self._state.update((*cur, timer_ms))
-            else:
-                # every session closed in-band; nothing to time out
-                self._state.clear()
-            if closed:
-                yield self._frame(key, closed)
+            if out is not None:
+                yield out
 
         def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
             # No deleteTimer here: PySpark 4.1 removes each expired timer
             # right after this hook returns (stateful_processor_util.py), and
             # a redundant delete logs a TimerStateImpl WARN per firing.
-            pass
-            # stale timers are deleted on every update, so a firing timer is
-            # the live horizon: flush the open session
+            # Stale timers are deleted on every update, so a firing timer is
+            # the live horizon: flush the open session.
+            from flinkexp_spark.streaming.stateful import session_frame
+
             prev = self._state.get()  # None when absent: one IPC, not two
             if prev is not None:
-                s_ns, e_ns, n, cents, _timer_ms = prev
                 self._state.clear()
-                yield self._frame(key, [(s_ns, e_ns, n, cents)])
-
-        def close(self):
-            pass
+                yield session_frame(key, [prev[:4]])
 
     return (
         stream.withWatermark("ts", "1 second")
@@ -484,9 +439,6 @@ def map_totals_tws_transform(stream: DataFrame) -> DataFrame:
                 out, columns=["user_id", "event_type", "n", "cents"]
             )
 
-        def close(self):
-            pass
-
     return stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=MapTotals(),
         outputStructType=MAP_TOTALS_OUT_SCHEMA,
@@ -540,73 +492,12 @@ def recent_events_tws_transform(stream: DataFrame) -> DataFrame:
                 }
             )
 
-        def close(self):
-            pass
-
     return stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=RecentEvents(),
         outputStructType=RECENT_OUT_SCHEMA,
         outputMode="Update",
         timeMode="None",
     )
-
-
-def bootstrapped_totals_tws_transform(initial_state_df):
-    """T7 state bootstrap on the forward API: seed per-key state from a
-    BATCH DataFrame via ``initialState`` + ``handleInitialState`` — the
-    Flink savepoint-bootstrap analog (State Processor API): migrate an
-    engine by materializing its state as a table and resuming the stream
-    on top of it.
-
-    ``initial_state_df`` carries (user_id, n, cents) "savepoint" rows;
-    the returned transform seeds ValueState from them in batch 0, then
-    accumulates streamed events on top — totals emitted per batch equal
-    savepoint + streamed.
-    """
-
-    def transform(stream: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-        class Bootstrapped(StatefulProcessor):
-            def init(self, handle):
-                self._state = handle.getValueState("totals", STATE_SCHEMA)
-
-            def handleInitialState(self, key, initialState, timerValues):
-                # one pandas row group per key from the initialState plan
-                self._state.update(
-                    (
-                        int(initialState["n"].sum()),
-                        int(initialState["cents"].sum()),
-                    )
-                )
-
-            def handleInputRows(self, key, rows, timerValues):
-                # imported here, not used as a global: see to_cents
-                from flinkexp_spark.streaming.stateful import to_cents
-
-                prev = self._state.get()  # None when absent: one IPC, not two
-                n, cents = prev if prev is not None else (0, 0)
-                for pdf in rows:
-                    n += len(pdf)
-                    cents += int(to_cents(pdf["value"]).sum())
-                self._state.update((n, cents))
-                yield pd.DataFrame(
-                    {"user_id": [key[0]], "n_events": [n], "value_cents": [cents]}
-                )
-
-            def close(self):
-                pass
-
-        return stream.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=Bootstrapped(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-            initialState=initial_state_df.groupBy("user_id"),
-        )
-
-    return transform
 
 
 EWMA_OUTPUT_SCHEMA = StructType(

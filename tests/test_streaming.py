@@ -331,11 +331,17 @@ def test_transform_with_state_parity(spark):
 
 
 def test_cents_fold_skips_null_values(spark):
-    """The stateful totals fold money as SQL ``SUM`` does: a null amount
-    adds no cents (a NaN cast to int64 would add INT64_MIN), and .5 cents
-    round away from zero like the oracles' ``round(v * 100, 0)``."""
+    """The stateful totals and the session kernel fold money as SQL ``SUM``
+    does: a null amount adds no cents (a NaN cast to int64 would add
+    INT64_MIN), and .5 cents round away from zero like the oracles'
+    ``round(v * 100, 0)``."""
+    from flinkexp_spark.datasets import local_df
     from flinkexp_spark.streaming.replay import replay
-    from flinkexp_spark.streaming.stateful import running_totals_transform, to_cents
+    from flinkexp_spark.streaming.stateful import (
+        running_totals_transform,
+        stateful_sessionize,
+        to_cents,
+    )
 
     assert int(to_cents([1.25, float("nan"), 2.0]).sum()) == 325
     assert list(to_cents([0.125, -0.125])) == [13, -13]
@@ -353,6 +359,26 @@ def test_cents_fold_skips_null_values(spark):
     )
     got = {r.user_id: (r.n_events, r.value_cents) for r in out.collect()}
     assert got == {7: (3, 325)}
+
+    t0 = datetime(2024, 1, 1)
+    schema = "event_id long, ts timestamp, user_id long, value double"
+    events = local_df(
+        spark,
+        [(1, t0, 7, 1.25),
+         (2, t0 + timedelta(minutes=1), 7, None),
+         (3, t0 + timedelta(minutes=2), 7, 2.0)],
+        schema,
+    )
+    sentinel = local_df(spark, [(-1, datetime(2030, 1, 1), -1, 0.0)], schema)
+    out = replay(
+        spark, events, stateful_sessionize, output_mode="append",
+        n_files=2, order_col="ts", sentinel_df=sentinel,
+    )
+    sessions = [
+        (r.user_id, r.session_start, r.n_events, r.cents, r.duration_s)
+        for r in out.collect() if r.user_id >= 0
+    ]
+    assert sessions == [(7, "2024-01-01 00:00:00", 3, 325, 120)]
 
 
 class _CaptureStream:
@@ -404,6 +430,76 @@ def test_tws_processors_unpickle_without_the_package(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert proc.stdout.strip() == str(sorted(transforms))
+
+
+PROBE_TWICE_SCRIPT = """
+import json, sys
+
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+
+from flinkexp_spark.catalog.streaming_tws import workers_have_protobuf
+from flinkexp_spark.compat.protobuf_shim import ensure_protobuf
+
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+sc = spark.sparkContext
+ensure_protobuf()  # as the queries do: after the JVM started
+results, jobs = [], []
+for i in range(2):
+    sc.setJobGroup(f"probe{i}", "workers_have_protobuf")
+    results.append(workers_have_protobuf(spark))
+    jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"probe{i}")))
+print(json.dumps({"results": results, "jobs": jobs}))
+spark.stop()
+"""
+
+
+def test_protobuf_probe_runs_once_per_context(tmp_path):
+    """The driver's shape: a plain session started outside the repo with no
+    ``PYTHONPATH``, whose workers cannot import protobuf even once the
+    driver has the shim.  The probe's answer, True or False, is memoized
+    per SparkContext, so the second tws query runs no probe job."""
+    import json
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", PROBE_TWICE_SCRIPT, repo],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["jobs"] == [1, 0], out
+    assert out["results"][0] == out["results"][1], out
+
+
+def _tws_queries():
+    from flinkexp_spark.registry import queries
+
+    return sorted(n for n in queries() if n.endswith("_tws"))
+
+
+@pytest.mark.parametrize("name", _tws_queries())
+def test_tws_fallbacks_match_oracles(spark, duck, sf_dir, name, monkeypatch):
+    """The fallback each ``*_tws`` query runs when the workers cannot import
+    protobuf (a plain driver-owned session) must match the same oracle as
+    its tws path, which the engine session takes."""
+    from flinkexp_spark.catalog import streaming_tws
+    from flinkexp_spark.compat.protobuf_shim import ensure_protobuf
+    from flinkexp_spark.testing.oracle import compare_query
+
+    probes = []
+    monkeypatch.setattr(
+        streaming_tws, "workers_have_protobuf", lambda s: probes.append(s) and False
+    )
+    res = compare_query(spark, duck, name, sf_dir)
+    assert res.ok, f"{name}: {res.detail}"
+    assert probes or not ensure_protobuf()
 
 
 def test_tws_timer_sessionizer_matches_timeout_sessionizer(spark):
