@@ -39,9 +39,9 @@ def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
     checks.  State for a key expires once the watermark passes its event
     time + 2h; plain dropDuplicates would keep it forever.
     """
-    events = datasets.load(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts"
-    )
+    # untouched, so the replay copies the fixture file; the resent tail is
+    # derived from the same frame, so both parts share its schema
+    events = datasets.load(spark, sf_dir, "events")
     # at-least-once tail: rows within 30 min of the stream's end, resent in
     # a second delivery (1-row max aggregate broadcast, no driver collect)
     cutoff = events.agg(
@@ -53,7 +53,8 @@ def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
 
     def transform(stream: DataFrame) -> DataFrame:
         return (
-            stream.withWatermark("ts", "2 hours")
+            stream.select("event_id", "user_id", "event_type", "ts")
+            .withWatermark("ts", "2 hours")
             .dropDuplicatesWithinWatermark(["event_id"])
             .select("event_id", "user_id", "event_type")
         )

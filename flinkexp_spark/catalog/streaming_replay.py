@@ -739,9 +739,8 @@ def q_stream_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkexp_spark.operators.asof import asof_join
     from flinkexp_spark.streaming.replay import replay_foreach_batch, scratch_dir
 
-    events = datasets.load(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
+    # untouched, so the replay copies the fixture file; projected in-stream
+    events = datasets.load(spark, sf_dir, "events")
     # One version row per (customer, date): (o_custkey, o_orderdate) is NOT
     # unique in orders, and an ambiguous version key would make the as-of
     # match nondeterministic (whichever tied row sorts last wins).  The
@@ -768,7 +767,11 @@ def q_stream_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             enriched.write.mode("append").parquet(outdir)
 
         replay_foreach_batch(
-            spark, events, lambda s: s, writer, output_mode="append"
+            spark,
+            events,
+            lambda s: s.select("event_id", "ts", "user_id", "event_type"),
+            writer,
+            output_mode="append",
         )
         out = spark.read.parquet(outdir)
         return (

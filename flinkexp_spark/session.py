@@ -27,6 +27,15 @@ state backend (reference: study/pom.xml:72).  Our equivalent is a configured
   cached zip importer (~0.2 s per task); the entry point re-reads an
   archive only when it changed.  A session built elsewhere keeps the stock
   worker unless it sets the same two things (``PYTHONPATH`` and the key).
+* **Fork-free local file system** ``compat/jvm/NioLocalFileSystem.java``
+  (``spark.hadoop.fs.file.impl``, its jar appended to
+  ``spark.driver.extraClassPath``): without a native Hadoop library the
+  stock ``file:`` file system forks ``chmod`` for every file create and
+  ``mkdirs`` (41 forks per ``stream_wordcount_update`` replay); this one
+  sets the same modes through java.nio and writes the same ``.crc``
+  files.  Only for ``local`` masters, where the executors run in the
+  driver's JVM; a cluster executor would not have the jar.  A session
+  built elsewhere keeps the stock file system.
 
 :func:`ship_package` is the one way Python workers get the package: the
 registry calls it before every query body, on whatever session the caller
@@ -41,6 +50,7 @@ from __future__ import annotations
 import hashlib
 import io
 import os
+import re
 import uuid
 import zipfile
 from collections.abc import Callable, Hashable
@@ -56,6 +66,8 @@ __all__ = [
 _PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
 # stdlib-only, one module: every Python worker gets it on its PYTHONPATH
 _PYWORKER_DIR = os.path.join(_PACKAGE_DIR, "compat", "pyworker")
+# built from compat/jvm/*.java by tools/build_jvm.py
+JVM_JAR = os.path.join(_PACKAGE_DIR, "compat", "jvm", "flinkexp-jvm.jar")
 ARCHIVE_PREFIX = "flinkexp_spark-"
 # (applicationId, key) -> built value; only the live application's entries
 _MEMO: dict[tuple[str, Hashable], Any] = {}
@@ -93,7 +105,8 @@ def get_session(
     """Build (or reuse) the engine's SparkSession with scale-safe defaults.
 
     In local mode there is one JVM; on a real cluster the same config applies
-    unchanged — nothing here assumes local execution.
+    unchanged, except that only a local master gets the java.nio ``file:``
+    file system (its jar is on the driver's classpath alone).
     """
     cpus = default_cpus()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -151,7 +164,15 @@ def get_session(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", default_driver_memory())
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # one JVM runs the driver and the executors only in local mode
+    if re.fullmatch(r"local(\[.*\])?", master):
+        classpath = conf.get("spark.driver.extraClassPath")
+        conf["spark.driver.extraClassPath"] = (
+            f"{classpath}{os.pathsep}{JVM_JAR}" if classpath else JVM_JAR
+        )
+        conf.setdefault("spark.hadoop.fs.file.impl", "flinkexp.NioLocalFileSystem")
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -10,7 +10,9 @@ perf-relevant tree and the trip-wire compares that, falling back to git
 HEAD only for artifacts predating the field.
 
 :func:`package_files` is also the file list ``session.ship_package`` zips
-for Python workers.
+for Python workers.  The hash also covers the package's JVM source and
+its built jar (``compat/jvm``), which the session puts on the driver's
+classpath.
 """
 
 from __future__ import annotations
@@ -27,21 +29,22 @@ _PACKAGE = "flinkexp_spark"
 _PERF_FILES = ("bench.py", "__spark_entry__.py")
 
 
-def package_files(repo: str = _REPO) -> list[str]:
-    """Every .py file under the ``flinkexp_spark`` package, sorted."""
+def package_files(repo: str = _REPO, suffixes: tuple[str, ...] = (".py",)) -> list[str]:
+    """Every file under the ``flinkexp_spark`` package with one of
+    ``suffixes`` (default: the .py files), sorted."""
     paths: list[str] = []
     for dirpath, dirnames, filenames in os.walk(os.path.join(repo, _PACKAGE)):
         dirnames[:] = [d for d in dirnames if d != "__pycache__"]
         for fn in filenames:
-            if fn.endswith(".py"):
+            if fn.endswith(suffixes):
                 paths.append(os.path.join(dirpath, fn))
     return sorted(paths)
 
 
 def source_tree_hash(repo: str = _REPO) -> str:
-    """SHA-256 over (relpath, content) of every perf-relevant .py file."""
+    """SHA-256 over (relpath, content) of every perf-relevant file."""
     h = hashlib.sha256()
-    paths = package_files(repo)
+    paths = package_files(repo, (".py", ".java", ".jar"))
     for fn in _PERF_FILES:
         p = os.path.join(repo, fn)
         if os.path.exists(p):

@@ -30,10 +30,9 @@ Key mechanics:
 * Replay checkpoints go through Hadoop's ``FileSystem`` API
   (``FileSystemBasedCheckpointFileManager``), set only inside the
   replay-scoped conf context.  Without a native Hadoop library every
-  local file create forks ``chmod``, and every rename through Spark's
-  default ``FileContext`` manager also forks ``readlink``: timed in the
-  driver JVM on a 4-core host, a rename took 31 ms that way and 0.9 ms
-  through ``FileSystem`` (a create+close 8.9 ms either way).  Each
+  rename through Spark's default ``FileContext`` manager forks
+  ``readlink``: timed in the driver JVM on a 4-core host, a rename took
+  31 ms that way and 0.9 ms through ``FileSystem``.  Each
   micro-batch renames its offsets and commit files, every state
   partition's delta and the checksum file of each.  The ``FileSystem``
   manager is only as safe as the target file system's rename; a replay
@@ -41,6 +40,11 @@ Key mechanics:
   returns, and a local ``rename(2)`` is atomic.  Hadoop ``.crc`` files and
   Spark's checkpoint checksum files are written and verified either way.
   Streaming jobs outside the rig keep the session's default manager.
+* File creates and ``mkdirs`` no longer fork ``chmod``: a ``get_session``
+  session with a local master sets permissions through java.nio
+  (``compat/jvm``, see ``session.py``), which took a warm
+  ``stream_wordcount_update`` replay from 41 ``chmod`` forks (5-7 ms
+  each) to none.  A session built elsewhere still forks them.
 """
 
 from __future__ import annotations
@@ -66,9 +70,11 @@ def _scratch_root() -> str:
     or on a virtual disk, ``stream_wordcount_update`` at sf0.1 took
     1.64 vs 1.73 s (median of 3 sessions each, 4-core host; sessions
     ranged 1.3-2.7 s).  The per-file cost is Hadoop's: without a native
-    library it forks ``chmod`` for every file create and ``readlink`` for
-    every ``FileContext`` rename, which is why replay checkpoints use the
-    ``FileSystem``-API manager (module docstring).  `SPARK_GRAFT_SCRATCH`
+    library it forks ``readlink`` for every ``FileContext`` rename, which
+    is why replay checkpoints use the ``FileSystem``-API manager, and the
+    stock local file system forks ``chmod`` for every file create, which
+    is why ``get_session`` swaps in a java.nio one (module docstring).
+    `SPARK_GRAFT_SCRATCH`
     overrides the root (point it at a real disk if the fixtures outgrow
     RAM — replay scratch is fixture-sized, MBs).
     """
