@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from flinkexp_spark import datasets, sources
 from flinkexp_spark.catalog._util import o_dsum
 from flinkexp_spark.registry import register
-from flinkexp_spark.streaming.replay import scratch_dir
+from flinkexp_spark.streaming.replay import replay, scratch_dir
 
 
 @register(
@@ -219,7 +219,6 @@ def q_sink_kv_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     envelope (S5) uses the identical writer shape.
     """
     from flinkexp_spark import sources
-    from flinkexp_spark.streaming.replay import replay_foreach_batch
 
     events = datasets.load(spark, sf_dir, "events").filter(
         F.col("event_id") < 3000
@@ -232,9 +231,7 @@ def q_sink_kv_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         def transform(stream: DataFrame) -> DataFrame:
             return stream.groupBy("event_type").agg(F.count("*").alias("n"))
 
-        replay_foreach_batch(
-            spark, events, transform, writer, output_mode="complete"
-        )
+        replay(spark, events, transform, "complete", sink=writer)
         store = sources.read_kv_spool(spool)
     rows = [(k[0], int(v[0])) for k, v in store.items()]
     return datasets.local_df(spark, rows, "k string, n long")
@@ -424,7 +421,6 @@ def q_sink_wide_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachPartition on the executors, later epochs winning per cell like
     HBase timestamps.  The store's final scan is the result.
     """
-    from flinkexp_spark.streaming.replay import replay_foreach_batch
 
     events = datasets.load(spark, sf_dir, "events").filter(
         F.col("event_id") < 3000
@@ -445,9 +441,7 @@ def q_sink_wide_column(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("cents"),
             )
 
-        replay_foreach_batch(
-            spark, events, transform, writer, output_mode="complete"
-        )
+        replay(spark, events, transform, "complete", sink=writer)
         store = sources.read_wide_column_spool(spool)
     rows = [
         (int(rk), int(cells[("stats", "n")]), int(cells[("stats", "cents")]))

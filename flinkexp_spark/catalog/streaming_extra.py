@@ -108,7 +108,7 @@ def q_stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from flinkexp_spark.operators.maintenance import merge_upsert
-    from flinkexp_spark.streaming.replay import replay_foreach_batch, scratch_dir
+    from flinkexp_spark.streaming.replay import scratch_dir
 
     events = datasets.load(spark, sf_dir, "events")
     out_schema = "user_id long, ts timestamp, event_type string, value double"
@@ -143,14 +143,13 @@ def q_stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(snap, ignore_errors=True)
             os.rename(snap + ".next", snap)
 
-        replay_foreach_batch(
+        replay(
             spark,
             events.select("user_id", "ts", "event_id", "event_type", "value"),
             lambda s: s,
-            writer,
-            output_mode="append",
             n_files=3,
             order_col="ts",
+            sink=writer,
         )
         rows = spark.read.schema(out_schema).parquet(snap).collect()
     out = datasets.local_df(
@@ -214,14 +213,18 @@ def q_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("score").cast("long").alias("score_sum"),
         )
     )
-    from flinkexp_spark.streaming.replay import drain_memory_sink
+    import os
 
-    # available_now=False: availableNow snapshots ONE offset step of a
-    # SimpleDataSourceStreamReader; the continuous-trigger drain runs all
-    # pages (see drain_memory_sink)
-    out = drain_memory_sink(
-        spark, agg, output_mode="complete", available_now=False
-    )
+    from flinkexp_spark.streaming.replay import drain_memory_sink, scratch_dir
+
+    with scratch_dir("pystream") as work:
+        # available_now=False: availableNow snapshots ONE offset step of a
+        # SimpleDataSourceStreamReader; the continuous-trigger drain runs
+        # all pages (see drain_memory_sink)
+        out = drain_memory_sink(
+            spark, agg, os.path.join(work, "checkpoint"), "complete",
+            available_now=False,
+        )
     return out.orderBy("bucket")
 
 
@@ -277,22 +280,14 @@ def q_stream_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     are collected by the same listener but asserted only in pytest
     (tests/test_streaming.py) — hashing them would pin noise.
     """
-    import uuid
-
-    from flinkexp_spark.streaming.replay import (
-        _stage,
-        _stream_partitions,
-        _time_split,
-        capture_stream_metrics,
-        scratch_dir,
-    )
+    from flinkexp_spark.streaming.replay import capture_stream_metrics
 
     events = datasets.load(spark, sf_dir, "events").select(
         "event_id", "ts", "value"
     )
-    with scratch_dir("observe") as work:
-        reader = _stage(spark, _time_split(events, 3, "ts"), work)
-        observed = reader.observe(
+
+    def transform(stream: DataFrame) -> DataFrame:
+        observed = stream.observe(
             "feed_metrics",
             F.count(F.lit(1)).alias("batch_rows"),
             F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias(
@@ -300,46 +295,30 @@ def q_stream_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         # the stateful leg the listener watches: watermarked tumbling count
-        agg = (
+        return (
             observed.withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "1 hour").alias("w"))
             .agg(F.count("*").alias("n"))
         )
-        name = f"obs_{uuid.uuid4().hex[:8]}"
-        with _stream_partitions(spark), capture_stream_metrics(spark) as mx:
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            # scope the listener to THIS query: a concurrent stream in the
-            # same session must not pollute the hashed accumulators
-            mx.bind(q)
-            try:
-                q.awaitTermination()
-                last_batch = q.lastProgress["batchId"]
-                totals = [0, 0]
-                for prog in q.recentProgress:
-                    m = prog["observedMetrics"].get("feed_metrics")
-                    if m:
-                        # An empty micro-batch reports sum(...) as null —
-                        # the observed metric arrives as None, not 0.
-                        totals[0] += m["batch_rows"] or 0
-                        totals[1] += m["batch_cents"] or 0
-                # listener events are delivered async: wait for the final
-                # batch's progress before reading the accumulators
-                mx.await_batch(last_batch)
-            finally:
-                spark.catalog.dropTempView(name)
-        # cross-instrument guard: the listener's input-row total must agree
-        # with the observe() path before either is reported
-        if mx.input_rows_total != totals[0]:
-            raise AssertionError(
-                f"listener saw {mx.input_rows_total} input rows, "
-                f"observe() saw {totals[0]}"
-            )
+
+    # the listener binds to the replay's query, the only one started inside
+    with capture_stream_metrics(spark) as mx:
+        replay(spark, events, transform, n_files=3, order_col="ts")
+    totals = [0, 0]
+    for prog in mx.progresses:
+        m = (prog.get("observedMetrics") or {}).get("feed_metrics")
+        if m:
+            # An empty micro-batch reports sum(...) as null — the observed
+            # metric arrives as None, not 0.
+            totals[0] += m["batch_rows"] or 0
+            totals[1] += m["batch_cents"] or 0
+    # cross-instrument guard: the listener's input-row total must agree
+    # with the observe() path before either is reported
+    if mx.input_rows_total != totals[0]:
+        raise AssertionError(
+            f"listener saw {mx.input_rows_total} input rows, "
+            f"observe() saw {totals[0]}"
+        )
     row = (
         totals[0],
         totals[1],

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from flinkexp_spark import datasets
 from flinkexp_spark.catalog._util import dec
 from flinkexp_spark.registry import register
-from flinkexp_spark.streaming.replay import replay, replay_update_mode
+from flinkexp_spark.streaming.replay import replay
 
 # Tumbling/sliding windows are emitted as formatted start/end strings; the
 # oracle reconstructs them from epoch arithmetic (UTC on both sides).
@@ -75,7 +75,13 @@ def q_stream_wordcount_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).filter(F.col("word") != "")
         return words.groupBy("word").agg(F.count("*").alias("cnt"))
 
-    batches = replay_update_mode(spark, docs, transform)
+    # foreachBatch keeps each micro-batch's updated rows apart (a memory
+    # sink accepts update mode but appends every batch into one table)
+    batches: list[pd.DataFrame] = []
+    replay(
+        spark, docs, transform, output_mode="update",
+        sink=lambda df, epoch: batches.append(df.toPandas()),
+    )
     # Single input file -> one micro-batch -> the updated rows ARE the final
     # totals.  (Multi-batch cadence is exercised in tests/test_streaming.py.)
     out = pd.concat(batches) if batches else pd.DataFrame({"word": [], "cnt": []})
@@ -120,7 +126,9 @@ def q_stream_text_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("cnt"))
         )
         with _stream_partitions(spark):
-            return drain_memory_sink(spark, out, output_mode="complete")
+            return drain_memory_sink(
+                spark, out, os.path.join(work, "checkpoint"), "complete"
+            )
 
 
 @register(
@@ -386,7 +394,7 @@ def q_stream_watermark_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_mode="append",
         n_files=2,
         order_col="ts",
-        sentinel_df=sentinel,
+        extra_files=[sentinel],
     )
     return (
         _win_cols(out)
@@ -510,7 +518,6 @@ def keyed_state_replay(
         df,
         transform,
         output_mode="update",
-        use_checkpoint=True,
         no_data_batches=False,
         state_provider=state_provider,
     )
@@ -694,7 +701,7 @@ def q_stream_tumbling_checkpointed(spark: SparkSession, sf_dir: str) -> DataFram
 
     out = replay(
         spark, events, transform, output_mode="complete",
-        use_checkpoint=True, no_data_batches=False,
+        no_data_batches=False,
     )
     return _win_cols(out).select("window_start", "n")
 
@@ -737,7 +744,7 @@ def q_stream_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     as-of window runs inside each micro-batch; nothing carries over).
     """
     from flinkexp_spark.operators.asof import asof_join
-    from flinkexp_spark.streaming.replay import replay_foreach_batch, scratch_dir
+    from flinkexp_spark.streaming.replay import scratch_dir
 
     # untouched, so the replay copies the fixture file; projected in-stream
     events = datasets.load(spark, sf_dir, "events")
@@ -766,12 +773,11 @@ def q_stream_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             enriched.write.mode("append").parquet(outdir)
 
-        replay_foreach_batch(
+        replay(
             spark,
             events,
             lambda s: s.select("event_id", "ts", "user_id", "event_type"),
-            writer,
-            output_mode="append",
+            sink=writer,
         )
         out = spark.read.parquet(outdir)
         return (
@@ -866,7 +872,7 @@ def q_stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_mode="append",
         n_files=2,
         order_col="ts",
-        sentinel_df=sentinel,
+        extra_files=[sentinel],
     )
     return (
         pairs.filter(F.col("click_id") >= 0)
@@ -926,7 +932,7 @@ def session_timers(
         output_mode="append",
         n_files=2,
         order_col="ts",
-        sentinel_df=sentinel,
+        extra_files=[sentinel],
         state_provider=state_provider,
     )
     return out.filter(F.col("user_id") >= 0)
@@ -1134,7 +1140,7 @@ def q_stream_window_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
         output_mode="append",
         n_files=2,
         order_col="ts",
-        sentinel_df=sentinel,
+        extra_files=[sentinel],
     )
     return (
         _win_cols(out)
@@ -1486,7 +1492,6 @@ def q_stream_wordcount_per_record(spark: SparkSession, sf_dir: str) -> DataFrame
         transform,
         output_mode="update",
         extra_files=parts[1:],
-        use_checkpoint=True,
         no_data_batches=False,
         sink="files",  # input-sized emission: keep rows executor-side
     )

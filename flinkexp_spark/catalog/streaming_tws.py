@@ -189,11 +189,18 @@ def q_stream_stateful_bootstrap_tws(spark: SparkSession, sf_dir: str) -> DataFra
     savepoint = (
         events.filter(F.col("event_id") % 2 == 0)
         .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum(cents).alias("cents"))
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(cents).alias("cents"),
+            F.count("value").alias("nn"),
+        )
     )
 
     def from_savepoint(stream: DataFrame) -> DataFrame:
-        seed = {int(r.user_id): (int(r.n), int(r.cents)) for r in savepoint.collect()}
+        seed = {
+            int(r.user_id): (int(r.n), int(r.cents or 0), int(r.nn))
+            for r in savepoint.collect()
+        }
         return running_totals_transform(stream, seed=seed)
 
     return keyed_state_replay(

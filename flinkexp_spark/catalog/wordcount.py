@@ -181,7 +181,9 @@ def q_stream_wordcount_adapter(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = spark.readStream.schema("text string").parquet(
             os.path.join(work, "in")
         )
-        env = StreamExecutionEnvironment.get_execution_environment(spark)
+        env = StreamExecutionEnvironment.get_execution_environment(
+            spark
+        ).enable_checkpointing(os.path.join(work, "checkpoint"))
         (
             env.from_data_frame(stream)
             .flat_map("split(text, ' ')", output_type="word string")

@@ -15,12 +15,19 @@ Key mechanics:
   this is what makes watermark advancement observable (the watermark is
   recomputed between batches, never within one).  File order is pinned via
   mtimes (the file source processes oldest-first).
-* ``sentinel`` appends a far-future row as the LAST file so the final
-  watermark passes every real window's end — append-mode windowed aggs then
-  emit all real windows.  Callers filter the sentinel's own window out.
+* A sentinel (a far-future row) goes in as the LAST ``extra_files``
+  entry, so the final watermark passes every real window's end —
+  append-mode windowed aggs then emit all real windows.  Callers filter
+  the sentinel's own window out.
+* ``sink`` is ``"memory"`` (the memory sink's table), ``"files"`` (a
+  foreachBatch parquet append read back, for input-sized outputs) or a
+  ``foreachBatch`` writer ``(df, epoch_id) -> None``.
 * ``scratch_dir`` is the one way to get a workspace: input files,
   checkpoints and sinks live in a per-call directory under ``SCRATCH_ROOT``
-  and are removed when the call returns.
+  and are removed when the call returns.  Every stream the engine starts
+  names a ``checkpointLocation`` there: a query started without one gets a
+  ``temporary-*`` checkpoint under the JVM's ``java.io.tmpdir``, which
+  Spark deletes by forking ``rm -rf`` when the query stops.
 * Staging copies what it need not rewrite: a part that is an unmodified
   ``datasets.load`` frame over a single-file table is copied byte for byte
   into the replay input (``shutil.copyfile``, a new inode, so pinning the
@@ -50,13 +57,16 @@ Key mechanics:
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQueryListener
 
 from flinkexp_spark.datasets import fixture_file
 
@@ -252,51 +262,66 @@ def replay(
     output_mode: str = "append",
     n_files: int = 1,
     order_col: str | None = None,
-    sentinel_df: DataFrame | None = None,
-    use_checkpoint: bool = False,
     extra_files: list[DataFrame] | None = None,
     state_provider: str | None = None,
-    sink: str = "memory",
+    sink: str | Callable[[DataFrame, int], None] = "memory",
     no_data_batches: bool = True,
-) -> DataFrame:
-    """Replay ``source_df`` through Structured Streaming; return the sink table.
+) -> DataFrame | None:
+    """Replay ``source_df`` (then each ``extra_files`` frame, one file
+    each) through Structured Streaming and drain ``transform``'s output
+    into ``sink``; the query's checkpoint is ``<work>/checkpoint``.
 
-    The result is materialized to a batch DataFrame (the streaming query has
-    terminated by the time this returns).  ``sink="files"`` drains through
-    a foreachBatch parquet append instead of the memory sink — pick it for
-    INPUT-SIZED outputs (see drain_file_sink); per-batch aggregate outputs
-    stay on the memory sink.
+    ``sink="memory"`` returns the memory sink's table and ``"files"`` a
+    foreachBatch parquet append read back (pick it for INPUT-SIZED
+    outputs, see drain_file_sink), both materialized batch DataFrames.  A
+    callable is a ``foreachBatch`` writer ``(df, epoch_id) -> None`` (an
+    external store, a per-batch capture); then nothing is returned.
     """
-    parts = _time_split(source_df, n_files, order_col)
-    parts.extend(extra_files or [])
-    if sentinel_df is not None:
-        parts.append(sentinel_df)
+    parts = _time_split(source_df, n_files, order_col) + list(extra_files or [])
     with scratch_dir("replay") as work:
         out = transform(_stage(spark, parts, work))
         with _stream_partitions(
             spark, state_provider=state_provider, no_data_batches=no_data_batches
         ):
-            drain = drain_file_sink if sink == "files" else drain_memory_sink
-            return drain(
-                spark,
-                out,
-                output_mode=output_mode,
-                checkpoint=os.path.join(work, "checkpoint")
-                if use_checkpoint
-                else None,
-            )
+            if sink == "memory":
+                return drain_memory_sink(
+                    spark, out, os.path.join(work, "checkpoint"), output_mode
+                )
+            if sink == "files":
+                return drain_file_sink(spark, out, work, output_mode)
+            _drain_foreach_batch(out, sink, work, output_mode)
+            return None
+
+
+def _drain_foreach_batch(
+    out: DataFrame,
+    writer: Callable[[DataFrame, int], None],
+    work: str,
+    output_mode: str,
+) -> None:
+    """Run ``out`` to completion through ``writer``, checkpointed at
+    ``<work>/checkpoint``."""
+    (
+        out.writeStream.foreachBatch(writer)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", os.path.join(work, "checkpoint"))
+        .start()
+        .awaitTermination()
+    )
 
 
 def drain_memory_sink(
     spark: SparkSession,
     out: DataFrame,
+    checkpoint: str,
     output_mode: str = "append",
-    checkpoint: str | None = None,
     available_now: bool = True,
 ) -> DataFrame:
     """Run a streaming frame to completion through a uuid-named memory
-    sink and return the materialized result (THE shared drain: one place
-    for sink naming, trigger choice, and guaranteed temp-view cleanup).
+    sink, checkpointed at ``checkpoint``, and return the materialized
+    result (THE shared drain: one place for sink naming, trigger choice,
+    and guaranteed temp-view cleanup).
 
     ``available_now=True`` is right for file-backed replays (the trigger
     drains everything then stops).  Custom Python stream sources need
@@ -309,14 +334,13 @@ def drain_memory_sink(
         out.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
     )
     writer = (
         writer.trigger(availableNow=True)
         if available_now
         else writer.trigger(processingTime="0 seconds")
     )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
     try:
         q = writer.start()
         try:
@@ -339,13 +363,11 @@ def drain_memory_sink(
 
 
 def drain_file_sink(
-    spark: SparkSession,
-    out: DataFrame,
-    output_mode: str = "append",
-    checkpoint: str | None = None,
+    spark: SparkSession, out: DataFrame, work: str, output_mode: str = "append"
 ) -> DataFrame:
-    """Drain a streaming frame through a foreachBatch parquet APPEND and
-    return the read-back result, materialized executor-side.
+    """Drain a streaming frame through a foreachBatch parquet APPEND into
+    ``<work>/out`` and return the read-back result, materialized
+    executor-side.
 
     The memory sink ships every output row through the driver twice
     (streaming ingest + local_df rebuild) — fine for per-batch aggregate
@@ -356,34 +378,18 @@ def drain_file_sink(
     semantics (the memory sink also appends each batch's update rows).
     The result is localCheckpoint-ed (executor block storage) so the
     scratch files can be deleted before returning."""
-    with scratch_dir("filesink") as work:
-        outdir = os.path.join(work, "out")
-        os.makedirs(outdir)
+    outdir = os.path.join(work, "out")
+    os.makedirs(outdir)
+    # Complete mode re-emits the WHOLE result table every batch, so the
+    # parquet write must REPLACE, not append — overwrite-per-batch is
+    # exactly the memory sink's complete semantics (last table wins).
+    write_mode = "overwrite" if output_mode == "complete" else "append"
 
-        # Complete mode re-emits the WHOLE result table every batch, so the
-        # parquet write must REPLACE, not append — overwrite-per-batch is
-        # exactly the memory sink's complete semantics (last table wins).
-        write_mode = "overwrite" if output_mode == "complete" else "append"
+    def append_batch(df: DataFrame, epoch_id: int) -> None:
+        df.write.mode(write_mode).parquet(outdir)
 
-        def append_batch(df: DataFrame, epoch_id: int) -> None:
-            df.write.mode(write_mode).parquet(outdir)
-
-        q = (
-            out.writeStream.foreachBatch(append_batch)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                checkpoint or os.path.join(work, "checkpoint"),
-            )
-            .start()
-        )
-        q.awaitTermination()
-        return (
-            spark.read.schema(out.schema)
-            .parquet(outdir)
-            .localCheckpoint(eager=True)
-        )
+    _drain_foreach_batch(out, append_batch, work, output_mode)
+    return spark.read.schema(out.schema).parquet(outdir).localCheckpoint(eager=True)
 
 
 def _time_split(
@@ -417,75 +423,15 @@ def _time_split(
     return parts
 
 
-def replay_foreach_batch(
-    spark: SparkSession,
-    source_df: DataFrame,
-    transform: Callable[[DataFrame], DataFrame],
-    writer: Callable[[DataFrame, int], None],
-    output_mode: str = "update",
-    n_files: int = 1,
-    order_col: str | None = None,
-) -> None:
-    """Replay through a custom ``foreachBatch`` writer (S7 kv-sink shape and
-    any external store: the writer receives each micro-batch DataFrame plus
-    the epoch id and performs its own idempotent upserts).  ``n_files`` > 1
-    splits the input by ``order_col`` quantiles and runs one micro-batch per
-    file, so the writer sees a real incremental sequence."""
-    parts = _time_split(source_df, n_files, order_col)
-    with scratch_dir("feb") as work:
-        out = transform(_stage(spark, parts, work))
-        with _stream_partitions(spark):
-            q = (
-                out.writeStream.foreachBatch(writer)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(work, "checkpoint"))
-                .start()
-            )
-            q.awaitTermination()
-
-
-def replay_update_mode(
-    spark: SparkSession,
-    source_df: DataFrame,
-    transform: Callable[[DataFrame], DataFrame],
-    n_files: int = 1,
-    order_col: str | None = None,
-) -> list:
-    """Replay in UPDATE output mode via foreachBatch, which keeps each
-    micro-batch's updated rows apart (a memory sink accepts update mode but
-    appends every batch into one table).  Returns the list of per-batch
-    updated-row batches — the reference's per-record emission stream at
-    micro-batch granularity (SURVEY §2.1 semantic note).  ``n_files`` > 1
-    splits the input by ``order_col`` quantiles into one micro-batch per
-    file (the same incremental sequence as :func:`replay_foreach_batch`,
-    which this delegates to with a capturing writer)."""
-    batches: list = []
-
-    def capture(df: DataFrame, epoch: int) -> None:
-        batches.append(df.toPandas())
-
-    replay_foreach_batch(
-        spark,
-        source_df,
-        transform,
-        capture,
-        output_mode="update",
-        n_files=n_files,
-        order_col=order_col,
-    )
-    return batches
-
-
-class ReplayMetricsListener:
+class ReplayMetricsListener(StreamingQueryListener):
     """StreamingQueryListener that accumulates per-micro-batch progress —
     the observability rig the r09 verdict asks for (#5): rows per batch,
     state-store size, watermark progression, processing rate.
 
-    Listener events arrive ASYNCHRONOUSLY after each batch commits, so
-    consumers must call :meth:`await_batch` with the query's final
-    ``lastProgress['batchId']`` before reading — otherwise the tail of the
-    replay races the listener bus.  The deterministic aggregates exposed
+    Listener events arrive ASYNCHRONOUSLY after each batch commits; read
+    the accumulators once ``terminated`` is set (:func:`capture_stream_metrics`
+    waits for it), since the listener bus delivers a query's termination
+    after all of its progress.  The deterministic aggregates exposed
     here (input-row total, non-empty batch count, final state rows, final
     watermark, emitted-row total) are exactly the ones a SQL oracle can
     re-derive from the fixture; wall-clock-dependent rates
@@ -498,51 +444,25 @@ class ReplayMetricsListener:
         # Listener callbacks fire for EVERY streaming query on the session;
         # without scoping, a concurrent stream would pollute the hashed
         # deterministic accumulators (round-11 ADVICE).  The collector binds
-        # to ONE query id: explicitly via bind(q), else the first query that
-        # starts after attach.  Progress from any other id is dropped.
+        # to ONE query id, the first query that starts after attach.
+        # Progress from any other id is dropped.
         self._target_id: str | None = None
+        self.terminated = threading.Event()
 
-    def bind(self, query) -> None:
-        """Scope the collector to ``query`` (a started StreamingQuery)."""
-        self._target_id = str(query.id)
-
-    # StreamingQueryListener interface (duck-typed: PySpark only requires
-    # the four callbacks; subclassing pulls heavy JVM wiring we don't need
-    # at construction time, so this registers via spark.streams.addListener
-    # which accepts any object with these methods wrapped by the base
-    # class — see capture_stream_metrics below).
     def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API names)
+        # delivered before start() returns, so the first start binds
         if self._target_id is None:
             self._target_id = str(event.id)
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
-        import json as _json
-
-        p = _json.loads(event.progress.json)
+        p = json.loads(event.progress.json)
         if self._target_id is not None and str(p.get("id")) != self._target_id:
             return
         self.progresses.append(p)
 
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
     def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass
-
-    # -- consumption helpers -------------------------------------------------
-    def await_batch(self, batch_id: int, timeout_s: float = 30.0) -> None:
-        """Block until the progress for ``batch_id`` has been delivered."""
-        import time as _time
-
-        deadline = _time.monotonic() + timeout_s
-        while _time.monotonic() < deadline:
-            if any(p["batchId"] >= batch_id for p in self.progresses):
-                return
-            _time.sleep(0.05)
-        raise TimeoutError(
-            f"listener never saw batch {batch_id}; got "
-            f"{sorted(p['batchId'] for p in self.progresses)}"
-        )
+        if str(event.id) == self._target_id:
+            self.terminated.set()
 
     @property
     def input_rows_total(self) -> int:
@@ -602,35 +522,23 @@ class ReplayMetricsListener:
 
 @contextlib.contextmanager
 def capture_stream_metrics(spark: SparkSession):
-    """Attach a :class:`ReplayMetricsListener` for the duration of a replay.
+    """Attach a :class:`ReplayMetricsListener` for the duration of a replay;
+    on a clean exit, wait until the bound query's termination (so all of
+    its progress) has been delivered.
 
     Usage::
 
         with capture_stream_metrics(spark) as metrics:
-            q = df.writeStream...start(); q.awaitTermination()
-            metrics.await_batch(q.lastProgress["batchId"])
+            replay(spark, df, transform)
         metrics.input_rows_total, metrics.final_watermark_ms, ...
     """
-    from pyspark.sql.streaming import StreamingQueryListener
-
     collector = ReplayMetricsListener()
-
-    class _L(StreamingQueryListener):
-        def onQueryStarted(self, event):  # noqa: N802
-            collector.onQueryStarted(event)
-
-        def onQueryProgress(self, event):  # noqa: N802
-            collector.onQueryProgress(event)
-
-        def onQueryIdle(self, event):  # noqa: N802
-            collector.onQueryIdle(event)
-
-        def onQueryTerminated(self, event):  # noqa: N802
-            collector.onQueryTerminated(event)
-
-    listener = _L()
-    spark.streams.addListener(listener)
+    spark.streams.addListener(collector)
     try:
         yield collector
+        if collector._target_id is not None and not collector.terminated.wait(60):
+            raise TimeoutError(
+                f"listener saw no termination of query {collector._target_id}"
+            )
     finally:
-        spark.streams.removeListener(listener)
+        spark.streams.removeListener(collector)

@@ -16,7 +16,9 @@ kernel.
 
 Money is accumulated in integer CENTS, not floats: state updates must be
 exact and order-independent (a float running sum would drift per partition
-ordering and break exactly-once replay equivalence).
+ordering and break exactly-once replay equivalence).  Beside each cents sum
+the state counts the non-null amounts, so a key or session whose every
+amount is null emits null cents, as SQL ``SUM`` does (:func:`sql_sums`).
 """
 
 from __future__ import annotations
@@ -40,7 +42,11 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 STATE_SCHEMA = StructType(
-    [StructField("n", LongType()), StructField("cents", LongType())]
+    [
+        StructField("n", LongType()),
+        StructField("cents", LongType()),
+        StructField("nn", LongType()),  # non-null amounts folded
+    ]
 )
 
 
@@ -48,7 +54,8 @@ def to_cents(values) -> np.ndarray:
     """Amounts -> int64 cents, rounded half away from zero like the oracles'
     ``round(v * 100, 0)`` (pandas' ``.round()`` is half-even).  A null
     amount counts 0 cents, so a sum over the result skips it as SQL ``SUM``
-    does; it is never cast, since a NaN cast to int64 is INT64_MIN.
+    does; it is never cast, since a NaN cast to int64 is INT64_MIN.  The
+    folds count non-null amounts beside that sum (:func:`sql_sums`).
 
     A ``transformWithStateInPandas`` processor imports this module's helpers
     inside its handler methods: Spark's pre-init runner unpickles the
@@ -59,18 +66,32 @@ def to_cents(values) -> np.ndarray:
     return np.nan_to_num(np.sign(x) * np.floor(np.abs(x) + 0.5)).astype("int64")
 
 
-def fold_totals(key, prev, pdfs):
-    """Fold one key's batch into its running ``(n, cents)`` totals, starting
-    from ``prev`` (zero when None).  Returns the new totals and the one-row
-    ``OUTPUT_SCHEMA`` frame that emits them."""
+def sql_sums(cents, nn):
+    """Cents sums as a nullable int64 column: null where ``nn``, the count
+    of non-null amounts summed, is 0 — SQL ``SUM`` over only nulls."""
     import pandas as pd
 
-    n, cents = prev if prev is not None else (0, 0)
+    return pd.array([c if k else None for c, k in zip(cents, nn)], dtype="Int64")
+
+
+def fold_totals(key, prev, pdfs):
+    """Fold one key's batch into its running ``(n, cents, nn)`` totals
+    (``STATE_SCHEMA``), starting from ``prev`` (zero when None).  Returns
+    the new totals and the one-row ``OUTPUT_SCHEMA`` frame that emits
+    them."""
+    import pandas as pd
+
+    n, cents, nn = prev if prev is not None else (0, 0, 0)
     for pdf in pdfs:
         n += len(pdf)
         cents += int(to_cents(pdf["value"]).sum())
-    return (n, cents), pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "value_cents": [cents]}
+        nn += int(pdf["value"].notna().sum())
+    return (n, cents, nn), pd.DataFrame(
+        {
+            "user_id": [key[0]],
+            "n_events": [n],
+            "value_cents": sql_sums([cents], [nn]),
+        }
     )
 
 
@@ -104,8 +125,8 @@ def running_totals_tws_transform(
     StatefulProcessor, RocksDB-backed, with timer support.
 
     Same contract as :func:`running_totals_transform`.  ``initial_state``
-    holds (user_id, n, cents) savepoint rows that seed each key's state in
-    batch 0 (``handleInitialState``).
+    holds (user_id, n, cents, nn) savepoint rows that seed each key's state
+    in batch 0 (``handleInitialState``).
 
     CAPABILITY-GATED: the state-server IPC needs ``google.protobuf`` on
     driver AND workers (compat/protobuf_shim.py bridges the host SDK's
@@ -122,7 +143,7 @@ def running_totals_tws_transform(
         def handleInitialState(self, key, initialState, timerValues):
             # one pandas row group per key from the initialState plan
             self._state.update(
-                (int(initialState["n"].sum()), int(initialState["cents"].sum()))
+                tuple(int(initialState[c].sum()) for c in ("n", "cents", "nn"))
             )
 
         def handleInputRows(self, key, rows, timerValues):
@@ -151,7 +172,7 @@ def bootstrapped_totals_tws_transform(initial_state_df):
     analog (State Processor API).  Migrate an engine by materializing its
     state as a table and resuming the stream on top of it.
 
-    ``initial_state_df`` carries (user_id, n, cents) "savepoint" rows; the
+    ``initial_state_df`` carries (user_id, n, cents, nn) "savepoint" rows; the
     returned transform is :func:`running_totals_tws_transform` seeded from
     them, so the totals emitted per batch equal savepoint + streamed.
     """
@@ -175,6 +196,7 @@ SESSION_STATE_SCHEMA = StructType(
         StructField("last_ns", LongType()),
         StructField("n", LongType()),
         StructField("cents", LongType()),
+        StructField("nn", LongType()),
     ]
 )
 SESSION_GAP_S = 1800
@@ -182,7 +204,7 @@ SESSION_GAP_S = 1800
 
 def session_frame(key, spans):
     """ONE ``SESSION_OUT_SCHEMA`` frame for a key's closed sessions, each a
-    (start_ns, last_ns, n, cents) span.  One frame per invocation (guide
+    (start_ns, last_ns, n, cents, nn) span.  One frame per invocation (guide
     §4.2): a 1-row frame plus a scalar strftime per session was the
     handlers' dominant cost at sf1.  np.floor(x/1e9) reproduces the old
     math.floor(ns/1e9) float64 semantics bit-for-bit."""
@@ -197,7 +219,7 @@ def session_frame(key, spans):
                 "%Y-%m-%d %H:%M:%S"
             ),
             "n_events": [x[2] for x in spans],
-            "cents": [x[3] for x in spans],
+            "cents": sql_sums([x[3] for x in spans], [x[4] for x in spans]),
             "duration_s": (np.floor(e / 1e9) - np.floor(s / 1e9)).astype("int64"),
         }
     )
@@ -208,8 +230,8 @@ def sessionize_batch(key, cur, pdfs):
 
     Sorts the batch by (ts, event_id), splits it where consecutive events
     are more than ``SESSION_GAP_S`` apart, and stitches the first run onto
-    the carried session ``cur`` (a (start_ns, last_ns, n, cents) span, or
-    None).  Returns the session left open (None only for an empty batch
+    the carried session ``cur`` (a (start_ns, last_ns, n, cents, nn) span,
+    or None).  Returns the session left open (None only for an empty batch
     with nothing carried) and the :func:`session_frame` of the sessions it
     closed (None when none closed)."""
     import pandas as pd
@@ -227,7 +249,9 @@ def sessionize_batch(key, cur, pdfs):
         ts = whole["ts"].to_numpy().astype("datetime64[ns]").astype("int64")
         order = np.lexsort((whole["event_id"].to_numpy(), ts))
         t = ts[order]
-        c = to_cents(whole["value"].to_numpy()[order])
+        v = whole["value"].to_numpy()[order]
+        c = to_cents(v)
+        k = ~np.isnan(v.astype("float64"))  # non-null amounts
         # vectorized gaps-and-islands within the batch; the carried state
         # stitches across batches
         brk = np.empty(len(t), dtype=bool)
@@ -249,12 +273,19 @@ def sessionize_batch(key, cur, pdfs):
                 # time-interleaved within a batch; last must not regress
                 cur[2] + cont,
                 cur[3] + int(c[:cont].sum()),
+                cur[4] + int(k[:cont].sum()),
             )
             if len(starts):  # a later break closes the carried session
                 closed.append(cur)
                 cur = None
         for i, (s, e) in enumerate(zip(starts, ends)):
-            span = (int(t[s]), int(t[e - 1]), int(e - s), int(c[s:e].sum()))
+            span = (
+                int(t[s]),
+                int(t[e - 1]),
+                int(e - s),
+                int(c[s:e].sum()),
+                int(k[s:e].sum()),
+            )
             if i < len(starts) - 1:
                 closed.append(span)
             else:
@@ -271,7 +302,7 @@ def stateful_sessionize(stream: DataFrame) -> DataFrame:
     Sessions close two ways, both exercised: in-band (a new event arrives
     after the gap -> emit the closed session immediately) and by TIMER (the
     watermark passes last_event + gap with no new data -> ``hasTimedOut``
-    fires and flushes the open session).  State per key is one 4-long
+    fires and flushes the open session).  State per key is one 5-long
     struct; the timeout timestamp re-arms on every update, so state never
     outlives gap + lateness — O(active keys), stream-length independent.
     """
@@ -303,16 +334,10 @@ def stateful_sessionize(stream: DataFrame) -> DataFrame:
     )
 
 
-# state for the tws sessionizer: the 4-long session struct plus the armed
+# state for the tws sessionizer: the session struct plus the armed
 # timer's expiry (ms) so stale timers can be deleted before re-arming
 SESSION_TWS_STATE_SCHEMA = StructType(
-    [
-        StructField("start_ns", LongType()),
-        StructField("last_ns", LongType()),
-        StructField("n", LongType()),
-        StructField("cents", LongType()),
-        StructField("timer_ms", LongType()),
-    ]
+    [*SESSION_STATE_SCHEMA.fields, StructField("timer_ms", LongType())]
 )
 
 
@@ -344,9 +369,9 @@ def sessionize_tws_transform(stream: DataFrame) -> DataFrame:
             cur = None
             prev = self._state.get()  # None when absent: one IPC, not two
             if prev is not None:
-                cur = tuple(prev[:4])
+                cur = tuple(prev[:5])
                 # the armed timer is stale the moment new data arrives
-                self._handle.deleteTimer(prev[4])
+                self._handle.deleteTimer(prev[5])
             cur, out = sessionize_batch(key, cur, rows)
             if cur is not None:
                 # re-arm: fire when the watermark passes the gap horizon
@@ -367,7 +392,7 @@ def sessionize_tws_transform(stream: DataFrame) -> DataFrame:
             prev = self._state.get()  # None when absent: one IPC, not two
             if prev is not None:
                 self._state.clear()
-                yield session_frame(key, [prev[:4]])
+                yield session_frame(key, [prev[:5]])
 
     return (
         stream.withWatermark("ts", "1 second")
@@ -410,33 +435,42 @@ def map_totals_tws_transform(stream: DataFrame) -> DataFrame:
     class MapTotals(StatefulProcessor):
         def init(self, handle):
             self._m = handle.getMapState(
-                "totals", "event_type string", "n long, cents long"
+                "totals", "event_type string", "n long, cents long, nn long"
             )
 
         def handleInputRows(self, key, rows, timerValues):
-            # imported here, not used as a global: see to_cents
-            from flinkexp_spark.streaming.stateful import to_cents
+            # imported here, not used as globals: see to_cents
+            from flinkexp_spark.streaming.stateful import sql_sums, to_cents
 
             for pdf in rows:
-                cents = to_cents(pdf["value"])
                 g = pd.DataFrame(
-                    {"event_type": pdf["event_type"], "cents": cents}
+                    {
+                        "event_type": pdf["event_type"],
+                        "cents": to_cents(pdf["value"]),
+                        "nn": pdf["value"].notna().astype("int64"),
+                    }
                 ).groupby("event_type", sort=False)
                 for etype, grp in g:
                     k = (str(etype),)
-                    if self._m.containsKey(k):
-                        n0, c0 = self._m.getValue(k)
-                    else:
-                        n0, c0 = 0, 0
-                    self._m.updateValue(
-                        k, (n0 + len(grp), c0 + int(grp["cents"].sum()))
+                    n0, c0, nn0 = (
+                        self._m.getValue(k) if self._m.containsKey(k) else (0, 0, 0)
                     )
-            out = [
-                (key[0], k[0], v[0], v[1])
-                for k, v in self._m.iterator()
-            ]
+                    self._m.updateValue(
+                        k,
+                        (
+                            n0 + len(grp),
+                            c0 + int(grp["cents"].sum()),
+                            nn0 + int(grp["nn"].sum()),
+                        ),
+                    )
+            slots = [(k[0], *v) for k, v in self._m.iterator()]
             yield pd.DataFrame(
-                out, columns=["user_id", "event_type", "n", "cents"]
+                {
+                    "user_id": [key[0]] * len(slots),
+                    "event_type": [s[0] for s in slots],
+                    "n": [s[1] for s in slots],
+                    "cents": sql_sums([s[2] for s in slots], [s[3] for s in slots]),
+                }
             )
 
     return stream.groupBy("user_id").transformWithStateInPandas(

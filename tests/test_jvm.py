@@ -120,17 +120,18 @@ NO_FORK_SCRIPT = textwrap.dedent(
 )
 
 
-def test_local_session_writes_without_forking_chmod(tmp_path, sf_dir):
-    """Run outside the repo with a logging ``chmod`` first on ``PATH``,
-    which the driver JVM inherits: a streaming replay and direct creates
-    through the session's ``file:`` file system fork no ``chmod`` and give
-    the modes and ``.crc`` files Hadoop's stock file system gives."""
+def _run_under_shim(tmp_path, command: str, script: str, sf_dir: str) -> dict:
+    """Run ``script`` outside the repo with a ``command`` shim first on
+    ``PATH``, which the driver JVM inherits: the shim appends each call's
+    arguments to a log (the script's third argument), then runs the real
+    command.  Returns the JSON the script prints last."""
     shim = tmp_path / "bin"
     shim.mkdir()
-    log = tmp_path / "chmod.log"
+    log = tmp_path / f"{command}.log"
     log.write_text("")
-    (shim / "chmod").write_text(f'#!/bin/sh\necho "$*" >> {log}\nexec /bin/chmod "$@"\n')
-    (shim / "chmod").chmod(0o755)
+    real = shutil.which(command)
+    (shim / command).write_text(f'#!/bin/sh\necho "$*" >> {log}\nexec {real} "$@"\n')
+    (shim / command).chmod(0o755)
     work = tmp_path / "work"
     work.mkdir()
     env = dict(
@@ -140,11 +141,18 @@ def test_local_session_writes_without_forking_chmod(tmp_path, sf_dir):
         SPARK_GRAFT_SCRATCH=str(tmp_path / "scratch"),
     )
     proc = subprocess.run(
-        [sys.executable, "-c", NO_FORK_SCRIPT, REPO, sf_dir, str(log)],
+        [sys.executable, "-c", script, REPO, sf_dir, str(log)],
         cwd=work, env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_local_session_writes_without_forking_chmod(tmp_path, sf_dir):
+    """Under a logging ``chmod`` shim, a streaming replay and direct creates
+    through the session's ``file:`` file system fork no ``chmod`` and give
+    the modes and ``.crc`` files Hadoop's stock file system gives."""
+    out = _run_under_shim(tmp_path, "chmod", NO_FORK_SCRIPT, sf_dir)
     assert out["fs"] == "flinkexp.NioLocalFileSystem"
     assert out["raw"] == "flinkexp.NioLocalFileSystem$Raw"
     assert out["replay_forks"] == []
@@ -157,3 +165,52 @@ def test_local_session_writes_without_forking_chmod(tmp_path, sf_dir):
     assert files["d/fdefault"][0] == "0o644"
     assert files["g/sub"][0] == "0o2750"
     assert files["d/.f640.crc"][1] and files["d/.fdefault.crc"][1]
+
+
+# One query per way the engine drains a stream: memory sink, file sink,
+# foreachBatch writer, and the four queries that start their own streams.
+STREAM_QUERIES = (
+    "stream_tumbling_window",
+    "stream_session_window",
+    "stream_wordcount_update",
+    "stream_text_source",
+    "stream_python_datasource",
+    "stream_wordcount_adapter",
+    "stream_observed_metrics",
+)
+
+TEMP_CHECKPOINT_SCRIPT = textwrap.dedent(
+    f"""
+    import json, sys
+    repo, sf_dir, log = sys.argv[1:4]
+    sys.path.insert(0, repo)
+    from flinkexp_spark.registry import queries
+    from flinkexp_spark.session import get_session
+
+    spark = get_session(app_name="temp_checkpoint_test")
+    for name in {STREAM_QUERIES!r}:
+        queries()[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    # Spark deletes a temporary checkpoint's directory when its query
+    # stops, and forks `rm -rf` on it again from the JVM's shutdown hook:
+    # close the gateway's stdin (the JVM exits on EOF) and wait for it
+    jvm = spark.sparkContext._gateway.proc
+    spark.stop()
+    jvm.stdin.close()
+    jvm.wait(timeout=120)
+    with open(log) as f:
+        print(json.dumps({{"rm": f.read().splitlines()}}))
+    """
+)
+
+
+def test_engine_streams_checkpoint_in_their_scratch_dirs(tmp_path, sf_dir):
+    """Every stream these queries start names a checkpointLocation in its
+    scratch directory.  A stream started without one gets a ``temporary-*``
+    checkpoint under ``java.io.tmpdir``, which the JVM removes with a
+    forked ``rm -rf``; a logging ``rm`` shim sees none."""
+    out = _run_under_shim(tmp_path, "rm", TEMP_CHECKPOINT_SCRIPT, sf_dir)
+    temporary = [
+        line for line in out["rm"]
+        if any(os.path.basename(a).startswith("temporary-") for a in line.split())
+    ]
+    assert temporary == [], out["rm"]

@@ -64,36 +64,6 @@ def test_update_mode_multibatch_cadence(spark):
         assert batches[1] == [("a", 3)]
 
 
-def test_replay_update_mode_multi_file(spark):
-    """The helper's n_files > 1 path (previously unimplemented): quantile
-    time-split into one micro-batch per file, update-mode capture — the
-    changed key re-emits per batch with its refreshed total."""
-    from flinkexp_spark.streaming.replay import replay_update_mode
-
-    src = spark.createDataFrame(
-        [(i, "a" if i % 2 == 0 else "b") for i in range(30)],
-        "seq long, word string",
-    )
-    batches = replay_update_mode(
-        spark,
-        src,
-        lambda df: df.groupBy("word").agg(F.count("*").alias("cnt")),
-        n_files=3,
-        order_col="seq",
-    )
-    batches = [b for b in batches if len(b)]
-    assert len(batches) == 3
-    # totals are cumulative across batches and end at the full counts
-    final = {
-        r.word: r.cnt
-        for b in batches
-        for r in b.itertuples(index=False, name="Row")
-    }
-    assert final == {"a": 15, "b": 15}
-    first = dict(zip(batches[0]["word"], batches[0]["cnt"]))
-    assert sum(first.values()) < 30  # genuinely incremental, not one batch
-
-
 def test_checkpoint_restart_resumes_state(spark):
     """T10: kill the query, add data, restart from the same checkpoint —
     state (running counts) must carry over, not restart from zero."""
@@ -322,8 +292,7 @@ def test_transform_with_state_parity(spark):
         " value double, props string",
     )
     out = replay(
-        spark, events, running_totals_tws_transform,
-        output_mode="update", use_checkpoint=True,
+        spark, events, running_totals_tws_transform, output_mode="update",
         state_provider="rocksdb",  # multiple column families need RocksDB
     )
     got = {r.user_id: (r.n_events, r.value_cents) for r in out.collect()}
@@ -333,52 +302,71 @@ def test_transform_with_state_parity(spark):
 def test_cents_fold_skips_null_values(spark):
     """The stateful totals and the session kernel fold money as SQL ``SUM``
     does: a null amount adds no cents (a NaN cast to int64 would add
-    INT64_MIN), and .5 cents round away from zero like the oracles'
-    ``round(v * 100, 0)``."""
+    INT64_MIN), a key or session whose every amount is null gets null
+    cents, and .5 cents round away from zero like the oracles'
+    ``round(v * 100, 0)``.  Both state APIs run the same folds; the
+    ``transformWithStateInPandas`` twins run too when protobuf is there."""
+    from flinkexp_spark.compat.protobuf_shim import ensure_protobuf
     from flinkexp_spark.datasets import local_df
     from flinkexp_spark.streaming.replay import replay
     from flinkexp_spark.streaming.stateful import (
         running_totals_transform,
+        running_totals_tws_transform,
+        sessionize_tws_transform,
         stateful_sessionize,
         to_cents,
     )
 
     assert int(to_cents([1.25, float("nan"), 2.0]).sum()) == 325
     assert list(to_cents([0.125, -0.125])) == [13, -13]
+    apis = [(running_totals_transform, stateful_sessionize, None)]
+    if ensure_protobuf():
+        apis.append(
+            (running_totals_tws_transform, sessionize_tws_transform, "rocksdb")
+        )
 
+    t0 = datetime(2024, 1, 1)
     events = spark.createDataFrame(
-        [(1, datetime(2024, 1, 1), 7, "click", 1.25, "{}"),
-         (2, datetime(2024, 1, 1), 7, "view", None, "{}"),
-         (3, datetime(2024, 1, 1), 7, "click", 2.0, "{}")],
+        [(1, t0, 7, "click", 1.25, "{}"),
+         (2, t0, 7, "view", None, "{}"),
+         (3, t0, 7, "click", 2.0, "{}"),
+         (4, t0, 8, "click", None, "{}"),
+         (5, t0, 8, "view", None, "{}")],
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    out = replay(
-        spark, events, running_totals_transform,
-        output_mode="update", use_checkpoint=True, no_data_batches=False,
-    )
-    got = {r.user_id: (r.n_events, r.value_cents) for r in out.collect()}
-    assert got == {7: (3, 325)}
-
-    t0 = datetime(2024, 1, 1)
     schema = "event_id long, ts timestamp, user_id long, value double"
-    events = local_df(
+    timed = local_df(
         spark,
         [(1, t0, 7, 1.25),
          (2, t0 + timedelta(minutes=1), 7, None),
-         (3, t0 + timedelta(minutes=2), 7, 2.0)],
+         (3, t0 + timedelta(minutes=2), 7, 2.0),
+         (4, t0 + timedelta(minutes=3), 8, None),
+         (5, t0 + timedelta(minutes=4), 8, None)],
         schema,
     )
     sentinel = local_df(spark, [(-1, datetime(2030, 1, 1), -1, 0.0)], schema)
-    out = replay(
-        spark, events, stateful_sessionize, output_mode="append",
-        n_files=2, order_col="ts", sentinel_df=sentinel,
-    )
-    sessions = [
-        (r.user_id, r.session_start, r.n_events, r.cents, r.duration_s)
-        for r in out.collect() if r.user_id >= 0
-    ]
-    assert sessions == [(7, "2024-01-01 00:00:00", 3, 325, 120)]
+    for totals, sessionize, provider in apis:
+        out = replay(
+            spark, events, totals, output_mode="update",
+            no_data_batches=False, state_provider=provider,
+        )
+        got = {r.user_id: (r.n_events, r.value_cents) for r in out.collect()}
+        assert got == {7: (3, 325), 8: (2, None)}, provider
+
+        out = replay(
+            spark, timed, sessionize, output_mode="append",
+            n_files=2, order_col="ts", extra_files=[sentinel],
+            state_provider=provider,
+        )
+        sessions = sorted(
+            (r.user_id, r.session_start, r.n_events, r.cents, r.duration_s)
+            for r in out.collect() if r.user_id >= 0
+        )
+        assert sessions == [
+            (7, "2024-01-01 00:00:00", 3, 325, 120),
+            (8, "2024-01-01 00:03:00", 2, None, 60),
+        ], provider
 
 
 class _CaptureStream:
@@ -535,7 +523,7 @@ def test_tws_timer_sessionizer_matches_timeout_sessionizer(spark):
     def run(transform, provider):
         out = replay(
             spark, events, transform, output_mode="append",
-            n_files=2, order_col="ts", sentinel_df=sentinel,
+            n_files=2, order_col="ts", extra_files=[sentinel],
             state_provider=provider,
         )
         return sorted(
@@ -593,7 +581,7 @@ def test_update_sequence_emits_exactly_the_changed_keys(spark):
     no missing touched key), carrying the refreshed CUMULATIVE total.
     Three quantile-split batches with known, partially-overlapping key
     sets pin the whole sequence, not just the final totals."""
-    from flinkexp_spark.streaming.replay import replay_update_mode
+    from flinkexp_spark.streaming.replay import replay
 
     rows = []
     plan = {0: ["a"] * 6 + ["b"] * 4, 1: ["b"] * 3 + ["c"] * 7,
@@ -603,12 +591,15 @@ def test_update_sequence_emits_exactly_the_changed_keys(spark):
             rows.append((batch * 10 + i, w))
     src = spark.createDataFrame(rows, "seq long, word string")
 
-    batches = replay_update_mode(
+    batches = []
+    replay(
         spark,
         src,
         lambda df: df.groupBy("word").agg(F.count("*").alias("cnt")),
+        output_mode="update",
         n_files=3,
         order_col="seq",
+        sink=lambda df, epoch: batches.append(df.toPandas()),
     )
     batches = [b for b in batches if len(b)]
     assert len(batches) == 3, f"expected 3 micro-batches, got {len(batches)}"
@@ -659,7 +650,6 @@ def test_listener_rig_captures_rates_and_watermark(spark, sf_dir):
             )
             try:
                 q.awaitTermination()
-                mx.await_batch(q.lastProgress["batchId"])
             finally:
                 spark.catalog.dropTempView(name)
     assert mx.input_rows_total == n_expected
@@ -715,7 +705,7 @@ def test_failed_drain_drops_its_sink_view(spark):
             .alias("id")
         )
         with pytest.raises(Exception, match="poison row 3"):
-            drain_memory_sink(spark, out)
+            drain_memory_sink(spark, out, os.path.join(work, "checkpoint"))
     leaked = [
         t.name for t in spark.catalog.listTables() if t.name.startswith("sink_")
     ]
@@ -768,16 +758,15 @@ def test_replay_checkpoint_manager_is_scoped_to_the_replay(spark):
     """Replays run their checkpoints through the FileSystem-API manager,
     and the key is back to what it was afterwards: unset when it was
     unset (also after a drain that raises), the old value otherwise."""
-    from flinkexp_spark.streaming.replay import replay, replay_foreach_batch
+    from flinkexp_spark.streaming.replay import replay
 
     assert spark.conf.get(CHECKPOINT_MANAGER, None) is None
     seen = []
-    replay_foreach_batch(
+    replay(
         spark,
         spark.range(5),
         lambda s: s,
-        lambda df, epoch: seen.append(df.sparkSession.conf.get(CHECKPOINT_MANAGER, None)),
-        output_mode="append",
+        sink=lambda df, epoch: seen.append(df.sparkSession.conf.get(CHECKPOINT_MANAGER, None)),
     )
     assert seen and all(
         v.endswith(".checkpointing.FileSystemBasedCheckpointFileManager") for v in seen
@@ -902,7 +891,6 @@ def test_multi_part_replay_keeps_batches_and_watermarks(spark, sf_dir):
     sentinel_ms = 1_893_456_000_000  # the query's sentinel event, 2030-01-01 UTC
     with capture_stream_metrics(spark) as mx:
         queries()["stream_watermark_append"](spark, sf_dir)
-        mx.await_batch(3)
     progresses = sorted(mx.progresses, key=lambda p: p["batchId"])
     assert [p["batchId"] for p in progresses] == [0, 1, 2, 3]
     assert [p["numInputRows"] for p in progresses] == [parts[0].count(), parts[1].count(), 1, 0]

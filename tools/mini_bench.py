@@ -32,6 +32,8 @@ import time
 from collections import Counter
 from contextlib import redirect_stdout
 
+from pyspark.sql.streaming import StreamingQueryListener
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import converge  # noqa: E402
@@ -39,33 +41,24 @@ from flinkexp_spark.registry import queries  # noqa: E402
 from flinkexp_spark.session import get_session  # noqa: E402
 
 
-class _Progress:
+class _Progress(StreamingQueryListener):
     """Every streaming query's progress on the session, kept per run.  A
     query's progress events reach the listener before its termination
     event, so once every started query has terminated the run's batches
     are all here."""
 
-    def __init__(self, spark) -> None:
-        from pyspark.sql.streaming import StreamingQueryListener
-
+    def __init__(self) -> None:
         self.progresses: list[dict] = []
         self.started = self.terminated = 0
-        outer = self
 
-        class _L(StreamingQueryListener):
-            def onQueryStarted(self, event):  # noqa: N802 (Spark API names)
-                outer.started += 1
+    def onQueryStarted(self, event):  # noqa: N802 (Spark API names)
+        self.started += 1
 
-            def onQueryProgress(self, event):  # noqa: N802
-                outer.progresses.append(json.loads(event.progress.json))
+    def onQueryProgress(self, event):  # noqa: N802
+        self.progresses.append(json.loads(event.progress.json))
 
-            def onQueryIdle(self, event):  # noqa: N802
-                pass
-
-            def onQueryTerminated(self, event):  # noqa: N802
-                outer.terminated += 1
-
-        spark.streams.addListener(_L())
+    def onQueryTerminated(self, event):  # noqa: N802
+        self.terminated += 1
 
     def settle(self, timeout_s: float = 10.0) -> None:
         deadline = time.monotonic() + timeout_s
@@ -123,7 +116,8 @@ def main() -> None:
             ).save()
 
     qs = queries()
-    stream = _Progress(spark)
+    stream = _Progress()
+    spark.streams.addListener(stream)
 
     for name in args.names.split(","):
         name = name.strip()
