@@ -8,12 +8,25 @@ offset protocol, and the exactly-once sink pattern — runs for real here
 against the file-backed log in sources/kafkalog.py, end to end through
 Spark's planner and executors (a Python DataSource scan is a real scan).
 
-Both queries produce the topic from the events fixture with key =
-``str(user_id)``, value = JSON ``{"event_id": ..., "cents": ...}``, and
-md5 key-hash partitioning — every placement and offset is recomputable
-arithmetically, so the DuckDB oracle rebuilds partition assignment from
-the events table alone and checks counts, offset ranges, and value sums
-per partition.
+All seven queries produce the ``events`` topic from the events fixture
+with key = ``str(user_id)``, value = JSON ``{"event_id": ..., "cents":
+...}``, and md5 key-hash partitioning — every placement and offset is
+recomputable arithmetically, so the DuckDB oracle rebuilds partition
+assignment from the events table alone and checks counts, offset ranges,
+and value sums per partition.  Each job has one implementation:
+
+* ``_produce_topic`` writes the fixture slice, or one stage of it, into
+  the log;
+* ``_read`` registers the source and reads a topic from ``earliest``:
+  a batch read, or a throttled stream;
+* ``_parse`` + ``_per_partition`` are the per-partition summary every
+  oracle checks;
+* ``_per_key_totals`` is the per-user aggregate both round-trip writers
+  publish;
+* ``_live`` drains one stream across a topic that grows in two stages.
+
+Every query runs in its own ``scratch_dir``, so topic names are fixed
+(``events`` in, ``totals`` or ``relay`` out).
 
 Producing the fixture log collects the (bounded, sf-sized) event slice to
 the driver — that is the mock broker's ingest, test scaffolding on the
@@ -25,7 +38,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkexp_spark import datasets
@@ -34,9 +47,10 @@ from flinkexp_spark.streaming.replay import scratch_dir
 
 N_PARTITIONS = 5
 N_EVENTS = 4000  # first N by event_id — sf-independent fixture slice
+LIVE_MAX_PER_BATCH = 800  # throttle of the three `_live` streams
 
-# Shared by both queries and mirrored in the oracles: partition by md5 of
-# the stringified user id, cents as an exact integer.
+# Mirrored in both oracles: partition by md5 of the stringified user id,
+# cents as an exact integer.
 _ORACLE = f"""
     WITH ev AS (
         SELECT event_id, user_id,
@@ -57,16 +71,14 @@ _ORACLE = f"""
 
 
 def _produce_topic(
-    spark: SparkSession,
-    sf_dir: str,
-    path: str,
-    topic: str,
-    lo: int = 0,
-    hi: int = N_EVENTS,
+    spark: SparkSession, sf_dir: str, work: str, stage: Column | None = None
 ) -> None:
-    """Write an [lo, hi) event-id slice into the file-backed topic, in
-    event order — producing in stages models a LIVE topic growing between
+    """Write the event-id slice ``[0, N_EVENTS)``, or the part of it that
+    ``stage`` selects, into the ``events`` topic under ``work``, in event
+    order — producing in stages models a LIVE topic growing between
     micro-batches (per-partition offsets keep appending across calls).
+    Stages split the slice by ``event_id`` residue, so each stage holds
+    rows at every fixture sf.
 
     The ``collect()`` below is harness-side FIXTURE PRODUCTION (building
     the broker's log from the events table), not an engine operator — a
@@ -75,14 +87,13 @@ def _produce_topic(
     sf (r09 verdict nit, stated explicitly)."""
     from flinkexp_spark.sources.kafkalog import produce
 
+    events = datasets.load(spark, sf_dir, "events").filter(
+        F.col("user_id").isNotNull() & (F.col("event_id") < N_EVENTS)
+    )
+    if stage is not None:
+        events = events.filter(stage)
     rows = (
-        datasets.load(spark, sf_dir, "events")
-        .filter(
-            F.col("user_id").isNotNull()
-            & (F.col("event_id") >= lo)
-            & (F.col("event_id") < hi)
-        )
-        .select(
+        events.select(
             F.col("event_id"),
             F.col("user_id").cast("string").alias("key"),
             F.to_json(
@@ -97,23 +108,52 @@ def _produce_topic(
         .collect()
     )
     produce(
-        path,
-        topic,
+        work,
+        "events",
         [(r["key"], r["value"], int(r["ts_ms"])) for r in rows],
         N_PARTITIONS,
     )
 
 
-def _summarize(df: DataFrame) -> DataFrame:
-    """Per-partition contract summary over the Kafka-schema frame."""
-    parsed = df.select(
+def _read(
+    spark: SparkSession, work: str, topic: str, max_per_batch: int = 0
+) -> DataFrame:
+    """Register the ``kafkalog`` source and read ``topic`` from
+    ``earliest``: a batch read, or, when ``max_per_batch`` is set, a
+    stream throttled to that many records per micro-batch."""
+    from flinkexp_spark.sources.kafkalog import register_kafka_log_source
+
+    register_kafka_log_source(spark)
+    reader = (
+        spark.readStream.option("maxRecordsPerBatch", str(max_per_batch))
+        if max_per_batch
+        else spark.read
+    )
+    return (
+        reader.format("kafkalog")
+        .option("path", work)
+        .option("subscribe", topic)
+        .option("startingOffsets", "earliest")
+        .load()
+    )
+
+
+def _parse(df: DataFrame) -> DataFrame:
+    """Kafka-schema frame -> (partition, offset, key, cents, timestamp)."""
+    return df.select(
         "partition",
         "offset",
         F.col("key").cast("string").alias("key"),
         F.get_json_object(F.col("value").cast("string"), "$.cents")
         .cast("long")
         .alias("cents"),
+        "timestamp",
     )
+
+
+def _per_partition(parsed: DataFrame) -> DataFrame:
+    """Per-partition contract summary over parsed records, materialized
+    before the log dir is removed."""
     return (
         parsed.groupBy("partition")
         .agg(
@@ -124,7 +164,64 @@ def _summarize(df: DataFrame) -> DataFrame:
             F.sum("cents").alias("cents_sum"),
         )
         .orderBy("partition")
+        .localCheckpoint()
     )
+
+
+def _records(df: DataFrame) -> DataFrame:
+    """Kafka-schema frame -> the (key, value, ts_ms) columns the log
+    writers take."""
+    return df.select(
+        F.col("key").cast("string").alias("key"),
+        F.col("value").cast("string").alias("value"),
+        (F.unix_timestamp("timestamp") * 1000).alias("ts_ms"),
+    )
+
+
+def _per_key_totals(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
+    """Produce and consume the events topic, then total each key's cents:
+    (key, value = JSON ``{"cents": total}``, ts_ms of the key's last
+    record)."""
+    _produce_topic(spark, sf_dir, work)
+    return (
+        _parse(_read(spark, work, "events"))
+        .groupBy("key")
+        .agg(
+            F.sum("cents").alias("total"),
+            (F.unix_timestamp(F.max("timestamp")) * 1000).alias("ts_ms"),
+        )
+        .select(
+            "key",
+            F.to_json(F.struct(F.col("total").alias("cents"))).alias("value"),
+            "ts_ms",
+        )
+    )
+
+
+def _live(spark: SparkSession, sf_dir: str, work: str, writer) -> None:
+    """Drain a throttled stream of the ``events`` topic while the topic
+    grows under it.  ``writer(stream)`` returns the query's
+    ``DataStreamWriter``; its checkpoint goes under ``work`` and it runs
+    on a zero-interval trigger.  Stage 1 (``event_id % 4 == 0``) is
+    produced before the start and taken in one untrimmed batch (the
+    restart-safe ``latestOffset`` contract, see
+    kafkalog._StreamReader.latestOffset); stage 2, the rest, is produced
+    while the query runs and drains in throttled batches.
+    ``processAllAvailable`` drains each stage (a Python stream reader
+    under availableNow runs a single batch — see sources/pysource.py)."""
+    _produce_topic(spark, sf_dir, work, F.col("event_id") % 4 == 0)
+    q = (
+        writer(_read(spark, work, "events", LIVE_MAX_PER_BATCH))
+        .option("checkpointLocation", os.path.join(work, "_ckpt"))
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    try:
+        q.processAllAvailable()  # stage 1: initial tail, one batch
+        _produce_topic(spark, sf_dir, work, F.col("event_id") % 4 != 0)
+        q.processAllAvailable()  # stage 2: live growth, throttled
+    finally:
+        q.stop()
 
 
 @register("source_kafka_contract", oracle=_ORACLE, tags=("S5", "S11"))
@@ -135,21 +232,9 @@ def q_source_kafka_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     and summarize per partition.  min/max offset prove the per-partition
     append contract (0 .. n-1); cents_sum proves value fidelity through
     the binary key/value columns."""
-    from flinkexp_spark.sources.kafkalog import register_kafka_log_source
-
-    register_kafka_log_source(spark)
     with scratch_dir("kafkalog") as work:
-        topic = f"events_{uuid.uuid4().hex[:8]}"
-        _produce_topic(spark, sf_dir, work, topic)
-        df = (
-            spark.read.format("kafkalog")
-            .option("path", work)
-            .option("subscribe", topic)
-            .option("startingOffsets", "earliest")
-            .load()
-        )
-        # materialize before the log dir is removed
-        return _summarize(df).localCheckpoint()
+        _produce_topic(spark, sf_dir, work)
+        return _per_partition(_parse(_read(spark, work, "events")))
 
 
 _ROUNDTRIP_ORACLE = f"""
@@ -187,50 +272,12 @@ def q_pipeline_kafka_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks the sink's key-hash routing and offset assignment, not just the
     source's.  The aggregate's row order is nondeterministic; the summary
     only uses order-free facts (counts, sums, offset span 0..n-1)."""
-    from flinkexp_spark.sources.kafkalog import (
-        kafka_log_sink,
-        register_kafka_log_source,
-    )
+    from flinkexp_spark.sources.kafkalog import kafka_log_sink
 
-    register_kafka_log_source(spark)
     with scratch_dir("kafkalog") as work:
-        in_topic = f"events_{uuid.uuid4().hex[:8]}"
-        out_topic = f"totals_{uuid.uuid4().hex[:8]}"
-        _produce_topic(spark, sf_dir, work, in_topic)
-        consumed = (
-            spark.read.format("kafkalog")
-            .option("path", work)
-            .option("subscribe", in_topic)
-            .load()
-        )
-        totals = (
-            consumed.select(
-                F.col("key").cast("string").alias("key"),
-                F.get_json_object(F.col("value").cast("string"), "$.cents")
-                .cast("long")
-                .alias("cents"),
-                F.col("timestamp"),
-            )
-            .groupBy("key")
-            .agg(
-                F.sum("cents").alias("total"),
-                (F.unix_timestamp(F.max("timestamp")) * 1000).alias("ts_ms"),
-            )
-            .select(
-                "key",
-                F.to_json(F.struct(F.col("total").alias("cents"))).alias("value"),
-                "ts_ms",
-            )
-        )
-        writer = kafka_log_sink(work, out_topic, n_partitions=N_PARTITIONS)
-        writer(totals, 0)
-        out = (
-            spark.read.format("kafkalog")
-            .option("path", work)
-            .option("subscribe", out_topic)
-            .load()
-        )
-        return _summarize(out).localCheckpoint()
+        sink = kafka_log_sink(work, "totals", n_partitions=N_PARTITIONS)
+        sink(_per_key_totals(spark, sf_dir, work), 0)
+        return _per_partition(_parse(_read(spark, work, "totals")))
 
 
 @register("stream_kafka_contract", oracle=_ORACLE, tags=("S5", "T9", "S11"))
@@ -248,39 +295,18 @@ def q_stream_kafka_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow runs a single batch — see sources/pysource.py).  The
     append-mode union of all batches must equal the batch read exactly —
     same oracle."""
-    from flinkexp_spark.sources.kafkalog import register_kafka_log_source
-
-    register_kafka_log_source(spark)
     name = f"kafka_mem_{uuid.uuid4().hex[:8]}"
     with scratch_dir("kafkalog") as work:
         try:
-            topic = f"events_{uuid.uuid4().hex[:8]}"
-            _produce_topic(spark, sf_dir, work, topic, lo=0, hi=N_EVENTS // 4)
-            stream = (
-                spark.readStream.format("kafkalog")
-                .option("path", work)
-                .option("subscribe", topic)
-                .option("startingOffsets", "earliest")
-                .option("maxRecordsPerBatch", "1000")
-                .load()
-            )
-            q = (
-                stream.writeStream.format("memory")
+            _live(
+                spark,
+                sf_dir,
+                work,
+                lambda s: s.writeStream.format("memory")
                 .queryName(name)
-                .outputMode("append")
-                .option(
-                    "checkpointLocation", os.path.join(work, "_checkpoint")
-                )
-                .trigger(processingTime="0 seconds")
-                .start()
+                .outputMode("append"),
             )
-            try:
-                q.processAllAvailable()  # stage 1: initial tail, one batch
-                _produce_topic(spark, sf_dir, work, topic, lo=N_EVENTS // 4, hi=N_EVENTS)
-                q.processAllAvailable()  # stage 2: live growth, throttled
-            finally:
-                q.stop()
-            return _summarize(spark.table(name)).localCheckpoint()
+            return _per_partition(_parse(spark.table(name)))
         finally:
             spark.catalog.dropTempView(name)
 
@@ -299,36 +325,16 @@ def q_stream_kafka_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFra
     max_offset / cents_sum.  (The memory sink can't recover a checkpoint,
     so this query drains through a JSON file sink — the sink every
     real restart test uses.)"""
-    from flinkexp_spark.sources.kafkalog import register_kafka_log_source
-
-    register_kafka_log_source(spark)
     with scratch_dir("kafkalog") as work:
-        topic = f"events_{uuid.uuid4().hex[:8]}"
-        ckpt = os.path.join(work, "_ckpt")
         out = os.path.join(work, "_out")
 
         def _drain() -> None:
             q = (
-                spark.readStream.format("kafkalog")
-                .option("path", work)
-                .option("subscribe", topic)
-                .option("startingOffsets", "earliest")
-                .option("maxRecordsPerBatch", "500")
-                .load()
-                .select(
-                    "partition",
-                    "offset",
-                    F.col("key").cast("string").alias("key"),
-                    F.get_json_object(
-                        F.col("value").cast("string"), "$.cents"
-                    )
-                    .cast("long")
-                    .alias("cents"),
-                )
+                _parse(_read(spark, work, "events", max_per_batch=500))
                 .writeStream.format("json")
                 .outputMode("append")
                 .option("path", out)
-                .option("checkpointLocation", ckpt)
+                .option("checkpointLocation", os.path.join(work, "_ckpt"))
                 .trigger(processingTime="0 seconds")
                 .start()
             )
@@ -337,24 +343,14 @@ def q_stream_kafka_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFra
             finally:
                 q.stop()
 
-        _produce_topic(spark, sf_dir, work, topic, lo=0, hi=N_EVENTS // 2)
+        # the halves are the even and the odd event ids
+        _produce_topic(spark, sf_dir, work, F.col("event_id") % 2 == 0)
         _drain()  # run 1: first half, checkpointed
-        _produce_topic(spark, sf_dir, work, topic, lo=N_EVENTS // 2, hi=N_EVENTS)
+        _produce_topic(spark, sf_dir, work, F.col("event_id") % 2 != 0)
         _drain()  # run 2: SAME checkpoint — only the delta may append
-        sunk = spark.read.schema(
-            "partition int, offset long, key string, cents long"
-        ).json(out)
-        return (
-            sunk.groupBy("partition")
-            .agg(
-                F.count("*").alias("n"),
-                F.countDistinct("key").alias("n_keys"),
-                F.min("offset").alias("min_offset"),
-                F.max("offset").alias("max_offset"),
-                F.sum("cents").alias("cents_sum"),
-            )
-            .orderBy("partition")
-            .localCheckpoint()
+        return _per_partition(
+            spark.read.schema("partition int, offset long, key string, cents long")
+            .json(out)
         )
 
 
@@ -370,58 +366,19 @@ def q_stream_kafka_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     records re-routed by the same key hash must reproduce the whole-slice
     per-partition contract exactly — any dropped, duplicated, or
     mis-routed batch breaks n / offset span / cents_sum."""
-    from flinkexp_spark.sources.kafkalog import (
-        kafka_log_sink,
-        register_kafka_log_source,
-    )
+    from flinkexp_spark.sources.kafkalog import kafka_log_sink
 
-    register_kafka_log_source(spark)
     with scratch_dir("kafkalog") as work:
-        in_topic = f"events_{uuid.uuid4().hex[:8]}"
-        out_topic = f"relay_{uuid.uuid4().hex[:8]}"
-        # stage the production around the first drain: the first batch takes
-        # the initial tail untrimmed (restart-safe latestOffset contract),
-        # the growth then drains in several throttled epochs
-        _produce_topic(spark, sf_dir, work, in_topic, lo=0, hi=N_EVENTS // 4)
-        writer = kafka_log_sink(work, out_topic, n_partitions=N_PARTITIONS)
-
-        def relay(batch_df, batch_id: int) -> None:
-            writer(
-                batch_df.select(
-                    F.col("key").cast("string").alias("key"),
-                    F.col("value").cast("string").alias("value"),
-                    (F.unix_timestamp("timestamp") * 1000).alias("ts_ms"),
-                ),
-                batch_id,
-            )
-
-        q = (
-            spark.readStream.format("kafkalog")
-            .option("path", work)
-            .option("subscribe", in_topic)
-            .option("startingOffsets", "earliest")
-            .option("maxRecordsPerBatch", "800")
-            .load()
-            .writeStream.foreachBatch(relay)
-            .option("checkpointLocation", os.path.join(work, "_ckpt"))
-            .trigger(processingTime="0 seconds")
-            .start()
+        sink = kafka_log_sink(work, "relay", n_partitions=N_PARTITIONS)
+        _live(
+            spark,
+            sf_dir,
+            work,
+            lambda s: s.writeStream.foreachBatch(
+                lambda batch_df, batch_id: sink(_records(batch_df), batch_id)
+            ),
         )
-        try:
-            q.processAllAvailable()  # epoch 0: the initial tail
-            _produce_topic(
-                spark, sf_dir, work, in_topic, lo=N_EVENTS // 4, hi=N_EVENTS
-            )
-            q.processAllAvailable()  # epochs 1..n: throttled growth
-        finally:
-            q.stop()
-        out = (
-            spark.read.format("kafkalog")
-            .option("path", work)
-            .option("subscribe", out_topic)
-            .load()
-        )
-        return _summarize(out).localCheckpoint()
+        return _per_partition(_parse(_read(spark, work, "relay")))
 
 
 @register(
@@ -436,53 +393,17 @@ def q_pipeline_kafka_datasource_writer(spark: SparkSession, sf_dir: str) -> Data
     directory rename (failed/speculative attempts can never leak).  Same
     oracle as the foreachBatch round-trip — the two sink paths must be
     indistinguishable to a consumer."""
-    from flinkexp_spark.sources.kafkalog import register_kafka_log_source
-
-    register_kafka_log_source(spark)
     with scratch_dir("kafkalog") as work:
-        in_topic = f"events_{uuid.uuid4().hex[:8]}"
-        out_topic = f"totals_{uuid.uuid4().hex[:8]}"
-        _produce_topic(spark, sf_dir, work, in_topic)
-        consumed = (
-            spark.read.format("kafkalog")
-            .option("path", work)
-            .option("subscribe", in_topic)
-            .load()
-        )
-        totals = (
-            consumed.select(
-                F.col("key").cast("string").alias("key"),
-                F.get_json_object(F.col("value").cast("string"), "$.cents")
-                .cast("long")
-                .alias("cents"),
-                F.col("timestamp"),
-            )
-            .groupBy("key")
-            .agg(
-                F.sum("cents").alias("total"),
-                (F.unix_timestamp(F.max("timestamp")) * 1000).alias("ts_ms"),
-            )
-            .select(
-                "key",
-                F.to_json(F.struct(F.col("total").alias("cents"))).alias("value"),
-                "ts_ms",
-            )
-        )
         (
-            totals.write.format("kafkalog")
+            _per_key_totals(spark, sf_dir, work)
+            .write.format("kafkalog")
             .option("path", work)
-            .option("topic", out_topic)
+            .option("topic", "totals")
             .option("partitions", str(N_PARTITIONS))
             .mode("append")
             .save()
         )
-        out = (
-            spark.read.format("kafkalog")
-            .option("path", work)
-            .option("subscribe", out_topic)
-            .load()
-        )
-        return _summarize(out).localCheckpoint()
+        return _per_partition(_parse(_read(spark, work, "totals")))
 
 
 @register("stream_kafka_datasource_writer", oracle=_ORACLE, tags=("S5", "T9"))
@@ -493,46 +414,16 @@ def q_stream_kafka_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFr
     on disk and skips — exactly-once across restarts carried by the
     segment namespace itself, no side ledger.  Identity relay, so the
     output topic must reproduce the whole-slice per-partition contract."""
-    from flinkexp_spark.sources.kafkalog import register_kafka_log_source
-
-    register_kafka_log_source(spark)
     with scratch_dir("kafkalog") as work:
-        in_topic = f"events_{uuid.uuid4().hex[:8]}"
-        out_topic = f"relay_{uuid.uuid4().hex[:8]}"
-        _produce_topic(spark, sf_dir, work, in_topic, lo=0, hi=N_EVENTS // 4)
-        q = (
-            spark.readStream.format("kafkalog")
-            .option("path", work)
-            .option("subscribe", in_topic)
-            .option("startingOffsets", "earliest")
-            .option("maxRecordsPerBatch", "800")
-            .load()
-            .select(
-                F.col("key").cast("string").alias("key"),
-                F.col("value").cast("string").alias("value"),
-                (F.unix_timestamp("timestamp") * 1000).alias("ts_ms"),
-            )
+        _live(
+            spark,
+            sf_dir,
+            work,
+            lambda s: _records(s)
             .writeStream.format("kafkalog")
             .option("path", work)
-            .option("topic", out_topic)
+            .option("topic", "relay")
             .option("partitions", str(N_PARTITIONS))
-            .option("checkpointLocation", os.path.join(work, "_ckpt"))
-            .outputMode("append")
-            .trigger(processingTime="0 seconds")
-            .start()
+            .outputMode("append"),
         )
-        try:
-            q.processAllAvailable()
-            _produce_topic(
-                spark, sf_dir, work, in_topic, lo=N_EVENTS // 4, hi=N_EVENTS
-            )
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = (
-            spark.read.format("kafkalog")
-            .option("path", work)
-            .option("subscribe", out_topic)
-            .load()
-        )
-        return _summarize(out).localCheckpoint()
+        return _per_partition(_parse(_read(spark, work, "relay")))

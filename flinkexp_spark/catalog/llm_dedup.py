@@ -21,11 +21,6 @@ Scale design per operator:
 
 from __future__ import annotations
 
-import atexit
-import hashlib
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -33,7 +28,6 @@ from flinkexp_spark import datasets
 from flinkexp_spark.functions import text as T
 from flinkexp_spark.registry import register
 from flinkexp_spark.session import memo
-from flinkexp_spark.streaming.replay import SCRATCH_ROOT
 
 NGRAM_DF_CAP = 100  # drop shingles appearing in more docs than this
 JACCARD_MIN = 0.5
@@ -84,52 +78,16 @@ _O_SCORED_BODY = f"""
 # --- shared signature table -------------------------------------------------
 # Three queries (LSH pairs, keep, components) all start from the SAME
 # 17-ints/doc MinHash signature table, and each uses it on 3+ plan branches.
-# Materialize it ONCE per (session, sf_dir) and reuse:
-#
-# * mode "checkpoint" (default): localCheckpoint, memoized per SparkContext
-#   (session.memo) — right at fixture scale, where the table fits an
-#   executor.
-# * mode "bucketed" (SPARK_GRAFT_SIG_MATERIALIZE=bucketed): write-once
-#   bucketed parquet table (bucketBy doc_id) — the 100 TB shape: the
-#   signature side of every downstream doc_id equi-join reads pre-hashed
-#   buckets (no Exchange on that side, SelectedBucketsCount in the plan),
-#   and every later job of the driver reuses the table (it lives under the
-#   scratch root until the driver exits).
-def signature_table(spark: SparkSession, sf_dir: str, mode: str | None = None) -> DataFrame:
-    mode = mode or os.environ.get("SPARK_GRAFT_SIG_MATERIALIZE", "checkpoint")
+# Materialize it ONCE per (session, sf_dir) with localCheckpoint, memoized
+# per SparkContext (session.memo), and reuse it.
+def signature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return memo(
-        spark, ("minhash_signatures", sf_dir, mode),
-        lambda: _materialize_signatures(spark, sf_dir, mode),
+        spark,
+        ("minhash_signatures", sf_dir),
+        lambda: T.minhash_signatures(
+            datasets.load(spark, sf_dir, "documents")
+        ).localCheckpoint(),
     )
-
-
-def _materialize_signatures(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
-    sig = T.minhash_signatures(datasets.load(spark, sf_dir, "documents"))
-    if mode == "bucketed":
-        # An external table under the scratch root, named by application
-        # and fixture dir and removed when the driver exits (the bucketed
-        # IVF index's rule), never the cwd's warehouse dir: a warehouse
-        # location outlives the process and nothing would delete it.
-        digest = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        name = f"minhash_sig_{digest}"
-        loc = os.path.join(
-            SCRATCH_ROOT,
-            f"minhash_sig-{spark.sparkContext.applicationId}-{digest}",
-        )
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(loc, ignore_errors=True)
-        (
-            sig.repartition(16, "doc_id")  # one file per bucket (same murmur3)
-            .write.bucketBy(16, "doc_id")
-            .sortBy("doc_id")
-            .mode("overwrite")
-            .format("parquet")
-            .option("path", loc)
-            .saveAsTable(name)
-        )
-        atexit.register(shutil.rmtree, loc, True)
-        return spark.table(name)
-    return sig.localCheckpoint()
 
 
 @register(

@@ -30,8 +30,9 @@ convention) for jar-present deployments; tests gate on jar presence.
 WRITER CONTRACT (offset stability): a topic-partition's offsets are its
 records' positions in (base file, then segment dirs in name order) — so
 they are stable only while that enumeration is append-only.  Two rules
-enforce it: (1) ``produce()`` refuses to append to the base file once any
-committed segment exists (a base-file grow would shift every segment
+enforce it: (1) both base-file writers, ``produce()`` and
+``kafka_log_sink``, refuse to append once any committed segment exists
+(``_refuse_base_append``: a base-file grow would shift every segment
 record's offset); (2) ALL segments — batch and streaming — carry a
 monotonically increasing zero-padded sequence label (``_next_seq``), so
 a new segment always sorts AFTER every existing one.  Streaming commits
@@ -65,6 +66,21 @@ def partition_for_key(key: str, n_partitions: int) -> int:
     return int(hashlib.md5(key.encode()).hexdigest()[:8], 16) % n_partitions
 
 
+def _refuse_base_append(path: str, topic: str, writer: str) -> None:
+    """Raise if the topic has committed segments: base files enumerate
+    BEFORE segments, so growing one would shift every segment record's
+    offset under any checkpointed reader (silent dup/drop)."""
+    topic_dir = os.path.join(path, topic)
+    if os.path.isdir(topic_dir) and any(
+        n.startswith("seg-") for n in os.listdir(topic_dir)
+    ):
+        raise ValueError(
+            f"{writer} to '{topic}' rejected: topic already has committed "
+            "segments; base-file appends would shift segment offsets. "
+            "Write through the kafkalog writer instead."
+        )
+
+
 def produce(
     path: str,
     topic: str,
@@ -75,21 +91,10 @@ def produce(
 
     Each record lands in partition ``partition_for_key(key)``; its offset
     is the line number, so per-partition offset order == produce order —
-    exactly the broker's append contract.
-
-    Refuses to append once the topic has committed segments: base files
-    enumerate BEFORE segments, so growing one would shift every segment
-    record's offset under any checkpointed reader (silent dup/drop).
+    exactly the broker's append contract.  Refuses a topic that already
+    has committed segments (``_refuse_base_append``).
     """
-    topic_dir_pre = os.path.join(path, topic)
-    if os.path.isdir(topic_dir_pre) and any(
-        n.startswith("seg-") for n in os.listdir(topic_dir_pre)
-    ):
-        raise ValueError(
-            f"produce() to '{topic}' rejected: topic already has committed "
-            "segments; base-file appends would shift segment offsets. "
-            "Write through the kafkalog writer instead."
-        )
+    _refuse_base_append(path, topic, "produce()")
     buckets: dict[int, list[str]] = {}
     for key, value, ts_ms in records:
         p = partition_for_key(key, n_partitions)
@@ -196,12 +201,21 @@ def make_kafka_log_source():
                         )
                     offset += 1
 
-    class _BatchReader(DataSourceReader):
+    class _LogReader:
+        """What the batch and the stream reader share: the subscribed
+        topic, its options, and the per-partition line-range scan."""
+
         def __init__(self, options: dict):
             self.path = options["path"]
             self.topic = options["subscribe"]
             self.options = options
+            self.max_per_batch = int(options.get("maxrecordsperbatch", 0))
 
+        def read(self, partition):
+            p, file_path, start, end = partition.value
+            yield from _read_range(file_path, self.topic, p, start, end)
+
+    class _BatchReader(_LogReader, DataSourceReader):
         def partitions(self):
             # one InputPartition per topic-partition — Kafka's parallelism
             # contract; offset bounds resolved driver-side (metadata only,
@@ -213,20 +227,10 @@ def make_kafka_log_source():
                 for p, f in sorted(parts.items())
             ]
 
-        def read(self, partition):
-            p, file_path, start, end = partition.value
-            yield from _read_range(file_path, self.topic, p, start, end)
-
-    class _StreamReader(DataSourceStreamReader):
+    class _StreamReader(_LogReader, DataSourceStreamReader):
         """Full streaming offset protocol with per-partition offset dicts
         ({"0": 17, "1": 4} — the same shape Kafka checkpoints) and a
         maxRecordsPerBatch throttle (maxOffsetsPerTrigger analog)."""
-
-        def __init__(self, options: dict):
-            self.path = options["path"]
-            self.topic = options["subscribe"]
-            self.options = options
-            self.max_per_batch = int(options.get("maxrecordsperbatch", 0))
 
         def initialOffset(self) -> dict:
             parts = _topic_partitions(self.path, self.topic)
@@ -281,10 +285,6 @@ def make_kafka_log_source():
                 if int(e) > int(start.get(str(p), 0))
             ]
 
-        def read(self, partition):
-            p, file_path, start, end = partition.value
-            yield from _read_range(file_path, self.topic, p, start, end)
-
         def commit(self, end: dict) -> None:
             pass  # the log is immutable; nothing to truncate
 
@@ -297,10 +297,10 @@ def make_kafka_log_source():
     # the files named by SUCCESSFUL tasks (hard-links them into a commit
     # dir, discarding strays from failed attempts) and publishes the whole
     # segment with ONE atomic directory rename — the snapshot-commit
-    # pattern table formats use.  abort() removes the staging dir.  The
-    # streaming writer names the segment after the micro-batch id, so a
-    # replayed batch finds its segment already published and skips —
-    # exactly-once across restarts with no extra ledger.
+    # pattern table formats use.  abort() removes the staging and commit
+    # dirs.  The streaming writer names the segment after the micro-batch
+    # id, so a replayed batch finds its segment already published and
+    # skips — exactly-once across restarts with no extra ledger.
 
     class _StagedFiles(WriterCommitMessage):
         def __init__(self, files: list[str]):
@@ -383,21 +383,34 @@ def make_kafka_log_source():
                         seq = max(seq, int(digits))
         return seq + 1
 
-    class _BatchWriter(DataSourceWriter):
-        def __init__(self, options: dict):
+    class _LogWriter:
+        """What the batch and the stream writer share: the target topic,
+        the staging dir named by ``run``, the executor-side ``write`` and
+        an ``abort`` that removes the staging dir and its ``.commit``."""
+
+        def __init__(self, options: dict, run: str):
             import os as _os
-            import uuid as _uuid
 
             self.path = options["path"]
             self.topic = options["topic"]
             self.n_parts = int(options.get("partitions", "3"))
-            self.job = _uuid.uuid4().hex
-            self.staging = _os.path.join(
-                self.path, self.topic + f".staging-{self.job}"
-            )
+            self.run = run
+            self.staging = _os.path.join(self.path, f"{self.topic}.staging-{run}")
 
         def write(self, iterator):
             return _route_and_stage(iterator, self.staging, self.n_parts)
+
+        def abort(self, messages, batchId: int | None = None) -> None:
+            import shutil as _shutil
+
+            _shutil.rmtree(self.staging, ignore_errors=True)
+            _shutil.rmtree(self.staging + ".commit", ignore_errors=True)
+
+    class _BatchWriter(_LogWriter, DataSourceWriter):
+        def __init__(self, options: dict):
+            import uuid as _uuid
+
+            super().__init__(options, _uuid.uuid4().hex)
 
         def commit(self, messages):
             import os as _os
@@ -408,23 +421,14 @@ def make_kafka_log_source():
             _publish(
                 self.staging,
                 topic_dir,
-                f"{_next_seq(topic_dir):010d}b{self.job[:8]}",
+                f"{_next_seq(topic_dir):010d}b{self.run[:8]}",
                 messages,
             )
 
-        def abort(self, messages):
-            import shutil as _shutil
-
-            _shutil.rmtree(self.staging, ignore_errors=True)
-            _shutil.rmtree(self.staging + ".commit", ignore_errors=True)
-
-    class _StreamWriter(DataSourceStreamWriter):
+    class _StreamWriter(_LogWriter, DataSourceStreamWriter):
         def __init__(self, options: dict):
             import hashlib as _hashlib
 
-            self.path = options["path"]
-            self.topic = options["topic"]
-            self.n_parts = int(options.get("partitions", "3"))
             # Staging is keyed by the query's CHECKPOINT identity: batchId is
             # not passed to write(), and Spark builds separate writer
             # instances for the executor write path and the driver commit,
@@ -434,17 +438,7 @@ def make_kafka_log_source():
             # concurrent queries — so neither can interleave staged files
             # into, or rmtree, the other's in-flight epoch.
             ckpt = options.get("checkpointlocation", "")
-            self.run = _hashlib.md5(ckpt.encode()).hexdigest()[:12]
-
-        def _staging(self) -> str:
-            import os as _os
-
-            return _os.path.join(self.path, f"{self.topic}.staging-{self.run}")
-
-        def write(self, iterator):
-            return _route_and_stage(
-                staging=self._staging(), iterator=iterator, n_parts=self.n_parts
-            )
+            super().__init__(options, _hashlib.md5(ckpt.encode()).hexdigest()[:12])
 
         def commit(self, messages, batchId: int) -> None:
             import os as _os
@@ -464,21 +458,16 @@ def make_kafka_log_source():
             ):  # replayed epoch — already published
                 import shutil as _shutil
 
-                _shutil.rmtree(self._staging(), ignore_errors=True)
+                _shutil.rmtree(self.staging, ignore_errors=True)
                 return
             # Label: monotonic sequence first (offset stability — same rule
             # as the batch writer), then the replay tag.
             _publish(
-                self._staging(),
+                self.staging,
                 topic_dir,
                 f"{_next_seq(topic_dir):010d}{tag}",
                 messages,
             )
-
-        def abort(self, messages, batchId: int) -> None:
-            import shutil as _shutil
-
-            _shutil.rmtree(self._staging(), ignore_errors=True)
 
     class KafkaLogSource(DataSource):
         @classmethod
@@ -521,7 +510,8 @@ def kafka_log_sink(
     partitions' records as files under the batch's staging dir —
     write-to-temp + atomic rename, so task retries and speculative
     attempts are harmless.  Expects (key string non-null, value string,
-    ts_ms long) columns.
+    ts_ms long) columns.  Like ``produce()`` it appends to the base files,
+    so it refuses a topic that already has committed segments.
 
     The COMMIT is the two-phase transactional-sink recipe (idempotent
     producer + committed-epoch fencing), crash-safe at every boundary:
@@ -547,6 +537,7 @@ def kafka_log_sink(
     def write_batch(df, batch_id: int) -> None:
         import shutil
 
+        _refuse_base_append(path, topic, "kafka_log_sink")
         topic_dir = os.path.join(path, topic)
         ledger = os.path.join(path, topic + ".batches")
         pending = os.path.join(path, topic + ".pending")

@@ -477,6 +477,69 @@ def test_second_stream_query_fresh_checkpoint_appends(spark, topic_dir):
     assert len(segs) == 2 and segs[0] < segs[1]
 
 
+def test_sink_refuses_a_segmented_topic(spark, topic_dir):
+    """``kafka_log_sink`` appends to the base files, which enumerate BEFORE
+    segments: on a topic the kafkalog writer already segmented it must
+    raise before staging anything, so no committed offset shifts."""
+    register_kafka_log_source(spark)
+    schema = "key string, value string, ts_ms long"
+    (
+        spark.createDataFrame(
+            [(str(i), f"w{i}", 1_700_000_000_000 + i) for i in range(20)], schema
+        )
+        .write.format("kafkalog")
+        .option("path", topic_dir)
+        .option("topic", "t")
+        .option("partitions", "2")
+        .mode("append")
+        .save()
+    )
+
+    def offsets() -> dict[bytes, tuple[int, int]]:
+        return {
+            bytes(r.value): (r.partition, r.offset)
+            for r in spark.read.format("kafkalog")
+            .option("path", topic_dir)
+            .option("subscribe", "t")
+            .load()
+            .collect()
+        }
+
+    before = offsets()
+    assert len(before) == 20
+    one_row = spark.createDataFrame([("x", "late", 1_700_000_000_000)], schema)
+    with pytest.raises(ValueError, match="committed segments"):
+        kafka_log_sink(topic_dir, "t", n_partitions=2)(one_row, 0)
+    assert offsets() == before
+    assert not [n for n in os.listdir(topic_dir) if n.startswith("t.")]
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["stream_kafka_contract", "stream_kafka_exactly_once", "stream_kafka_datasource_writer"],
+)
+def test_live_queries_drain_both_stages(spark, sf_dir, name):
+    """Both production stages of a live-topic query hold rows at the
+    smallest fixture: the stream runs at least two non-empty micro-batches
+    and reads the whole event slice exactly once."""
+    from pyspark.sql import functions as F
+
+    from flinkexp_spark import datasets
+    from flinkexp_spark.catalog.kafka_contract import N_EVENTS
+    from flinkexp_spark.registry import queries
+    from flinkexp_spark.streaming.replay import capture_stream_metrics
+
+    n = (
+        datasets.load(spark, sf_dir, "events")
+        .filter(F.col("user_id").isNotNull() & (F.col("event_id") < N_EVENTS))
+        .count()
+    )
+    with capture_stream_metrics(spark) as metrics:
+        queries()[name](spark, sf_dir).collect()
+    assert metrics.nonempty_batches >= 2
+    assert metrics.input_rows_total == n
+
+
 def test_live_broker_parity_with_kafkalog(spark, topic_dir):
     """VERDICT r6 #6 — the day real connector jars + a broker appear,
     parity is PROVEN, not assumed: the exact fixture payload the file-log

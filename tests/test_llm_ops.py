@@ -314,125 +314,6 @@ def test_ivf_recall_beats_floor(spark, sf_dir):
     assert len(exact & approx) / len(exact) >= 0.8
 
 
-def test_bucketed_signature_table_matches_checkpoint(spark, sf_dir):
-    """The 100 TB signature materialization (bucketed parquet) must yield the
-    same rows as the fixture-scale localCheckpoint, and downstream doc_id
-    joins must read it as a bucketed scan."""
-    import contextlib
-    import io
-
-    from flinkexp_spark import session
-    from flinkexp_spark.catalog.llm_dedup import signature_table
-
-    ck = signature_table(spark, sf_dir, mode="checkpoint")
-    bk = signature_table(spark, sf_dir, mode="bucketed")
-    try:
-        a = sorted(map(tuple, ck.collect()))
-        b = sorted(map(tuple, bk.collect()))
-        assert a == b
-        probe = spark.createDataFrame([(0,), (1,)], "doc_id long")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            bk.join(probe.hint("merge"), "doc_id").explain("formatted")
-        assert "Bucketed: true" in buf.getvalue()
-    finally:
-        session._MEMO.pop(
-            (
-                spark.sparkContext.applicationId,
-                ("minhash_signatures", sf_dir, "bucketed"),
-            ),
-            None,
-        )
-
-
-def test_bucketed_signature_table_is_scratch_removed_at_exit(
-    spark, sf_dir, monkeypatch
-):
-    """The bucketed signature table is written under the scratch root with
-    an application-scoped name and removed when the driver exits; nothing
-    lands in the cwd's ``spark-warehouse``."""
-    import atexit
-    import shutil
-    from urllib.parse import urlparse
-
-    from flinkexp_spark.catalog.llm_dedup import _materialize_signatures
-    from flinkexp_spark.streaming.replay import SCRATCH_ROOT
-
-    at_exit = []
-    monkeypatch.setattr(atexit, "register", lambda fn, *a: at_exit.append((fn, a)))
-    sig = _materialize_signatures(spark, sf_dir, "bucketed")
-    (name,) = {t.name for t in spark.catalog.listTables() if t.name.startswith("minhash_sig_")}
-    try:
-        files = [urlparse(f).path for f in sig.inputFiles()]
-        assert files
-        for f in files:
-            assert os.path.commonpath([f, SCRATCH_ROOT]) == SCRATCH_ROOT, f
-            assert spark.sparkContext.applicationId in f
-            assert not f.startswith(os.getcwd() + os.sep), f
-        (args,) = [a for fn, a in at_exit if fn is shutil.rmtree]
-        loc = args[0]
-        assert all(f.startswith(loc + os.sep) for f in files)
-        shutil.rmtree(*args)
-        assert not os.path.exists(loc)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-
-def test_bucketed_sig_mode_env_var_drives_lsh(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_SIG_MATERIALIZE=bucketed (the 100 TB materialization
-    path) must flow through the env var into `dedup_minhash_lsh`: same
-    pairs as checkpoint mode, bucketed signature scans in the executed
-    plan, and bucket pruning (SelectedBucketsCount) on doc_id-filtered
-    access."""
-    import contextlib
-    import io
-
-    from flinkexp_spark import session
-    from flinkexp_spark.catalog.llm_dedup import signature_table
-    from flinkexp_spark.registry import queries
-
-    baseline = sorted(
-        map(tuple, queries()["dedup_minhash_lsh"](spark, sf_dir).collect())
-    )
-    monkeypatch.setenv("SPARK_GRAFT_SIG_MATERIALIZE", "bucketed")
-    try:
-        out = queries()["dedup_minhash_lsh"](spark, sf_dir)
-        assert sorted(map(tuple, out.collect())) == baseline
-
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            out.explain("formatted")
-        assert "Bucketed: true" in buf.getvalue(), (
-            "env-var mode did not route the LSH join through the bucketed "
-            "signature table"
-        )
-
-        # bucket pruning: an equality predicate on the bucket column must
-        # restrict the scan to 1 of the 16 buckets.  autoBucketedScan is
-        # toggled off for the probe because DisableUnnecessaryBucketedScan
-        # strips bucket info from filter-only scans (no shuffle to save);
-        # pruning evidence needs the bucketed scan kept.
-        bk = signature_table(spark, sf_dir, mode="bucketed")
-        auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-        saved = spark.conf.get(auto_key)
-        try:
-            spark.conf.set(auto_key, "false")
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                bk.filter(F.col("doc_id") == 5).explain("formatted")
-            assert "SelectedBucketsCount: 1 out of 16" in buf.getvalue()
-        finally:
-            spark.conf.set(auto_key, saved)
-    finally:
-        session._MEMO.pop(
-            (
-                spark.sparkContext.applicationId,
-                ("minhash_signatures", sf_dir, "bucketed"),
-            ),
-            None,
-        )
-
-
 def test_ivf_lloyd_reduces_quantization_error(spark, sf_dir):
     """The Lloyd rounds must strictly improve the coarse quantizer: mean
     cosine of each vector to its assigned centroid rises vs. the raw seed
